@@ -210,84 +210,6 @@ object BenchExtra {
                |"maxpsg_dv":{"median":$dvMed,"reps":${dvReps.mkString("[", ",", "]")},"exchanges":$dvEx}}""".stripMargin.replace("\n", "")
           }
           println(s"""{"metric":"kba_scale","cpus":$cpus,${out3.mkString(",")}}""")
-        case "cc-lab" =>
-          // large-star/small-star materialization lab (guide §1.4):
-          // round-5 shape (eager ls checkpoint + eager ss checkpoint +
-          // separate signature collect, double small-star join) vs the
-          // fused shape (lazy ls persist, single small-star join +
-          // explode, signature via Observation on the ss checkpoint).
-          // Pair set shaped like LSH candidate output: ~40% of nodes in
-          // planted 4-cliques' star edges plus one 64-node chain (forces
-          // multi-round convergence), at the 200k fixture scale and a
-          // 2M scale point. Results are strategy-invariant
-          // (DedupClusterSpec pins both against scalar union-find).
-          import graft.pipeline.TextPipeline
-          val outCc = Seq(200000L, 2000000L).map { n =>
-            val nodes = spark.range(0, n).toDF("id")
-            val clustered = spark.range(0, n).toDF("id")
-              .where(col("id") % 10 > 0 && col("id") % 10 < 4)
-              .select((col("id") - col("id") % 10).as("a"), col("id").as("b"))
-            val chain = spark.range(n - 65, n - 1).toDF("id")
-              .select(col("id").as("a"), (col("id") + 1).as("b"))
-            val pairs = clustered.union(chain).persist()
-            nodes.count(); pairs.count()
-            // untimed JIT warmup per scale
-            TextPipeline.connectedComponentsStar(nodes, "id", pairs, 50, fused = true).count()
-            val rows = Seq(("r5_eager", false), ("fused", true)).map { case (tag, f) =>
-              val ts = (1 to reps).map { _ =>
-                val t0 = System.nanoTime()
-                TextPipeline.connectedComponentsStar(nodes, "id", pairs, 50, fused = f).count()
-                (System.nanoTime() - t0) / 1e9
-              }
-              s""""$tag":{"median":${medianD(ts)},"reps":${ts.mkString("[", ",", "]")}}"""
-            }
-            pairs.unpersist()
-            s""""n_$n":{${rows.mkString(",")}}"""
-          }
-          // executed ONE-ROUND star plans at 200k (stderr): the CC loop's
-          // per-round work hides behind its checkpoints in the query-level
-          // explain, so this is the committed evidence (the PageRank
-          // pattern) — the fused small-star shows ONE join + Generate
-          // (explode) where the round-5 shape shows the same join twice
-          // under a Union
-          locally {
-            val n = 200000L
-            val nodes = spark.range(0, n).toDF("id")
-            val clustered = spark.range(0, n).toDF("id")
-              .where(col("id") % 10 > 0 && col("id") % 10 < 4)
-              .select((col("id") - col("id") % 10).as("a"), col("id").as("b"))
-            val edges = clustered
-              .select(col("a").cast("long").as("x"), col("b").cast("long").as("y"))
-              .where(col("x") =!= col("y"))
-              .select(least(col("x"), col("y")).as("lo"), greatest(col("x"), col("y")).as("hi"))
-              .distinct().localCheckpoint()
-            val both = edges.select(col("lo").as("u"), col("hi").as("v"))
-              .union(edges.select(col("hi").as("u"), col("lo").as("v")))
-            val mins = both.groupBy("u").agg(min(col("v")).as("mv"))
-              .select(col("u"), least(col("u"), col("mv")).as("m"))
-            val ls = both.join(mins, "u")
-              .where(col("v") > col("u") && col("v") =!= col("m"))
-              .select(col("m").as("lo"), col("v").as("hi"))
-              .distinct().localCheckpoint()
-            val sBoth = ls.select(col("hi").as("u"), col("lo").as("v"))
-            val sMins = sBoth.groupBy("u").agg(min(col("v")).as("m"))
-            val ssR5 = sBoth.join(sMins, "u")
-              .select(col("m").as("lo"), col("v").as("hi"))
-              .union(sBoth.join(sMins, "u").select(col("m").as("lo"), col("u").as("hi")))
-              .where(col("lo") =!= col("hi")).distinct()
-            val ssFused = sBoth.join(sMins, "u")
-              .select(col("m").as("lo"), explode(array(col("v"), col("u"))).as("hi"))
-              .where(col("lo") =!= col("hi")).distinct()
-            Seq(("round-5 small-star (double join under Union)", ssR5),
-                ("fused small-star (single join + explode)", ssFused)).foreach {
-              case (tag, df) =>
-                df.count()
-                System.err.println(s"=== $tag: executed plan ===")
-                System.err.println(df.queryExecution.toString.linesIterator
-                  .dropWhile(!_.startsWith("== Physical")).mkString("\n"))
-            }
-          }
-          println(s"""{"metric":"cc_lab","cpus":$cpus,${outCc.mkString(",")}}""")
         case "harvest-lab" =>
           // harvest regex-pass lab (guide §1.4). Candidate: extract
           // group 0 once (one full-html regex scan instead of the

@@ -224,43 +224,17 @@ object TextPipeline {
     * map to themselves.
     */
   def connectedComponentsStar(nodes: DataFrame, idCol: String, pairs: DataFrame,
-                              maxIter: Int = 50): DataFrame =
-    // fused signature + lazy large-star + single small-star join: the
-    // combination the cc-lab measured fastest (bench/r6_cc_lab.json) —
-    // 2 eager materializations + 1 collect per round shrink to 1 eager
-    // materialization whose pass also carries the convergence signature
-    connectedComponentsStar(nodes, idCol, pairs, maxIter, fused = true)
-
-  /** [[connectedComponentsStar]] with the per-round materialization
-    * strategy exposed for the cc-lab in BenchExtra — results are
-    * strategy-invariant (DedupClusterSpec pins both paths against a
-    * scalar union-find oracle).
-    *
-    * `fused = false` is the round-5 shape: per round the small-star
-    * union joins (sBoth ⋈ sMins) TWICE, and the convergence signature
-    * pays a separate collect job after the small-star checkpoint.
-    * `fused = true`:
-    *  - the small-star emit is ONE join + explode(array(v, u)) instead
-    *    of the same join evaluated twice under a union (guide §2.4);
-    *  - the convergence (count, xor-of-hashes) signature rides the
-    *    small-star checkpoint's single pass via Dataset.observe
-    *    (guide §2.3 — scan once; the scoreStreams pattern), replacing
-    *    the separate collect job per round.
-    * Both star sets keep their eager per-round localCheckpoint: the
-    * cc-lab measured the lazy-persist alternative for the large-star
-    * set SLOWER at 2M nodes — its two same-job consumers race to
-    * populate the cache and can compute the set twice, where the
-    * checkpoint materializes it exactly once.
-    */
-  private[graft] def connectedComponentsStar(nodes: DataFrame, idCol: String,
-                                             pairs: DataFrame, maxIter: Int,
-                                             fused: Boolean): DataFrame = {
+                              maxIter: Int = 50): DataFrame = {
+    // per round: ONE small-star join + explode(array(v, u)) emits both
+    // the smaller neighbors and the node itself; the convergence
+    // (count, xor-of-hashes) signature rides the small-star checkpoint's
+    // single pass via Dataset.observe, not a separate collect job. Both
+    // star sets are eagerly localCheckpointed once per round — a lazily
+    // persisted large-star set measured SLOWER at 2M nodes (its two
+    // same-job consumers race to populate the cache and can compute it
+    // twice; bench/r6_cc_lab.json)
     val sigCnt = count(lit(1)).as("cnt")
     val sigXor = coalesce(expr("bit_xor(xxhash64(lo, hi))"), lit(0L)).as("sig")
-    def signature(e: DataFrame): (Long, Long) = {
-      val r = e.agg(sigCnt, sigXor).head()
-      (r.getLong(0), r.getLong(1))
-    }
     // the initial signature pass is over the just-checkpointed input —
     // a block scan, not a recompute; fold-into-observe buys nothing here
     var edges = pairs
@@ -268,7 +242,8 @@ object TextPipeline {
       .where(col("x") =!= col("y"))
       .select(least(col("x"), col("y")).as("lo"), greatest(col("x"), col("y")).as("hi"))
       .distinct().localCheckpoint()
-    var sig = signature(edges)
+    val sig0 = edges.agg(sigCnt, sigXor).head()
+    var sig = (sig0.getLong(0), sig0.getLong(1))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -286,28 +261,14 @@ object TextPipeline {
       // emit (m, v) for the smaller neighbors and (m, u)
       val sBoth = ls.select(col("hi").as("u"), col("lo").as("v"))
       val sMins = sBoth.groupBy("u").agg(min(col("v")).as("m"))
-      val ssPlan =
-        if (fused)
-          sBoth.join(sMins, "u")
-            .select(col("m").as("lo"), explode(array(col("v"), col("u"))).as("hi"))
-            .where(col("lo") =!= col("hi"))
-            .distinct()
-        else
-          sBoth.join(sMins, "u")
-            .select(col("m").as("lo"), col("v").as("hi"))
-            .union(sBoth.join(sMins, "u").select(col("m").as("lo"), col("u").as("hi")))
-            .where(col("lo") =!= col("hi"))
-            .distinct()
-      val newSig =
-        if (fused) {
-          val obs = org.apache.spark.sql.Observation()
-          edges = ssPlan.observe(obs, sigCnt, sigXor).localCheckpoint()
-          val m = obs.get
-          (m("cnt").asInstanceOf[Long], m("sig").asInstanceOf[Long])
-        } else {
-          edges = ssPlan.localCheckpoint()
-          signature(edges)
-        }
+      val obs = org.apache.spark.sql.Observation()
+      edges = sBoth.join(sMins, "u")
+        .select(col("m").as("lo"), explode(array(col("v"), col("u"))).as("hi"))
+        .where(col("lo") =!= col("hi"))
+        .distinct()
+        .observe(obs, sigCnt, sigXor).localCheckpoint()
+      val m = obs.get
+      val newSig = (m("cnt").asInstanceOf[Long], m("sig").asInstanceOf[Long])
       converged = newSig == sig
       sig = newSig
       iter += 1

@@ -125,12 +125,6 @@ class DedupClusterSpec extends AnyFunSuite {
         nodes.toDF("id"), "id", pairs.toDF("a", "b"))
         .as[(Long, Long)].collect().toMap
       assert(gotStar == expected)
-      // materialization strategy is semantics-invariant: the round-5
-      // eager-per-star shape must agree with the fused default
-      val gotEager = TextPipeline.connectedComponentsStar(
-        nodes.toDF("id"), "id", pairs.toDF("a", "b"), 50, fused = false)
-        .as[(Long, Long)].collect().toMap
-      assert(gotEager == expected)
     }
   }
 

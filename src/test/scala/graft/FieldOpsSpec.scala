@@ -334,6 +334,22 @@ class FieldOpsSpec extends AnyFunSuite {
     val want2 = math.log((1 + 2500.0 * cfA) / (5 + 2500.0)) +
       math.log((1 + 2500.0 * cfB) / (3 + 2500.0))
     assert(math.abs(nested2.head._4 - want2) < 1e-9)
+    // boolean multi-about clauses at BOTH levels: score = [or|and over
+    // sec [0,5)] + [and|or over par [1,4)]; doc2 is a candidate through
+    // beta but its par is not inside its sec
+    def p(t: String, tf: Int, ctx: Int) =
+      (tf + 2500.0 * eng2.termCount(t) / tt) / (ctx + 2500.0)
+    def fold(op: String, a: Double, b: Double) =
+      if (op == "or") math.log(1 - (1 - a) * (1 - b))
+      else 0.5 * math.log(a) + 0.5 * math.log(b)
+    Seq(("or", "and"), ("and", "or")).foreach { case (op1, op2) =>
+      val got = eng2.runNexi(s"//sec[about(., alpha) $op1 about(., gamma)]" +
+          s"//par[about(., beta) $op2 about(., gamma)]", 10)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSeq
+      assert(got.map(t => (t._1, t._2, t._3)) == Seq((1L, 1, 4)))
+      assert(math.abs(got.head._4 - (fold(op1, p("alpha", 1, 5), p("gamma", 1, 5)) +
+        fold(op2, p("beta", 1, 3), p("gamma", 1, 3)))) < 1e-9)
+    }
 
     // numeric predicates parse (round 3 — scored as occurrence beliefs)
     val num = NexiParser.parse("//a[.//b > 5]")
@@ -492,7 +508,7 @@ class FieldOpsSpec extends AnyFunSuite {
     // and: ½·[max over contained par of dirichlet(beta|par)] +
     //      ½·dirichlet(occ of matching n extents | sec context).
     // doc2's sec [2,4) contains no par → the rel conjunct is
-    // unscorable and the extent drops (same rule as scoreRelativeMixed)
+    // unscorable and the extent drops (same rule as the relative boolean)
     val relNum = eng2.runNexi("//sec[about(.//par, beta) and .//n > 5]", 10)
       .collect().map(r => ((r.getLong(0), r.getInt(1), r.getInt(2)), r.getDouble(3))).toMap
     assert(relNum.keySet == Set((1L, 0, 6)))
@@ -725,7 +741,7 @@ class FieldOpsSpec extends AnyFunSuite {
     val eng = new Engine(spark, IndexBuilder.build(rows, cfg), cfg.analyzer,
       ScoringRule(method = "dirichlet"))
     // parenthesized tree with a relative-about leaf and NO numeric
-    // clause — used to die on Seq.empty.reduce in scoreMixedClauses
+    // clause — used to die on Seq.empty.reduce in the CAS scorer
     val mixed = eng.runNexi(
       "//sec[(about(.//par, beta) and about(., alpha)) or about(., delta)]", 10)
       .collect().map(_.getLong(0))
