@@ -864,7 +864,7 @@ object SparkEntry {
       // segments — must agree with the SQL oracle (and thus with
       // q_bm25_topk's DataFrame path)
       val eng = engine(s, dir)
-      eng.runDaat(BmTerms.map(_ -> 1.0), 20, exhaustive = false)
+      eng.runQuery(s"#combine(${BmTerms.mkString(" ")})", 20)
         .select(col("docId").as("doc_id"), round(col("score"), 6).as("score"))
         .orderBy(col("score").desc, col("doc_id").asc)
     }),

@@ -21,49 +21,31 @@ import graft.index.{BlockCodec, InvertedIndex}
   * multi-server evaluate-then-merge shape
   * (reference: src/QueryEnvironment.cpp:242-316) with buckets as servers.
   *
-  * Scope:
-  *  - baseline okapi/tfidf bags with non-negative weights (flagship),
-  *  - flat LM bags (dirichlet / jm / two-stage) via `planLm` — round 3:
-  *    a missing term contributes its background score bg_t(dl) =
-  *    s_t(0, dl) instead of 0, so the WAND algebra runs on
-  *    score = B(dl) + Σ effW·δ_t(tf, dl) with δ = s − bg ≥ 0 monotone
-  *    in tf and non-increasing in dl; the pivot bound is baseMax +
-  *    Σ δ-upper-bounds where baseMax = B(minDl over the query terms'
-  *    posting lists) bounds every candidate's background sum,
-  *  - round 4: STRUCTURED #combine/#weight trees whose leaves are terms
-  *    or #odN/#uwN windows of plain terms (the SDM/FDM shape) via
-  *    [[StructuredPlan]] — ordered/unordered windows run INSIDE the
-  *    kernel on per-posting position lists decoded from the segment
-  *    blocks, exactly like the reference evaluates proximity operators
-  *    document-at-a-time (reference: src/OrderedWindowNode.cpp:111-166,
+  * Scope: one plan shape, [[StructuredPlan]] — a #combine/#weight tree
+  * (non-negative weights) whose leaves are terms or #odN/#uwN windows of
+  * plain terms. A flat bag is the one-level case; SDM/FDM are the
+  * nested ones, exactly like the reference runs both through one
+  * WeightedAndNode.
+  *  - baseline okapi/tfidf: score = Σ w·s(tf, dl) over the fold tree,
+  *  - LM (dirichlet / jm / two-stage): an absent leaf contributes its
+  *    background bg(dl) = s(0, dl) instead of 0, so the WAND algebra
+  *    runs on score = B(dl) + Σ effW·δ(tf, dl) with δ = s − bg ≥ 0
+  *    monotone in tf and non-increasing in dl; the pivot bound is
+  *    baseMax + Σ δ-upper-bounds where baseMax bounds every candidate's
+  *    background sum,
+  *  - windows run INSIDE the kernel on per-posting position lists
+  *    decoded from the segment blocks, exactly like the reference
+  *    evaluates proximity operators document-at-a-time
+  *    (reference: src/OrderedWindowNode.cpp:111-166,
   *    src/UnorderedWindowNode.cpp:69-186) with term-bound max-score
   *    (window block bound ≤ Σ constituent term block maxTf,
-  *    reference: src/TermFrequencyBeliefNode.cpp:105-135).
+  *    reference: src/TermFrequencyBeliefNode.cpp:105-135). Position
+  *    bytes ship only for plans with a window leaf.
   *
   * Exact scores always fold children in query order with the real
   * bg(dl) — bit-identical to the DataFrame path (WandPropertySpec).
   */
 object Daat {
-
-  /** One query-term cursor's static data. */
-  final case class TermPlan(
-      term: String,
-      scoreFn: TermScoreFunction,
-      effWeight: Double,   // Σ of child weights referencing this term
-      upperBound: Double,  // baseline: sup effW·score; LM: sup effW·δ
-      lm: Boolean = false
-  )
-
-  /** children in original query order: (cursorIdx, weight) — folding in
-    * this order keeps doubles bit-identical to the DataFrame path.
-    * `baseMax` = 0 for baseline; for LM the max background sum.
-    */
-  final case class DaatPlan(terms: Array[TermPlan], children: Array[(Int, Double)],
-                            lm: Boolean = false, baseMax: Double = 0.0)
-
-  // ---------------------------------------------------------------
-  // structured (window-aware) plans — round 4
-  // ---------------------------------------------------------------
 
   /** #odN / #uwN window of plain terms (in query order). A member that
     * stopped/never occurs keeps its slot (cursor exhausts immediately →
@@ -90,7 +72,34 @@ object Daat {
       window: WindowSpec,           // null for unigrams
       scoreFn: TermScoreFunction,
       effWeight: Double,
-      upperBound: Double)
+      upperBound: Double) {
+    /** leaf score at (tf, dl): terms ride the frequency-list 2-arg score
+      * form, windows the ListBeliefNode 4-arg form with
+      * documentOccurrences == occurrences (reference:
+      * src/TermFrequencyBeliefNode.cpp vs src/ListBeliefNode.cpp:119-127)
+      * — identical for every rule except two-stage/documentMu smoothing,
+      * whose document components differ on purpose.
+      */
+    def scoreAt(tf: Double, dl: Int): Double =
+      if (window == null) scoreFn.scoreOccurrence(tf, dl)
+      else scoreFn.scoreOccurrence(tf, dl, tf, dl)
+  }
+
+  /** A leaf with its global WAND bound. Baseline: sup over tf of
+    * effW·s (s = A·tf/(tf+c) is monotone in tf; cheap safe bound
+    * effW·max(s(HUGE_TF, 1), 0)). LM: the δ bound effW·δ(occ, minDl) —
+    * δ is monotone in tf and non-increasing in dl for dirichlet
+    * (δ = ln(1 + tf/(μ·cf)), dl-free), JM and two-stage, and the leaf's
+    * tf never exceeds its collection count `occ` nor its dl fall below
+    * `minDl`.
+    */
+  def boundedLeaf(term: String, window: WindowSpec, fn: TermScoreFunction,
+                  effWeight: Double, lm: Boolean, occ: Double, minDl: Int): LeafPlan = {
+    val l = LeafPlan(term, window, fn, effWeight, 0.0)
+    l.copy(upperBound =
+      if (lm) effWeight * math.max(l.scoreAt(occ, minDl) - l.scoreAt(0.0, minDl), 0.0)
+      else math.max(effWeight * l.scoreAt(1e18, 1), 0.0))
+  }
 
   /** The belief-combination tree: mirrors nested
     * #combine/#weight OpSum folds bit-exactly (weights in query order,
@@ -108,125 +117,40 @@ object Daat {
   final case class StructuredPlan(leaves: Array[LeafPlan], tree: FoldTree,
                                   lm: Boolean, baseMax: Double)
 
-  /** Build the plan from global stats (the stats round — one dictionary
-    * lookup, no posting scan).
-    */
-  def plan(engineTerms: Seq[(String, Double, TermScoreFunction)]): DaatPlan = {
-    val distinct = engineTerms.map(_._1).distinct.toArray
-    val idxOf = distinct.zipWithIndex.toMap
-    val effW = new Array[Double](distinct.length)
-    val fns = new Array[TermScoreFunction](distinct.length)
-    engineTerms.foreach { case (t, w, fn) =>
-      effW(idxOf(t)) += w
-      fns(idxOf(t)) = fn
-    }
-    val plans = distinct.indices.map { i =>
-      // sup_{tf→∞} okapi/tfidf score = tw·idf·(k1+1) (score is A·tf/(tf+c),
-      // monotone in tf); cheap safe bound: effW·max(score(HUGE_TF, 1), 0)
-      val asymptote = fns(i).scoreOccurrence(1e18, 1)
-      TermPlan(distinct(i), fns(i), effW(i), math.max(effW(i) * asymptote, 0.0))
-    }.toArray
-    val children = engineTerms.map { case (t, w, _) => (idxOf(t), w) }.toArray
-    DaatPlan(plans, children)
-  }
-
-  /** LM plan: per term also takes (ctf, minDl) — the global δ upper
-    * bound is δ(tfCap=ctf, minDl_t): δ is monotone in tf and
-    * non-increasing in dl for dirichlet (δ = ln(1 + tf/(μ·cf)),
-    * dl-free), JM (δ = ln(1 + (1−λ)tf/(dl·λ·cf))) and two-stage.
-    * `minDlQuery` = min over the PRESENT query terms' minDocLen — every
-    * candidate document contains one of them, so its dl is ≥ that and
-    * its background sum ≤ baseMax = Σ_children w·s_t(0, minDlQuery).
-    */
-  def planLm(engineTerms: Seq[(String, Double, TermScoreFunction, Long, Int)],
-             minDlQuery: Int): DaatPlan = {
-    val distinct = engineTerms.map(_._1).distinct.toArray
-    val idxOf = distinct.zipWithIndex.toMap
-    val effW = new Array[Double](distinct.length)
-    val fns = new Array[TermScoreFunction](distinct.length)
-    val ctfs = new Array[Long](distinct.length)
-    val minDls = new Array[Int](distinct.length)
-    engineTerms.foreach { case (t, w, fn, ctf, minDl) =>
-      effW(idxOf(t)) += w
-      fns(idxOf(t)) = fn
-      ctfs(idxOf(t)) = ctf
-      minDls(idxOf(t)) = math.max(minDl, 1)
-    }
-    val plans = distinct.indices.map { i =>
-      val ub = effW(i) * math.max(
-        fns(i).scoreOccurrence(ctfs(i).toDouble, minDls(i))
-          - fns(i).scoreOccurrence(0.0, minDls(i)), 0.0)
-      TermPlan(distinct(i), fns(i), effW(i), ub, lm = true)
-    }.toArray
-    val children = engineTerms.map { case (t, w, _, _, _) => (idxOf(t), w) }.toArray
-    val baseMax = children.foldLeft(0.0) { case (acc, (ci, w)) =>
-      acc + w * fns(ci).scoreOccurrence(0.0, math.max(minDlQuery, 1))
-    }
-    DaatPlan(plans, children, lm = true, baseMax = baseMax)
-  }
-
-  /** Run distributed block-max WAND. Returns (docId, score) top-k.
+  /** Distributed block-max WAND over a structured plan. Returns
+    * (docId, score) top-k. Per bucket, one [[Cursor]] per unigram leaf
+    * and one [[WindowCursor]] (over member term cursors sharing the
+    * bucket's decoded blocks) per window leaf.
     *
     * @param exhaustive disable pruning (used by the safety property test:
     *                   pruned == exhaustive, FIXTURES.md §5)
+    * @param seedTheta  global lower bound of the k-th best score (topdocs
+    *                   seeding, see [[wand]])
     */
-  def topK(index: InvertedIndex, p: DaatPlan, k: Int,
+  def topK(index: InvertedIndex, p: StructuredPlan, k: Int,
            exhaustive: Boolean = false,
            seedTheta: Double = Double.NegativeInfinity,
            deleted: Set[Long] = Set.empty): DataFrame = {
     val spark = index.segments.sparkSession
     import spark.implicits._
-    // k ≤ 0 must mirror the DataFrame path's limit(k) → empty result;
-    // unguarded it reaches a zero-capacity TopKHeap whose peek() NPEs
+    // k ≤ 0 must mirror the DataFrame path's limit(k) → empty result
     if (k <= 0) return Seq.empty[(Long, Double)].toDF("docId", "score")
-    val terms = p.terms.map(_.term).toSeq
+    val termSet = p.leaves.flatMap(l =>
+      if (l.window == null) Seq(l.term) else l.window.terms.toSeq).distinct.toSeq
+    val withPositions = p.leaves.exists(_.window != null)
     val bcPlan = spark.sparkContext.broadcast(p)
     val bcDeleted = spark.sparkContext.broadcast(deleted)
 
-    val segs = querySegments(index, terms, withPositions = false)
+    val segs = querySegments(index, termSet, withPositions)
 
     val locals = segs.mapPartitions { rows =>
       val plan = bcPlan.value
-      val byTerm = collectBlocks(rows, hasPositions = false)
-      val cursors = plan.terms.indices.map { i =>
-        new Cursor(byTerm.getOrElse(plan.terms(i).term, TermBlocks.empty),
-          plan.terms(i))
-      }.toArray
+      val byTerm = collectBlocks(rows, withPositions)
+      val cursors: Array[DaatCursor] = plan.leaves.map(leafCursor(_, byTerm, plan.lm))
       wand(cursors, plan, k, exhaustive, seedTheta, bcDeleted.value).iterator
     }.toDF("docId", "score")
 
     // global merge of per-bucket top-k candidates
-    locals.orderBy(col("score").desc, col("docId").asc).limit(k)
-  }
-
-  /** Structured (window-aware) distributed WAND — the SDM/FDM physical
-    * path. Segment rows ship WITH positionsDelta; per bucket, one
-    * [[Cursor]] per unigram leaf and one [[WindowCursor]] (over member
-    * term cursors sharing the bucket's decoded blocks) per window leaf.
-    */
-  def topKStructured(index: InvertedIndex, p: StructuredPlan, k: Int,
-                     exhaustive: Boolean = false,
-                     deleted: Set[Long] = Set.empty): DataFrame = {
-    val spark = index.segments.sparkSession
-    import spark.implicits._
-    if (k <= 0) return Seq.empty[(Long, Double)].toDF("docId", "score")
-    val termSet = p.leaves.flatMap(l =>
-      if (l.window == null) Seq(l.term) else l.window.terms.toSeq).distinct.toSeq
-    val bcPlan = spark.sparkContext.broadcast(p)
-    val bcDeleted = spark.sparkContext.broadcast(deleted)
-
-    val segs = querySegments(index, termSet, withPositions = true)
-
-    val locals = segs.mapPartitions { rows =>
-      val plan = bcPlan.value
-      val byTerm = collectBlocks(rows, hasPositions = true)
-      val cursors: Array[DaatCursor] = plan.leaves.map(leafCursor(_, byTerm, plan.lm))
-      val heap = wandLoop(cursors, plan.baseMax, k, exhaustive,
-        Double.NegativeInfinity, bcDeleted.value,
-        d => scoreStructured(cursors, plan, d))
-      heap.iterator
-    }.toDF("docId", "score")
-
     locals.orderBy(col("score").desc, col("docId").asc).limit(k)
   }
 
@@ -255,10 +179,7 @@ object Daat {
       val del = bcDeleted.value
       val byTerm = collectBlocks(rows, hasPositions = true)
       ws.iterator.zipWithIndex.map { case (w, wi) =>
-        val cur = new WindowCursor(
-          w.terms.map(t => new Cursor(byTerm.getOrElse(t, TermBlocks.empty),
-            statsPlan(t))),
-          w.ordered, w.width, null, 0.0, 0.0, lmMode = false)
+        val cur = leafCursor(LeafPlan("", w, null, 0.0, 0.0), byTerm, lm = false)
         var occ = 0L; var df = 0L
         while (!cur.exhausted) {
           if (!del.contains(cur.doc)) {
@@ -278,7 +199,8 @@ object Daat {
     out
   }
 
-  private def statsPlan(t: String) = TermPlan(t, null, 0.0, 0.0)
+  /** an unscored term leaf: window members and stats/extent cursors */
+  private def memberLeaf(t: String) = LeafPlan(t, null, null, 0.0, 0.0)
 
   // ---------------------------------------------------------------
   // extent-restricted / passage kernel — round 5
@@ -421,7 +343,7 @@ object Daat {
                           k: Int, deleted: Set[Long]): Seq[(Long, Int, Int, Double)] = {
     val distinct = p.childTerm.filter(_ != null).distinct
     val cursors = distinct.map(t =>
-      new Cursor(byTerm.getOrElse(t, TermBlocks.empty), statsPlan(t)))
+      new Cursor(byTerm.getOrElse(t, TermBlocks.empty), memberLeaf(t), lm = false))
     val childrenOf: Array[Array[Int]] = distinct.map(t =>
       p.childTerm.indices.filter(ci => t == p.childTerm(ci)).toArray)
     val n = p.childTerm.length
@@ -580,8 +502,8 @@ object Daat {
   }
 
   /** Shared per-query segment scan: filter to the query's terms, select
-    * the block columns (positions only when the plan needs them — the
-    * flat path never ships position bytes), co-locate by bucket.
+    * the block columns (positions only when the plan needs them — a plan
+    * without window leaves never ships position bytes), co-locate by bucket.
     * One task per docId-range bucket — NOT spark.sql.shuffle.partitions:
     * a query touches only |terms| posting lists, and padding it to the
     * session-wide partition count schedules mostly-empty tasks.
@@ -626,15 +548,10 @@ object Daat {
   /** One leaf cursor over the bucket's shared blocks. */
   private def leafCursor(l: LeafPlan, byTerm: Map[String, TermBlocks],
                          lm: Boolean): DaatCursor =
-    if (l.window == null)
-      new Cursor(byTerm.getOrElse(l.term, TermBlocks.empty),
-        TermPlan(l.term, l.scoreFn, l.effWeight, l.upperBound, lm))
+    if (l.window == null) new Cursor(byTerm.getOrElse(l.term, TermBlocks.empty), l, lm)
     else
-      new WindowCursor(
-        l.window.terms.map(t => new Cursor(byTerm.getOrElse(t, TermBlocks.empty),
-          statsPlan(t))),
-        l.window.ordered, l.window.width,
-        l.scoreFn, l.effWeight, l.upperBound, lmMode = lm)
+      new WindowCursor(l.window.terms.map(t =>
+        new Cursor(byTerm.getOrElse(t, TermBlocks.empty), memberLeaf(t), lm = false)), l, lm)
 
   final case class Block(firstDoc: Long, lastDoc: Long, numDocs: Int,
                          maxTf: Int, minDl: Int,
@@ -680,33 +597,38 @@ object Daat {
     * posting-list [[Cursor]] and the proximity [[WindowCursor]].
     */
   trait DaatCursor {
-    def scoreFn: TermScoreFunction
-    def effWeight: Double
-    def upperBound: Double
+    def leaf: LeafPlan
+    /** LM mode: bounds cover the δ above background — the background sum
+      * is already covered by the plan-level baseMax
+      */
+    def lm: Boolean
+    def upperBound: Double = leaf.upperBound
     def exhausted: Boolean
     def doc: Long
     def tf: Int
     def dl: Int
+    /** max contribution of the CURRENT block (block-max bound) */
     def blockBound: Double
     def blockLast: Long
     def next(): Unit
     def advanceTo(target: Long): Unit
-    /** leaf score at (tf, dl): term cursors ride the frequency-list
-      * 2-arg score form, window cursors the ListBeliefNode 4-arg form
-      * with documentOccurrences == occurrences (reference:
-      * src/TermFrequencyBeliefNode.cpp vs src/ListBeliefNode.cpp:119-127)
-      * — identical for every rule except two-stage/documentMu smoothing,
-      * whose document components differ on purpose.
+    def scoreAt(tf: Double, dl: Int): Double = leaf.scoreAt(tf, dl)
+    /** bound of the leaf's contribution at a (max tf, min dl) corner —
+      * scores are monotone ↑ tf, ↓ dl for all supported rules
       */
-    def scoreAt(tf: Double, dl: Int): Double
+    protected def cornerBound(tf: Double, dl: Int): Double = {
+      val s = scoreAt(tf, dl)
+      math.max(leaf.effWeight * (if (lm) s - scoreAt(0.0, dl) else s), 0.0)
+    }
   }
 
   /** Lazy-decoding posting cursor with block skipping: `advanceTo` hops
     * whole blocks via (firstDoc, lastDoc) without decoding — the skip
     * record analogue (reference: src/DiskDocListIterator.cpp:196-210).
     */
-  final class Cursor(tb: TermBlocks, val plan: TermPlan) extends DaatCursor {
-    def this(blocks: Array[Block], plan: TermPlan) = this(new TermBlocks(blocks), plan)
+  final class Cursor(tb: TermBlocks, val leaf: LeafPlan, val lm: Boolean) extends DaatCursor {
+    def this(blocks: Array[Block], leaf: LeafPlan, lm: Boolean) =
+      this(new TermBlocks(blocks), leaf, lm)
     private def blocks: Array[Block] = tb.blocks
     private var bi = 0
     private var pos = 0
@@ -714,11 +636,6 @@ object Daat {
     private var tfs: Array[Int] = null
     private var dls: Array[Int] = null
     var decodedBlocks = 0 // instrumentation for pruning tests
-
-    def scoreFn: TermScoreFunction = plan.scoreFn
-    def effWeight: Double = plan.effWeight
-    def upperBound: Double = plan.upperBound
-    def scoreAt(tf0: Double, dl0: Int): Double = plan.scoreFn.scoreOccurrence(tf0, dl0)
 
     private def ensureDecoded(): Unit = {
       if (docs == null && bi < blocks.length) {
@@ -750,21 +667,8 @@ object Daat {
       */
     def blockMaxTf: Int = if (exhausted) 0 else blocks(bi).maxTf
     def blockMinDl: Int = if (exhausted) 1 else blocks(bi).minDl
-    /** max contribution of the CURRENT block (block-max bound). LM mode
-      * bounds the δ above background — the background sum is already
-      * covered by the plan-level baseMax; δ peaks at (maxTf, minDl).
-      */
     def blockBound: Double =
-      if (exhausted) 0.0
-      else {
-        val b = blocks(bi)
-        if (plan.lm)
-          math.max(plan.effWeight *
-            (plan.scoreFn.scoreOccurrence(b.maxTf.toDouble, b.minDl)
-              - plan.scoreFn.scoreOccurrence(0.0, b.minDl)), 0.0)
-        else
-          math.max(plan.effWeight * plan.scoreFn.scoreOccurrence(b.maxTf.toDouble, b.minDl), 0.0)
-      }
+      if (exhausted) 0.0 else cornerBound(blocks(bi).maxTf.toDouble, blocks(bi).minDl)
     /** last doc of the current block (next-shallow boundary for BMW skips) */
     def blockLast: Long = if (exhausted) Long.MaxValue else blocks(bi).lastDoc
 
@@ -801,11 +705,10 @@ object Daat {
     * has tf = 0 and scores as background, exactly like the DataFrame
     * path's absent-leaf fill-in.
     */
-  final class WindowCursor(members: Array[Cursor], ordered: Boolean, width: Int,
-                           val scoreFn: TermScoreFunction,
-                           val effWeight: Double,
-                           val upperBound: Double,
-                           lmMode: Boolean) extends DaatCursor {
+  final class WindowCursor(members: Array[Cursor], val leaf: LeafPlan, val lm: Boolean)
+      extends DaatCursor {
+    private val ordered = leaf.window.ordered
+    private val width = leaf.window.width
     private var curDoc: Long = Long.MaxValue
     private var tfc: Int = -1
     align(0L)
@@ -887,19 +790,11 @@ object Daat {
           if (members(i).blockMinDl > dlB) dlB = members(i).blockMinDl
           i += 1
         }
-        val s = scoreAt(tfB.toDouble, dlB)
-        if (lmMode) math.max(effWeight * (s - scoreAt(0.0, dlB)), 0.0)
-        else math.max(effWeight * s, 0.0)
+        cornerBound(tfB.toDouble, dlB)
       }
     def next(): Unit = if (!exhausted) align(curDoc + 1)
     def advanceTo(target: Long): Unit =
       if (!exhausted && target > curDoc) align(target)
-    /** windows are ListBeliefNodes: 4-arg score form, document counts
-      * = the window's own (null raw iterator — reference:
-      * src/InferenceNetworkBuilder.cpp:756-780, ListBeliefNode.cpp:119-127)
-      */
-    def scoreAt(tf0: Double, dl0: Int): Double =
-      scoreFn.scoreOccurrence(tf0, dl0, tf0, dl0)
   }
 
   /** Exact structured score of `docId`: leaf scores (real tf when the
@@ -909,9 +804,11 @@ object Daat {
     * leaf has a REAL match (window conjunction aligned but zero window
     * count everywhere): such a doc is not a candidate on the DataFrame
     * path (absent from every leaf's match list) and must not be offered.
+    * A baseline leaf's background is ±0.0, so an absent term leaves the
+    * sum unchanged.
     */
-  def scoreStructured(cursors: Array[DaatCursor], p: StructuredPlan,
-                      docId: Long): Double = {
+  private def scoreStructured(cursors: Array[DaatCursor], p: StructuredPlan,
+                              docId: Long, leafScore: Array[Double]): Double = {
     val n = cursors.length
     var docDl = -1
     var any = false
@@ -925,7 +822,6 @@ object Daat {
       i += 1
     }
     if (!any) return Double.NaN
-    val leafScore = new Array[Double](n)
     i = 0
     while (i < n) {
       val c = cursors(i)
@@ -936,22 +832,12 @@ object Daat {
           c.scoreAt(0.0, docDl)
       i += 1
     }
-    def eval(t: FoldTree): Double = t match {
-      case FLeaf(li) => leafScore(li)
-      case FNode(cs) =>
-        var acc = 0.0
-        var j = 0
-        while (j < cs.length) {
-          acc += cs(j)._1 * eval(cs(j)._2)
-          j += 1
-        }
-        acc
-    }
-    eval(p.tree)
+    foldWith(p.tree, leafScore(_))
   }
 
-  /** Evaluate the fold tree with every leaf pinned to a fixed value
-    * function — used to compute the exact background supremum baseMax.
+  /** Fold the tree in query order with every leaf valued by
+    * `leafValue` — the exact scorer, the background supremum baseMax and
+    * the topdocs seed bounds all evaluate through it.
     */
   def foldWith(tree: FoldTree, leafValue: Int => Double): Double = tree match {
     case FLeaf(li) => leafValue(li)
@@ -965,46 +851,10 @@ object Daat {
       acc
   }
 
-  /** The flat-bag WAND entry (okapi/tfidf/LM bags) — exact scoring folds
-    * plan.children in query order; missing children contribute bg(dl)
-    * in LM mode (combineBeliefs fill-in).
-    */
-  def wand(cursors: Array[Cursor], plan: DaatPlan, k: Int,
-           exhaustive: Boolean,
-           seedTheta: Double = Double.NegativeInfinity,
-           deleted: Set[Long] = Set.empty): Seq[(Long, Double)] = {
-    val nTerms = cursors.length
-    val contrib = new Array[Double](nTerms)
-    def scoreCurrent(docId: Long): Double = {
-      java.util.Arrays.fill(contrib, 0.0)
-      var docDl = -1
-      var i = 0
-      while (i < nTerms) {
-        val c = cursors(i)
-        if (!c.exhausted && c.doc == docId) {
-          contrib(i) = c.plan.scoreFn.scoreOccurrence(c.tf.toDouble, c.dl)
-          docDl = c.dl
-        }
-        i += 1
-      }
-      var acc = 0.0
-      var j = 0
-      while (j < plan.children.length) {
-        val (ci, w) = plan.children(j)
-        val c = cursors(ci)
-        if (!c.exhausted && c.doc == docId) acc += w * contrib(ci)
-        else if (plan.lm) acc += w * c.plan.scoreFn.scoreOccurrence(0.0, docDl)
-        j += 1
-      }
-      acc
-    }
-    wandLoop(cursors.map(c => c: DaatCursor), plan.baseMax, k,
-      exhaustive, seedTheta, deleted, scoreCurrent)
-  }
-
-  /** The WAND loop with block-max refinement over one partition,
-    * generic over cursor kinds and the exact scorer (`scoreDoc` returns
-    * NaN for a doc that is not a real candidate — skipped, not offered).
+  /** The per-partition WAND loop with block-max refinement over a
+    * structured plan's cursors; exact scores come from
+    * [[scoreStructured]] (NaN = not a real candidate — skipped, not
+    * offered). Returns this partition's (docId, score) top-k.
     *
     * @param seedTheta initial pruning threshold from topdocs candidate
     *   seeding (reference: src/WeightedAndNode.cpp:119-186). MUST be a
@@ -1013,11 +863,14 @@ object Daat {
     *   it is provably outside the top-k. Valid in every bucket task —
     *   it is a global bound.
     */
-  def wandLoop(cursors: Array[DaatCursor], baseMax: Double, k: Int,
-               exhaustive: Boolean, seedTheta: Double, deleted: Set[Long],
-               scoreDoc: Long => Double): Seq[(Long, Double)] = {
+  def wand(cursors: Array[DaatCursor], plan: StructuredPlan, k: Int,
+           exhaustive: Boolean,
+           seedTheta: Double = Double.NegativeInfinity,
+           deleted: Set[Long] = Set.empty): Seq[(Long, Double)] = {
     if (k <= 0) return Nil // zero-capacity TopKHeap would NPE on peek()
+    val baseMax = plan.baseMax
     val nTerms = cursors.length
+    val leafScore = new Array[Double](nTerms)
     val heap = new TopKHeap(k)
     val order = (0 until nTerms).toArray // cursor indices sorted by current doc
 
@@ -1034,7 +887,7 @@ object Daat {
     }
 
     def offerAndAdvance(d: Long): Unit = {
-      val s = scoreDoc(d)
+      val s = scoreStructured(cursors, plan, d, leafScore)
       if (!java.lang.Double.isNaN(s)) heap.offer(d, s)
       var m = 0
       while (m < nTerms) { if (cursors(m).doc == d) cursors(m).next(); m += 1 }
@@ -1136,7 +989,9 @@ object Daat {
   final class TopKHeap(k: Int) {
     // ordering: WORST first. worse = lower score, or equal score and
     // LARGER docId (ties prefer smaller docId in the final ranking)
-    private val q = new java.util.PriorityQueue[(Long, Double)](k + 1,
+    // initial capacity as ExtentHeap: k comes from callers (RunQuery's
+    // count), so k + 1 can overflow and a huge k must not pre-allocate
+    private val q = new java.util.PriorityQueue[(Long, Double)](math.min(k, 1024) + 1,
       (a: (Long, Double), b: (Long, Double)) => {
         val c = java.lang.Double.compare(a._2, b._2)
         if (c != 0) c else java.lang.Long.compare(b._1, a._1)

@@ -1309,10 +1309,12 @@ final class Engine(
   /** Top-k retrieval. Final order: score desc, docId asc — the stable
     * sort + doc-order tiebreak (reference: src/QueryEnvironment.cpp:985-988).
     *
-    * Flat okapi/tfidf bags with non-negative weights dispatch to the
-    * block-max WAND DAAT kernel over the compressed segments (the
-    * max-score physical path); everything else evaluates on the
-    * DataFrame inference-network path. Both produce bit-identical
+    * Under one okapi/tfidf/LM rule, #combine/#weight trees with
+    * non-negative weights (at least one positive) over terms and
+    * #odN/#uwN windows of plain terms — flat bags and SDM/FDM alike —
+    * dispatch to the block-max WAND DAAT kernel over the compressed
+    * segments (the max-score physical path); everything else evaluates
+    * on the DataFrame inference-network path. Both produce bit-identical
     * scores (WandPropertySpec).
     */
   def runQuery(query: String, k: Int, useDaat: Boolean = true): DataFrame =
@@ -1323,40 +1325,12 @@ final class Engine(
     * 'node.js' would re-lex with indri DOT-qualifier semantics.
     */
   private[graft] def runParsed(ast: QueryNode, k: Int,
-                               useDaat: Boolean = true): DataFrame = {
-    // selector rule lists can give different leaves different smoothing,
-    // which the single-rule kernels cannot represent — belief path then
-    daatBag(ast) match {
-      case Some(termWeights) if useDaat && baseline &&
-          smoothRules.isEmpty && daatDeletedSet.isDefined =>
-        runDaat(termWeights, k, exhaustive = false)
-      case Some(_) if useDaat && lmMethod &&
-          smoothRules.isEmpty && daatDeletedSet.isDefined =>
-        // flat LM bags run the kernel too — weights become the belief
-        // weights evaluate() would use (combine: 1/k; weight: w/Σ|w|)
-        runDaatLm(lmBagWeights(ast).get, k, exhaustive = false)
-      case _ =>
-        (if (useDaat) runStructured(ast, k) else None)
-          .getOrElse(scoredTail(evaluate(ast), k))
-    }
-  }
+                               useDaat: Boolean = true): DataFrame =
+    (if (useDaat) runStructured(ast, k) else None)
+      .getOrElse(scoredTail(evaluate(ast), k))
 
   private def lmMethod: Boolean =
     rule.method == "dirichlet" || rule.method == "jm" || rule.method == "two"
-
-  /** flat-bag CHILD weights exactly as evaluateWith folds them for a
-    * non-baseline root: #combine → 1/k each; #weight → w/Σ|w| (positive
-    * weights only — the daatBag guard); bare term → weight 1
-    */
-  private def lmBagWeights(ast: QueryNode): Option[Seq[(String, Double)]] = ast match {
-    case TermNode(t) => Some(Seq(t -> 1.0))
-    case CombineNode(cs) if cs.forall(_.isInstanceOf[TermNode]) =>
-      Some(cs.map { case TermNode(t) => t -> 1.0 / cs.size })
-    case WeightNode(cs) if cs.forall(_._2.isInstanceOf[TermNode]) && cs.forall(_._1 >= 0) =>
-      val total = cs.map(c => math.abs(c._1)).sum
-      Some(cs.map { case (w, TermNode(t)) => t -> w / total })
-    case _ => None
-  }
 
   /** deleted-doc filter + final (score desc, docId asc) top-k on a
     * belief — the shared tail of runQuery and runQueries
@@ -1379,18 +1353,15 @@ final class Engine(
     * QueryEnvironment, runquery/IndriRunQuery.cpp:710-726). On Spark the
     * driver-blocking stats rounds are the per-query latency floor, so a
     * B-query batch pays 2 rounds instead of 2B (plus the k-bounded
-    * topdocs seed probe per DAAT-path query).
+    * topdocs seed probe per kernel query when the index has topdocs).
     */
   def runQueries(queries: Seq[String], k: Int, useDaat: Boolean = true): Seq[(String, DataFrame)] = {
     val asts = queries.map(q => q -> QueryParser.parse(q))
-    def daatPath(ast: QueryNode): Boolean =
-      daatBag(ast).isDefined && useDaat && (baseline || lmMethod) && daatDeletedSet.isDefined
-    def structPath(ast: QueryNode): Boolean =
-      daatBag(ast).isEmpty && useDaat && structuredServes(ast)
+    def kernelPath(ast: QueryNode): Boolean = useDaat && structuredServes(ast)
     val allTerms = asts.flatMap { case (_, a) => QueryParser.termLeaves(a) }
       .flatMap(t => Option(analyzer.processTerm(t)))
     val tstats = termStatsFor(allTerms.distinct)
-    // structured (windows-in-kernel) queries fold their window-leaf
+    // kernel (windows-in-kernel) queries fold their window-leaf
     // stats into the SAME one-job round as the belief leaves — the batch
     // still pays exactly two driver actions (term probe + leaf stats).
     // Window counts are exact integers through either counting path, so
@@ -1399,28 +1370,20 @@ final class Engine(
     val noDeletes = daatDeletedSet.contains(Set.empty[Long])
     val structLeaves: Seq[QueryNode] =
       if (noDeletes)
-        asts.collect { case (_, a) if structPath(a) => structuredWindowNodes(a) }.flatten
+        asts.collect { case (_, a) if kernelPath(a) => structuredWindowNodes(a) }.flatten
       else Nil
     val cstats = complexStatsBatch(
-      asts.collect { case (_, a) if !daatPath(a) && !structPath(a) =>
-        complexRawLeaves(a) }.flatten ++ structLeaves)
+      asts.collect { case (_, a) if !kernelPath(a) => complexRawLeaves(a) }.flatten ++
+        structLeaves)
     val wShared: Map[(Seq[String], Boolean, Int), (Double, Long)] =
       structLeaves.distinct.flatMap { n =>
         windowSpecKey(n).map(_ -> cstats(n))
       }.toMap
     asts.map { case (q, ast) =>
-      q -> (daatBag(ast) match {
-        case Some(termWeights) if daatPath(ast) && baseline =>
-          runDaat(termWeights, k, exhaustive = false, tstatsOpt = Some(tstats))
-        case Some(_) if daatPath(ast) =>
-          runDaatLm(lmBagWeights(ast).get, k, exhaustive = false,
-            tstatsOpt = Some(tstats))
-        case _ =>
-          (if (structPath(ast)) runStructured(ast, k, tstatsOpt = Some(tstats),
-             wstatsOpt = if (wShared.isEmpty) None else Some(wShared))
-           else None)
-            .getOrElse(scoredTail(evaluateWith(ast, tstats, cstats, root = true), k))
-      })
+      q -> (if (kernelPath(ast)) runStructured(ast, k, tstatsOpt = Some(tstats),
+              wstatsOpt = if (wShared.isEmpty) None else Some(wShared))
+            else None)
+        .getOrElse(scoredTail(evaluateWith(ast, tstats, cstats, root = true), k))
     }
   }
 
@@ -1448,96 +1411,16 @@ final class Engine(
     case _ => None
   }
 
-  /** (rawTerm, weight) children in query order when the AST is a flat
-    * non-negative bag the WAND kernel can serve; None otherwise.
-    * Baseline weights: root #combine → 1.0 each (PlusNode), root
-    * #weight → raw weights (WPlusNode).
-    */
-  private def daatBag(ast: QueryNode): Option[Seq[(String, Double)]] = ast match {
-    case TermNode(t) => Some(Seq(t -> 1.0))
-    case CombineNode(cs) if cs.forall(_.isInstanceOf[TermNode]) =>
-      Some(cs.map { case TermNode(t) => t -> 1.0 })
-    case WeightNode(cs) if cs.forall(_._2.isInstanceOf[TermNode]) && cs.forall(_._1 >= 0) =>
-      Some(cs.map { case (w, TermNode(t)) => t -> w })
-    case _ => None
-  }
-
-  /** Score a bag through the DAAT/WAND kernel. Stopped/OOV terms drop
-    * out (okapi background = 0 — NullScorerNode semantics).
-    */
-  def runDaat(termWeights: Seq[(String, Double)], k: Int, exhaustive: Boolean,
-              tstatsOpt: Option[Map[String, TermStats]] = None): DataFrame = {
-    val processed = termWeights.flatMap { case (t, w) =>
-      Option(analyzer.processTerm(t)).map(_ -> w)
-    }
-    if (processed.isEmpty) {
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("docId", LongType), StructField("score", DoubleType))))
-    }
-    val tstats = tstatsOpt.getOrElse(termStatsFor(processed.map(_._1)))
-    val qtfs = processed.groupBy(_._1).map { case (t, xs) => t -> xs.length }
-    val engineTerms = processed.map { case (t, w) =>
-      val ts = tstats.getOrElse(t, TermStats(0, 0))
-      val fn = Scorers.forTerm(rule, ts.ctf.toDouble, stats.totalTerms.toDouble,
-        ts.df.toDouble, stats.totalDocs, qtf = qtfs(t))
-      (t, w, fn)
-    }
-    val p = Daat.plan(engineTerms)
-    val del = daatDeletedSet.getOrElse(
-      throw new IllegalStateException("DAAT with unbounded pending deletes — compact first"))
-    val seed = if (exhaustive || index.topdocs == null) Double.NegativeInfinity
-               else topdocsSeed(p, k, del)
-    Daat.topK(index, p, k, exhaustive, seed, del)
-  }
-
-  /** LM bag through the kernel. Unlike the baseline path, stopped/OOV
-    * children are KEPT: the DataFrame path scores them as background
-    * everywhere (cf-guarded), so dropping them would change every score.
-    * Their cursors get sentinel terms that match no postings.
-    */
-  def runDaatLm(bag: Seq[(String, Double)], k: Int, exhaustive: Boolean,
-                tstatsOpt: Option[Map[String, TermStats]] = None): DataFrame = {
-    require(lmMethod, s"runDaatLm requires an LM rule, got ${rule.method}")
-    val processedNames = bag.zipWithIndex.map { case ((t, _), i) =>
-      Option(analyzer.processTerm(t)).getOrElse(s"\u0000stopped$i")
-    }
-    val live = processedNames.filterNot(_.startsWith("\u0000"))
-    if (live.isEmpty) {
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("docId", LongType), StructField("score", DoubleType))))
-    }
-    val tstats = tstatsOpt.getOrElse(termStatsFor(live))
-    val engineTerms = bag.zip(processedNames).map { case ((_, w), name) =>
-      val ts = tstats.getOrElse(name, TermStats(0, 0))
-      val fn = Scorers.forTerm(rule, ts.ctf.toDouble, stats.totalTerms.toDouble,
-        ts.df.toDouble, stats.totalDocs)
-      (name, w, fn, ts.ctf, ts.minDl)
-    }
-    // every candidate contains ≥1 present term, so dl ≥ the min of their
-    // per-term minimum doc lengths — the background-sum bound's argument
-    val minDlQuery = engineTerms.collect { case (_, _, _, ctf, m) if ctf > 0 => m }
-      .reduceOption(math.min).getOrElse(1)
-    if (engineTerms.forall(_._4 == 0L)) {
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("docId", LongType), StructField("score", DoubleType))))
-    }
-    val p = Daat.planLm(engineTerms, minDlQuery)
-    val del = daatDeletedSet.getOrElse(
-      throw new IllegalStateException("DAAT with unbounded pending deletes — compact first"))
-    val seed = if (exhaustive || index.topdocs == null) Double.NegativeInfinity
-               else topdocsSeed(p, k, del)
-    Daat.topK(index, p, k, exhaustive, seed, del)
-  }
-
   // ------------------------------------------------------------------
-  // structured (SDM/FDM-shaped) kernel path — round 4
+  // the DAAT kernel path: one structured plan for bags and SDM/FDM trees
   // ------------------------------------------------------------------
 
-  /** True when the AST is a #combine/#weight tree (non-negative weights)
-    * over term leaves and #odN/#uwN windows of plain terms — the
-    * dependence-model shape the window-aware WAND kernel serves
-    * (reference runs these document-at-a-time too:
-    * src/OrderedWindowNode.cpp, src/WeightedAndNode.cpp).
+  /** True when the AST is a #combine/#weight tree (non-negative weights,
+    * at least one positive per #weight) over term leaves and #odN/#uwN
+    * windows of plain terms — flat bags and the dependence-model shape
+    * alike (the reference runs both through one WeightedAndNode,
+    * src/WeightedAndNode.cpp, with windows evaluated
+    * document-at-a-time, src/OrderedWindowNode.cpp).
     */
   private def structuredShape(n: QueryNode): Boolean = n match {
     case _: TermNode => true
@@ -1550,23 +1433,14 @@ final class Engine(
     case _ => false
   }
 
-  private def containsWindow(n: QueryNode): Boolean = n match {
-    case _: OdNode | _: UwNode => true
-    case CombineNode(cs) => cs.exists(containsWindow)
-    case WeightNode(cs) => cs.exists(c => containsWindow(c._2))
-    case _ => false
-  }
-
   /** dispatch predicate shared by runQuery/runQueries */
   private def structuredServes(ast: QueryNode): Boolean =
     (baseline || lmMethod) && daatDeletedSet.isDefined &&
-      // selector rules force the belief path — checked HERE so that
-      // runQueries' batched complex-leaf stats round still covers a
-      // structured-shaped query's window leaves (runStructured would
-      // decline later and the belief fallback would otherwise pay one
-      // blocking stats job per window leaf)
-      smoothRules.isEmpty &&
-      structuredShape(ast) && containsWindow(ast)
+      // selector rule lists can give different leaves different
+      // smoothing, which the single-rule kernel cannot represent — they
+      // force the belief path, checked HERE so that runQueries' batched
+      // complex-leaf stats round still covers such a query's leaves
+      smoothRules.isEmpty && structuredShape(ast)
 
   private sealed trait LeafMeta
   private final case class TermLeafM(processed: String, qtf: Int) extends LeafMeta
@@ -1583,7 +1457,6 @@ final class Engine(
                                    tstatsOpt: Option[Map[String, TermStats]] = None,
                                    wstatsOpt: Option[Map[(Seq[String], Boolean, Int), (Double, Long)]] = None): Option[DataFrame] = {
     if (!structuredServes(ast)) return None
-    if (smoothRules.nonEmpty) return None // per-leaf rules → belief path
     val del = daatDeletedSet.get
 
     // ---- leaf registry (dedup by identical semantics) ----
@@ -1670,11 +1543,8 @@ final class Engine(
         val fn = Scorers.forTerm(rule, ts.ctf.toDouble, stats.totalTerms.toDouble,
           ts.df.toDouble, stats.totalDocs, qtf = qtf)
         val minDl = math.max(ts.minDl, 1)
-        val ub =
-          if (baseline) math.max(effW(i) * fn.scoreOccurrence(1e18, 1), 0.0)
-          else effW(i) * math.max(
-            fn.scoreOccurrence(ts.ctf.toDouble, minDl) - fn.scoreOccurrence(0.0, minDl), 0.0)
-        (Daat.LeafPlan(p, null, fn, effW(i), ub), if (ts.ctf > 0) minDl else 0)
+        (Daat.boundedLeaf(p, null, fn, effW(i), !baseline, ts.ctf.toDouble, minDl),
+          if (ts.ctf > 0) minDl else 0)
       case (WinLeafM(spec), i) =>
         val (occ, df) = wstats(wi); wi += 1
         val fn = Scorers.forTerm(rule, occ, stats.totalTerms.toDouble,
@@ -1685,13 +1555,8 @@ final class Engine(
         // window leaves score through the ListBeliefNode 4-arg form
         // (docOcc == occ): δ = s₄(tf,dl) − s₄(0,dl) stays ↑tf ↓dl for
         // every supported rule, so the (occ, minDl) corner still bounds
-        val ub =
-          if (baseline) math.max(effW(i) * fn.scoreOccurrence(1e18, 1, 1e18, 1), 0.0)
-          else effW(i) * math.max(
-            fn.scoreOccurrence(occ, minDl, occ, minDl)
-              - fn.scoreOccurrence(0.0, minDl, 0.0, minDl), 0.0)
-        (Daat.LeafPlan(spec.terms.mkString(if (spec.ordered) "#od:" else "#uw:", ",", ""),
-          spec, fn, effW(i), ub), if (df > 0) minDl else 0)
+        (Daat.boundedLeaf(spec.terms.mkString(if (spec.ordered) "#od:" else "#uw:", ",", ""),
+          spec, fn, effW(i), !baseline, occ, minDl), if (df > 0) minDl else 0)
     }
 
     // every candidate matches ≥1 live leaf — its dl is ≥ the min of the
@@ -1703,87 +1568,60 @@ final class Engine(
     }
     val minDlQuery = liveMinDls.min
     val leafPlans = leaves.map(_._1)
+    // leaves fill in with the same background forms the exact scorer
+    // and the DataFrame fill-in use
     val baseMax =
       if (baseline) 0.0
-      else Daat.foldWith(tree, { li =>
-        val lp = leafPlans(li)
-        // term leaves fill in with the frequency-list 2-arg background,
-        // window leaves with the ListBeliefNode 4-arg background — the
-        // same forms the exact scorer and the DataFrame fill-in use
-        if (lp.window == null) lp.scoreFn.scoreOccurrence(0.0, minDlQuery)
-        else lp.scoreFn.scoreOccurrence(0.0, minDlQuery, 0.0, minDlQuery)
-      })
+      else Daat.foldWith(tree, li => leafPlans(li).scoreAt(0.0, minDlQuery))
 
     val p = Daat.StructuredPlan(leafPlans, tree, lm = lmMethod, baseMax = baseMax)
-    Some(Daat.topKStructured(index, p, k, exhaustive, del))
+    val seed = if (exhaustive || index.topdocs == null) Double.NegativeInfinity
+               else topdocsSeed(p, k, del)
+    Some(Daat.topK(index, p, k, exhaustive, seed, del))
   }
 
   /** WAND threshold seeding from the topdocs lists (reference:
     * src/WeightedAndNode.cpp:119-186 seeds max-score candidates from the
-    * topdocs unions). A doc's single-term contributions summed over its
-    * topdocs entries are a LOWER bound of its true score (weights are
-    * non-negative, and seeding is DISABLED whenever any term's occurrence
-    * score can be negative — okapi idf < 0 for df > N/2 — because partial
-    * knowledge cannot lower-bound a sum with negative terms), so the
-    * k-th largest per-doc bound θ0 satisfies θ0 ≤ true k-th best —
-    * pruning against it stays exact (WandPropertySpec). Collect is
-    * bounded to k rows per query term.
+    * topdocs unions). A topdocs doc's bound folds the plan's tree with
+    * every term leaf scored at its recorded tf (or 0) and every window
+    * leaf at tf 0, all at the doc's recorded length. Weights are
+    * non-negative and an unknown leaf sits at its background — what the
+    * exact fold gives an absent leaf — so while every leaf's score is
+    * non-decreasing in tf the bound is ≤ the doc's exact score, the
+    * k-th largest bound θ0 is ≤ the true k-th best, and pruning against
+    * it stays exact (WandPropertySpec). A leaf that scores LOWER at
+    * tf=1 than at tf=0 (okapi idf < 0 when df > N/2 — exactly the
+    * frequent terms that HAVE topdocs lists; never an LM leaf) would
+    * make partial knowledge overstate the bound, so seeding is skipped
+    * then, as it is for a plan without term leaves (windows only: no
+    * topdocs list to read). The collect is bounded to k rows per query
+    * term.
     */
-  private def topdocsSeed(p: Daat.DaatPlan, k: Int,
-                          deleted: Set[Long] = Set.empty): Double = {
-    val terms = p.terms.map(_.term).toSeq
+  private def topdocsSeed(p: Daat.StructuredPlan, k: Int, deleted: Set[Long]): Double = {
+    val terms = p.leaves.collect { case l if l.window == null => l.term }.toSeq
+    if (k <= 0 || terms.isEmpty || p.leaves.exists(l => l.scoreAt(1.0, 1) < l.scoreAt(0.0, 1)))
+      return Double.NegativeInfinity
     val w = Window.partitionBy("term")
       .orderBy((col("tf").cast(DoubleType) / col("length")).desc, col("docId").asc)
     // deleted docs are excluded: their bounds could exceed the surviving
     // corpus's true k-th best, which would make the seed unsound
-    val rows = index.topdocs
+    val known = index.topdocs
       .where(col("term").isin(terms: _*))
       .withColumn("rk", row_number().over(w)).where(col("rk") <= k)
       .select("term", "docId", "tf", "length").collect()
       .filterNot(r => deleted.contains(r.getLong(1)))
-    if (rows.isEmpty) return Double.NegativeInfinity
-    val byTerm = p.terms.map(tp => tp.term -> tp).toMap
-    val perDoc = scala.collection.mutable.HashMap.empty[Long, Double]
-    if (p.lm) {
-      // LM lower bound: the topdocs rows give the doc's LENGTH, so score
-      // every child with its recorded tf (or 0 — s is monotone in tf):
-      // Σ w·s(tf_known_or_0, dl) ≤ the true score
-      val known = scala.collection.mutable.HashMap.empty[Long, (Int, scala.collection.mutable.HashMap[String, Int])]
-      rows.foreach { r =>
-        val e = known.getOrElseUpdate(r.getLong(1),
-          (r.getInt(3), scala.collection.mutable.HashMap.empty[String, Int]))
-        e._2.update(r.getString(0), r.getInt(2))
-      }
-      known.foreach { case (doc, (dl, tfs)) =>
-        var acc = 0.0
-        p.children.foreach { case (ci, w) =>
-          val tp = p.terms(ci)
-          acc += w * tp.scoreFn.scoreOccurrence(tfs.getOrElse(tp.term, 0).toDouble, dl)
-        }
-        perDoc.update(doc, acc)
-      }
-    } else {
-      // a term whose occurrence score can be NEGATIVE (okapi idf < 0
-      // when df > N/2 — exactly the frequent terms that HAVE topdocs
-      // lists) breaks per-doc lower bounds built from PARTIAL knowledge:
-      // a matching-but-unrecorded term would have to subtract, so either
-      // omitting it or clamping it to 0 OVERSTATES the bound and pruning
-      // against θ0 would drop true results. Sign is fixed by idf
-      // (probe tf=1), so skip seeding when any term can go negative.
-      if (p.terms.exists(tp => tp.scoreFn.scoreOccurrence(1.0, 1) < 0))
-        return Double.NegativeInfinity
-      rows.foreach { r =>
-        val tp = byTerm(r.getString(0))
-        val c = tp.effWeight * tp.scoreFn.scoreOccurrence(r.getInt(2).toDouble, r.getInt(3))
-        perDoc.update(r.getLong(1), perDoc.getOrElse(r.getLong(1), 0.0) + c)
-      }
-    }
-    if (perDoc.size < k) Double.NegativeInfinity
-    else {
-      val vs = perDoc.values.toArray
-      java.util.Arrays.sort(vs)
-      vs(vs.length - k)
-    }
+      .groupBy(_.getLong(1))
+    if (known.size < k) return Double.NegativeInfinity
+    val bounds = known.values.map { rows =>
+      val dl = rows.head.getInt(3)
+      val tfs = rows.map(r => r.getString(0) -> r.getInt(2)).toMap
+      Daat.foldWith(p.tree, { li =>
+        val l = p.leaves(li)
+        l.scoreAt(if (l.window == null) tfs.getOrElse(l.term, 0).toDouble else 0.0, dl)
+      })
+    }.toArray
+    java.util.Arrays.sort(bounds)
+    bounds(bounds.length - k)
   }
 
   /** Extent-restricted retrieval `#combine[f](…)` / `#combine[passageW:I](…)`:

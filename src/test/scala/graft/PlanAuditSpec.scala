@@ -39,26 +39,34 @@ class PlanAuditSpec extends AnyFunSuite {
     val qIdx = InvertedIndex(null, stored.dictionary, stored.doclens,
       stored.stats, stored.segments, numBuckets = stored.numBuckets,
       segmentsBucketed = true)
+    val bag = "#combine(return license)"
     val eng = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = "okapi"))
-    val df = eng.runDaat(Seq("return" -> 1.0, "license" -> 1.0), 10, exhaustive = false)
+    val df = eng.runQuery(bag, 10)
     val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"bucketed DAAT plan still shuffles per query:\n$plan")
+    // a bag has no window leaf: the kernel scan ships no position bytes
+    assert(plan.contains("dls") && !plan.contains("positionsDelta"),
+      s"flat bag plan reads positions:\n$plan")
     // bit-identical to the in-memory (repartition-per-query) path
     val engMem = new Engine(spark, idx, cfg.analyzer, ScoringRule(method = "okapi"))
-    val want = engMem.runDaat(Seq("return" -> 1.0, "license" -> 1.0), 10, exhaustive = false)
+    val want = engMem.runQuery(bag, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == want)
 
-    // the LM DAAT path (round 3) keeps the same zero-exchange property
+    // LM rules run the same kernel with the same zero-exchange property
     val engLm = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = "dirichlet"))
-    val lmDf = engLm.runDaatLm(Seq("return" -> 0.5, "license" -> 0.5), 10,
-      exhaustive = false)
+    val lmDf = engLm.runQuery(bag, 10)
     val lmPlan = lmDf.queryExecution.executedPlan.toString
     assert(!lmPlan.contains("Exchange"),
       s"bucketed LM DAAT plan still shuffles per query:\n$lmPlan")
+    assert(!lmPlan.contains("positionsDelta"), s"flat LM bag plan reads positions:\n$lmPlan")
     assert(lmDf.count() > 0)
+
+    // a window leaf needs the positions column
+    val winPlan = eng.runQuery("#od1(return license)", 10).queryExecution.executedPlan.toString
+    assert(winPlan.contains("positionsDelta"), s"window plan reads no positions:\n$winPlan")
   }
 
   test("posting build: per-doc aggregation moves no data; segment encode is the only exchange") {

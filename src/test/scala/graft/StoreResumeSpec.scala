@@ -51,10 +51,10 @@ class StoreResumeSpec extends AnyFunSuite {
       stats = stored.stats, segments = stored.segments)
     val eMem = new Engine(spark, idx, cfg.analyzer, ScoringRule(method = "okapi"))
     val eDisk = new Engine(spark, storedIdx, cfg.analyzer, ScoringRule(method = "okapi"))
-    val q = Seq("return" -> 1.0, "license" -> 1.0)
-    val rMem = eMem.runDaat(q, 10, exhaustive = false).collect()
+    val q = "#combine(return license)"
+    val rMem = eMem.runQuery(q, 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val rDisk = eDisk.runDaat(q, 10, exhaustive = false).collect()
+    val rDisk = eDisk.runQuery(q, 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(rMem == rDisk && rMem.nonEmpty)
 

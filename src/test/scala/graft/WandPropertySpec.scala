@@ -28,22 +28,73 @@ class WandPropertySpec extends AnyFunSuite {
     "#weight(0.7 return 0.3 license)",
     "#weight(3.0 val 1.0 static 2.0 import)",
     "#combine(zzznotaword return)",
-    "#combine(uniq1x5 return)" // df=1 + hot term: extreme UB spread
+    "#combine(uniq1x5 return)", // df=1 + hot term: extreme UB spread
+    "#combine(return #combine(license class))" // nested terms-only tree
   )
 
   private def run(engine: Engine, q: String, k: Int, mode: String): Seq[(Long, Double)] = {
     val df = mode match {
       case "wand" => engine.runQuery(q, k, useDaat = true)
       case "exhaustive" =>
-        engine.runDaat(QueryParser.parse(q) match {
-          case TermNode(t) => Seq(t -> 1.0)
-          case CombineNode(cs) => cs.map { case TermNode(t) => t -> 1.0 }
-          case WeightNode(cs) => cs.map { case (w, TermNode(t)) => t -> w }
-          case other => fail(s"unexpected $other")
-        }, k, exhaustive = true)
+        // runQuery dispatches through the same predicate: a defined
+        // kernel plan here means the "wand" mode ran the kernel too
+        val exh = engine.runStructured(QueryParser.parse(q), k, exhaustive = true)
+        assert(exh.isDefined, s"kernel dispatch did not fire for '$q'")
+        exh.get
       case "dataframe" => engine.runQuery(q, k, useDaat = false)
     }
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+  }
+
+  /** Kernel-level fixture: a one-level plan over `terms` (weight 1
+    * each, bounds as the engine derives them) and a maker of fresh
+    * cursors over the terms' blocks, collected locally.
+    */
+  private def kernelFixture(engine: Engine, rule: ScoringRule,
+                            terms: Seq[String]): (Daat.StructuredPlan, () => Array[Daat.Cursor]) = {
+    import org.apache.spark.sql.functions.col
+    import graft.search.Daat._
+    val lm = rule.method != "okapi" && rule.method != "tfidf"
+    val tstats = engine.termStatsFor(terms)
+    val minDls = terms.map(t => math.max(tstats.getOrElse(t, TermStats(0, 0)).minDl, 1))
+    val leaves = terms.zip(minDls).map { case (t, minDl) =>
+      val ts = tstats.getOrElse(t, TermStats(0, 0))
+      val fn = Scorers.forTerm(rule, ts.ctf.toDouble, index.stats.totalTerms.toDouble,
+        ts.df.toDouble, index.stats.totalDocs)
+      boundedLeaf(t, null, fn, 1.0, lm, ts.ctf.toDouble, minDl)
+    }.toArray
+    val tree = FNode(leaves.indices.map(i => (1.0, FLeaf(i): FoldTree)).toArray)
+    val baseMax = if (lm) foldWith(tree, li => leaves(li).scoreAt(0.0, minDls.min)) else 0.0
+    val rows = index.segments.where(col("term").isin(terms: _*))
+      .select("term", "firstDoc", "lastDoc", "numDocs", "maxTf", "minDl",
+        "docsDelta", "tfs", "dls").collect()
+    def mkCursors(): Array[Cursor] = {
+      val byTerm = rows.groupBy(_.getString(0))
+      leaves.map { l =>
+        val bs = byTerm.getOrElse(l.term, Array.empty).map { r =>
+          Block(r.getLong(1), r.getLong(2), r.getInt(3), r.getInt(4), r.getInt(5),
+            r.getAs[Array[Byte]](6), r.getAs[Array[Byte]](7), r.getAs[Array[Byte]](8))
+        }.sortBy(_.firstDoc)
+        new Cursor(bs, l, lm)
+      }
+    }
+    (StructuredPlan(leaves, tree, lm, baseMax), () => mkCursors())
+  }
+
+  private def wandOn(cs: Array[Daat.Cursor], p: Daat.StructuredPlan, k: Int,
+                     exhaustive: Boolean = false,
+                     seedTheta: Double = Double.NegativeInfinity): Seq[(Long, Double)] =
+    Daat.wand(cs.map(c => c: Daat.DaatCursor), p, k, exhaustive, seedTheta)
+
+  /** a mid-frequency term: enough blocks that a warm θ can skip the
+    * low-maxTf ones before the heap would have filled on its own
+    */
+  private def midTerm: String = {
+    import org.apache.spark.sql.functions.col
+    val n = index.stats.totalDocs
+    index.dictionary
+      .where(col("df") > n / 10 && col("df") < n / 3)
+      .orderBy(col("df").desc).select("term").head().getString(0)
   }
 
   test("WAND == exhaustive DAAT == DataFrame path, k=10 and k=1000, exact doubles") {
@@ -83,15 +134,7 @@ class WandPropertySpec extends AnyFunSuite {
       val engine = new Engine(spark, index, Analyzer(), ScoringRule.parse(method))
       for (q <- queries; k <- Seq(10, 1000)) {
         val wand = run(engine, q, k, "wand")
-        val exhDf = engine.runDaatLm(QueryParser.parse(q) match {
-          case TermNode(t) => Seq(t -> 1.0)
-          case CombineNode(cs) => cs.map { case TermNode(t) => t -> 1.0 / cs.size }
-          case WeightNode(cs) =>
-            val tot = cs.map(c => math.abs(c._1)).sum
-            cs.map { case (w, TermNode(t)) => t -> w / tot }
-          case other => fail(s"unexpected $other")
-        }, k, exhaustive = true)
-        val exh = exhDf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        val exh = run(engine, q, k, "exhaustive")
         val dfp = run(engine, q, k, "dataframe")
         assert(wand == exh, s"WAND != exhaustive for '$q' k=$k ($method)\n wand=${wand.take(5)}\n exh=${exh.take(5)}")
         assert(wand == dfp, s"WAND != DataFrame for '$q' k=$k ($method)\n wand=${wand.take(5)}\n df=${dfp.take(5)}")
@@ -176,7 +219,30 @@ class WandPropertySpec extends AnyFunSuite {
     val st = lmEng.runStructured(QueryParser.parse("#combine(#od1(return license) val)"), 0)
     assert(st.isDefined && st.get.collect().isEmpty)
     // direct kernel entry: no heap is constructed at k=0
-    assert(Daat.wand(Array.empty[Daat.Cursor], Daat.plan(Nil), 0, exhaustive = false).isEmpty)
+    val emptyPlan = Daat.StructuredPlan(Array.empty, Daat.FNode(Array.empty), lm = false, 0.0)
+    assert(Daat.wand(Array.empty[Daat.DaatCursor], emptyPlan, 0, exhaustive = false).isEmpty)
+  }
+
+  // window plans whose term leaf has a topdocs list long enough to seed
+  // k=1 and k=10 (the window leaves bound at their background): `return`
+  // under dirichlet; under okapi `return`'s idf is negative and disables
+  // seeding, so the okapi plan's term leaf is the positive-idf midTerm.
+  // k=1 puts θ0 at the largest bound, where an overstated window bound
+  // prunes the true best doc.
+  private val lmWindowQuery = "#combine(#od1(return license) return #uw4(class def))"
+  private def okapiWindowQuery = s"#combine(#od1(return $midTerm) $midTerm #uw4(class def))"
+
+  test("k = Int.MaxValue: the kernel returns what the belief path does, no heap overflow") {
+    // RunQuery's `count` reaches the kernel's TopKHeap as k; sizing its
+    // queue at k + 1 overflowed to a negative capacity and every bucket
+    // task threw, while the belief path answered the same query
+    for (method <- Seq("okapi", "dirichlet")) {
+      val engine = new Engine(spark, index, Analyzer(), ScoringRule(method = method))
+      val q = "#combine(return license)"
+      val kernel = run(engine, q, Int.MaxValue, "wand")
+      assert(kernel.nonEmpty && kernel == run(engine, q, Int.MaxValue, "dataframe"),
+        s"kernel != DataFrame at k = Int.MaxValue ($method)")
+    }
   }
 
   test("LM topdocs seeding stays exact") {
@@ -185,7 +251,7 @@ class WandPropertySpec extends AnyFunSuite {
     val seededIdx = index.copy(topdocs = td.cache())
     val engSeeded = new Engine(spark, seededIdx, Analyzer(), ScoringRule(method = "dirichlet"))
     val engPlain = new Engine(spark, index, Analyzer(), ScoringRule(method = "dirichlet"))
-    for (q <- queries; k <- Seq(10, 100)) {
+    for (q <- queries :+ lmWindowQuery; k <- Seq(1, 10, 100)) {
       val s = run(engSeeded, q, k, "wand")
       val u = run(engPlain, q, k, "wand")
       assert(s == u, s"LM seeded != unseeded for '$q' k=$k")
@@ -200,7 +266,7 @@ class WandPropertySpec extends AnyFunSuite {
     val seededIdx = index.copy(topdocs = td.cache())
     val engSeeded = new Engine(spark, seededIdx, Analyzer(), ScoringRule(method = "okapi"))
     val engPlain = new Engine(spark, index, Analyzer(), ScoringRule(method = "okapi"))
-    for (q <- queries; k <- Seq(10, 100)) {
+    for (q <- queries :+ okapiWindowQuery; k <- Seq(1, 10, 100)) {
       val s = run(engSeeded, q, k, "wand")
       val u = run(engPlain, q, k, "wand")
       assert(s == u, s"seeded != unseeded for '$q' k=$k")
@@ -209,41 +275,13 @@ class WandPropertySpec extends AnyFunSuite {
     // kernel level: seeding with the exact k-th best score (the tightest
     // valid θ0 — any topdocs-derived seed is ≤ it) must keep results
     // identical while decoding fewer blocks
-    import org.apache.spark.sql.functions.col
-    import graft.search.Daat._
-    // a mid-frequency term: enough blocks that a warm θ can skip the
-    // low-maxTf ones before the heap would have filled on its own
-    val n = index.stats.totalDocs
-    val midTerm = index.dictionary
-      .where(col("df") > n / 10 && col("df") < n / 3)
-      .orderBy(col("df").desc).select("term").head().getString(0)
-    val terms = Seq(midTerm)
-    val tstats = engPlain.termStatsFor(terms)
-    val engineTerms = terms.map { t =>
-      val ts = tstats.getOrElse(t, TermStats(0, 0))
-      (t, 1.0, Scorers.forTerm(ScoringRule(method = "okapi"), ts.ctf.toDouble,
-        index.stats.totalTerms.toDouble, ts.df.toDouble, index.stats.totalDocs))
-    }
-    val p = Daat.plan(engineTerms)
-    val rows = index.segments.where(col("term").isin(terms: _*))
-      .select("term", "firstDoc", "lastDoc", "numDocs", "maxTf", "minDl",
-        "docsDelta", "tfs", "dls").collect()
-    def mkCursors() = {
-      val byTerm = rows.groupBy(_.getString(0))
-      p.terms.map { tp =>
-        val bs = byTerm.getOrElse(tp.term, Array.empty).map { r =>
-          Block(r.getLong(1), r.getLong(2), r.getInt(3), r.getInt(4), r.getInt(5),
-            r.getAs[Array[Byte]](6), r.getAs[Array[Byte]](7), r.getAs[Array[Byte]](8))
-        }.sortBy(_.firstDoc)
-        new Cursor(bs, tp)
-      }
-    }
+    val (p, mkCursors) = kernelFixture(engPlain, ScoringRule(method = "okapi"), Seq(midTerm))
     val k = 5
     val cCold = mkCursors()
-    val rCold = Daat.wand(cCold, p, k, exhaustive = false)
+    val rCold = wandOn(cCold, p, k)
     val theta0 = rCold.last._2 // exact k-th best = the tightest sound seed
     val cSeeded = mkCursors()
-    val rSeeded = Daat.wand(cSeeded, p, k, exhaustive = false, seedTheta = theta0)
+    val rSeeded = wandOn(cSeeded, p, k, seedTheta = theta0)
     assert(rSeeded == rCold)
     val dSeeded = cSeeded.map(_.decodedBlocks).sum
     val dCold = cCold.map(_.decodedBlocks).sum
@@ -285,41 +323,14 @@ class WandPropertySpec extends AnyFunSuite {
     // the baseMax + δ algebra must yield non-vacuous bounds — with the
     // exact k-th best as seed, the kernel must skip block decodes on a
     // mid-frequency term, just like the okapi path
-    import org.apache.spark.sql.functions.col
-    import graft.search.Daat._
     val engPlain = new Engine(spark, index, Analyzer(), ScoringRule(method = "dirichlet"))
-    val n = index.stats.totalDocs
-    val midTerm = index.dictionary
-      .where(col("df") > n / 10 && col("df") < n / 3)
-      .orderBy(col("df").desc).select("term").head().getString(0)
-    val terms = Seq(midTerm)
-    val tstats = engPlain.termStatsFor(terms)
-    val engineTerms = terms.map { t =>
-      val ts = tstats.getOrElse(t, TermStats(0, 0))
-      (t, 1.0, Scorers.forTerm(ScoringRule(method = "dirichlet"), ts.ctf.toDouble,
-        index.stats.totalTerms.toDouble, ts.df.toDouble, index.stats.totalDocs),
-        ts.ctf, ts.minDl)
-    }
-    val p = Daat.planLm(engineTerms, engineTerms.map(_._5).min)
-    val rows = index.segments.where(col("term").isin(terms: _*))
-      .select("term", "firstDoc", "lastDoc", "numDocs", "maxTf", "minDl",
-        "docsDelta", "tfs", "dls").collect()
-    def mkCursors() = {
-      val byTerm = rows.groupBy(_.getString(0))
-      p.terms.map { tp =>
-        val bs = byTerm.getOrElse(tp.term, Array.empty).map { r =>
-          Block(r.getLong(1), r.getLong(2), r.getInt(3), r.getInt(4), r.getInt(5),
-            r.getAs[Array[Byte]](6), r.getAs[Array[Byte]](7), r.getAs[Array[Byte]](8))
-        }.sortBy(_.firstDoc)
-        new Cursor(bs, tp)
-      }
-    }
+    val (p, mkCursors) = kernelFixture(engPlain, ScoringRule(method = "dirichlet"), Seq(midTerm))
     val k = 5
     val cCold = mkCursors()
-    val rCold = Daat.wand(cCold, p, k, exhaustive = false)
+    val rCold = wandOn(cCold, p, k)
     val theta0 = rCold.last._2
     val cSeeded = mkCursors()
-    val rSeeded = Daat.wand(cSeeded, p, k, exhaustive = false, seedTheta = theta0)
+    val rSeeded = wandOn(cSeeded, p, k, seedTheta = theta0)
     assert(rSeeded == rCold)
     val dSeeded = cSeeded.map(_.decodedBlocks).sum
     val dCold = cCold.map(_.decodedBlocks).sum
@@ -333,46 +344,20 @@ class WandPropertySpec extends AnyFunSuite {
     // must never decode. (A near-universal term like `return` has
     // NEGATIVE idf here, UB=0, and legitimately cannot be pruned when θ
     // is negative — so pick a positive-idf term with many blocks.)
-    val analyzer = Analyzer()
-    val engine = new Engine(spark, index, analyzer, ScoringRule(method = "okapi"))
+    val engine = new Engine(spark, index, Analyzer(), ScoringRule(method = "okapi"))
     import org.apache.spark.sql.functions.col
     // a real df=1 term whose single posting has a small docId
     val rareTerm = index.dictionary.where(col("df") === 1)
       .join(index.postings, "term")
       .orderBy("docId").select("term")
       .head().getString(0)
-    val n = index.stats.totalDocs
-    val midTerm = index.dictionary
-      .where(col("df") > n / 10 && col("df") < n / 3)
-      .orderBy(col("df").desc).select("term")
-      .head().getString(0)
-    val tstats = engine.termStatsFor(Seq(midTerm, rareTerm))
-    import graft.search.Daat._
-    val engineTerms = Seq(rareTerm, midTerm).map { t =>
-      val ts = tstats.getOrElse(t, TermStats(0, 0))
-      (t, 1.0, Scorers.forTerm(ScoringRule(method = "okapi"), ts.ctf.toDouble,
-        index.stats.totalTerms.toDouble, ts.df.toDouble, index.stats.totalDocs))
-    }
-    val p = Daat.plan(engineTerms)
     // gather all blocks locally and run the kernel twice
-    import spark.implicits._
-    val rows = index.segments.where($"term".isin(rareTerm, midTerm))
-      .select("term", "firstDoc", "lastDoc", "numDocs", "maxTf", "minDl",
-        "docsDelta", "tfs", "dls").collect()
-    def mkCursors() = {
-      val byTerm = rows.groupBy(_.getString(0))
-      p.terms.map { tp =>
-        val bs = byTerm.getOrElse(tp.term, Array.empty).map { r =>
-          Block(r.getLong(1), r.getLong(2), r.getInt(3), r.getInt(4), r.getInt(5),
-            r.getAs[Array[Byte]](6), r.getAs[Array[Byte]](7), r.getAs[Array[Byte]](8))
-        }.sortBy(_.firstDoc)
-        new Cursor(bs, tp)
-      }
-    }
+    val (p, mkCursors) = kernelFixture(engine, ScoringRule(method = "okapi"),
+      Seq(rareTerm, midTerm))
     val cPruned = mkCursors()
-    val rPruned = Daat.wand(cPruned, p, 1, exhaustive = false)
+    val rPruned = wandOn(cPruned, p, 1)
     val cFull = mkCursors()
-    val rFull = Daat.wand(cFull, p, 1, exhaustive = true)
+    val rFull = wandOn(cFull, p, 1, exhaustive = true)
     assert(rPruned == rFull)
     val decodedPruned = cPruned.map(_.decodedBlocks).sum
     val decodedFull = cFull.map(_.decodedBlocks).sum
