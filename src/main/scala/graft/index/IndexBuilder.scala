@@ -1,9 +1,12 @@
 package graft.index
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.analysis.Analyzer
 
@@ -105,8 +108,8 @@ final case class InvertedIndex(
     fieldExtents: DataFrame = null, // (docId, field, begin, end, number) | null when no fields indexed
     numBuckets: Int = 0,   // docId-range buckets in segments (0 = unknown)
     segmentsBucketed: Boolean = false, // segments already hash-co-located by
-    // `bucket` (bucketed table scan or a persisted repartition) — the DAAT
-    // kernel then runs with NO per-query exchange
+    // `bucket` (bucketed table scan or a persisted repartition) — the
+    // resident block maps and the passage kernel's scans then need no exchange
     topdocs: DataFrame = null // optional (term, docId, tf, length) hot-term
     // lists (buildTopdocs) — when present, WAND seeds its threshold from
     // them (reference: src/WeightedAndNode.cpp:119-186 candidate seeding)
@@ -127,6 +130,30 @@ final case class InvertedIndex(
       if (terms.isEmpty) postings
       else postings.where(org.apache.spark.sql.functions.col("term").isin(terms: _*))
     } else IndexBuilder.decodePostings(segments, terms)
+
+  /** Resident per-bucket block maps: one partition per bucket group,
+    * each a map from term to that term's blocks sorted by firstDoc —
+    * the index an Indri server holds open. Built on first use and
+    * shared by every Engine over this index; persisted MEMORY_ONLY and
+    * unpersisted by the ContextCleaner once the index is unreachable.
+    */
+  @transient lazy val blockMaps: RDD[Map[String, Array[graft.search.Daat.Block]]] =
+    graft.search.Daat.residentBlocks(this)
+
+  /** Resident lexicon: the dictionary's (ctf, df, minDocLen) per term in
+    * term-hash partitions, so a stats probe reads only the partitions
+    * that hold its terms (reference: src/ContextSimpleCountAccumulator.cpp
+    * answers from the lexicon). Built and persisted like [[blockMaps]].
+    */
+  @transient lazy val lexicon: RDD[Map[String, graft.search.TermStats]] = {
+    val sc = dictionary.sparkSession.sparkContext
+    dictionary.select("term", "ctf", "df", "minDocLen").rdd
+      .map(r => r.getString(0) -> graft.search.TermStats(r.getLong(1), r.getLong(2), r.getInt(3)))
+      .partitionBy(new HashPartitioner(math.max(1, sc.defaultParallelism)))
+      .mapPartitions(it => Iterator(it.toMap), preservesPartitioning = true)
+      .setName("resident lexicon")
+      .persist(StorageLevel.MEMORY_ONLY)
+  }
 }
 
 final case class CorpusStats(totalDocs: Long, totalTerms: Long, uniqueTerms: Long) {

@@ -1,7 +1,12 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.index.{BlockCodec, InvertedIndex}
 
@@ -14,12 +19,15 @@ import graft.index.{BlockCodec, InvertedIndex}
   * block-max columns per Ding & Suel BMW).
   *
   * Distribution model: segment blocks are bucketed by docId range at
-  * build time, so `repartition(bucket)` co-locates ALL query terms'
-  * postings for a doc range in one task — each task runs an independent
-  * DAAT over its range and emits a local top-k; the global top-k is the
-  * k best of (numBuckets × k) candidates. This is exactly Indri's
-  * multi-server evaluate-then-merge shape
-  * (reference: src/QueryEnvironment.cpp:242-316) with buckets as servers.
+  * build time, and each index keeps them resident
+  * ([[InvertedIndex.blockMaps]]): one persisted partition per bucket
+  * group, a map from term to that term's blocks. A query is one job
+  * over those maps — each task runs an independent DAAT over its docId
+  * ranges and returns a local top-k — and the driver merges the
+  * (numBuckets × k) candidates into the global top-k ([[mergeTopK]]).
+  * This is Indri's multi-server evaluate-then-merge shape
+  * (reference: src/QueryEnvironment.cpp:242-316) with buckets as
+  * servers that hold their index open; no query builds a DataFrame plan.
   *
   * Scope: one plan shape, [[StructuredPlan]] — a #combine/#weight tree
   * (non-negative weights) whose leaves are terms or #odN/#uwN windows of
@@ -39,8 +47,8 @@ import graft.index.{BlockCodec, InvertedIndex}
   *    (reference: src/OrderedWindowNode.cpp:111-166,
   *    src/UnorderedWindowNode.cpp:69-186) with term-bound max-score
   *    (window block bound ≤ Σ constituent term block maxTf,
-  *    reference: src/TermFrequencyBeliefNode.cpp:105-135). Position
-  *    bytes ship only for plans with a window leaf.
+  *    reference: src/TermFrequencyBeliefNode.cpp:105-135). Only window
+  *    leaves decode position lists.
   *
   * Exact scores always fold children in query order with the real
   * bg(dl) — bit-identical to the DataFrame path (WandPropertySpec).
@@ -117,10 +125,12 @@ object Daat {
   final case class StructuredPlan(leaves: Array[LeafPlan], tree: FoldTree,
                                   lm: Boolean, baseMax: Double)
 
-  /** Distributed block-max WAND over a structured plan. Returns
-    * (docId, score) top-k. Per bucket, one [[Cursor]] per unigram leaf
-    * and one [[WindowCursor]] (over member term cursors sharing the
-    * bucket's decoded blocks) per window leaf.
+  /** Distributed block-max WAND over a structured plan. Returns the
+    * (docId, score) top-k as a local DataFrame, computed at call time:
+    * one job over the resident block maps, where each bucket runs one
+    * [[Cursor]] per unigram leaf and one [[WindowCursor]] (over member
+    * term cursors sharing the bucket's decoded blocks) per window leaf,
+    * and the driver merges the bucket-local top-k lists ([[mergeTopK]]).
     *
     * @param exhaustive disable pruning (used by the safety property test:
     *                   pruned == exhaustive, FIXTURES.md §5)
@@ -135,50 +145,28 @@ object Daat {
     import spark.implicits._
     // k ≤ 0 must mirror the DataFrame path's limit(k) → empty result
     if (k <= 0) return Seq.empty[(Long, Double)].toDF("docId", "score")
-    val termSet = p.leaves.flatMap(l =>
-      if (l.window == null) Seq(l.term) else l.window.terms.toSeq).distinct.toSeq
-    val withPositions = p.leaves.exists(_.window != null)
-    val bcPlan = spark.sparkContext.broadcast(p)
-    val bcDeleted = spark.sparkContext.broadcast(deleted)
-
-    val segs = querySegments(index, termSet, withPositions)
-
-    val locals = segs.mapPartitions { rows =>
-      val plan = bcPlan.value
-      val byTerm = collectBlocks(rows, withPositions)
+    val terms = p.leaves.toSeq.flatMap(l => if (l.window == null) Seq(l.term) else l.window.terms.toSeq)
+    val locals = onBuckets(index, terms, p, deleted) { (plan, byTerm, del) =>
       val cursors: Array[DaatCursor] = plan.leaves.map(leafCursor(_, byTerm, plan.lm))
-      wand(cursors, plan, k, exhaustive, seedTheta, bcDeleted.value).iterator
-    }.toDF("docId", "score")
-
-    // global merge of per-bucket top-k candidates
-    locals.orderBy(col("score").desc, col("docId").asc).limit(k)
+      wand(cursors, plan, k, exhaustive, seedTheta, del)
+    }
+    mergeTopK(locals, k).toSeq.toDF("docId", "score")
   }
 
   /** Kernel-side ContextCount for window expressions: ONE pass over the
-    * member terms' segment blocks per bucket; per window the member
-    * cursors leapfrog their conjunction and [[WindowMatcher]] counts
-    * matches per doc — (occ, df) per window, summed across buckets
-    * (docId ranges are disjoint). Bit-count-identical to the DataFrame
-    * windowRaw aggregation (same positions, same matcher).
+    * member terms' blocks per bucket; per window the member cursors
+    * leapfrog their conjunction and [[WindowMatcher]] counts matches per
+    * doc — (occ, df) per window, the exact integer partials summed on
+    * the driver (docId ranges are disjoint). Bit-count-identical to the
+    * DataFrame windowRaw aggregation (same positions, same matcher).
     * (reference: src/ContextCountAccumulator.cpp gathered in one
     * server round, src/QueryEnvironment.cpp:957-966)
     */
   def windowStats(index: InvertedIndex, windows: Array[WindowSpec],
                   deleted: Set[Long] = Set.empty): Array[(Double, Long)] = {
     if (windows.isEmpty) return Array.empty
-    val spark = index.segments.sparkSession
-    import spark.implicits._
-    val termSet = windows.flatMap(_.terms).distinct.toSeq
-    val bcWindows = spark.sparkContext.broadcast(windows)
-    val bcDeleted = spark.sparkContext.broadcast(deleted)
-
-    val segs = querySegments(index, termSet, withPositions = true)
-
-    val partials = segs.mapPartitions { rows =>
-      val ws = bcWindows.value
-      val del = bcDeleted.value
-      val byTerm = collectBlocks(rows, hasPositions = true)
-      ws.iterator.zipWithIndex.map { case (w, wi) =>
+    val partials = onBuckets(index, windows.flatMap(_.terms).toSeq, windows, deleted) { (ws, byTerm, del) =>
+      ws.map { w =>
         val cur = leafCursor(LeafPlan("", w, null, 0.0, 0.0), byTerm, lm = false)
         var occ = 0L; var df = 0L
         while (!cur.exhausted) {
@@ -188,16 +176,59 @@ object Daat {
           }
           cur.next()
         }
-        (wi, occ, df)
+        (occ, df)
       }
-    }.toDF("wi", "occ", "df")
-      .groupBy("wi").agg(sum("occ").as("occ"), sum("df").as("df"))
-      .collect()
-
-    val out = Array.fill(windows.length)((0.0, 0L))
-    partials.foreach { r => out(r.getInt(0)) = (r.getLong(1).toDouble, r.getLong(2)) }
-    out
+    }
+    windows.indices.map { wi =>
+      (partials.map(_(wi)._1).sum.toDouble, partials.map(_(wi)._2).sum)
+    }.toArray
   }
+
+  /** The one kernel scaffold: a single job over the resident block maps
+    * ([[InvertedIndex.blockMaps]]), one task per bucket group. Each task
+    * wraps the blocks of `terms` only in fresh [[TermBlocks]], so decode
+    * caches live for one query in one task, and returns `task`'s result
+    * for its buckets. The plan and the delete set are broadcast.
+    */
+  private def onBuckets[P: ClassTag, T: ClassTag](index: InvertedIndex, terms: Seq[String],
+                                                  plan: P, deleted: Set[Long])(
+      task: (P, Map[String, TermBlocks], Set[Long]) => T): Array[T] = {
+    val sc = index.segments.sparkSession.sparkContext
+    val bcPlan = sc.broadcast(plan)
+    val bcDeleted = sc.broadcast(deleted)
+    val wanted = terms.distinct.toArray
+    sc.runJob(index.blockMaps, (maps: Iterator[Map[String, Array[Block]]]) => {
+      val resident = if (maps.hasNext) maps.next() else Map.empty[String, Array[Block]]
+      val byTerm = wanted.iterator.flatMap(t => resident.get(t).map(t -> new TermBlocks(_))).toMap
+      task(bcPlan.value, byTerm, bcDeleted.value)
+    })
+  }
+
+  /** The driver's global merge of bucket-local top-k lists: the k best
+    * under (score desc, docId asc) with Spark's double ordering
+    * (SQLOrderingUtil.compareDoubles: NaN largest, -0.0 == 0.0), so the
+    * result is exactly `orderBy(score.desc, docId.asc).limit(k)` over the
+    * same rows (reference: the client-side merge of
+    * src/QueryEnvironment.cpp:242-316).
+    */
+  private[graft] def mergeTopK(locals: Iterable[Seq[(Long, Double)]], k: Int): Array[(Long, Double)] =
+    locals.iterator.flatten.toArray.sorted(resultOrder).take(k)
+
+  private val resultOrder: Ordering[(Long, Double)] = (a, b) => {
+    val c = SQLOrderingUtil.compareDoubles(b._2, a._2)
+    if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+  }
+
+  /** Build the resident block maps for [[InvertedIndex.blockMaps]]: the
+    * bucket co-location [[querySegments]] gives a query scan — the
+    * pre-bucketed scan as is, otherwise `repartition(bucket)` — grouped
+    * once per partition into term → blocks sorted by firstDoc.
+    */
+  private[graft] def residentBlocks(index: InvertedIndex): RDD[Map[String, Array[Block]]] =
+    bucketed(index, index.segments.select(blockCols.map(col): _*)).rdd
+      .mapPartitions(rows => Iterator(collectBlocks(rows).map { case (t, tb) => t -> tb.blocks }))
+      .setName("resident block maps")
+      .persist(StorageLevel.MEMORY_ONLY)
 
   /** an unscored term leaf: window members and stats/extent cursors */
   private def memberLeaf(t: String) = LeafPlan(t, null, null, 0.0, 0.0)
@@ -237,8 +268,9 @@ object Daat {
     * global extent sort.
     *
     *  - passages (`fieldExtents == null`): contexts are pure per-doc
-    *    arithmetic on doclen, so the scan keeps the bucketed
-    *    zero-Exchange path of [[topK]];
+    *    arithmetic on doclen, so a per-query scan of the query's terms,
+    *    co-located by bucket ([[querySegments]]; no exchange on
+    *    pre-bucketed segments), feeds the bucket tasks;
     *  - field extents: the restriction field's (docId, begin, end) rows
     *    co-locate with the query terms' segment blocks via ONE cogroup
     *    on the docId-range bucket (extent rows map to buckets through a
@@ -268,18 +300,15 @@ object Daat {
 
     val locals: DataFrame = passage match {
       case Some((width, inc)) =>
-        val segs = querySegments(index, terms, withPositions = true)
-        segs.mapPartitions { rows =>
-          val byTerm = collectBlocks(rows, hasPositions = true)
+        querySegments(index, terms).mapPartitions { rows =>
+          val byTerm = collectBlocks(rows)
           extentLocal(bcPlan.value, byTerm, null, Some((width, inc)), k,
             bcDeleted.value).iterator
         }.toDF("docId", "begin", "end", "score")
       case None =>
-        val base = Seq("term", "bucket", "firstDoc", "lastDoc", "numDocs",
-          "maxTf", "minDl", "docsDelta", "tfs", "dls", "positionsDelta")
         val segs0 = index.segments
           .where(col("term").isin(terms: _*))
-          .select(base.map(col): _*)
+          .select(blockCols.map(col): _*)
         // candidate docId ranges per bucket from block metadata only —
         // ≤ numBuckets rows; buckets are disjoint docId ranges by
         // construction (IndexBuilder bucket = (docId−1)/span; federation
@@ -308,7 +337,7 @@ object Daat {
         val segRdd = segs0.rdd.map(r => (r.getInt(1), r))
         val co = segRdd.cogroup(exRdd, math.max(1, ranges.length))
         co.flatMap { case (_, (segRows, exs)) =>
-          val byTerm = collectBlocks(segRows.iterator, hasPositions = true)
+          val byTerm = collectBlocks(segRows.iterator)
           val grouped = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Int, Int)]]()
           exs.foreach { case (d, b, e) =>
             var buf = grouped.get(d)
@@ -501,36 +530,34 @@ object Daat {
     }
   }
 
-  /** Shared per-query segment scan: filter to the query's terms, select
-    * the block columns (positions only when the plan needs them — a plan
-    * without window leaves never ships position bytes), co-locate by bucket.
-    * One task per docId-range bucket — NOT spark.sql.shuffle.partitions:
-    * a query touches only |terms| posting lists, and padding it to the
-    * session-wide partition count schedules mostly-empty tasks.
-    * Pre-bucketed segments (bucketed table scan / persisted repartition)
-    * skip the exchange entirely: the filter is narrow, so every task
-    * already holds complete (term × bucket) groups — a hot term's
-    * posting payload never crosses the wire per query.
-    */
-  private def querySegments(index: InvertedIndex, terms: Seq[String],
-                            withPositions: Boolean): DataFrame = {
-    val base = Seq("term", "bucket", "firstDoc", "lastDoc", "numDocs", "maxTf",
-      "minDl", "docsDelta", "tfs", "dls")
-    val cols = if (withPositions) base :+ "positionsDelta" else base
-    val segs0 = index.segments
-      .where(col("term").isin(terms: _*))
-      .select(cols.map(col): _*)
-    if (index.segmentsBucketed) segs0
-    else if (index.numBuckets > 0) segs0.repartition(index.numBuckets, col("bucket"))
-    else segs0.repartition(col("bucket"))
-  }
+  /** the block columns of a segment row, in [[collectBlocks]]' order */
+  private val blockCols = Seq("term", "bucket", "firstDoc", "lastDoc", "numDocs",
+    "maxTf", "minDl", "docsDelta", "tfs", "dls", "positionsDelta")
 
-  /** Group one partition's segment rows into per-term [[TermBlocks]]
-    * (shared decode cache — member cursors of several windows over the
-    * same term decode each block once).
+  /** Co-locate segment rows by docId-range bucket. One task per bucket —
+    * NOT spark.sql.shuffle.partitions, which would pad a scan to the
+    * session-wide partition count with mostly-empty tasks. Pre-bucketed
+    * segments (bucketed table scan / persisted repartition) skip the
+    * exchange: every partition already holds complete (term × bucket)
+    * groups.
     */
-  private def collectBlocks(rows: Iterator[org.apache.spark.sql.Row],
-                            hasPositions: Boolean): Map[String, TermBlocks] = {
+  private def bucketed(index: InvertedIndex, segs: DataFrame): DataFrame =
+    if (index.segmentsBucketed) segs
+    else if (index.numBuckets > 0) segs.repartition(index.numBuckets, col("bucket"))
+    else segs.repartition(col("bucket"))
+
+  /** Per-query segment scan of the passage kernel: the query's terms'
+    * blocks, co-located by bucket.
+    */
+  private def querySegments(index: InvertedIndex, terms: Seq[String]): DataFrame =
+    bucketed(index, index.segments.where(col("term").isin(terms: _*))
+      .select(blockCols.map(col): _*))
+
+  /** Group one partition's segment rows ([[blockCols]]) into per-term
+    * [[TermBlocks]] (shared decode cache — member cursors of several
+    * windows over the same term decode each block once).
+    */
+  private def collectBlocks(rows: Iterator[org.apache.spark.sql.Row]): Map[String, TermBlocks] = {
     val buf = scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[Block]]
     rows.foreach { r =>
@@ -538,7 +565,7 @@ object Daat {
         scala.collection.mutable.ArrayBuffer.empty[Block]) += Block(
         r.getLong(2), r.getLong(3), r.getInt(4), r.getInt(5), r.getInt(6),
         r.getAs[Array[Byte]](7), r.getAs[Array[Byte]](8), r.getAs[Array[Byte]](9),
-        if (hasPositions) r.getAs[Array[Byte]](10) else Array.emptyByteArray)
+        r.getAs[Array[Byte]](10))
     }
     buf.iterator.map { case (t, bs) =>
       t -> new TermBlocks(bs.sortBy(_.firstDoc).toArray)

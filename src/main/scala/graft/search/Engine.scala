@@ -465,16 +465,20 @@ final class Engine(
   /** Gather per-term global stats for the query's term leaves — the
     * ContextSimpleCountAccumulator path (reference:
     * src/ContextSimpleCountAccumulator.cpp — answered from the lexicon,
-    * no posting scan). One tiny collect (#queryTerms rows).
+    * no posting scan). One job over the resident lexicon
+    * ([[InvertedIndex.lexicon]]) that runs only the term-hash partitions
+    * holding the terms; terms the dictionary lacks are absent from the
+    * result.
     */
   def termStatsFor(terms: Seq[String]): Map[String, TermStats] = {
     if (terms.isEmpty) return Map.empty
-    index.dictionary
-      .where(col("term").isin(terms.distinct: _*))
-      .select("term", "ctf", "df", "minDocLen")
-      .collect()
-      .map(r => r.getString(0) -> TermStats(r.getLong(1), r.getLong(2), r.getInt(3)))
-      .toMap
+    val lexicon = index.lexicon
+    val byPart = terms.distinct.groupBy(lexicon.partitioner.get.getPartition)
+    spark.sparkContext.runJob(lexicon,
+      (ctx: org.apache.spark.TaskContext, maps: Iterator[Map[String, TermStats]]) => {
+        val m = if (maps.hasNext) maps.next() else Map.empty[String, TermStats]
+        byPart(ctx.partitionId()).flatMap(t => m.get(t).map(t -> _))
+      }, byPart.keys.toSeq.sorted).iterator.flatten.toMap
   }
 
   // ------------------------------------------------------------------
@@ -1315,7 +1319,10 @@ final class Engine(
     * dispatch to the block-max WAND DAAT kernel over the compressed
     * segments (the max-score physical path); everything else evaluates
     * on the DataFrame inference-network path. Both produce bit-identical
-    * scores (WandPropertySpec).
+    * scores (WandPropertySpec). A kernel result is computed at call time
+    * (a lexicon job and a kernel job over the index's resident
+    * structures) and returned as a local DataFrame; a belief-path result
+    * is a lazy plan that runs when collected.
     */
   def runQuery(query: String, k: Int, useDaat: Boolean = true): DataFrame =
     runParsed(QueryParser.parse(query), k, useDaat)
@@ -1354,6 +1361,9 @@ final class Engine(
     * driver-blocking stats rounds are the per-query latency floor, so a
     * B-query batch pays 2 rounds instead of 2B (plus the k-bounded
     * topdocs seed probe per kernel query when the index has topdocs).
+    * Kernel queries run here, at call time, one kernel job each, and
+    * come back as local DataFrames; belief-path queries come back as
+    * lazy plans.
     */
   def runQueries(queries: Seq[String], k: Int, useDaat: Boolean = true): Seq[(String, DataFrame)] = {
     val asts = queries.map(q => q -> QueryParser.parse(q))
@@ -1597,7 +1607,7 @@ final class Engine(
     * topdocs list to read). The collect is bounded to k rows per query
     * term.
     */
-  private def topdocsSeed(p: Daat.StructuredPlan, k: Int, deleted: Set[Long]): Double = {
+  private[graft] def topdocsSeed(p: Daat.StructuredPlan, k: Int, deleted: Set[Long]): Double = {
     val terms = p.leaves.collect { case l if l.window == null => l.term }.toSeq
     if (k <= 0 || terms.isEmpty || p.leaves.exists(l => l.scoreAt(1.0, 1) < l.scoreAt(0.0, 1)))
       return Double.NegativeInfinity

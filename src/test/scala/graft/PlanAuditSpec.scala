@@ -39,34 +39,33 @@ class PlanAuditSpec extends AnyFunSuite {
     val qIdx = InvertedIndex(null, stored.dictionary, stored.doclens,
       stored.stats, stored.segments, numBuckets = stored.numBuckets,
       segmentsBucketed = true)
-    val bag = "#combine(return license)"
-    val eng = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = "okapi"))
-    val df = eng.runQuery(bag, 10)
-    val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"bucketed DAAT plan still shuffles per query:\n$plan")
-    // a bag has no window leaf: the kernel scan ships no position bytes
-    assert(plan.contains("dls") && !plan.contains("positionsDelta"),
-      s"flat bag plan reads positions:\n$plan")
-    // bit-identical to the in-memory (repartition-per-query) path
-    val engMem = new Engine(spark, idx, cfg.analyzer, ScoringRule(method = "okapi"))
-    val want = engMem.runQuery(bag, 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(got == want)
-
-    // LM rules run the same kernel with the same zero-exchange property
-    val engLm = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = "dirichlet"))
-    val lmDf = engLm.runQuery(bag, 10)
-    val lmPlan = lmDf.queryExecution.executedPlan.toString
-    assert(!lmPlan.contains("Exchange"),
-      s"bucketed LM DAAT plan still shuffles per query:\n$lmPlan")
-    assert(!lmPlan.contains("positionsDelta"), s"flat LM bag plan reads positions:\n$lmPlan")
-    assert(lmDf.count() > 0)
-
-    // a window leaf needs the positions column
-    val winPlan = eng.runQuery("#od1(return license)", 10).queryExecution.executedPlan.toString
-    assert(winPlan.contains("positionsDelta"), s"window plan reads no positions:\n$winPlan")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // a warm kernel query is a lexicon job plus kernel jobs over the
+    // resident structures: one stage each, nothing shuffled, no SQL plan
+    // executed, and the result is computed by the time runQuery returns
+    def audit(method: String, q: String, kernelJobs: Int): Unit = {
+      val eng = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = method))
+      val engMem = new Engine(spark, idx, cfg.analyzer, ScoringRule(method = method))
+      eng.runQuery(q, 10) // builds the resident structures
+      val (df, t) = JobTally.of(spark)(eng.runQuery(q, 10))
+      val what = s"$method '$q': $t"
+      assert(t.jobs.size == 1 + kernelJobs, what)
+      assert(t.jobsOn("resident lexicon").size == 1, what)
+      assert(t.jobsOn("resident block maps").size == kernelJobs, what)
+      assert(t.jobs.forall(_.stagesRun == 1), what)
+      assert(t.jobs.forall(j => j.shuffleReadBytes == 0 && j.shuffleWriteBytes == 0), what)
+      assert(t.sqlExecutions == 0, what)
+      val (got, tc) = JobTally.of(spark)(rows(df))
+      assert(tc.jobs.isEmpty, s"collecting a kernel result ran jobs: $tc")
+      // bit-identical to the in-memory (repartition-per-bucket) index
+      assert(got.nonEmpty && got == rows(engMem.runQuery(q, 10)), what)
+    }
+    audit("okapi", "#combine(return license)", kernelJobs = 1)
+    // LM rules run the same kernel with the same properties
+    audit("dirichlet", "#combine(return license)", kernelJobs = 1)
+    // a lone window query also counts its window in the kernel first
+    audit("okapi", "#od1(return license)", kernelJobs = 2)
   }
 
   test("posting build: per-doc aggregation moves no data; segment encode is the only exchange") {

@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.search.{Engine, ScoringRule}
+import graft.search.{Engine, QueryParser, ScoringRule}
 
 /** Batch retrieval (runQueries): per-query results identical to
   * runQuery, and the whole batch pays ONE term-stats probe + ONE
@@ -55,27 +52,24 @@ class RunQueriesSpec extends AnyFunSuite {
   }
 
   test("an all-belief-path batch pays exactly 2 driver actions to construct") {
+    // the two stats rounds are the term probe (one job over the resident
+    // lexicon) and the leaf-stats SQL execution; a batch pays each once
+    // whatever its size. Kernel queries also run one kernel job each at
+    // construction (their window stats ride the shared leaf round).
     val eng = new Engine(spark, index, cfg.analyzer, ScoringRule(method = "dirichlet"))
-    eng.runQueries(mixed, 10).foreach(_._2.collect()) // warm
-    val actions = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => actions.incrementAndGet()
-        case _ =>
-      }
+    val more = Seq(
+      "#combine(gamma delta)",
+      "#combine(#od1(beta delta) alpha)",
+      "#wsyn(0.5 beta 0.5 gamma)",
+      "#weight(1 beta 2 delta)")
+    eng.runQueries(mixed ++ more, 10).foreach(_._2.collect()) // warm
+    for (batch <- Seq(mixed, mixed ++ more)) {
+      val t = JobTally.of(spark)(eng.runQueries(batch, 10))._2
+      val kernel = batch.count(q => eng.runStructured(QueryParser.parse(q), 10).isDefined)
+      val what = s"${batch.size}-query batch: $t"
+      assert(t.jobsOn("resident lexicon").size == 1, what)
+      assert(t.sqlExecutions == 1, what)
+      assert(t.jobsOn("resident block maps").size == kernel, what)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      eng.runQueries(mixed, 10) // construction only
-      var last = -1; var stable = 0
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (stable < 5 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val v = actions.get()
-        if (v == last) stable += 1 else { stable = 0; last = v }
-      }
-      assert(actions.get() == 2,
-        s"expected 2 actions for a ${mixed.size}-query batch (shared term stats + shared leaf stats), saw ${actions.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

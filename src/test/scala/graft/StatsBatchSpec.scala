@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import graft.index.{IndexBuilder, IndexConfig}
 import graft.search.{Engine, QueryParser, ScoringRule}
 
@@ -31,29 +28,13 @@ class StatsBatchSpec extends AnyFunSuite {
 
   test("belief construction runs exactly 2 driver actions: term-stats collect + ONE batched complex-leaf stats collect") {
     eng.evaluate(QueryParser.parse(query)).df.collect() // warm index build / caches
-    // count SQL executions (= driver-blocking actions); AQE fans one
-    // action into several scheduler jobs, so job count is not the metric
-    val actions = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => actions.incrementAndGet()
-        case _ =>
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      eng.evaluate(QueryParser.parse(query)) // construction only — no action on the belief df
-      // the listener bus is async: wait for the count to go quiescent
-      var last = -1; var stable = 0
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (stable < 5 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val v = actions.get()
-        if (v == last) stable += 1 else { stable = 0; last = v }
-      }
-      assert(actions.get() == 2,
-        s"expected 2 actions for a 3-complex-leaf query (term stats + batched leaf stats), saw ${actions.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // the two actions: the term-stats probe, one job over the resident
+    // lexicon, and the leaf-stats round, one SQL execution (AQE fans an
+    // execution into several scheduler jobs, so its job count is not the
+    // metric)
+    val t = JobTally.of(spark)(eng.evaluate(QueryParser.parse(query)))._2 // construction only
+    assert(t.jobsOn("resident lexicon").size == 1 && t.sqlExecutions == 1,
+      s"expected 2 actions for a 3-complex-leaf query (term stats + batched leaf stats), saw $t")
   }
 
   test("batched stats scores == query-order fold of independently-evaluated children") {

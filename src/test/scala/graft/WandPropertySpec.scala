@@ -290,6 +290,39 @@ class WandPropertySpec extends AnyFunSuite {
       s"seeding decoded $dSeeded blocks vs cold $dCold — no decode saving")
   }
 
+  test("okapi topdocs seeding fires on positive-idf leaves and stays exact") {
+    // the planted hot terms have df > N/2, where okapi idf < 0 turns
+    // seeding off; leaves with df ≤ N/2 and topdocs lists (here half of
+    // each list) must get a real seed that prunes without changing results
+    import org.apache.spark.sql.functions.col
+    val n = index.stats.totalDocs
+    val Seq(rare, next) = index.dictionary.where(col("df") > n / 10 && col("df") <= n / 2)
+      .orderBy(col("df").asc, col("term").asc).select("term").head(2).map(_.getString(0)).toSeq
+    val td = IndexBuilder.buildTopdocs(index.postings,
+      IndexConfig(topdocsMinDf = 20L, topdocsFraction = 0.5)).cache()
+    val engSeeded = new Engine(spark, index.copy(topdocs = td), Analyzer(), ScoringRule(method = "okapi"))
+    val engPlain = new Engine(spark, index, Analyzer(), ScoringRule(method = "okapi"))
+    for (terms <- Seq(Seq(rare), Seq(rare, next)); k <- Seq(1, 5, 20)) {
+      val (p, mkCursors) = kernelFixture(engPlain, ScoringRule(method = "okapi"), terms)
+      val seed = engSeeded.topdocsSeed(p, k, Set.empty)
+      val cCold = mkCursors()
+      val rCold = wandOn(cCold, p, k)
+      assert(seed > Double.NegativeInfinity && seed <= rCold.last._2,
+        s"$terms k=$k: seed $seed, true k-th best ${rCold.last._2}")
+      val cSeeded = mkCursors()
+      assert(wandOn(cSeeded, p, k, seedTheta = seed) == rCold)
+      val dSeeded = cSeeded.map(_.decodedBlocks).sum
+      val dCold = cCold.map(_.decodedBlocks).sum
+      assert(dSeeded <= dCold)
+      if (terms.size == 1)
+        assert(dSeeded < dCold, s"'$rare' k=$k: seed $seed decoded $dSeeded blocks vs cold $dCold")
+      val q = terms.mkString("#combine(", " ", ")")
+      val s = run(engSeeded, q, k, "wand")
+      assert(s == run(engPlain, q, k, "wand"), s"seeded != unseeded for '$q' k=$k")
+      assert(s == run(engSeeded, q, k, "dataframe"), s"seeded != DataFrame for '$q' k=$k")
+    }
+  }
+
   test("okapi topdocs seeding with NEGATIVE idf (df > N/2) stays exact") {
     import spark.implicits._
     // 'common' matches 2/3 of the corpus: okapi idf < 0, so every score
