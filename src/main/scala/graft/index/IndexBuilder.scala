@@ -109,7 +109,7 @@ final case class InvertedIndex(
     numBuckets: Int = 0,   // docId-range buckets in segments (0 = unknown)
     segmentsBucketed: Boolean = false, // segments already hash-co-located by
     // `bucket` (bucketed table scan or a persisted repartition) — the
-    // resident block maps and the passage kernel's scans then need no exchange
+    // resident block maps then build with no exchange
     topdocs: DataFrame = null // optional (term, docId, tf, length) hot-term
     // lists (buildTopdocs) — when present, WAND seeds its threshold from
     // them (reference: src/WeightedAndNode.cpp:119-186 candidate seeding)
@@ -139,6 +139,16 @@ final case class InvertedIndex(
     */
   @transient lazy val blockMaps: RDD[Map[String, Array[graft.search.Daat.Block]]] =
     graft.search.Daat.residentBlocks(this)
+
+  /** Resident field extents: field → docId → extents sorted by (begin,
+    * end), in the partitions of [[blockMaps]] (a doc's extents sit with
+    * its blocks), so an extent-restricted kernel query zips the two.
+    * Built by the first field-restricted kernel query on this index and
+    * persisted like [[blockMaps]]; an index that only serves other
+    * queries never builds it.
+    */
+  @transient lazy val extentMaps: RDD[Map[String, graft.search.Daat.Extents]] =
+    graft.search.Daat.residentExtents(this)
 
   /** Resident lexicon: the dictionary's (ctf, df, minDocLen) per term in
     * term-hash partitions, so a stats probe reads only the partitions

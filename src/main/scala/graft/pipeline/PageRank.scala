@@ -20,39 +20,29 @@ object PageRank {
     * @param nodes one-column node universe (defines N and the output rows)
     */
   def compute(nodes: DataFrame, edges: DataFrame, c: Double = 0.7,
-              iterations: Int = 10): DataFrame =
-    // cadence 5 = 2 eager materializations per 10-iteration run (i=5,10),
-    // + SHUFFLED_HASH loop joins + scale-adaptive loop partitioning —
-    // the combination the pagerank-profile lab measured fastest
+              iterations: Int = 10): DataFrame = {
+    // Loop shape: truncation cadence 5 = 2 eager materializations per
+    // 10-iteration run (i=5,10), SHUFFLED_HASH loop joins, scale-adaptive
+    // loop partitioning — the combination measured fastest
     // (bench/r6_pagerank_profile.json, 5 reps: 200k nodes 1.49s vs
     // 2.10s fixed-partitions, 2.31s cadence 4, 4.02s un-hinted; 20
     // nodes 0.53s vs 0.86s; the earlier cadence lab
     // bench/r6_pagerank_lab2.json showed 5.0s at cadence 1 and 9.1s for
     // a single 10-deep plan): every-iteration eager checkpoints pay job
-    // overhead 10×, while very deep chains plan superlinearly
-    compute(nodes, edges, c, iterations, ckptEvery = 5, loopShuffleHash = true,
-      adaptiveParts = true)
-
-  /** [[compute]] with an explicit lineage-truncation cadence — exposed for
-    * the cadence lab in BenchExtra; semantics are cadence-invariant.
-    *
-    * `loopShuffleHash` pins both per-iteration joins to SHUFFLED_HASH
-    * (guide §3.1 — pick the strategy deliberately): both join inputs are
-    * hash-partitioned on the join key already (the loop-invariant caches
-    * by construction, the contribution aggregate by its own groupBy), so
-    * a shuffled-hash join plans with ZERO exchanges — whereas the
-    * size-based default turns each into a BroadcastHashJoin at fixture
-    * scale, i.e. a driver collect + broadcast of the ranks frame EVERY
-    * iteration (10-20 driver round-trips per compute). At 100-TB scale
-    * the ranks side never fits a broadcast anyway, so the hint changes
-    * nothing there; it only stops small graphs from paying the
-    * driver-bounce tax. Join semantics are strategy-invariant.
-    */
-  private[graft] def compute(nodes: DataFrame, edges: DataFrame, c: Double,
-                             iterations: Int, ckptEvery: Int,
-                             loopShuffleHash: Boolean,
-                             adaptiveParts: Boolean): DataFrame = {
-    def hinted(df: DataFrame) = if (loopShuffleHash) df.hint("shuffle_hash") else df
+    // overhead 10×, while very deep chains plan superlinearly.
+    // Semantics are cadence-invariant.
+    val ckptEvery = 5
+    // Both per-iteration joins are pinned to SHUFFLED_HASH (guide §3.1 —
+    // pick the strategy deliberately): both join inputs are
+    // hash-partitioned on the join key already (the loop-invariant caches
+    // by construction, the contribution aggregate by its own groupBy), so
+    // a shuffled-hash join plans with ZERO exchanges — whereas the
+    // size-based default turns each into a BroadcastHashJoin at fixture
+    // scale, i.e. a driver collect + broadcast of the ranks frame EVERY
+    // iteration (10-20 driver round-trips per compute). At 100-TB scale
+    // the ranks side never fits a broadcast anyway, so the hint changes
+    // nothing there; it only stops small graphs from paying the
+    // driver-bounce tax. Join semantics are strategy-invariant.
     val spark = nodes.sparkSession
     val node = nodes.columns.head
     // scale-ADAPTIVE loop parallelism (guide §2.2): ~20k nodes per
@@ -63,9 +53,7 @@ object PageRank {
     // loop-invariant caches must be BUILT at the loop's partitioning.
     val n = nodes.count().toDouble
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts =
-      if (adaptiveParts) math.max(1, math.min(sessionParts, math.ceil(n / 20000.0).toInt))
-      else sessionParts
+    val loopParts = math.max(1, math.min(sessionParts, math.ceil(n / 20000.0).toInt))
     val base = (1.0 - c) / n
     val outDeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val e = edges.join(outDeg, "src")
@@ -89,7 +77,7 @@ object PageRank {
     // UnknownPartitioning until its first materialization FINALIZES it,
     // so an unmaterialized cache would get an ENSURE_REQUIREMENTS
     // re-exchange in EVERY iteration of the first segment (measured in
-    // the pagerank-profile lab's executed plans)
+    // the executed plans of the r6 pagerank profile)
     ids.count()
     eCached.count()
     // the per-iteration groupBy plans at the session shuffle-partition
@@ -106,11 +94,11 @@ object PageRank {
         // the reference's _readPageRankFromFile returns the initial
         // (1−c)/N for a doc absent from the pr file (PageRank.cpp:76-83),
         // so its links carry base/outdeg every iteration
-        val contrib = eCached.join(hinted(pr), eCached("src") === pr("id"), "left")
+        val contrib = eCached.join(pr.hint("shuffle_hash"), eCached("src") === pr("id"), "left")
           .select(col("dst").as("id"),
             (coalesce(col("pr"), lit(base)) / col("outdeg")).as("w"))
           .groupBy("id").agg(sum("w").as("acc"))
-        pr = ids.join(hinted(contrib), Seq("id"), "left")
+        pr = ids.join(contrib.hint("shuffle_hash"), Seq("id"), "left")
           .select(col("id"), (lit(c) * coalesce(col("acc"), lit(0.0)) + base).as("pr"))
         // truncate lineage every few iterations (linear chained join plans
         // still grow optimizer time) — but NOT every one: an eager

@@ -358,30 +358,7 @@ object TextPipeline {
     * Returns (idCol, n_tokens, n_kept, text_dedup).
     */
   def removeRepeatedSpans(df: DataFrame, idCol: String, textCol: String,
-                          k: Int = 8): DataFrame =
-    // hash-set survivor selection — the spans-lab measured winner
-    // (bench/r6_spans_lab.json); semantics pinned equal to the filter
-    // form by RepeatedSpansSpec and the lab's row-identity guard
-    removeRepeatedSpans(df, idCol, textCol, k, exceptKept = true)
-
-  /** [[removeRepeatedSpans]] with the kept-index selection strategy
-    * exposed for the spans-lab in BenchExtra — results are
-    * strategy-invariant.
-    *
-    * `exceptKept = false` is the round-5 shape: the surviving token
-    * indexes come from `filter(indexes, i => !array_contains(__cov, i))`
-    * — an O(|covered|) LINEAR SCAN per token, O(T·C) per document,
-    * quadratic-ish for boilerplate-heavy documents where most positions
-    * sit under a cut span. `exceptKept = true` computes the same set as
-    * `array_except(indexes, __cov)` — one hash set over the covered
-    * positions, O(T+C) per document. Order preservation is guaranteed
-    * (array_except keeps the first array's order, and the strictly
-    * increasing index sequence has no duplicates for its dedup to
-    * drop), so the emitted token stream is byte-identical.
-    */
-  private[graft] def removeRepeatedSpans(df: DataFrame, idCol: String,
-                                         textCol: String, k: Int,
-                                         exceptKept: Boolean): DataFrame = {
+                          k: Int = 8): DataFrame = {
     val toksDf = withTokens(df, idCol, textCol)
       .select(col(idCol), col("__toks"),
         transform(col("__toks"), t => xxhash64(t)).as("__hs"))
@@ -415,9 +392,13 @@ object TextPipeline {
         when(size(col("__toks")) > 0,
           sequence(lit(0), size(col("__toks")) - 1))
           .otherwise(array().cast("array<int>")))
-      .withColumn("__kept",
-        if (exceptKept) array_except(col("__idx"), col("__cov"))
-        else filter(col("__idx"), i => !array_contains(col("__cov"), i)))
+      // surviving token indexes: array_except is one hash set over the
+      // covered positions, O(T+C) per document, where a
+      // filter(array_contains) scan is O(T·C) — 176.0 s against 3.69 s
+      // at 50k boilerplate-heavy docs (bench/r6_spans_lab.json). It keeps
+      // the first array's order, and the strictly increasing indexes have
+      // no duplicates for its dedup to drop.
+      .withColumn("__kept", array_except(col("__idx"), col("__cov")))
       .select(col(idCol),
         size(col("__toks")).cast(LongType).as("n_tokens"),
         size(col("__kept")).cast(LongType).as("n_kept"),

@@ -1,7 +1,9 @@
 package graft.search
 
+import scala.collection.mutable
 import scala.reflect.ClassTag
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
@@ -22,12 +24,15 @@ import graft.index.{BlockCodec, InvertedIndex}
   * build time, and each index keeps them resident
   * ([[InvertedIndex.blockMaps]]): one persisted partition per bucket
   * group, a map from term to that term's blocks. A query is one job
-  * over those maps — each task runs an independent DAAT over its docId
-  * ranges and returns a local top-k — and the driver merges the
-  * (numBuckets × k) candidates into the global top-k ([[mergeTopK]]).
-  * This is Indri's multi-server evaluate-then-merge shape
-  * (reference: src/QueryEnvironment.cpp:242-316) with buckets as
-  * servers that hold their index open; no query builds a DataFrame plan.
+  * over those maps ([[onBuckets]]) — each task runs an independent DAAT
+  * over its docId ranges and returns a local top-k — and the driver
+  * merges the (numBuckets × k) candidates into the global top-k
+  * ([[mergeTopK]]). Extent-restricted queries run the same job, with the
+  * restriction field's extents resident beside the blocks
+  * ([[InvertedIndex.extentMaps]]). This is Indri's multi-server
+  * evaluate-then-merge shape (reference: src/QueryEnvironment.cpp:242-316)
+  * with buckets as servers that hold their index open; no query builds a
+  * DataFrame plan.
   *
   * Scope: one plan shape, [[StructuredPlan]] — a #combine/#weight tree
   * (non-negative weights) whose leaves are terms or #odN/#uwN windows of
@@ -146,7 +151,7 @@ object Daat {
     // k ≤ 0 must mirror the DataFrame path's limit(k) → empty result
     if (k <= 0) return Seq.empty[(Long, Double)].toDF("docId", "score")
     val terms = p.leaves.toSeq.flatMap(l => if (l.window == null) Seq(l.term) else l.window.terms.toSeq)
-    val locals = onBuckets(index, terms, p, deleted) { (plan, byTerm, del) =>
+    val locals = onBuckets(index, terms, p, deleted) { (plan, byTerm, _, del) =>
       val cursors: Array[DaatCursor] = plan.leaves.map(leafCursor(_, byTerm, plan.lm))
       wand(cursors, plan, k, exhaustive, seedTheta, del)
     }
@@ -165,7 +170,7 @@ object Daat {
   def windowStats(index: InvertedIndex, windows: Array[WindowSpec],
                   deleted: Set[Long] = Set.empty): Array[(Double, Long)] = {
     if (windows.isEmpty) return Array.empty
-    val partials = onBuckets(index, windows.flatMap(_.terms).toSeq, windows, deleted) { (ws, byTerm, del) =>
+    val partials = onBuckets(index, windows.flatMap(_.terms).toSeq, windows, deleted) { (ws, byTerm, _, del) =>
       ws.map { w =>
         val cur = leafCursor(LeafPlan("", w, null, 0.0, 0.0), byTerm, lm = false)
         var occ = 0L; var df = 0L
@@ -188,53 +193,166 @@ object Daat {
     * ([[InvertedIndex.blockMaps]]), one task per bucket group. Each task
     * wraps the blocks of `terms` only in fresh [[TermBlocks]], so decode
     * caches live for one query in one task, and returns `task`'s result
-    * for its buckets. The plan and the delete set are broadcast.
+    * for its buckets. The plan and the delete set are broadcast. With a
+    * `field`, the job zips the block maps with the co-partitioned
+    * resident extents ([[InvertedIndex.extentMaps]]) and hands each task
+    * its buckets' extents of that field; without one it reads the block
+    * maps alone and the task gets null.
     */
   private def onBuckets[P: ClassTag, T: ClassTag](index: InvertedIndex, terms: Seq[String],
-                                                  plan: P, deleted: Set[Long])(
-      task: (P, Map[String, TermBlocks], Set[Long]) => T): Array[T] = {
+                                                  plan: P, deleted: Set[Long],
+                                                  field: String = null)(
+      task: (P, Map[String, TermBlocks], Extents, Set[Long]) => T): Array[T] = {
     val sc = index.segments.sparkSession.sparkContext
     val bcPlan = sc.broadcast(plan)
     val bcDeleted = sc.broadcast(deleted)
     val wanted = terms.distinct.toArray
-    sc.runJob(index.blockMaps, (maps: Iterator[Map[String, Array[Block]]]) => {
+    def run(maps: Iterator[Map[String, Array[Block]]], extents: Extents): T = {
       val resident = if (maps.hasNext) maps.next() else Map.empty[String, Array[Block]]
       val byTerm = wanted.iterator.flatMap(t => resident.get(t).map(t -> new TermBlocks(_))).toMap
-      task(bcPlan.value, byTerm, bcDeleted.value)
-    })
+      task(bcPlan.value, byTerm, extents, bcDeleted.value)
+    }
+    if (field == null)
+      sc.runJob(index.blockMaps, (maps: Iterator[Map[String, Array[Block]]]) => run(maps, null))
+    else
+      sc.runJob(index.blockMaps.zipPartitions(index.extentMaps) { (maps, fields) =>
+        val byField = if (fields.hasNext) fields.next() else Map.empty[String, Extents]
+        Iterator(run(maps, byField.getOrElse(field, Map.empty)))
+      }, (it: Iterator[T]) => it.next())
   }
 
   /** The driver's global merge of bucket-local top-k lists: the k best
-    * under (score desc, docId asc) with Spark's double ordering
-    * (SQLOrderingUtil.compareDoubles: NaN largest, -0.0 == 0.0), so the
-    * result is exactly `orderBy(score.desc, docId.asc).limit(k)` over the
-    * same rows (reference: the client-side merge of
-    * src/QueryEnvironment.cpp:242-316).
+    * rows under the row type's [[Ranked]] order, so the result is exactly
+    * `orderBy(score.desc, key.asc…).limit(k)` over the same rows
+    * (reference: the client-side merge of src/QueryEnvironment.cpp:242-316).
     */
-  private[graft] def mergeTopK(locals: Iterable[Seq[(Long, Double)]], k: Int): Array[(Long, Double)] =
-    locals.iterator.flatten.toArray.sorted(resultOrder).take(k)
+  private[graft] def mergeTopK[R: ClassTag](locals: Iterable[Seq[R]], k: Int)(
+      implicit order: Ranked[R]): Array[R] =
+    locals.iterator.flatten.toArray.sorted(order).take(k)
 
-  private val resultOrder: Ordering[(Long, Double)] = (a, b) => {
-    val c = SQLOrderingUtil.compareDoubles(b._2, a._2)
-    if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+  /** The result order of a kernel row type: score desc under Spark's
+    * double ordering (SQLOrderingUtil.compareDoubles: NaN largest,
+    * -0.0 == 0.0), then the row's key fields asc.
+    */
+  abstract class Ranked[R] extends Ordering[R] {
+    protected def score(r: R): Double
+    protected def key(a: R, b: R): Int
+    final def compare(a: R, b: R): Int = {
+      val c = SQLOrderingUtil.compareDoubles(score(b), score(a))
+      if (c != 0) c else key(a, b)
+    }
+  }
+  object Ranked {
+    /** (docId, score) */
+    implicit val docs: Ranked[(Long, Double)] = new Ranked[(Long, Double)] {
+      protected def score(r: (Long, Double)): Double = r._2
+      protected def key(a: (Long, Double), b: (Long, Double)): Int = java.lang.Long.compare(a._1, b._1)
+    }
+    /** (docId, begin, end, score) */
+    implicit val extents: Ranked[(Long, Int, Int, Double)] = new Ranked[(Long, Int, Int, Double)] {
+      protected def score(r: (Long, Int, Int, Double)): Double = r._4
+      protected def key(a: (Long, Int, Int, Double), b: (Long, Int, Int, Double)): Int = {
+        val d = java.lang.Long.compare(a._1, b._1)
+        if (d != 0) d
+        else {
+          val e = Integer.compare(a._2, b._2)
+          if (e != 0) e else Integer.compare(a._3, b._3)
+        }
+      }
+    }
   }
 
   /** Build the resident block maps for [[InvertedIndex.blockMaps]]: the
-    * bucket co-location [[querySegments]] gives a query scan — the
-    * pre-bucketed scan as is, otherwise `repartition(bucket)` — grouped
-    * once per partition into term → blocks sorted by firstDoc.
+    * segment blocks co-located by docId-range bucket, grouped once per
+    * partition into term → blocks sorted by firstDoc. One partition per
+    * bucket — NOT spark.sql.shuffle.partitions, which would pad the scan
+    * with mostly-empty tasks. Pre-bucketed segments (bucketed table scan
+    * / persisted repartition) skip the exchange: every partition already
+    * holds complete (term × bucket) groups.
     */
-  private[graft] def residentBlocks(index: InvertedIndex): RDD[Map[String, Array[Block]]] =
-    bucketed(index, index.segments.select(blockCols.map(col): _*)).rdd
-      .mapPartitions(rows => Iterator(collectBlocks(rows).map { case (t, tb) => t -> tb.blocks }))
-      .setName("resident block maps")
+  private[graft] def residentBlocks(index: InvertedIndex): RDD[Map[String, Array[Block]]] = {
+    val segs = index.segments.select(blockCols.map(col): _*)
+    val byBucket =
+      if (index.segmentsBucketed) segs
+      else if (index.numBuckets > 0) segs.repartition(index.numBuckets, col("bucket"))
+      else segs.repartition(col("bucket"))
+    byBucket.rdd.mapPartitions { rows =>
+      val buf = mutable.HashMap.empty[String, mutable.ArrayBuffer[Block]]
+      rows.foreach { r =>
+        buf.getOrElseUpdate(r.getString(0), mutable.ArrayBuffer.empty[Block]) += Block(
+          r.getLong(2), r.getLong(3), r.getInt(4), r.getInt(5), r.getInt(6),
+          r.getAs[Array[Byte]](7), r.getAs[Array[Byte]](8), r.getAs[Array[Byte]](9),
+          r.getAs[Array[Byte]](10))
+      }
+      Iterator(buf.iterator.map { case (t, bs) => t -> bs.sortBy(_.firstDoc).toArray }.toMap)
+    }.setName("resident block maps")
       .persist(StorageLevel.MEMORY_ONLY)
+  }
+
+  /** One bucket group's extents of one field: docId → (begins, ends),
+    * sorted by (begin, end) like the DataFrame path's
+    * sort_array(struct(begin, end)).
+    */
+  type Extents = Map[Long, (Array[Int], Array[Int])]
+
+  /** Build the resident field extents for [[InvertedIndex.extentMaps]]:
+    * field → [[Extents]] in the partitions of [[InvertedIndex.blockMaps]],
+    * each doc's extents in the partition that holds its blocks. The
+    * placement comes from the blocks' [firstDoc, lastDoc] ranges, read
+    * once in one job over the block maps — never from how the maps were
+    * partitioned — so it holds for a bucketed table scan, an
+    * AQE-coalesced repartition and Federation's rebased buckets alike.
+    * A doc in no block range has no posting, is never a candidate, and
+    * its extents drop.
+    */
+  private[graft] def residentExtents(index: InvertedIndex): RDD[Map[String, Extents]] = {
+    require(index.fieldExtents != null,
+      "no field extents indexed — declare IndexConfig.fields or add a FieldAnnotator")
+    val maps = index.blockMaps
+    // (lo, hi, partition) docId runs sorted by lo: block ranges that
+    // overlap or touch merge within a partition, then neighbouring runs
+    // of one partition merge across the index (buckets are disjoint
+    // docId ranges, so no other partition's doc lies between them)
+    def merge(runs: Seq[(Long, Long, Int)], acrossGaps: Boolean): List[(Long, Long, Int)] =
+      runs.sortBy(_._1).foldLeft(List.empty[(Long, Long, Int)]) {
+        case ((lo0, hi0, p0) :: rest, (lo, hi, p)) if p == p0 && (acrossGaps || lo <= hi0 + 1) =>
+          (lo0, math.max(hi0, hi), p) :: rest
+        case (acc, r) => r :: acc
+      }.reverse
+    val runs = merge(maps.mapPartitionsWithIndex { (p, it) =>
+      merge(it.flatMap(_.valuesIterator.flatten).map(b => (b.firstDoc, b.lastDoc, p)).toSeq,
+        acrossGaps = false).iterator
+    }.collect().toSeq, acrossGaps = true).toArray
+    val bcRuns = maps.sparkContext.broadcast((runs.map(_._1), runs))
+    index.fieldExtents
+      .select(col("field"), col("docId").cast("long"), col("begin").cast("int"),
+        col("end").cast("int"))
+      .rdd.flatMap { r =>
+        val d = r.getLong(1)
+        val (los, rs) = bcRuns.value
+        // the last run starting at or before d
+        val i = java.util.Arrays.binarySearch(los, d)
+        val j = if (i >= 0) i else -i - 2
+        if (j >= 0 && d <= rs(j)._2) Some((rs(j)._3, (r.getString(0), d, r.getInt(2), r.getInt(3))))
+        else None
+      }
+      // the keys are partition ids in [0, n), which HashPartitioner keeps
+      .partitionBy(new HashPartitioner(maps.getNumPartitions))
+      .mapPartitions(rows => Iterator(rows.map(_._2).toSeq.groupBy(_._1).map { case (f, xs) =>
+        f -> xs.groupBy(_._2).map { case (d, ys) =>
+          val sorted = ys.map(y => (y._3, y._4)).sorted.toArray
+          d -> (sorted.map(_._1), sorted.map(_._2))
+        }
+      }), preservesPartitioning = true)
+      .setName("resident field extents")
+      .persist(StorageLevel.MEMORY_ONLY)
+  }
 
   /** an unscored term leaf: window members and stats/extent cursors */
   private def memberLeaf(t: String) = LeafPlan(t, null, null, 0.0, 0.0)
 
   // ---------------------------------------------------------------
-  // extent-restricted / passage kernel — round 5
+  // extent-restricted / passage kernel
   // ---------------------------------------------------------------
 
   /** Plan for extent-restricted retrieval (`#combine[f]`, `#weight[f]`,
@@ -263,101 +381,38 @@ object Daat {
   /** Extent-restricted top-k through the DAAT kernel: candidate docs =
     * the union of the query terms' posting lists (the WeightedAnd
     * union), every extent of a candidate is scored in-task from the
-    * segment blocks' decoded positions, and only bucket-local top-k
-    * extents reach the global merge — no per-position shuffle, no
-    * global extent sort.
+    * resident blocks' decoded positions, and only bucket-local top-k
+    * extents reach the driver merge ([[mergeTopK]]) — no per-position
+    * shuffle, no global extent sort. One [[onBuckets]] job, like
+    * [[topK]]; the result is a local DataFrame computed at call time.
     *
-    *  - passages (`fieldExtents == null`): contexts are pure per-doc
-    *    arithmetic on doclen, so a per-query scan of the query's terms,
-    *    co-located by bucket ([[querySegments]]; no exchange on
-    *    pre-bucketed segments), feeds the bucket tasks;
-    *  - field extents: the restriction field's (docId, begin, end) rows
-    *    co-locate with the query terms' segment blocks via ONE cogroup
-    *    on the docId-range bucket (extent rows map to buckets through a
-    *    broadcast of the blocks' [firstDoc, lastDoc] ranges — rows
-    *    outside every range belong to non-candidate docs and drop
-    *    before the shuffle). The RDD cogroup is the same
-    *    per-partition imperative kernel shape as mapPartitions, with
-    *    an explicit partition count AQE cannot re-plan.
+    *  - passages (`field == null`): contexts are pure per-doc arithmetic
+    *    on doclen, which the blocks carry;
+    *  - field extents: the restriction field's extents are resident
+    *    beside the blocks ([[InvertedIndex.extentMaps]], built by the
+    *    first field query on the index) and reach each task with its
+    *    buckets.
     *
     * Pruning is deliberately exhaustive over candidates: the DataFrame
     * path scores every extent of every candidate too (LM background
     * scores make zero-match extents real results), and extent contexts
     * invalidate the dl-monotone block bounds the WAND algebra needs.
+    *
+    * @param passage (width, increment) of fixed passages; None = field
+    * @param field   the restriction field; null for passages
     */
   def topKExtents(index: InvertedIndex, p: ExtentPlan,
-                  passage: Option[(Int, Int)],
-                  fieldExtents: DataFrame,
+                  passage: Option[(Int, Int)], field: String,
                   k: Int, deleted: Set[Long] = Set.empty): DataFrame = {
     val spark = index.segments.sparkSession
     import spark.implicits._
     val terms = p.childTerm.filter(_ != null).distinct.toSeq
-    def emptyResult: DataFrame =
-      Seq.empty[(Long, Int, Int, Double)].toDF("docId", "begin", "end", "score")
-    if (terms.isEmpty || k <= 0) return emptyResult
-    val bcPlan = spark.sparkContext.broadcast(p)
-    val bcDeleted = spark.sparkContext.broadcast(deleted)
-
-    val locals: DataFrame = passage match {
-      case Some((width, inc)) =>
-        querySegments(index, terms).mapPartitions { rows =>
-          val byTerm = collectBlocks(rows)
-          extentLocal(bcPlan.value, byTerm, null, Some((width, inc)), k,
-            bcDeleted.value).iterator
-        }.toDF("docId", "begin", "end", "score")
-      case None =>
-        val segs0 = index.segments
-          .where(col("term").isin(terms: _*))
-          .select(blockCols.map(col): _*)
-        // candidate docId ranges per bucket from block metadata only —
-        // ≤ numBuckets rows; buckets are disjoint docId ranges by
-        // construction (IndexBuilder bucket = (docId−1)/span; federation
-        // rebases keep members' ranges disjoint)
-        val ranges = segs0.groupBy("bucket")
-          .agg(min("firstDoc").as("lo"), max("lastDoc").as("hi"))
-          .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-          .sortBy(_._2)
-        if (ranges.isEmpty) return emptyResult
-        val bcRanges = spark.sparkContext.broadcast(ranges)
-        val exRdd = fieldExtents
-          .select(col("docId").cast("long"), col("begin").cast("int"),
-            col("end").cast("int"))
-          .rdd.flatMap { r =>
-            val d = r.getLong(0)
-            val rs = bcRanges.value
-            // greatest j with lo(j) <= d
-            var lo = 0; var hi = rs.length - 1; var j = -1
-            while (lo <= hi) {
-              val m = (lo + hi) >>> 1
-              if (rs(m)._2 <= d) { j = m; lo = m + 1 } else hi = m - 1
-            }
-            if (j >= 0 && d <= rs(j)._3) Some((rs(j)._1, (d, r.getInt(1), r.getInt(2))))
-            else None // the doc matches no query term — not a candidate
-          }
-        val segRdd = segs0.rdd.map(r => (r.getInt(1), r))
-        val co = segRdd.cogroup(exRdd, math.max(1, ranges.length))
-        co.flatMap { case (_, (segRows, exs)) =>
-          val byTerm = collectBlocks(segRows.iterator)
-          val grouped = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[(Int, Int)]]()
-          exs.foreach { case (d, b, e) =>
-            var buf = grouped.get(d)
-            if (buf == null) {
-              buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-              grouped.put(d, buf)
-            }
-            buf += ((b, e))
-          }
-          val exMap = new java.util.HashMap[Long, (Array[Int], Array[Int])](grouped.size)
-          grouped.forEach { (d, buf) =>
-            // mirror of the DataFrame path's sort_array(struct(begin,end))
-            val sorted = buf.sortBy(identity).toArray
-            exMap.put(d, (sorted.map(_._1), sorted.map(_._2)))
-          }
-          extentLocal(bcPlan.value, byTerm, exMap, None, k, bcDeleted.value)
-        }.toDF("docId", "begin", "end", "score")
-    }
-    locals.orderBy(col("score").desc, col("docId").asc, col("begin").asc,
-      col("end").asc).limit(k)
+    val locals =
+      if (terms.isEmpty || k <= 0) Array.empty[Seq[(Long, Int, Int, Double)]]
+      else onBuckets(index, terms, p, deleted, field) { (plan, byTerm, extents, del) =>
+        extentLocal(plan, byTerm, extents, passage, k, del)
+      }
+    mergeTopK(locals, k).toSeq.toDF("docId", "begin", "end", "score")
   }
 
   /** One bucket task's extent scoring: union-merge the term cursors over
@@ -367,7 +422,7 @@ object Daat {
     * path's sequence(0, max(dl−1, 0), inc); ends clamp to dl.
     */
   private def extentLocal(p: ExtentPlan, byTerm: Map[String, TermBlocks],
-                          exMap: java.util.HashMap[Long, (Array[Int], Array[Int])],
+                          extents: Extents,
                           passage: Option[(Int, Int)],
                           k: Int, deleted: Set[Long]): Seq[(Long, Int, Int, Double)] = {
     val distinct = p.childTerm.filter(_ != null).distinct
@@ -416,9 +471,7 @@ object Daat {
                 if (b > last) go = false
               }
             case None =>
-              val ex = exMap.get(d)
-              if (ex != null) {
-                val (bs, es) = ex
+              extents.get(d).foreach { case (bs, es) =>
                 var j = 0
                 while (j < bs.length) {
                   scoreExtent(p, tfPos, groupScore, d, bs(j), es(j), heap)
@@ -492,85 +545,27 @@ object Daat {
     heap.offer(d, b, e, acc)
   }
 
-  /** Bounded extent heap, worst-first; final order (score desc, docId
-    * asc, begin asc, end asc) matches the DataFrame path's sort.
+  /** Bounded extent heap, worst-first under the final result order
+    * ([[Ranked.extents]]), so a bucket keeps exactly the rows the driver
+    * merge can take from it.
     */
   final class ExtentHeap(k: Int) {
+    private val order = Ranked.extents
     private val q = new java.util.PriorityQueue[(Long, Int, Int, Double)](
-      math.min(k, 1024) + 1,
-      (a: (Long, Int, Int, Double), b: (Long, Int, Int, Double)) => {
-        val c = java.lang.Double.compare(a._4, b._4)
-        if (c != 0) c
-        else {
-          val cd = java.lang.Long.compare(b._1, a._1)
-          if (cd != 0) cd
-          else {
-            val cb = Integer.compare(b._2, a._2)
-            if (cb != 0) cb else Integer.compare(b._3, a._3)
-          }
-        }
-      })
+      math.min(k, 1024) + 1, order.reverse)
     def offer(docId: Long, begin: Int, end: Int, score: Double): Unit = {
-      if (k <= 0) return // zero-capacity heap: peek() below would NPE
-      if (q.size < k) q.add((docId, begin, end, score))
-      else {
-        val w = q.peek()
-        val better = score > w._4 ||
-          (score == w._4 && (docId < w._1 ||
-            (docId == w._1 && (begin < w._2 ||
-              (begin == w._2 && end < w._3)))))
-        if (better) { q.poll(); q.add((docId, begin, end, score)) }
-      }
+      val r = (docId, begin, end, score)
+      if (q.size < k) q.add(r)
+      // k ≤ 0: a zero-capacity heap has no worst row to peek at
+      else if (k > 0 && order.lt(r, q.peek())) { q.poll(); q.add(r) }
     }
-    def results: Seq[(Long, Int, Int, Double)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int, Double)]
-      val it = q.iterator()
-      while (it.hasNext) out += it.next()
-      out.sortBy { case (d, b, e, s) => (-s, d, b, e) }.toSeq
-    }
+    def results: Seq[(Long, Int, Int, Double)] =
+      q.toArray(new Array[(Long, Int, Int, Double)](0)).toSeq
   }
 
-  /** the block columns of a segment row, in [[collectBlocks]]' order */
+  /** the block columns of a segment row, in [[residentBlocks]]' order */
   private val blockCols = Seq("term", "bucket", "firstDoc", "lastDoc", "numDocs",
     "maxTf", "minDl", "docsDelta", "tfs", "dls", "positionsDelta")
-
-  /** Co-locate segment rows by docId-range bucket. One task per bucket —
-    * NOT spark.sql.shuffle.partitions, which would pad a scan to the
-    * session-wide partition count with mostly-empty tasks. Pre-bucketed
-    * segments (bucketed table scan / persisted repartition) skip the
-    * exchange: every partition already holds complete (term × bucket)
-    * groups.
-    */
-  private def bucketed(index: InvertedIndex, segs: DataFrame): DataFrame =
-    if (index.segmentsBucketed) segs
-    else if (index.numBuckets > 0) segs.repartition(index.numBuckets, col("bucket"))
-    else segs.repartition(col("bucket"))
-
-  /** Per-query segment scan of the passage kernel: the query's terms'
-    * blocks, co-located by bucket.
-    */
-  private def querySegments(index: InvertedIndex, terms: Seq[String]): DataFrame =
-    bucketed(index, index.segments.where(col("term").isin(terms: _*))
-      .select(blockCols.map(col): _*))
-
-  /** Group one partition's segment rows ([[blockCols]]) into per-term
-    * [[TermBlocks]] (shared decode cache — member cursors of several
-    * windows over the same term decode each block once).
-    */
-  private def collectBlocks(rows: Iterator[org.apache.spark.sql.Row]): Map[String, TermBlocks] = {
-    val buf = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[Block]]
-    rows.foreach { r =>
-      buf.getOrElseUpdate(r.getString(0),
-        scala.collection.mutable.ArrayBuffer.empty[Block]) += Block(
-        r.getLong(2), r.getLong(3), r.getInt(4), r.getInt(5), r.getInt(6),
-        r.getAs[Array[Byte]](7), r.getAs[Array[Byte]](8), r.getAs[Array[Byte]](9),
-        r.getAs[Array[Byte]](10))
-    }
-    buf.iterator.map { case (t, bs) =>
-      t -> new TermBlocks(bs.sortBy(_.firstDoc).toArray)
-    }.toMap
-  }
 
   /** One leaf cursor over the bucket's shared blocks. */
   private def leafCursor(l: LeafPlan, byTerm: Map[String, TermBlocks],
@@ -594,7 +589,6 @@ object Daat {
     private val tfsC = new Array[Array[Int]](blocks.length)
     private val dlsC = new Array[Array[Int]](blocks.length)
     private val possC = new Array[Array[Array[Int]]](blocks.length)
-    def length: Int = blocks.length
     def docs(i: Int): Array[Long] = {
       if (docsC(i) == null) {
         val b = blocks(i)
@@ -1035,7 +1029,7 @@ object Daat {
       }
     }
     def results: Seq[(Long, Double)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
+      val out = mutable.ArrayBuffer.empty[(Long, Double)]
       val it = q.iterator()
       while (it.hasNext) out += it.next()
       out.sortBy { case (d, s) => (-s, d) }.toSeq

@@ -1691,10 +1691,11 @@ final class Engine(
     // per-field rule lists see the restriction field as the scorer
     // context; FixedPassageNode contexts are not fields → "?"
     val ctxF = if (er.passage.isEmpty) er.field else "?"
-    // round 5: the extent-enumerating DAAT kernel is the default plan —
-    // positions decode in-task from the segment blocks and only
-    // bucket-local top-k extents reach the merge. Falls back to the
-    // DataFrame path when the delete list outgrows the kernel bitmap.
+    // the extent-enumerating DAAT kernel is the default plan: one job
+    // over the resident block maps (and, for a field, the resident
+    // extents), positions decode in-task and only bucket-local top-k
+    // extents reach the driver merge. Falls back to the DataFrame path
+    // when the delete list outgrows the kernel bitmap.
     if (useDaat && daatDeletedSet.isDefined) {
       val prep = prepLeaves(childGroups.flatten.map(NexiParser.PlainTerm), ctxF)
       val nChildren = prep.fns.length
@@ -1711,13 +1712,10 @@ final class Engine(
         .map(_.toArray).getOrElse(Array.fill(nGroups)(1.0 / nGroups))
       val plan = Daat.ExtentPlan(childTerm, prep.fns, wChild, groupOf, nGroups,
         groupOp.getOrElse("combine"), gw)
-      val fxRows = er.passage match {
-        case Some(_) => null
-        case None => fieldExtents.where(col("field") === er.field)
-          .select("docId", "begin", "end")
-      }
-      return Daat.topKExtents(index, plan, er.passage, fxRows, k,
-        daatDeletedSet.get)
+      // fieldExtents fails fast on an index without fields, like the
+      // DataFrame path, even when no query term is in the vocabulary
+      val field = if (er.passage.isDefined) null else { fieldExtents; er.field }
+      return Daat.topKExtents(index, plan, er.passage, field, k, daatDeletedSet.get)
     }
     val fx = er.passage match {
       case Some(_) => null
@@ -1750,9 +1748,14 @@ final class Engine(
     * A phrase with any stopped/OOV constituent cannot match (the
     * window needs every term) → zero-stats child, cf-guarded scorer.
     */
-  private final case class LeafPrep(
-      fns: Array[TermScoreFunction], keyIdx: Map[String, Seq[Int]],
-      lens: Array[Int], negs: Array[Boolean], perDoc: DataFrame)
+  private final class LeafPrep(
+      val fns: Array[TermScoreFunction], val keyIdx: Map[String, Seq[Int]],
+      val lens: Array[Int], val negs: Array[Boolean], perDocPlan: => DataFrame) {
+    /** the per-doc (term → positions) map, planned on first use: the
+      * extent kernel reads only the scorers and the child map
+      */
+    lazy val perDoc: DataFrame = perDocPlan
+  }
 
   private def prepLeaves(leaves: Seq[NexiParser.NexiTerm],
                          ctxField: String = "?",
@@ -1809,19 +1812,21 @@ final class Engine(
       processed.zipWithIndex.collect { case (Left(t), i) if t != null => (t, i) }
         .groupBy(_._1).map { case (t, xs) => t -> xs.map(_._2) } ++
         odByChild.keys.map(i => phraseKey(i) -> Seq(i))
-    val plainDf =
-      if (livePlain.isEmpty) None
-      else Some(index.postingsView(livePlain)
-        .select(col("docId"), col("term"), col("positions")))
-    val phraseDfs = odByChild.toSeq.sortBy(_._1).map { case (i, od) =>
-      evaluateRaw(od).df.select(col("docId"), lit(phraseKey(i)).as("term"),
-        col("begins").as("positions"))
+    def perDoc: DataFrame = {
+      val plainDf =
+        if (livePlain.isEmpty) None
+        else Some(index.postingsView(livePlain)
+          .select(col("docId"), col("term"), col("positions")))
+      val phraseDfs = odByChild.toSeq.sortBy(_._1).map { case (i, od) =>
+        evaluateRaw(od).df.select(col("docId"), lit(phraseKey(i)).as("term"),
+          col("begins").as("positions"))
+      }
+      (plainDf.toSeq ++ phraseDfs).reduceOption(_ unionByName _)
+        .map(_.groupBy("docId")
+          .agg(map_from_entries(collect_list(struct(col("term"), col("positions")))).as("tp")))
+        .orNull
     }
-    val perDoc = (plainDf.toSeq ++ phraseDfs).reduceOption(_ unionByName _)
-      .map(_.groupBy("docId")
-        .agg(map_from_entries(collect_list(struct(col("term"), col("positions")))).as("tp")))
-      .orNull
-    LeafPrep(fns, keyIdx, lens, negs, perDoc)
+    new LeafPrep(fns, keyIdx, lens, negs, perDoc)
   }
 
   /** The DataFrame plan of [[runExtentQuery]] (taken when `useDaat` is

@@ -80,24 +80,39 @@ class DedupClusterSpec extends AnyFunSuite {
     assert(out(2L) == ((11L, 3L, "p q r")))
     assert(out(3L) == ((4L, 4L, "unique tokens only here")))
     assert(out(4L) == ((16L, 8L, "m n o p q r s t")))
-    // kept-index selection strategy is semantics-invariant: the round-5
-    // filter+array_contains form must emit byte-identical rows to the
-    // array_except default — on the hand fixture AND on random docs
-    // with planted shared boilerplate (many covered positions)
+    // production == a plain-Scala span removal, on the hand fixture AND
+    // on random docs with planted shared boilerplate (many covered
+    // positions, where the kept-index selection does real work)
     val rnd = new scala.util.Random(7)
     val boiler = (0 until 12).map(j => s"b$j").mkString(" ")
     val randomDocs = (1L to 60L).map { i =>
       val own = Seq.fill(3 + rnd.nextInt(10))("t" + rnd.nextInt(8)).mkString(" ")
       val mid = if (i % 3 == 0) s" $boiler " else " "
       (i, s"$own$mid$own ${if (i % 2 == 0) boiler else "solo" + i}")
-    }.toDF("doc_id", "text")
-    for (docsCase <- Seq(docs, randomDocs)) {
-      val byExcept = TextPipeline.removeRepeatedSpans(docsCase, "doc_id", "text", 8,
-        exceptKept = true).collect().map(_.toSeq).sortBy(_.head.toString)
-      val byFilter = TextPipeline.removeRepeatedSpans(docsCase, "doc_id", "text", 8,
-        exceptKept = false).collect().map(_.toSeq).sortBy(_.head.toString)
-      assert(byExcept.toSeq == byFilter.toSeq)
     }
+    for (docsCase <- Seq(docs.as[(Long, String)].collect().toSeq, randomDocs)) {
+      val got = TextPipeline.removeRepeatedSpans(docsCase.toDF("doc_id", "text"),
+        "doc_id", "text", 8).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
+      assert(got == removeSpansOracle(docsCase, 8))
+    }
+  }
+
+  /** Scalar exact-substring removal: every occurrence of a token k-gram
+    * that occurs more than once in the corpus is cut, except the first
+    * by (doc, position); the uncovered tokens rejoin with single spaces.
+    */
+  private def removeSpansOracle(docs: Seq[(Long, String)],
+                                k: Int): Map[Long, (Long, Long, String)] = {
+    val toks = docs.map { case (d, t) => d -> "[a-z0-9]+".r.findAllIn(t.toLowerCase).toVector }
+    val occ = for ((d, ts) <- toks; p <- 0 to ts.length - k) yield (ts.slice(p, p + k), (d, p))
+    val cuts = occ.groupBy(_._1).values.filter(_.size > 1)
+      .flatMap(os => os.map(_._2).sorted.tail).groupBy(_._1)
+    toks.map { case (d, ts) =>
+      val covered = cuts.getOrElse(d, Nil).flatMap { case (_, p) => p until p + k }.toSet
+      val kept = ts.indices.filterNot(covered)
+      d -> ((ts.length.toLong, kept.length.toLong, kept.map(ts).mkString(" ")))
+    }.toMap
   }
 
   test("components == scalar union-find on seeded random graphs") {

@@ -68,6 +68,40 @@ class PlanAuditSpec extends AnyFunSuite {
     audit("okapi", "#od1(return license)", kernelJobs = 2)
   }
 
+  test("stored bucketed fielded index: a warm extent query is 2 jobs over the resident structures") {
+    val dir = java.nio.file.Files.createTempDirectory("plan-audit-extents").toString
+    val docs = IndexBuilder.assignDocIdsScalable(graft.corpus.CorpusSynthesizer.corpus(spark, 300),
+      Seq("repo", "path", "commit")).select("docId", "content")
+    val idx = IndexBuilder.build(docs, cfg, annotate = df => FieldAnnotators.headField(7)(df))
+    SegmentStore.writeAll(idx, dir, cfg)
+    val stored = SegmentStore.open(spark, dir)
+    val qIdx = InvertedIndex(null, stored.dictionary, stored.doclens,
+      stored.stats, stored.segments, stored.fieldExtents,
+      numBuckets = stored.numBuckets, segmentsBucketed = true)
+    val eng = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = "dirichlet"))
+    val engMem = new Engine(spark, idx, cfg.analyzer, ScoringRule(method = "dirichlet"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSeq
+    // the field query zips the block maps with the resident extents; a
+    // passage query reads the block maps alone
+    for ((q, extentJobs) <- Seq("#weight[head](0.7 return 0.3 license)" -> 1,
+                                "#combine[passage8:4](return license)" -> 0)) {
+      eng.runExtentQuery(q, 10) // builds the resident structures
+      val (df, t) = JobTally.of(spark)(eng.runExtentQuery(q, 10))
+      val what = s"'$q': $t"
+      assert(t.jobs.size == 2, what)
+      assert(t.jobsOn("resident lexicon").size == 1, what)
+      assert(t.jobsOn("resident block maps").size == 1, what)
+      assert(t.jobsOn("resident field extents").size == extentJobs, what)
+      assert(t.jobs.forall(_.stagesRun == 1), what)
+      assert(t.jobs.forall(j => j.shuffleReadBytes == 0 && j.shuffleWriteBytes == 0), what)
+      assert(t.sqlExecutions == 0, what)
+      val (got, tc) = JobTally.of(spark)(rows(df))
+      assert(tc.jobs.isEmpty, s"collecting a kernel result ran jobs: $tc")
+      assert(got.nonEmpty && got == rows(engMem.runExtentQuery(q, 10)), what)
+    }
+  }
+
   test("posting build: per-doc aggregation moves no data; segment encode is the only exchange") {
     val docs = Seq((1L, "a b a"), (2L, "b c")).toDF("docId", "content")
     val tokenized = IndexBuilder.tokenize(docs, cfg)

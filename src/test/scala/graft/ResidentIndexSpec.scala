@@ -7,37 +7,49 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.corpus.CorpusSynthesizer
-import graft.index.{IndexBuilder, IndexConfig}
+import graft.index.{FieldAnnotators, IndexBuilder, IndexConfig}
 import graft.search.{Daat, Engine, ScoringRule}
 
-/** The resident query index: the kernel's per-bucket block maps and the
-  * lexicon are built lazily, once per index, under concurrent queries,
-  * and the driver merge of bucket-local top-k lists orders exactly like
-  * the Spark sort it replaces.
+/** The resident query index: the kernel's per-bucket block maps, the
+  * field extents beside them and the lexicon are built lazily, once per
+  * index, under concurrent queries, and the driver merge of bucket-local
+  * top-k lists orders exactly like the Spark sort it replaces.
   */
 class ResidentIndexSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
   private val cfg = IndexConfig(blockSize = 16, numBuckets = 8)
-  private lazy val index =
-    IndexBuilder.buildFromCorpus(CorpusSynthesizer.corpus(spark, 600, seed = 7L), cfg)
+  private lazy val index = IndexBuilder.build(
+    IndexBuilder.assignDocIdsScalable(CorpusSynthesizer.corpus(spark, 600, seed = 7L),
+      Seq("repo", "path", "commit")).select("docId", "content"),
+    cfg, annotate = df => FieldAnnotators.headField(7)(df))
 
-  private def bits(df: DataFrame): Seq[(Long, Long)] =
-    df.collect().map(r => (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1)))).toSeq
+  /** a result's rows with raw score bits */
+  private def bits(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map { r =>
+      r.toSeq.init :+ java.lang.Double.doubleToRawLongBits(r.getDouble(r.length - 1))
+    }.toSeq
 
   test("4 threads on a fresh Engine: every result equals its serial belief-path result, bit for bit") {
-    val queries = CorpusSynthesizer.querySet.map(_._2)
+    val ranked = CorpusSynthesizer.querySet.map(_._2)
     for (method <- Seq("okapi", "dirichlet")) {
+      // the LM rule also races the lazy extent build: field and passage
+      // queries interleaved with ranked ones (the baseline rejects extents)
+      val extents = if (method == "okapi") Nil else WandPropertySpec.extentQueries
+      val queries = ranked.zipAll(extents, null, null).flatMap { case (a, b) => Seq(a, b) }
+        .filter(_ != null).map(q => (q, extents.contains(q)))
+      def run(eng: Engine, q: String, extent: Boolean, useDaat: Boolean) =
+        bits(if (extent) eng.runExtentQuery(q, 1000, useDaat) else eng.runQuery(q, 1000, useDaat))
       val rule = ScoringRule(method = method)
       val ref = new Engine(spark, index, cfg.analyzer, rule)
-      val want = queries.map(q => q -> bits(ref.runQuery(q, 1000, useDaat = false))).toMap
+      val want = queries.map { case (q, x) => q -> run(ref, q, x, useDaat = false) }.toMap
       // a fresh handle: the racing queries build its resident structures
       val eng = new Engine(spark, index.copy(), cfg.analyzer, rule)
       val go = new CountDownLatch(1)
       val pool = Executors.newFixedThreadPool(4)
       try {
-        val results = queries.map { q =>
-          pool.submit(() => { go.await(); q -> bits(eng.runQuery(q, 1000)) })
+        val results = queries.map { case (q, x) =>
+          pool.submit(() => { go.await(); q -> run(eng, q, x, useDaat = true) })
         }
         go.countDown()
         results.foreach { f =>

@@ -406,17 +406,7 @@ class WandPropertySpec extends AnyFunSuite {
     IndexConfig(blockSize = 16, numBuckets = 8),
     annotate = df => graft.index.FieldAnnotators.headField(7)(df))
 
-  private val extentQueries = Seq(
-    "#combine[head](return license)",
-    "#weight[head](0.7 return 0.3 license)",
-    "#or[head](return license)",
-    "#max[head](return license)",
-    "#sum[head](return license)",
-    "#wsum[head](2.0 return 1.0 license)",
-    "#not[head](return)",
-    "#combine[head](zzznotaword return)", // OOV child scores background
-    "#combine[passage8:4](return license)",
-    "#weight[passage8:4](0.6 val 0.4 import)")
+  import WandPropertySpec.extentQueries
 
   private def runExtents(engine: Engine, q: String, k: Int,
                          useDaat: Boolean): Seq[(Long, Int, Int, Double)] =
@@ -473,4 +463,21 @@ class WandPropertySpec extends AnyFunSuite {
       assert(kernel.forall(_._1 % 5 != 0), s"deleted doc leaked for '$q'")
     }
   }
+}
+
+object WandPropertySpec {
+  /** extent-restricted queries over a `head` field and fixed passages:
+    * every restricted op, with an OOV child
+    */
+  val extentQueries = Seq(
+    "#combine[head](return license)",
+    "#weight[head](0.7 return 0.3 license)",
+    "#or[head](return license)",
+    "#max[head](return license)",
+    "#sum[head](return license)",
+    "#wsum[head](2.0 return 1.0 license)",
+    "#not[head](return)",
+    "#combine[head](zzznotaword return)", // OOV child scores background
+    "#combine[passage8:4](return license)",
+    "#weight[passage8:4](0.6 val 0.4 import)")
 }
