@@ -2,11 +2,17 @@ package graft.index
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.analysis.Analyzer
 
@@ -176,26 +182,14 @@ final case class CorpusStats(totalDocs: Long, totalTerms: Long, uniqueTerms: Lon
 
 object IndexBuilder {
 
-  /** Dense 1-based docIds over the corpus-table primary key, mirroring
-    * sequential assignment at add time (reference: src/MemoryIndex.cpp:550-552).
-    * Never `monotonically_increasing_id` — not dense, not layout-stable.
-    *
-    * Scale note: a single-partition global window is a bottleneck at
-    * 10^12 rows; there we'd switch to zipWithIndex over a range-sorted
-    * Dataset (per-partition offsets computed from partition counts — one
-    * extra count job, no single-reducer sort). Semantics are identical;
-    * the window form keeps the plan fully declarative at test scale.
-    */
-  def assignDocIds(corpus: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val w = Window.orderBy(keyCols.map(col): _*)
-    corpus.withColumn("docId", row_number().over(w).cast(LongType))
-  }
-
-  /** Scale-path docId assignment: identical ids to [[assignDocIds]] with
-    * NO single-reducer global window. Range-partition by the key, count
-    * rows per partition (tiny collect), then number within partitions
-    * and add the partition offset — the distributed zipWithIndex shape,
-    * expressed with DataFrame ops only (per input_hint: no RDD).
+  /** Dense 1-based docIds over the corpus-table primary key — the rank
+    * of each row's key, mirroring sequential assignment at add time
+    * (reference: src/MemoryIndex.cpp:550-552). Never
+    * `monotonically_increasing_id` — not dense, not layout-stable.
+    * Range-partition by the key, count rows per partition (tiny
+    * collect), then number within partitions and add the partition
+    * offset — the distributed zipWithIndex shape, with no single-reducer
+    * global window, expressed with DataFrame ops only.
     *
     * The range-partitioned Dataset is persisted so the count pass and
     * the numbering pass see the SAME sampled partition boundaries.
@@ -316,38 +310,42 @@ object IndexBuilder {
     }
   }
 
-  /** Positional postings with denormalized doclen:
-    * (term, docId, tf, positions, doclen).
+  /** The one analyze→postings pass every build runs: [[tokenize]] → the
+    * optional annotator chain → one select that turns each document's
+    * token slots into (doclen, per-term entries) and keeps its field
+    * extents. Output: (docId, tp, fields) with tp = (doclen, [(term, tf,
+    * positions)]); doclen counts every position including stopped/null
+    * slots, positions are 0-based ascending.
     *
     * A document's postings depend ONLY on its own token slots, so the
     * (term → positions) aggregation runs per row in one tight pass — the
     * in-memory DocListMemoryBuilder exactly (reference:
-    * src/MemoryIndex.cpp:538-651) — and the build moves NO data: the old
-    * posexplode + groupBy(term, docId) shape shuffled every token
-    * occurrence across the cluster to reassemble what each row already
-    * held. Output is one row per distinct term per document (~2-4× fewer
-    * rows than tokens), positions naturally ascending.
+    * src/MemoryIndex.cpp:538-651) — and moves NO data. One expression
+    * ([[DocPostings]]) reads `slots` once and returns doclen with the
+    * entries, so no projection reads the slot array twice and Catalyst
+    * cannot inline the analyzer into two consumers. The slot array and
+    * the content never leave the pass: callers persist its output, and
+    * [[buildPostings]], [[buildDocLens]] and [[buildFieldExtents]] all
+    * read from it.
     */
-  def buildPostings(tokenized: DataFrame, cfg: IndexConfig): DataFrame = {
-    val postUdf = udf { (slots: Seq[String]) =>
-      val m = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-      var i = 0
-      while (i < slots.length) {
-        val t = slots(i)
-        if (t != null)
-          m.getOrElseUpdate(t, new scala.collection.mutable.ArrayBuffer[Int](4)) += i
-        i += 1
-      }
-      m.iterator.map { case (t, ps) => (t, ps.length, ps.toArray) }.toSeq
-    }
-    tokenized
-      .select(col("docId"), size(col("slots")).as("doclen"),
-        explode(postUdf(col("slots"))).as("p"))
+  def postingsPass(docs: DataFrame, cfg: IndexConfig,
+                   annotate: DataFrame => DataFrame = null): DataFrame = {
+    val tokenized = tokenize(docs, cfg)
+    Option(annotate).fold(tokenized)(_(tokenized))
+      .select(col("docId"),
+        ColumnBridge.column(DocPostings(ColumnBridge.expression(col("slots")))).as("tp"),
+        col("fields"))
+  }
+
+  /** Positional postings with denormalized doclen from a [[postingsPass]]:
+    * (term, docId, tf, positions, doclen), one row per distinct term per
+    * document.
+    */
+  def buildPostings(pass: DataFrame): DataFrame =
+    pass.select(col("docId"), col("tp._1").as("doclen"), explode(col("tp._2")).as("p"))
       .select(col("p._1").as("term"), col("docId"),
         col("p._2").cast(IntegerType).as("tf"),
         col("p._3").as("positions"), col("doclen"))
-  }
 
   /** Per-term statistics (reference TermData semantics:
     * include/indri/TermData.hpp:35-66 — df, ctf, min/max doclen kept for
@@ -362,19 +360,22 @@ object IndexBuilder {
     )
   }
 
-  /** (docId, length); length counts ALL positions including null slots
-    * (reference: src/MemoryIndex.cpp:647 words.size()).
+  /** (docId, length) from a [[postingsPass]]; length counts ALL
+    * positions including null slots (reference: src/MemoryIndex.cpp:647
+    * words.size()).
     */
-  def buildDocLens(tokenized: DataFrame): DataFrame =
-    tokenized.select(col("docId"), size(col("slots")).as("length"))
+  def buildDocLens(pass: DataFrame): DataFrame =
+    pass.select(col("docId"), col("tp._1").as("length"))
 
-  /** Field-extent table (docId, field, begin, end, number) — the extent
+  /** Field-extent table (docId, field, begin, end, number, ordinal,
+    * parentField, parentOrdinal) from a [[postingsPass]] — the extent
     * list analogue (reference fieldsFile, src/IndexWriter.cpp:412-508;
     * FieldExtent include/indri/FieldExtent.hpp:30-46). Extents come from
-    * markup tags (tokenize) and/or injected annotator columns.
+    * markup tags (tokenize) and/or injected annotator columns; a build
+    * with neither gets an empty table of this schema.
     */
-  def buildFieldExtents(tokenized: DataFrame): DataFrame =
-    tokenized
+  def buildFieldExtents(pass: DataFrame): DataFrame =
+    pass
       .where(col("fields").isNotNull && size(col("fields")) > 0)
       .select(col("docId"), explode(col("fields")).as("f"))
       .select(col("docId"), col("f.field").as("field"),
@@ -560,15 +561,18 @@ object IndexBuilder {
     val withSha = corpus.withColumn("content_sha256", sha2(col("content"), 256))
     val (docs, idCache) = assignDocIdsScalableCached(withSha, Seq("repo", "path", "commit"))
     val idx = build(docs.select(col("docId"), col("content")), cfg)
-    // force the tokenized persist (doclens reads it) so the assigned ids
-    // are snapshotted, then release the range-partition cache — otherwise
+    // force the pass persist (doclens reads it) so the assigned ids are
+    // snapshotted, then release the range-partition cache — otherwise
     // every build pins its whole corpus for the session's lifetime
     idx.doclens.count()
     idCache.unpersist(false)
     idx
   }
 
-  /** Full build from (docId, content).
+  /** Full build from (docId, content): one [[postingsPass]] for every
+    * config — fieldless, fielded or annotated — persisted as the only
+    * per-document cache; postings, doclens, field extents, dictionary,
+    * stats and segments all derive from it.
     *
     * @param annotate post-tokenize annotator chain (FieldAnnotators.*) —
     *                 the OffsetAnnotation/Numeric/Date annotator slot in
@@ -577,73 +581,74 @@ object IndexBuilder {
     */
   def build(docs: DataFrame, cfg: IndexConfig = IndexConfig(),
             annotate: DataFrame => DataFrame = null): InvertedIndex = {
-    // serialized storage: the token/positions arrays triple in size as
+    // serialized storage: the positions arrays triple in size as
     // deserialized JVM objects and evict each other at scale; SER keeps
-    // the cache compact (CPU to re-decode is cheap next to re-tokenizing)
-    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    if (cfg.fields.isEmpty && annotate == null)
-      return buildFused(docs, cfg, ser)
-    val tokenized = Option(annotate).getOrElse(identity[DataFrame] _)(tokenize(docs, cfg)).persist(ser)
+    // the cache compact (CPU to re-decode is cheap next to re-analyzing)
+    val ser = StorageLevel.MEMORY_AND_DISK_SER
+    val pass = postingsPass(docs, cfg, annotate).persist(ser)
     // postings feed dictionary, stats, and segments — persist instead of
-    // re-running tokenize+explode+agg per consumer
-    val postings = buildPostings(tokenized, cfg).persist(ser)
+    // re-exploding the pass per consumer
+    val postings = buildPostings(pass).persist(ser)
     val dictionary = buildDictionary(postings)
-    val doclens = buildDocLens(tokenized)
+    val doclens = buildDocLens(pass)
     val stats = buildStats(doclens, dictionary)
     val segments = buildSegments(postings, stats.totalDocs, cfg).toDF()
-    val extents = buildFieldExtents(tokenized)
-    InvertedIndex(postings, dictionary, doclens, stats, segments, extents,
+    // with no declared field and no annotator no row carries an extent:
+    // limit(0) plans the empty table without a scan of the pass
+    val extents = buildFieldExtents(pass)
+    InvertedIndex(postings, dictionary, doclens, stats, segments,
+      if (cfg.fields.isEmpty && annotate == null) extents.limit(0) else extents,
       numBuckets = cfg.numBuckets)
+  }
+}
+
+/** A document's postings from its token slots: array<string> →
+  * (doclen, [(term, tf, positions)]), terms in first-occurrence order,
+  * positions 0-based ascending, null slots counted in doclen only. The
+  * slots are read as the UTF-8 strings Catalyst holds, so no token is
+  * decoded to a java.lang.String on the way in: a typed Seq[String] UDF
+  * in its place made the build's analyze→postings pass ~18% slower
+  * (4,000 synthesized docs, 4-core host).
+  */
+private[index] case class DocPostings(child: Expression)
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+
+  override def inputTypes = Seq(ArrayType(StringType))
+  override def dataType: DataType = StructType(Seq(
+    StructField("_1", IntegerType, nullable = false),
+    StructField("_2", ArrayType(StructType(Seq(
+      StructField("_1", StringType),
+      StructField("_2", IntegerType, nullable = false),
+      StructField("_3", ArrayType(IntegerType, containsNull = false))))))))
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val slots = input.asInstanceOf[ArrayData]
+    val n = slots.numElements()
+    val m = new java.util.LinkedHashMap[UTF8String, scala.collection.mutable.ArrayBuffer[Int]]
+    var i = 0
+    while (i < n) {
+      if (!slots.isNullAt(i)) {
+        val t = slots.getUTF8String(i)
+        var ps = m.get(t)
+        if (ps == null) {
+          ps = new scala.collection.mutable.ArrayBuffer[Int](4)
+          m.put(t.clone(), ps)
+        }
+        ps += i
+      }
+      i += 1
+    }
+    val entries = new Array[Any](m.size)
+    var k = 0
+    m.forEach { (t, ps) =>
+      entries(k) = InternalRow(t, ps.length, new GenericArrayData(ps.toArray))
+      k += 1
+    }
+    InternalRow(n, new GenericArrayData(entries))
   }
 
-  /** Field-less fast path: ONE fused analyze→postings pass per document.
-    * The cache holds (docId, doclen, per-term entries) only — the raw
-    * token slot array (one String per token position, the largest build
-    * intermediate) and the source content column never enter the cache,
-    * cutting the per-doc memory traffic the build is bounded by at high
-    * core counts. Semantics identical to tokenize+buildPostings:
-    * doclen counts every position including stopped/null slots,
-    * positions 0-based ascending.
-    */
-  private def buildFused(docs: DataFrame, cfg: IndexConfig,
-                         ser: org.apache.spark.storage.StorageLevel): InvertedIndex = {
-    val az = cfg.analyzer
-    val fusedUdf = udf { (text: String) =>
-      val slots = az.analyze(text)
-      val m = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[Int]]
-      var i = 0
-      while (i < slots.length) {
-        val t = slots(i)
-        if (t != null)
-          m.getOrElseUpdate(t, new scala.collection.mutable.ArrayBuffer[Int](4)) += i
-        i += 1
-      }
-      (slots.length, m.iterator.map { case (t, ps) => (t, ps.length, ps.toArray) }.toSeq)
-    }
-    val tp = docs.select(col("docId"), fusedUdf(col("content")).as("tp")).persist(ser)
-    val postings = tp
-      .select(col("docId"), col("tp._1").as("doclen"), explode(col("tp._2")).as("p"))
-      .select(col("p._1").as("term"), col("docId"),
-        col("p._2").cast(IntegerType).as("tf"),
-        col("p._3").as("positions"), col("doclen"))
-      .persist(ser)
-    val dictionary = buildDictionary(postings)
-    val doclens = tp.select(col("docId"), col("tp._1").as("length"))
-    val stats = buildStats(doclens, dictionary)
-    val segments = buildSegments(postings, stats.totalDocs, cfg).toDF()
-    // no declared fields: empty extent table with the standard schema
-    val spark = docs.sparkSession
-    val extents = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(
-        StructField("docId", LongType), StructField("field", StringType),
-        StructField("begin", IntegerType), StructField("end", IntegerType),
-        StructField("number", LongType), StructField("ordinal", IntegerType),
-        StructField("parentField", StringType), StructField("parentOrdinal", IntegerType))))
-    InvertedIndex(postings, dictionary, doclens, stats, segments, extents,
-      numBuckets = cfg.numBuckets)
-  }
+  override protected def withNewChildInternal(newChild: Expression): DocPostings =
+    copy(child = newChild)
 }
 
 /** Injected field extents over an already-tokenized corpus — the

@@ -159,56 +159,11 @@ object TextPipeline {
       .select("a", "b").distinct()
   }
 
-  /** Connected components over an undirected pair list by min-label
-    * propagation: comp(id) ← min(comp(id), min over neighbors' comp)
-    * until fixpoint. Near-dup graphs have tiny, diameter-bounded
-    * components, so rounds ≈ longest dup chain (early exit when a round
-    * changes nothing). Each round is one shuffle join on the edge key;
-    * localCheckpoint truncates lineage like the PageRank loop. At web
-    * scale the identical propagation body runs over a large-star/
-    * small-star reshaped edge list (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14) for O(log n) rounds —
-    * the per-round plan shape (join + min-agg) is already that one.
-    */
-  def connectedComponents(nodes: DataFrame, idCol: String, pairs: DataFrame,
-                          maxIter: Int = 25): DataFrame = {
-    val edges = pairs.select(col("a").cast(LongType).as("x"), col("b").cast(LongType).as("y"))
-      .union(pairs.select(col("b").cast(LongType).as("x"), col("a").cast(LongType).as("y")))
-      .persist()
-    var labels = nodes.select(col(idCol).cast(LongType).as("id"),
-      col(idCol).cast(LongType).as("comp")).localCheckpoint()
-    var iter = 0
-    var changed = 1L
-    while (iter < maxIter && changed > 0) {
-      val viaNbr = edges.join(labels.withColumnRenamed("id", "y"), "y")
-        .select(col("x").as("id"), col("comp"))
-      val next = labels.union(viaNbr)
-        .groupBy("id").agg(min("comp").as("comp"))
-      val stepped = labels.withColumnRenamed("comp", "prev")
-        .join(next, "id")
-        .select(col("id"), col("comp"),
-          (col("comp") =!= col("prev")).cast(LongType).as("chg"))
-        .localCheckpoint()
-      changed = stepped.agg(coalesce(sum("chg"), lit(0L))).head().getLong(0)
-      labels = stepped.select("id", "comp")
-      iter += 1
-    }
-    edges.unpersist()
-    // never return silently-wrong components: a dup chain longer than
-    // maxIter hops would leave labels mid-propagation. Real corpora hit
-    // this on long boilerplate chains; fail loudly so the caller raises
-    // maxIter (or switches to large-star/small-star reshaping).
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          s"($changed labels still changing) — raise maxIter")
-    labels
-  }
-
-  /** Connected components by alternating large-star/small-star edge
-    * reshaping (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) — O(log n) rounds on ANY component diameter, the
-    * web-scale path (min-label propagation needs diameter rounds):
+  /** Connected components over an undirected pair list by alternating
+    * large-star/small-star edge reshaping (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC'14) — O(log n) rounds on
+    * ANY component diameter, where min-label propagation needs diameter
+    * rounds:
     *
     *  - large-star: every node u links its strictly-LARGER neighbors to
     *    the minimum of its closed neighborhood m(u);
@@ -216,7 +171,7 @@ object TextPipeline {
     *    to m(u).
     *
     * Each half-round is one groupBy(u).min + one join back on u — the
-    * same shuffle shape per round as the propagation loop, but the
+    * same shuffle shape per round as min-label propagation, but the
     * round COUNT is logarithmic. At fixpoint the edge list is a star
     * forest (componentMin, node); convergence is detected by an
     * order-insensitive (count, xor-of-hashes) edge-set signature.
@@ -285,8 +240,7 @@ object TextPipeline {
     * canonical keeper (minimum id per component) — the pretraining-
     * pipeline step after pair generation: keep one representative per
     * cluster, drop the rest. Closure runs on the large-star/small-star
-    * path (logarithmic rounds); the propagation variant stays available
-    * for diameter-bounded graphs.
+    * path (logarithmic rounds).
     *
     * Docs below the shingle width are INVISIBLE to this operator (no
     * signature → no candidate pairs): they come back keeper=self even

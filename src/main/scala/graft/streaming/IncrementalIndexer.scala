@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.index.{CorpusStats, IndexBuilder, IndexConfig, InvertedIndex}
 
@@ -60,20 +60,28 @@ object IncrementalIndexer {
     Files.move(tmp, m, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Write one micro-batch of (docId, content) rows as a generation.
-    * Idempotent per batchId — including a batchId whose generation was
-    * already folded into a committed merge and garbage-collected (a
-    * replay after restart must not resurrect it).
+  /** Write one micro-batch of (docId, content) rows as a generation —
+    * the postings and doclens of [[IndexBuilder.postingsPass]], the same
+    * pass a full build runs, so a batch indexes exactly like
+    * [[IndexBuilder.build]] over the same rows. Idempotent per batchId —
+    * including a batchId whose generation was already folded into a
+    * committed merge and garbage-collected (a replay after restart must
+    * not resurrect it).
     */
   def appendBatch(batch: DataFrame, batchId: Long, dir: String, cfg: IndexConfig): Unit = {
     val gen = batchId.toString
     if (Files.exists(marker(dir, gen))) return // replay after restart
     if (consumedGens(dir).contains(gen)) return // replay of a merged+GC'd batch
-    val tokenized = IndexBuilder.tokenize(batch, cfg)
-    val postings = IndexBuilder.buildPostings(tokenized, cfg)
-    postings.write.mode("overwrite").parquet(s"${genDir(dir, gen)}/postings")
-    IndexBuilder.buildDocLens(tokenized).write.mode("overwrite")
-      .parquet(s"${genDir(dir, gen)}/doclens")
+    // the build's one analyze→postings pass, persisted for the two writes
+    // so the batch is read and analyzed once
+    val pass = IndexBuilder.postingsPass(batch, cfg)
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    try {
+      IndexBuilder.buildPostings(pass).write.mode("overwrite")
+        .parquet(s"${genDir(dir, gen)}/postings")
+      IndexBuilder.buildDocLens(pass).write.mode("overwrite")
+        .parquet(s"${genDir(dir, gen)}/doclens")
+    } finally pass.unpersist(false)
     Files.createDirectories(Paths.get(genDir(dir, gen)))
     writeMarker(dir, gen, cfg.fingerprint)
   }

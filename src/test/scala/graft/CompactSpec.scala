@@ -19,7 +19,7 @@ class CompactSpec extends AnyFunSuite {
   private val cfg = IndexConfig(blockSize = 32, numBuckets = 4)
   private lazy val docsDf = {
     val corpus = CorpusSynthesizer.corpus(spark, 300, seed = 5L)
-    IndexBuilder.assignDocIds(corpus, Seq("repo", "path", "commit"))
+    IndexBuilder.assignDocIdsScalable(corpus, Seq("repo", "path", "commit"))
       .select("docId", "content").cache()
   }
 

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.TextPipeline
 
-/** Min-label-propagation connected components + near-dup cluster
+/** Large-star/small-star connected components + near-dup cluster
   * canonicalization (keep the minimum id per component).
   */
 class DedupClusterSpec extends AnyFunSuite {
@@ -14,18 +14,18 @@ class DedupClusterSpec extends AnyFunSuite {
   test("components: chain + pair + singleton resolve to min-id labels") {
     val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L).toDF("id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
-    val got = TextPipeline.connectedComponents(nodes, "id", pairs)
+    val got = TextPipeline.connectedComponentsStar(nodes, "id", pairs)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L))
   }
 
   test("components: a 12-node chain given in worst-case order converges") {
-    // labels must travel the full diameter; maxIter default must cover it
+    // the component minimum must reach the far end of the chain
     val n = 12
     val nodes = (1L to n.toLong).toDF("id")
     val pairs = (1 until n).map(i => (i.toLong + 1, i.toLong)).toDF("a", "b")
-    val got = TextPipeline.connectedComponents(nodes, "id", pairs)
+    val got = TextPipeline.connectedComponentsStar(nodes, "id", pairs)
       .as[(Long, Long)].collect().toMap
     assert(got.values.toSet == Set(1L) && got.size == n)
   }
@@ -131,35 +131,30 @@ class DedupClusterSpec extends AnyFunSuite {
         if (ra != rb) { val lo = math.min(ra, rb); parent(math.max(ra, rb)) = lo }
       }
       val expected = nodes.map(i => i -> find(i)).toMap
-      val got = TextPipeline.connectedComponents(
+      val got = TextPipeline.connectedComponentsStar(
         nodes.toDF("id"), "id", pairs.toDF("a", "b"))
         .as[(Long, Long)].collect().toMap
       assert(got == expected)
-      // the large-star/small-star path must produce the identical partition
-      val gotStar = TextPipeline.connectedComponentsStar(
-        nodes.toDF("id"), "id", pairs.toDF("a", "b"))
-        .as[(Long, Long)].collect().toMap
-      assert(gotStar == expected)
     }
   }
 
   test("large-star/small-star handles a 64-node chain (past the propagation cap)") {
-    // min-label propagation needs diameter rounds (63 > its maxIter=25
-    // default and would throw); star reshaping converges logarithmically
+    // min-label propagation would need 63 rounds (the chain's diameter);
+    // star reshaping converges logarithmically, inside its maxIter = 50
     val n = 64
     val nodes = (1L to n.toLong).toDF("id")
     val pairs = (1 until n).map(i => (i.toLong + 1, i.toLong)).toDF("a", "b")
     val got = TextPipeline.connectedComponentsStar(nodes, "id", pairs)
       .as[(Long, Long)].collect().toMap
     assert(got.values.toSet == Set(1L) && got.size == n)
-    intercept[IllegalStateException] {
-      TextPipeline.connectedComponents(nodes, "id", pairs, maxIter = 25)
-    }
   }
 
   test("star components: chain + pair + singleton resolve to min-id labels") {
+    // the same partition as above, its edges given in both orientations,
+    // repeated, and with a self-loop on the singleton
     val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L).toDF("id")
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
+    val pairs = Seq((2L, 1L), (1L, 2L), (3L, 2L), (4L, 3L), (3L, 4L), (11L, 10L),
+      (10L, 11L), (20L, 20L)).toDF("a", "b")
     val got = TextPipeline.connectedComponentsStar(nodes, "id", pairs)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,

@@ -22,7 +22,7 @@ class FederationSpec extends AnyFunSuite {
 
   private lazy val docsDf = {
     val corpus = CorpusSynthesizer.corpus(spark, 400, seed = 11L)
-    IndexBuilder.assignDocIds(corpus, Seq("repo", "path", "commit"))
+    IndexBuilder.assignDocIdsScalable(corpus, Seq("repo", "path", "commit"))
       .select("docId", "content").cache()
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.corpus.CorpusSynthesizer
 import graft.index._
@@ -11,33 +12,62 @@ import graft.index._
 class IndexInvariantsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
+  private val keys = Seq("repo", "path", "commit")
+
   private lazy val (docs, index) = {
     val corpus = CorpusSynthesizer.corpus(spark, 500)
     val withSha = corpus.withColumn("content_sha256", sha2(col("content"), 256))
-    val d = IndexBuilder.assignDocIds(withSha, Seq("repo", "path", "commit")).cache()
+    val d = IndexBuilder.assignDocIdsScalable(withSha, keys).cache()
     val idx = IndexBuilder.build(d.select("docId", "content"), IndexConfig(blockSize = 64, numBuckets = 8))
     (d, idx)
   }
 
+  /** Spark's string order: unsigned UTF-8 bytes — not String.compareTo,
+    * which compares UTF-16 units and puts a supplementary character
+    * (surrogates 0xD800-0xDFFF) before U+E000-U+FFFF
+    */
+  private val utf8Order: Ordering[String] = (a, b) =>
+    java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+
+  /** docId oracle: the 1-based rank of each row's (repo, path, commit)
+    * key under Spark's string order
+    */
+  private def keyRanks(df: DataFrame): Map[(String, String, String), Long] =
+    df.select(keys.map(col): _*).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .sorted(Ordering.Tuple3(utf8Order, utf8Order, utf8Order))
+      .zipWithIndex.map { case (k, i) => k -> (i + 1L) }.toMap
+
+  private def idsOf(df: DataFrame): Map[(String, String, String), Long] =
+    df.select("repo", "path", "commit", "docId").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
+
   test("docIds dense 1..N and deterministic") {
     val ids = docs.select("docId").as[Long](spark.implicits.newLongEncoder).collect().sorted
     assert(ids.toSeq == (1L to ids.length).toSeq)
-    // re-assign on a repartitioned copy must agree (layout independence)
-    val re = IndexBuilder.assignDocIds(docs.drop("docId").repartition(7), Seq("repo", "path", "commit"))
-    val pairs = docs.select("repo", "path", "commit", "docId")
-      .join(re.select(col("repo"), col("path"), col("commit"), col("docId").as("docId2")),
-        Seq("repo", "path", "commit"))
-    assert(pairs.where(col("docId") =!= col("docId2")).count() == 0)
+    // the ids are the sorted-key ranks, and re-assigning a repartitioned
+    // copy gives them again (layout independence)
+    val expected = keyRanks(docs)
+    assert(expected.size == ids.length) // keys are unique
+    assert(idsOf(docs) == expected)
+    assert(idsOf(IndexBuilder.assignDocIdsScalable(docs.drop("docId").repartition(7), keys)) == expected)
   }
 
-  test("scalable docId assignment equals the window form") {
+  test("scalable docId assignment equals the sorted-key rank oracle") {
     val re = IndexBuilder.assignDocIdsScalable(
-      docs.drop("docId").repartition(5), Seq("repo", "path", "commit"), partitions = 7)
-    val pairs = docs.select("repo", "path", "commit", "docId")
-      .join(re.select(col("repo"), col("path"), col("commit"), col("docId").as("docId2")),
-        Seq("repo", "path", "commit"))
-    assert(pairs.count() == docs.count())
-    assert(pairs.where(col("docId") =!= col("docId2")).count() == 0)
+      docs.drop("docId").repartition(5), keys, partitions = 7)
+    assert(re.count() == docs.count())
+    assert(idsOf(re) == keyRanks(docs))
+    // keys whose UTF-8 byte order differs from their UTF-16 order: U+FF5E
+    // (EF BD 9E) sorts before U+1F600 (F0 9F 98 80) in bytes, after its
+    // surrogate pair (D83D DE00) in String.compareTo
+    import spark.implicits._
+    val wide = Seq("\uFF5E", "\uD83D\uDE00", "z", "\u00E9", "a\uD83D\uDE00", "a\uFF5E")
+      .flatMap(r => Seq("p1", "p\u00E9").map(p => (r, p, "c", "x")))
+      .toDF("repo", "path", "commit", "content")
+    val got = idsOf(IndexBuilder.assignDocIdsScalable(wide.repartition(3), keys, partitions = 4))
+    assert(got == keyRanks(wide))
+    assert(got(("\uFF5E", "p1", "c")) < got(("\uD83D\uDE00", "p1", "c")))
   }
 
   test("content sha256 row invariant preserved") {

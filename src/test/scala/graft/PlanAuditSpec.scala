@@ -104,16 +104,15 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("posting build: per-doc aggregation moves no data; segment encode is the only exchange") {
     val docs = Seq((1L, "a b a"), (2L, "b c")).toDF("docId", "content")
-    val tokenized = IndexBuilder.tokenize(docs, cfg)
-    val postings = IndexBuilder.buildPostings(tokenized, cfg)
-    // a document's postings are computed from its own row — the plan must
-    // contain NO exchange (the old posexplode + groupBy(term,docId) shape
-    // shuffled every token occurrence)
-    val pPlan = postings.queryExecution.executedPlan.toString
-    assert(!pPlan.contains("Exchange"),
+    val idx = IndexBuilder.build(docs, cfg)
+    // the postings `build` returns are computed from each document's own
+    // row: their plan, the caches behind them included, holds NO exchange
+    // (the old posexplode + groupBy(term,docId) shape shuffled every token
+    // occurrence)
+    val pPlan = idx.postings.queryExecution.executedPlan.toString
+    assert(pPlan.contains("InMemoryRelation") && !pPlan.contains("Exchange"),
       s"posting build shuffles token data:\n$pPlan")
-    val segPlan = IndexBuilder.buildSegments(postings, 2, cfg)
-      .queryExecution.executedPlan.toString
+    val segPlan = idx.segments.queryExecution.executedPlan.toString
     assert(segPlan.contains("hashpartitioning(term"),
       s"segments build lacks the term-hash exchange:\n$segPlan")
   }

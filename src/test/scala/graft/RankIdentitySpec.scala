@@ -19,7 +19,7 @@ class RankIdentitySpec extends AnyFunSuite {
 
   private lazy val docsDf = {
     val corpus = CorpusSynthesizer.corpus(spark, N)
-    IndexBuilder.assignDocIds(corpus, Seq("repo", "path", "commit"))
+    IndexBuilder.assignDocIdsScalable(corpus, Seq("repo", "path", "commit"))
       .select("docId", "content").cache()
   }
   private lazy val docsLocal: Seq[(Long, String)] =

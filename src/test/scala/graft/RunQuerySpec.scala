@@ -20,7 +20,7 @@ class RunQuerySpec extends AnyFunSuite {
   private val cfg = IndexConfig(blockSize = 32, numBuckets = 4)
   private lazy val docsDf = {
     val corpus = CorpusSynthesizer.corpus(spark, 300, seed = 3L)
-    IndexBuilder.assignDocIds(corpus, Seq("repo", "path", "commit"))
+    IndexBuilder.assignDocIdsScalable(corpus, Seq("repo", "path", "commit"))
       .select("docId", "content").cache()
   }
   private lazy val idx = IndexBuilder.build(docsDf, cfg)

@@ -14,7 +14,7 @@ class WandPropertySpec extends AnyFunSuite {
 
   private lazy val docsDf = {
     val corpus = CorpusSynthesizer.corpus(spark, 600, seed = 7L)
-    IndexBuilder.assignDocIds(corpus, Seq("repo", "path", "commit"))
+    IndexBuilder.assignDocIdsScalable(corpus, Seq("repo", "path", "commit"))
       .select("docId", "content").cache()
   }
   // small blocks force many block boundaries — the skip logic gets real work
