@@ -113,9 +113,10 @@ final case class InvertedIndex(
     segments: DataFrame,   // SegmentBlock schema
     fieldExtents: DataFrame = null, // (docId, field, begin, end, number) | null when no fields indexed
     numBuckets: Int = 0,   // docId-range buckets in segments (0 = unknown)
-    segmentsBucketed: Boolean = false, // segments already hash-co-located by
-    // `bucket` (bucketed table scan or a persisted repartition) — the
-    // resident block maps then build with no exchange
+    segmentsBucketed: Boolean = false, // segments come from a bucketed
+    // table or a persisted repartition on `bucket`. Callers still pass it
+    // and read it; the kernel does not: the resident block maps key their
+    // own exchange on `bucket` whatever the segments' layout
     topdocs: DataFrame = null // optional (term, docId, tf, length) hot-term
     // lists (buildTopdocs) — when present, WAND seeds its threshold from
     // them (reference: src/WeightedAndNode.cpp:119-186 candidate seeding)
@@ -137,11 +138,13 @@ final case class InvertedIndex(
       else postings.where(org.apache.spark.sql.functions.col("term").isin(terms: _*))
     } else IndexBuilder.decodePostings(segments, terms)
 
-  /** Resident per-bucket block maps: one partition per bucket group,
-    * each a map from term to that term's blocks sorted by firstDoc —
-    * the index an Indri server holds open. Built on first use and
-    * shared by every Engine over this index; persisted MEMORY_ONLY and
-    * unpersisted by the ContextCleaner once the index is unreachable.
+  /** Resident block maps: P = min(numBuckets, defaultParallelism)
+    * partitions keyed on `bucket`, bucket b in partition b mod P, each a
+    * map from term to that term's blocks sorted by firstDoc — the index
+    * an Indri server holds open. Built on first use by one keyed
+    * exchange over the segments (Daat.residentBlocks) and shared by
+    * every Engine over this index; persisted MEMORY_ONLY and unpersisted
+    * by the ContextCleaner once the index is unreachable.
     */
   @transient lazy val blockMaps: RDD[Map[String, Array[graft.search.Daat.Block]]] =
     graft.search.Daat.residentBlocks(this)

@@ -1,13 +1,15 @@
 package graft.search
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.index.{BlockCodec, InvertedIndex}
@@ -22,17 +24,19 @@ import graft.index.{BlockCodec, InvertedIndex}
   *
   * Distribution model: segment blocks are bucketed by docId range at
   * build time, and each index keeps them resident
-  * ([[InvertedIndex.blockMaps]]): one persisted partition per bucket
-  * group, a map from term to that term's blocks. A query is one job
-  * over those maps ([[onBuckets]]) — each task runs an independent DAAT
-  * over its docId ranges and returns a local top-k — and the driver
-  * merges the (numBuckets × k) candidates into the global top-k
-  * ([[mergeTopK]]). Extent-restricted queries run the same job, with the
-  * restriction field's extents resident beside the blocks
+  * ([[InvertedIndex.blockMaps]]): P = min(numBuckets, defaultParallelism)
+  * persisted partitions, bucket b in partition b mod P, each a map from
+  * term to that term's blocks. A query is one job over those maps
+  * ([[onBuckets]]), one task per partition — each task runs an
+  * independent DAAT over its whole buckets' docId ranges and returns a
+  * local top-k — and the driver merges the (P × k) candidates into the
+  * global top-k ([[mergeTopK]]) and returns it as a local relation.
+  * Extent-restricted queries run the same job, with the restriction
+  * field's extents resident beside the blocks
   * ([[InvertedIndex.extentMaps]]). This is Indri's multi-server
   * evaluate-then-merge shape (reference: src/QueryEnvironment.cpp:242-316)
-  * with buckets as servers that hold their index open; no query builds a
-  * DataFrame plan.
+  * with partitions as servers that hold their index open; no query
+  * builds a DataFrame plan.
   *
   * Scope: one plan shape, [[StructuredPlan]] — a #combine/#weight tree
   * (non-negative weights) whose leaves are terms or #odN/#uwN windows of
@@ -131,11 +135,12 @@ object Daat {
                                   lm: Boolean, baseMax: Double)
 
   /** Distributed block-max WAND over a structured plan. Returns the
-    * (docId, score) top-k as a local DataFrame, computed at call time:
-    * one job over the resident block maps, where each bucket runs one
-    * [[Cursor]] per unigram leaf and one [[WindowCursor]] (over member
-    * term cursors sharing the bucket's decoded blocks) per window leaf,
-    * and the driver merges the bucket-local top-k lists ([[mergeTopK]]).
+    * (docId, score) top-k computed at call time, as a local relation
+    * ([[docsResult]]): one job over the resident block maps, where each
+    * partition runs one [[Cursor]] per unigram leaf and one
+    * [[WindowCursor]] (over member term cursors sharing the partition's
+    * decoded blocks) per window leaf, and the driver merges the
+    * partition-local top-k lists ([[mergeTopK]]).
     *
     * @param exhaustive disable pruning (used by the safety property test:
     *                   pruned == exhaustive, FIXTURES.md §5)
@@ -147,16 +152,39 @@ object Daat {
            seedTheta: Double = Double.NegativeInfinity,
            deleted: Set[Long] = Set.empty): DataFrame = {
     val spark = index.segments.sparkSession
-    import spark.implicits._
     // k ≤ 0 must mirror the DataFrame path's limit(k) → empty result
-    if (k <= 0) return Seq.empty[(Long, Double)].toDF("docId", "score")
+    if (k <= 0) return docsResult(spark, Nil)
     val terms = p.leaves.toSeq.flatMap(l => if (l.window == null) Seq(l.term) else l.window.terms.toSeq)
     val locals = onBuckets(index, terms, p, deleted) { (plan, byTerm, _, del) =>
       val cursors: Array[DaatCursor] = plan.leaves.map(leafCursor(_, byTerm, plan.lm))
       wand(cursors, plan, k, exhaustive, seedTheta, del)
     }
-    mergeTopK(locals, k).toSeq.toDF("docId", "score")
+    docsResult(spark, mergeTopK(locals, k).toSeq)
   }
+
+  /** The (docId, score) kernel result schema: `toDF`'s for (Long, Double) */
+  private val docsSchema: StructType = StructType(Seq(
+    StructField("docId", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+
+  /** The (docId, begin, end, score) kernel result schema: `toDF`'s for
+    * (Long, Int, Int, Double)
+    */
+  private val extentsSchema: StructType = StructType(Seq(
+    StructField("docId", LongType, nullable = false),
+    StructField("begin", IntegerType, nullable = false),
+    StructField("end", IntegerType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+
+  /** A (docId, score) result as a local relation built from Rows: no
+    * encoder, and collecting it runs no job.
+    */
+  def docsResult(spark: SparkSession, rows: Seq[(Long, Double)]): DataFrame =
+    spark.createDataFrame(rows.map { case (d, s) => Row(d, s) }.asJava, docsSchema)
+
+  /** A (docId, begin, end, score) result as a local relation, like [[docsResult]] */
+  def extentsResult(spark: SparkSession, rows: Seq[(Long, Int, Int, Double)]): DataFrame =
+    spark.createDataFrame(rows.map { case (d, b, e, s) => Row(d, b, e, s) }.asJava, extentsSchema)
 
   /** Kernel-side ContextCount for window expressions: ONE pass over the
     * member terms' blocks per bucket; per window the member cursors
@@ -190,7 +218,9 @@ object Daat {
   }
 
   /** The one kernel scaffold: a single job over the resident block maps
-    * ([[InvertedIndex.blockMaps]]), one task per bucket group. Each task
+    * ([[InvertedIndex.blockMaps]]), one task per partition — whole
+    * buckets b ≡ p (mod P), P = min(numBuckets, defaultParallelism), so
+    * no task is empty and each carries an equal docId span. Each task
     * wraps the blocks of `terms` only in fresh [[TermBlocks]], so decode
     * caches live for one query in one task, and returns `task`'s result
     * for its buckets. The plan and the delete set are broadcast. With a
@@ -221,7 +251,7 @@ object Daat {
       }, (it: Iterator[T]) => it.next())
   }
 
-  /** The driver's global merge of bucket-local top-k lists: the k best
+  /** The driver's global merge of partition-local top-k lists: the k best
     * rows under the row type's [[Ranked]] order, so the result is exactly
     * `orderBy(score.desc, key.asc…).limit(k)` over the same rows
     * (reference: the client-side merge of src/QueryEnvironment.cpp:242-316).
@@ -262,34 +292,39 @@ object Daat {
     }
   }
 
-  /** Build the resident block maps for [[InvertedIndex.blockMaps]]: the
-    * segment blocks co-located by docId-range bucket, grouped once per
-    * partition into term → blocks sorted by firstDoc. One partition per
-    * bucket — NOT spark.sql.shuffle.partitions, which would pad the scan
-    * with mostly-empty tasks. Pre-bucketed segments (bucketed table scan
-    * / persisted repartition) skip the exchange: every partition already
-    * holds complete (term × bucket) groups.
+  /** Build the resident block maps for [[InvertedIndex.blockMaps]]: one
+    * keyed exchange on `bucket` into P = min(numBuckets,
+    * defaultParallelism) partitions (P = defaultParallelism when
+    * numBuckets is 0, unknown), bucket b in partition b mod P, then one
+    * grouping per partition into term → blocks sorted by firstDoc. Each
+    * partition holds whole buckets — every block of a doc, for every
+    * term, in one partition — and equal docId spans, whatever way the
+    * segment scan packed or split the files (a bucketed table's scan,
+    * size-packed or row-group-split files, an in-memory index). Behind
+    * the exchange, a kernel job's task binary does not carry the segment
+    * scan's lineage.
     */
   private[graft] def residentBlocks(index: InvertedIndex): RDD[Map[String, Array[Block]]] = {
-    val segs = index.segments.select(blockCols.map(col): _*)
-    val byBucket =
-      if (index.segmentsBucketed) segs
-      else if (index.numBuckets > 0) segs.repartition(index.numBuckets, col("bucket"))
-      else segs.repartition(col("bucket"))
-    byBucket.rdd.mapPartitions { rows =>
-      val buf = mutable.HashMap.empty[String, mutable.ArrayBuffer[Block]]
-      rows.foreach { r =>
-        buf.getOrElseUpdate(r.getString(0), mutable.ArrayBuffer.empty[Block]) += Block(
-          r.getLong(2), r.getLong(3), r.getInt(4), r.getInt(5), r.getInt(6),
-          r.getAs[Array[Byte]](7), r.getAs[Array[Byte]](8), r.getAs[Array[Byte]](9),
-          r.getAs[Array[Byte]](10))
-      }
-      Iterator(buf.iterator.map { case (t, bs) => t -> bs.sortBy(_.firstDoc).toArray }.toMap)
-    }.setName("resident block maps")
+    val cores = index.segments.sparkSession.sparkContext.defaultParallelism
+    val parts = if (index.numBuckets > 0) math.min(index.numBuckets, cores) else cores
+    index.segments.select(blockCols.map(col): _*).rdd
+      .map(r => r.getInt(1) -> (r.getString(0), Block(
+        r.getLong(2), r.getLong(3), r.getInt(4), r.getInt(5), r.getInt(6),
+        r.getAs[Array[Byte]](7), r.getAs[Array[Byte]](8), r.getAs[Array[Byte]](9),
+        r.getAs[Array[Byte]](10))))
+      // an Int key hashes to itself: HashPartitioner places bucket b in b mod P
+      .partitionBy(new HashPartitioner(parts))
+      .mapPartitions { rows =>
+        val buf = mutable.HashMap.empty[String, mutable.ArrayBuffer[Block]]
+        rows.foreach { case (_, (t, b)) =>
+          buf.getOrElseUpdate(t, mutable.ArrayBuffer.empty[Block]) += b
+        }
+        Iterator(buf.iterator.map { case (t, bs) => t -> bs.sortBy(_.firstDoc).toArray }.toMap)
+      }.setName("resident block maps")
       .persist(StorageLevel.MEMORY_ONLY)
   }
 
-  /** One bucket group's extents of one field: docId → (begins, ends),
+  /** One partition's extents of one field: docId → (begins, ends),
     * sorted by (begin, end) like the DataFrame path's
     * sort_array(struct(begin, end)).
     */
@@ -381,10 +416,11 @@ object Daat {
   /** Extent-restricted top-k through the DAAT kernel: candidate docs =
     * the union of the query terms' posting lists (the WeightedAnd
     * union), every extent of a candidate is scored in-task from the
-    * resident blocks' decoded positions, and only bucket-local top-k
+    * resident blocks' decoded positions, and only partition-local top-k
     * extents reach the driver merge ([[mergeTopK]]) — no per-position
     * shuffle, no global extent sort. One [[onBuckets]] job, like
-    * [[topK]]; the result is a local DataFrame computed at call time.
+    * [[topK]]; the result is computed at call time and returned as a
+    * local relation ([[extentsResult]]).
     *
     *  - passages (`field == null`): contexts are pure per-doc arithmetic
     *    on doclen, which the blocks carry;
@@ -404,15 +440,13 @@ object Daat {
   def topKExtents(index: InvertedIndex, p: ExtentPlan,
                   passage: Option[(Int, Int)], field: String,
                   k: Int, deleted: Set[Long] = Set.empty): DataFrame = {
-    val spark = index.segments.sparkSession
-    import spark.implicits._
     val terms = p.childTerm.filter(_ != null).distinct.toSeq
     val locals =
       if (terms.isEmpty || k <= 0) Array.empty[Seq[(Long, Int, Int, Double)]]
       else onBuckets(index, terms, p, deleted, field) { (plan, byTerm, extents, del) =>
         extentLocal(plan, byTerm, extents, passage, k, del)
       }
-    mergeTopK(locals, k).toSeq.toDF("docId", "begin", "end", "score")
+    extentsResult(index.segments.sparkSession, mergeTopK(locals, k).toSeq)
   }
 
   /** One bucket task's extent scoring: union-merge the term cursors over

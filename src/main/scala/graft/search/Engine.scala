@@ -1573,8 +1573,7 @@ final class Engine(
     // live leaves' minimum context lengths (the baseMax argument)
     val liveMinDls = leaves.collect { case (_, m) if m > 0 => m }
     if (liveMinDls.isEmpty) {
-      return Some(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("docId", LongType), StructField("score", DoubleType)))))
+      return Some(Daat.docsResult(spark, Nil))
     }
     val minDlQuery = liveMinDls.min
     val leafPlans = leaves.map(_._1)
@@ -1693,7 +1692,7 @@ final class Engine(
     val ctxF = if (er.passage.isEmpty) er.field else "?"
     // the extent-enumerating DAAT kernel is the default plan: one job
     // over the resident block maps (and, for a field, the resident
-    // extents), positions decode in-task and only bucket-local top-k
+    // extents), positions decode in-task and only partition-local top-k
     // extents reach the driver merge. Falls back to the DataFrame path
     // when the delete list outgrows the kernel bitmap.
     if (useDaat && daatDeletedSet.isDefined) {
@@ -1958,11 +1957,10 @@ final class Engine(
       .limit(k)
   }
 
-  /** empty (docId, begin, end, score) extent result */
-  private def emptyExtents: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
-      StructField("docId", LongType), StructField("begin", IntegerType),
-      StructField("end", IntegerType), StructField("score", DoubleType))))
+  /** empty (docId, begin, end, score) extent result: a local relation,
+    * collected with no job
+    */
+  private def emptyExtents: DataFrame = Daat.extentsResult(spark, Nil)
 
   /** human-readable node kind for annotation path labels */
   private def describe(n: QueryNode): String = n match {

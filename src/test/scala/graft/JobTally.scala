@@ -10,8 +10,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** What a block of driver code ran on Spark: its jobs, per job the
   * stages that actually ran (skipped stages — e.g. the shuffle behind a
-  * persisted RDD — are never submitted) and the shuffle bytes its tasks
-  * read and wrote, and how many SQL executions started.
+  * persisted RDD — are never submitted), the tasks of those stages and
+  * the shuffle bytes its tasks read and wrote, and how many SQL
+  * executions started.
   */
 final case class JobTally(jobs: Seq[JobTally.Job], sqlExecutions: Int) {
   /** jobs whose stages read the RDD named `rdd` */
@@ -19,7 +20,7 @@ final case class JobTally(jobs: Seq[JobTally.Job], sqlExecutions: Int) {
 }
 
 object JobTally {
-  final case class Job(id: Int, rdds: Set[String], stagesRun: Int,
+  final case class Job(id: Int, rdds: Set[String], stagesRun: Int, tasks: Int,
                        shuffleReadBytes: Long, shuffleWriteBytes: Long)
 
   /** run `body` and tally every job and SQL execution it started */
@@ -50,6 +51,7 @@ object JobTally {
       val mine = taskList.filter(t => stages.contains(t.stageId) && t.taskMetrics != null)
       Job(j.jobId, j.stageInfos.flatMap(_.rddInfos.map(_.name)).toSet,
         stages.count(ran.contains),
+        j.stageInfos.filter(s => ran.contains(s.stageId)).map(_.numTasks).sum,
         mine.map(_.taskMetrics.shuffleReadMetrics.totalBytesRead).sum,
         mine.map(_.taskMetrics.shuffleWriteMetrics.bytesWritten).sum)
     }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.index._
 import graft.search.{Engine, ScoringRule}
 
@@ -15,6 +16,17 @@ class PlanAuditSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val cfg = IndexConfig(analyzerMode = "simple", blockSize = 32, numBuckets = 4)
+
+  // kernel result schemas, empty results included: `toDF`'s for
+  // (Long, Double) and (Long, Int, Int, Double)
+  private val docsSchema = StructType(Seq(
+    StructField("docId", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+  private val extentsSchema = StructType(Seq(
+    StructField("docId", LongType, nullable = false),
+    StructField("begin", IntegerType, nullable = false),
+    StructField("end", IntegerType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
 
   test("stored segment scan pushes the term predicate to parquet") {
     val dir = java.nio.file.Files.createTempDirectory("plan-audit").toString
@@ -39,11 +51,14 @@ class PlanAuditSpec extends AnyFunSuite {
     val qIdx = InvertedIndex(null, stored.dictionary, stored.doclens,
       stored.stats, stored.segments, numBuckets = stored.numBuckets,
       segmentsBucketed = true)
+    // the block maps' partitions: one per core, at most one per bucket
+    val parts = math.min(stored.numBuckets, spark.sparkContext.defaultParallelism)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // a warm kernel query is a lexicon job plus kernel jobs over the
-    // resident structures: one stage each, nothing shuffled, no SQL plan
-    // executed, and the result is computed by the time runQuery returns
+    // resident structures: one stage each, one task per block-map
+    // partition, nothing shuffled, no SQL plan executed, and the result
+    // is a local relation computed by the time runQuery returns
     def audit(method: String, q: String, kernelJobs: Int): Unit = {
       val eng = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = method))
       val engMem = new Engine(spark, idx, cfg.analyzer, ScoringRule(method = method))
@@ -53,12 +68,14 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(t.jobs.size == 1 + kernelJobs, what)
       assert(t.jobsOn("resident lexicon").size == 1, what)
       assert(t.jobsOn("resident block maps").size == kernelJobs, what)
+      assert(t.jobsOn("resident block maps").forall(_.tasks == parts), what)
       assert(t.jobs.forall(_.stagesRun == 1), what)
       assert(t.jobs.forall(j => j.shuffleReadBytes == 0 && j.shuffleWriteBytes == 0), what)
       assert(t.sqlExecutions == 0, what)
+      assert(df.schema == docsSchema, what)
       val (got, tc) = JobTally.of(spark)(rows(df))
       assert(tc.jobs.isEmpty, s"collecting a kernel result ran jobs: $tc")
-      // bit-identical to the in-memory (repartition-per-bucket) index
+      // bit-identical to the in-memory index's kernel result
       assert(got.nonEmpty && got == rows(engMem.runQuery(q, 10)), what)
     }
     audit("okapi", "#combine(return license)", kernelJobs = 1)
@@ -66,6 +83,37 @@ class PlanAuditSpec extends AnyFunSuite {
     audit("dirichlet", "#combine(return license)", kernelJobs = 1)
     // a lone window query also counts its window in the kernel first
     audit("okapi", "#od1(return license)", kernelJobs = 2)
+
+    // bucket b sits in block-map partition b mod P, and no partition is empty
+    val bucketOf = stored.segments.select("term", "firstDoc", "bucket").collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
+    val placed = qIdx.blockMaps.mapPartitionsWithIndex { (p, maps) =>
+      Iterator(p -> maps.flatMap(_.iterator.flatMap { case (t, bs) => bs.map(b => (t, b.firstDoc)) }).toSeq)
+    }.collect()
+    assert(placed.length == parts)
+    assert(placed.map(_._2.size).sum == bucketOf.size, "blocks lost or duplicated")
+    for ((p, blocks) <- placed) {
+      assert(blocks.nonEmpty, s"block-map partition $p is empty")
+      assert(blocks.forall(b => bucketOf(b) % parts == p),
+        s"partition $p holds buckets ${blocks.map(bucketOf).distinct.sorted}")
+    }
+
+    // an empty kernel query runs the lexicon job alone, and its result is
+    // a local relation of the kernel schema: collecting it runs no job
+    // (Dataset.collect opens a SQL execution, a local scan, for every
+    // result alike)
+    val eng = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = "okapi"))
+    for (q <- Seq("zzznotaword", "#combine(hashkey1 mergesort3)")) {
+      eng.runQuery(q, 10)
+      val (df, t) = JobTally.of(spark)(eng.runQuery(q, 10))
+      val what = s"'$q': $t"
+      assert(t.jobs.size == 1 && t.jobsOn("resident lexicon").size == 1, what)
+      assert(t.sqlExecutions == 0, what)
+      val (got, tc) = JobTally.of(spark)(rows(df))
+      assert(got.isEmpty, what)
+      assert(tc.jobs.isEmpty, s"collecting an empty kernel result ran jobs: $tc")
+      assert(df.schema == docsSchema, what)
+    }
   }
 
   test("stored bucketed fielded index: a warm extent query is 2 jobs over the resident structures") {
@@ -82,6 +130,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val engMem = new Engine(spark, idx, cfg.analyzer, ScoringRule(method = "dirichlet"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSeq
+    val parts = math.min(stored.numBuckets, spark.sparkContext.defaultParallelism)
     // the field query zips the block maps with the resident extents; a
     // passage query reads the block maps alone
     for ((q, extentJobs) <- Seq("#weight[head](0.7 return 0.3 license)" -> 1,
@@ -95,11 +144,18 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(t.jobsOn("resident field extents").size == extentJobs, what)
       assert(t.jobs.forall(_.stagesRun == 1), what)
       assert(t.jobs.forall(j => j.shuffleReadBytes == 0 && j.shuffleWriteBytes == 0), what)
+      assert(t.jobsOn("resident block maps").forall(_.tasks == parts), what)
       assert(t.sqlExecutions == 0, what)
+      assert(df.schema == extentsSchema, what)
       val (got, tc) = JobTally.of(spark)(rows(df))
       assert(tc.jobs.isEmpty, s"collecting a kernel result ran jobs: $tc")
       assert(got.nonEmpty && got == rows(engMem.runExtentQuery(q, 10)), what)
     }
+    // an empty extent result has the same schema and collects with no job
+    val empty = eng.runExtentQuery("#combine[head](zzznotaword qqqalsonotaword)", 10)
+    assert(empty.schema == extentsSchema)
+    val (got, tc) = JobTally.of(spark)(rows(empty))
+    assert(got.isEmpty && tc.jobs.isEmpty, s"collecting an empty extent result ran jobs: $tc")
   }
 
   test("posting build: per-doc aggregation moves no data; segment encode is the only exchange") {

@@ -7,13 +7,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.corpus.CorpusSynthesizer
-import graft.index.{FieldAnnotators, IndexBuilder, IndexConfig}
+import graft.index.{FieldAnnotators, IndexBuilder, IndexConfig, InvertedIndex, SegmentStore}
 import graft.search.{Daat, Engine, ScoringRule}
 
-/** The resident query index: the kernel's per-bucket block maps, the
+/** The resident query index: the kernel's bucket-keyed block maps, the
   * field extents beside them and the lexicon are built lazily, once per
-  * index, under concurrent queries, and the driver merge of bucket-local
-  * top-k lists orders exactly like the Spark sort it replaces.
+  * index, under concurrent queries, whatever way the segment scan split
+  * the stored files, and the driver merge of partition-local top-k lists
+  * orders exactly like the Spark sort it replaces.
   */
 class ResidentIndexSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -83,5 +84,32 @@ class ResidentIndexSpec extends AnyFunSuite {
       if (c != 0) c < 0 else a._1 < b._1
     }
     assert(raw(javaOrder) != sparkTop(100))
+  }
+
+  test("a stored index whose bucket files are split across scan partitions serves the belief path's rows") {
+    val splitCfg = IndexConfig(blockSize = 16, numBuckets = 8)
+    val dir = java.nio.file.Files.createTempDirectory("resident-split").toString
+    val built = IndexBuilder.buildFromCorpus(CorpusSynthesizer.corpus(spark, 600, seed = 7L), splitCfg)
+    // small row groups on write and small splits on read: Spark splits
+    // every bucket file by row group, so a bucket's blocks reach the
+    // block-map build in several scan partitions
+    def withConf[T](key: String, value: String)(body: => T): T = {
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, value)
+      try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    withConf("parquet.block.size", "16384")(SegmentStore.writeAll(built, dir, splitCfg))
+    withConf("spark.sql.files.maxPartitionBytes", "32768") {
+      val stored = SegmentStore.open(spark, dir)
+      assert(stored.segments.rdd.getNumPartitions > stored.numBuckets, "no bucket file was split")
+      val index = InvertedIndex(null, stored.dictionary, stored.doclens, stored.stats,
+        stored.segments, numBuckets = stored.numBuckets, segmentsBucketed = true)
+      for (method <- Seq("okapi", "dirichlet")) {
+        val eng = new Engine(spark, index, splitCfg.analyzer, ScoringRule(method = method))
+        for (q <- CorpusSynthesizer.querySet.map(_._2))
+          assert(bits(eng.runQuery(q, 100)) == bits(eng.runQuery(q, 100, useDaat = false)),
+            s"$method '$q': kernel rows != belief path")
+      }
+    }
   }
 }
