@@ -25,9 +25,10 @@ import org.apache.spark.sql.types._
   * additional "servers" (the same model Daat already documents).
   *
   * Cost model at scale: combining is an OPEN-time operation — one merged
-  * dictionary aggregation (vocabulary-sized, persisted), one
-  * repartition+persist of the unioned segment blocks (restores the
-  * no-per-query-Exchange property), and tiny per-member range probes.
+  * dictionary aggregation (vocabulary-sized, persisted), one persist of
+  * the unioned segment blocks (not shuffled: the kernel's resident block
+  * maps key their own exchange on `bucket`), and tiny per-member range
+  * probes.
   * Per-query work afterwards is identical to a single repository of the
   * combined size. Members must share the analyzer/field configuration —
   * the reference has the same requirement across servers (stemmers and
@@ -151,9 +152,9 @@ object Federation {
       uniqueTerms = uniqueTerms)
 
     // segment blocks: docId range + first-varint rebase, bucket ids onto
-    // the member's disjoint bucket range; then ONE repartition+persist so
-    // every (term × bucket) group is co-located and per-query DAAT runs
-    // with no Exchange (same layout contract as a fresh build).
+    // the member's disjoint bucket range; persisted as they come, since
+    // the resident block maps place every block by its bucket
+    // (Daat.residentBlocks).
     val segments = members.zip(bases).zip(bucketBases).map {
       case (((ix, _), b), bb) =>
         val rebase = udf((bytes: Array[Byte]) => BlockCodec.rebaseDeltas(bytes, b))
@@ -165,9 +166,8 @@ object Federation {
           col("numDocs"), col("maxTf"), col("minDl"),
           (if (b == 0L) col("docsDelta") else rebase(col("docsDelta"))).as("docsDelta"),
           col("tfs"), col("dls"), col("positionsDelta"))
-    }.reduce(_ unionByName _)
+    }.reduce(_ unionByName _).persist()
     val totalBuckets = numBucketsPer.sum
-    val segmentsCo = segments.repartition(totalBuckets, col("bucket")).persist()
 
     val fieldFlags = members.map(_._1.fieldExtents == null).distinct
     require(fieldFlags.size == 1,
@@ -187,8 +187,7 @@ object Federation {
         shiftDoc(ix.topdocs, b)
       }.reduce(_ unionByName _)
 
-    InvertedIndex(postings, dictionary, doclens, stats, segmentsCo,
-      fieldExtents, numBuckets = totalBuckets, segmentsBucketed = true,
-      topdocs = topdocs)
+    InvertedIndex(postings, dictionary, doclens, stats, segments,
+      fieldExtents, numBuckets = totalBuckets, topdocs = topdocs)
   }
 }

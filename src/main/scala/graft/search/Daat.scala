@@ -186,11 +186,13 @@ object Daat {
   def extentsResult(spark: SparkSession, rows: Seq[(Long, Int, Int, Double)]): DataFrame =
     spark.createDataFrame(rows.map { case (d, b, e, s) => Row(d, b, e, s) }.asJava, extentsSchema)
 
-  /** Kernel-side ContextCount for window expressions: ONE pass over the
-    * member terms' blocks per bucket; per window the member cursors
-    * leapfrog their conjunction and [[WindowMatcher]] counts matches per
-    * doc — (occ, df) per window, the exact integer partials summed on
-    * the driver (docId ranges are disjoint). Bit-count-identical to the
+  /** Kernel-side ContextCount for window expressions: one job per query
+    * batch (Engine.runBatch passes the distinct windows of every kernel
+    * plan in the batch), ONE pass over the member terms' blocks per
+    * bucket; per window the member cursors leapfrog their conjunction
+    * and [[WindowMatcher]] counts matches per live (not deleted) doc —
+    * (occ, df) per window, the exact integer partials summed on the
+    * driver (docId ranges are disjoint). Bit-count-identical to the
     * DataFrame windowRaw aggregation (same positions, same matcher).
     * (reference: src/ContextCountAccumulator.cpp gathered in one
     * server round, src/QueryEnvironment.cpp:957-966)
@@ -265,7 +267,7 @@ object Daat {
     * -0.0 == 0.0), then the row's key fields asc.
     */
   abstract class Ranked[R] extends Ordering[R] {
-    protected def score(r: R): Double
+    def score(r: R): Double
     protected def key(a: R, b: R): Int
     final def compare(a: R, b: R): Int = {
       val c = SQLOrderingUtil.compareDoubles(score(b), score(a))
@@ -275,12 +277,12 @@ object Daat {
   object Ranked {
     /** (docId, score) */
     implicit val docs: Ranked[(Long, Double)] = new Ranked[(Long, Double)] {
-      protected def score(r: (Long, Double)): Double = r._2
+      def score(r: (Long, Double)): Double = r._2
       protected def key(a: (Long, Double), b: (Long, Double)): Int = java.lang.Long.compare(a._1, b._1)
     }
     /** (docId, begin, end, score) */
     implicit val extents: Ranked[(Long, Int, Int, Double)] = new Ranked[(Long, Int, Int, Double)] {
-      protected def score(r: (Long, Int, Int, Double)): Double = r._4
+      def score(r: (Long, Int, Int, Double)): Double = r._4
       protected def key(a: (Long, Int, Int, Double), b: (Long, Int, Int, Double)): Int = {
         val d = java.lang.Long.compare(a._1, b._1)
         if (d != 0) d
@@ -465,7 +467,7 @@ object Daat {
     val childrenOf: Array[Array[Int]] = distinct.map(t =>
       p.childTerm.indices.filter(ci => t == p.childTerm(ci)).toArray)
     val n = p.childTerm.length
-    val heap = new ExtentHeap(k)
+    val heap = new TopKHeap[(Long, Int, Int, Double)](k)
     val tfPos = new Array[Array[Int]](n)
     val groupScore = new Array[Double](p.nGroups)
     var done = cursors.isEmpty
@@ -532,7 +534,7 @@ object Daat {
     */
   private def scoreExtent(p: ExtentPlan, tfPos: Array[Array[Int]],
                           groupScore: Array[Double], d: Long, b: Int, e: Int,
-                          heap: ExtentHeap): Unit = {
+                          heap: TopKHeap[(Long, Int, Int, Double)]): Unit = {
     val ctx = e - b
     java.util.Arrays.fill(groupScore, 0.0)
     var child = 0
@@ -576,25 +578,7 @@ object Daat {
           s
         }
     }
-    heap.offer(d, b, e, acc)
-  }
-
-  /** Bounded extent heap, worst-first under the final result order
-    * ([[Ranked.extents]]), so a bucket keeps exactly the rows the driver
-    * merge can take from it.
-    */
-  final class ExtentHeap(k: Int) {
-    private val order = Ranked.extents
-    private val q = new java.util.PriorityQueue[(Long, Int, Int, Double)](
-      math.min(k, 1024) + 1, order.reverse)
-    def offer(docId: Long, begin: Int, end: Int, score: Double): Unit = {
-      val r = (docId, begin, end, score)
-      if (q.size < k) q.add(r)
-      // k ≤ 0: a zero-capacity heap has no worst row to peek at
-      else if (k > 0 && order.lt(r, q.peek())) { q.poll(); q.add(r) }
-    }
-    def results: Seq[(Long, Int, Int, Double)] =
-      q.toArray(new Array[(Long, Int, Int, Double)](0)).toSeq
+    heap.offer((d, b, e, acc))
   }
 
   /** the block columns of a segment row, in [[residentBlocks]]' order */
@@ -926,7 +910,7 @@ object Daat {
     val baseMax = plan.baseMax
     val nTerms = cursors.length
     val leafScore = new Array[Double](nTerms)
-    val heap = new TopKHeap(k)
+    val heap = new TopKHeap[(Long, Double)](k)
     val order = (0 until nTerms).toArray // cursor indices sorted by current doc
 
     def sortOrder(): Unit = {
@@ -943,7 +927,7 @@ object Daat {
 
     def offerAndAdvance(d: Long): Unit = {
       val s = scoreStructured(cursors, plan, d, leafScore)
-      if (!java.lang.Double.isNaN(s)) heap.offer(d, s)
+      if (!java.lang.Double.isNaN(s)) heap.offer((d, s))
       var m = 0
       while (m < nTerms) { if (cursors(m).doc == d) cursors(m).next(); m += 1 }
     }
@@ -1037,36 +1021,23 @@ object Daat {
     heap.results
   }
 
-  /** Bounded min-heap with docId-asc preference on ties — the
-    * ScoredExtentAccumulator analogue
+  /** Bounded top-k heap under a row type's result order ([[Ranked]]),
+    * worst row first, so a bucket keeps exactly the rows the driver
+    * merge can take from it — the ScoredExtentAccumulator analogue
     * (reference: include/indri/ScoredExtentAccumulator.hpp:40-100).
     */
-  final class TopKHeap(k: Int) {
-    // ordering: WORST first. worse = lower score, or equal score and
-    // LARGER docId (ties prefer smaller docId in the final ranking)
-    // initial capacity as ExtentHeap: k comes from callers (RunQuery's
-    // count), so k + 1 can overflow and a huge k must not pre-allocate
-    private val q = new java.util.PriorityQueue[(Long, Double)](math.min(k, 1024) + 1,
-      (a: (Long, Double), b: (Long, Double)) => {
-        val c = java.lang.Double.compare(a._2, b._2)
-        if (c != 0) c else java.lang.Long.compare(b._1, a._1)
-      })
+  final class TopKHeap[R](k: Int)(implicit order: Ranked[R]) {
+    // k comes from callers (RunQuery's count), so k + 1 can overflow and
+    // a huge k must not pre-allocate
+    private val q = new java.util.PriorityQueue[R](math.min(k, 1024) + 1, order.reverse)
+    /** the worst kept row's score once k rows are kept, else -∞ */
     def threshold: Double =
-      if (q.size < k) Double.NegativeInfinity else q.peek()._2
-    def offer(docId: Long, score: Double): Unit = {
-      if (q.size < k) q.add((docId, score))
-      else {
-        val worst = q.peek()
-        if (score > worst._2 || (score == worst._2 && docId < worst._1)) {
-          q.poll(); q.add((docId, score))
-        }
-      }
-    }
-    def results: Seq[(Long, Double)] = {
-      val out = mutable.ArrayBuffer.empty[(Long, Double)]
-      val it = q.iterator()
-      while (it.hasNext) out += it.next()
-      out.sortBy { case (d, s) => (-s, d) }.toSeq
-    }
+      if (q.size < k) Double.NegativeInfinity else order.score(q.peek())
+    def offer(r: R): Unit =
+      if (q.size < k) q.add(r)
+      // k ≤ 0: a zero-capacity heap has no worst row to peek at
+      else if (k > 0 && order.lt(r, q.peek())) { q.poll(); q.add(r) }
+    /** the kept rows, best first */
+    def results: Seq[R] = q.asScala.toSeq.sorted(order)
   }
 }

@@ -932,7 +932,7 @@ final class Engine(
     complexStatsBatch(complexRawLeaves(node))
 
   /** the same one-job round over an arbitrary set of complex leaves —
-    * lets a query BATCH share a single stats job (runQueries)
+    * lets a query BATCH share a single stats job (runBatch)
     */
   private def complexStatsBatch(leaves0: Seq[QueryNode]): Map[QueryNode, (Double, Long)] = {
     val leaves = leaves0.distinct
@@ -1310,8 +1310,9 @@ final class Engine(
   // QueryEnvironment verbs
   // ------------------------------------------------------------------
 
-  /** Top-k retrieval. Final order: score desc, docId asc — the stable
-    * sort + doc-order tiebreak (reference: src/QueryEnvironment.cpp:985-988).
+  /** Top-k retrieval: a batch of one through [[runBatch]]. Final order:
+    * score desc, docId asc — the stable sort + doc-order tiebreak
+    * (reference: src/QueryEnvironment.cpp:985-988).
     *
     * Under one okapi/tfidf/LM rule, #combine/#weight trees with
     * non-negative weights (at least one positive) over terms and
@@ -1320,9 +1321,10 @@ final class Engine(
     * segments (the max-score physical path); everything else evaluates
     * on the DataFrame inference-network path. Both produce bit-identical
     * scores (WandPropertySpec). A kernel result is computed at call time
-    * (a lexicon job and a kernel job over the index's resident
-    * structures) and returned as a local DataFrame; a belief-path result
-    * is a lazy plan that runs when collected.
+    * (a lexicon job, a window-count job when the query has a window, and
+    * a kernel job over the index's resident structures) and returned as
+    * a local DataFrame; a belief-path result is a lazy plan that runs
+    * when collected.
     */
   def runQuery(query: String, k: Int, useDaat: Boolean = true): DataFrame =
     runParsed(QueryParser.parse(query), k, useDaat)
@@ -1333,14 +1335,13 @@ final class Engine(
     */
   private[graft] def runParsed(ast: QueryNode, k: Int,
                                useDaat: Boolean = true): DataFrame =
-    (if (useDaat) runStructured(ast, k) else None)
-      .getOrElse(scoredTail(evaluate(ast), k))
+    runBatch(Seq(ast), k, useDaat).head
 
   private def lmMethod: Boolean =
     rule.method == "dirichlet" || rule.method == "jm" || rule.method == "two"
 
   /** deleted-doc filter + final (score desc, docId asc) top-k on a
-    * belief — the shared tail of runQuery and runQueries
+    * belief — the belief-path tail of runBatch
     */
   private def scoredTail(belief: Belief, k: Int): DataFrame = {
     val scored = deletedDocs match {
@@ -1353,72 +1354,46 @@ final class Engine(
       .limit(k)
   }
 
-  /** Batch retrieval: the whole batch shares ONE dictionary stats probe
-    * and ONE complex-leaf stats job, then each query's top-k evaluates
-    * independently — per-query results are identical to runQuery
-    * (reference: IndriRunQuery drives query batches against a shared
+  /** Batch retrieval through [[runBatch]]: the batch shares its stats
+    * rounds, and per-query results are identical to runQuery (reference:
+    * IndriRunQuery drives query batches against a shared
     * QueryEnvironment, runquery/IndriRunQuery.cpp:710-726). On Spark the
     * driver-blocking stats rounds are the per-query latency floor, so a
-    * B-query batch pays 2 rounds instead of 2B (plus the k-bounded
-    * topdocs seed probe per kernel query when the index has topdocs).
-    * Kernel queries run here, at call time, one kernel job each, and
-    * come back as local DataFrames; belief-path queries come back as
-    * lazy plans.
+    * B-query batch pays each round once instead of B times. Kernel
+    * queries run here, at call time, one kernel job each, and come back
+    * as local DataFrames; belief-path queries come back as lazy plans.
     */
-  def runQueries(queries: Seq[String], k: Int, useDaat: Boolean = true): Seq[(String, DataFrame)] = {
-    val asts = queries.map(q => q -> QueryParser.parse(q))
-    def kernelPath(ast: QueryNode): Boolean = useDaat && structuredServes(ast)
-    val allTerms = asts.flatMap { case (_, a) => QueryParser.termLeaves(a) }
-      .flatMap(t => Option(analyzer.processTerm(t)))
-    val tstats = termStatsFor(allTerms.distinct)
-    // kernel (windows-in-kernel) queries fold their window-leaf
-    // stats into the SAME one-job round as the belief leaves — the batch
-    // still pays exactly two driver actions (term probe + leaf stats).
-    // Window counts are exact integers through either counting path, so
-    // the shared values are bit-identical to a kernel windowStats pass;
-    // with pending deletes the kernel pass (delete-aware) runs instead.
-    val noDeletes = daatDeletedSet.contains(Set.empty[Long])
-    val structLeaves: Seq[QueryNode] =
-      if (noDeletes)
-        asts.collect { case (_, a) if kernelPath(a) => structuredWindowNodes(a) }.flatten
-      else Nil
+  def runQueries(queries: Seq[String], k: Int, useDaat: Boolean = true): Seq[(String, DataFrame)] =
+    queries.zip(runBatch(queries.map(QueryParser.parse), k, useDaat))
+
+  /** The one query body of runQuery, runParsed, runQueries and
+    * runStructured. A batch runs
+    *  - one lexicon probe for every term leaf of every query;
+    *  - one SQL stats round over the belief-path queries' complex leaves,
+    *    when there are any;
+    *  - one delete-aware [[Daat.windowStats]] job over the distinct
+    *    windows of every kernel plan, when there are any (the reference
+    *    gathers every ContextCount request in one round,
+    *    src/QueryEnvironment.cpp:957-966);
+    *  - then, per kernel query, its topdocs seed probe when the index has
+    *    topdocs and one [[Daat.topK]] job; per belief-path query, its
+    *    lazy plan.
+    */
+  private def runBatch(asts: Seq[QueryNode], k: Int, useDaat: Boolean,
+                       exhaustive: Boolean = false): Seq[DataFrame] = {
+    val kernel = asts.map(a => if (useDaat && structuredServes(a)) Some(kernelLeaves(a)) else None)
+    val tstats = termStatsFor(asts.flatMap(QueryParser.termLeaves)
+      .flatMap(t => Option(analyzer.processTerm(t))).distinct)
     val cstats = complexStatsBatch(
-      asts.collect { case (_, a) if !kernelPath(a) => complexRawLeaves(a) }.flatten ++
-        structLeaves)
-    val wShared: Map[(Seq[String], Boolean, Int), (Double, Long)] =
-      structLeaves.distinct.flatMap { n =>
-        windowSpecKey(n).map(_ -> cstats(n))
-      }.toMap
-    asts.map { case (q, ast) =>
-      q -> (if (kernelPath(ast)) runStructured(ast, k, tstatsOpt = Some(tstats),
-              wstatsOpt = if (wShared.isEmpty) None else Some(wShared))
-            else None)
-        .getOrElse(scoredTail(evaluateWith(ast, tstats, cstats, root = true), k))
+      asts.zip(kernel).collect { case (a, None) => complexRawLeaves(a) }.flatten)
+    val windows = kernel.flatten.flatMap(_.metas.collect { case WinLeafM(s) => s }).distinct.toArray
+    val wstats: Map[Daat.WindowSpec, (Double, Long)] =
+      if (windows.isEmpty) Map.empty
+      else windows.zip(Daat.windowStats(index, windows, daatDeletedSet.get)).toMap
+    asts.zip(kernel).map {
+      case (_, Some(kl)) => runKernel(kl, tstats, wstats, k, exhaustive)
+      case (a, None) => scoredTail(evaluateWith(a, tstats, cstats, root = true), k)
     }
-  }
-
-  /** window leaf nodes of a structured AST (the shapes structuredShape
-    * admits), for the shared batch stats round
-    */
-  private def structuredWindowNodes(n: QueryNode): Seq[QueryNode] = n match {
-    case w: OdNode => Seq(w)
-    case w: UwNode => Seq(w)
-    case CombineNode(cs) => cs.flatMap(structuredWindowNodes)
-    case WeightNode(cs) => cs.flatMap(c => structuredWindowNodes(c._2))
-    case _ => Nil
-  }
-
-  /** canonical (processed members, ordered, width) key for a window
-    * node — the lookup runStructured uses against the shared stats map
-    */
-  private def windowSpecKey(n: QueryNode): Option[(Seq[String], Boolean, Int)] = n match {
-    case OdNode(w, cs) if cs.forall(_.isInstanceOf[TermNode]) =>
-      Some((cs.map { case TermNode(t) =>
-        Option(analyzer.processTerm(t)).getOrElse(StoppedSentinel) }, true, w))
-    case UwNode(w, cs) if cs.forall(_.isInstanceOf[TermNode]) =>
-      Some((cs.map { case TermNode(t) =>
-        Option(analyzer.processTerm(t)).getOrElse(StoppedSentinel) }, false, w))
-    case _ => None
   }
 
   // ------------------------------------------------------------------
@@ -1443,12 +1418,12 @@ final class Engine(
     case _ => false
   }
 
-  /** dispatch predicate shared by runQuery/runQueries */
+  /** the kernel dispatch predicate of runBatch */
   private def structuredServes(ast: QueryNode): Boolean =
     (baseline || lmMethod) && daatDeletedSet.isDefined &&
       // selector rule lists can give different leaves different
       // smoothing, which the single-rule kernel cannot represent — they
-      // force the belief path, checked HERE so that runQueries' batched
+      // force the belief path, checked HERE so that the batch's
       // complex-leaf stats round still covers such a query's leaves
       smoothRules.isEmpty && structuredShape(ast)
 
@@ -1456,45 +1431,24 @@ final class Engine(
   private final case class TermLeafM(processed: String, qtf: Int) extends LeafMeta
   private final case class WinLeafM(spec: Daat.WindowSpec) extends LeafMeta
 
-  /** Build and run the structured WAND plan, or None when the shape is
-    * not kernel-servable. Mirrors evaluateWith EXACTLY: per-level
-    * weights (root-vs-inner, baseline-vs-LM), per-level okapi qtf maps,
-    * background fill-in, nested left-to-right folds — bit-identical
-    * scores (WandPropertySpec structured cases).
+  /** A kernel query's leaf registry, read before any stats are known: the
+    * fold tree over its distinct leaves (deduplicated by identical
+    * semantics, in first-seen order) and each leaf's meta.
     */
-  private[graft] def runStructured(ast: QueryNode, k: Int,
-                                   exhaustive: Boolean = false,
-                                   tstatsOpt: Option[Map[String, TermStats]] = None,
-                                   wstatsOpt: Option[Map[(Seq[String], Boolean, Int), (Double, Long)]] = None): Option[DataFrame] = {
-    if (!structuredServes(ast)) return None
-    val del = daatDeletedSet.get
+  private final class KernelLeaves(val tree: Daat.FoldTree, val metas: Array[LeafMeta])
 
-    // ---- leaf registry (dedup by identical semantics) ----
-    val leafIdx = scala.collection.mutable.LinkedHashMap.empty[(String, Seq[String], Int, Int), Int]
-    val leafMeta = scala.collection.mutable.ArrayBuffer.empty[LeafMeta]
-    val Sentinel = StoppedSentinel
-
-    def termLeaf(raw: String, qtfs: Map[String, Int]): Daat.FoldTree = {
-      val pt = analyzer.processTerm(raw)
-      val processed = if (pt == null) Sentinel else pt
-      // evaluateWith: baseline terms score with the ENCLOSING level's
-      // qtf; LM terms go through scoreRaw's default qtf = 1
-      val qtf = if (baseline && pt != null) qtfs.getOrElse(pt, 1) else 1
-      val key = ("t", Seq(processed), 0, qtf)
-      Daat.FLeaf(leafIdx.getOrElseUpdate(key, {
-        leafMeta += TermLeafM(processed, qtf); leafMeta.length - 1
-      }))
-    }
-    def windowLeaf(ordered: Boolean, width: Int, cs: Seq[QueryNode]): Daat.FoldTree = {
-      val members = cs.map { case TermNode(t) =>
-        Option(analyzer.processTerm(t)).getOrElse(Sentinel)
-      }
-      val key = (if (ordered) "od" else "uw", members, width, 0)
-      Daat.FLeaf(leafIdx.getOrElseUpdate(key, {
-        leafMeta += WinLeafM(Daat.WindowSpec(members.toArray, ordered, width))
-        leafMeta.length - 1
-      }))
-    }
+  /** Walk a kernel-shaped AST into its [[KernelLeaves]]. Mirrors
+    * evaluateWith EXACTLY: per-level weights (root-vs-inner,
+    * baseline-vs-LM), per-level okapi qtf maps, nested left-to-right
+    * folds.
+    */
+  private def kernelLeaves(ast: QueryNode): KernelLeaves = {
+    val leafIdx = scala.collection.mutable.LinkedHashMap.empty[LeafMeta, Int]
+    def leaf(m: LeafMeta): Daat.FoldTree = Daat.FLeaf(leafIdx.getOrElseUpdate(m, leafIdx.size))
+    def window(ordered: Boolean, width: Int, cs: Seq[QueryNode]): Daat.FoldTree =
+      leaf(WinLeafM(Daat.WindowSpec(cs.collect { case TermNode(t) =>
+        Option(analyzer.processTerm(t)).getOrElse(StoppedSentinel)
+      }.toArray, ordered, width)))
 
     def walk(n: QueryNode, root: Boolean): Daat.FoldTree = n match {
       case cn @ CombineNode(cs) =>
@@ -1510,35 +1464,33 @@ final class Engine(
             cs.map(_._1 / total)
           }
         Daat.FNode(cs.zip(weights).map { case ((_, c), w) => (w, child(c, qtfs)) }.toArray)
-      case leaf => child(leaf, qtfMap(leaf))
+      case l => child(l, qtfMap(l))
     }
     def child(c: QueryNode, qtfs: Map[String, Int]): Daat.FoldTree = c match {
-      case TermNode(t) => termLeaf(t, qtfs)
-      case OdNode(w, cs) => windowLeaf(ordered = true, w, cs)
-      case UwNode(w, cs) => windowLeaf(ordered = false, w, cs)
+      case TermNode(t) =>
+        val pt = analyzer.processTerm(t)
+        // evaluateWith: baseline terms score with the ENCLOSING level's
+        // qtf; LM terms go through scoreRaw's default qtf = 1
+        val qtf = if (baseline && pt != null) qtfs.getOrElse(pt, 1) else 1
+        leaf(TermLeafM(if (pt == null) StoppedSentinel else pt, qtf))
+      case OdNode(w, cs) => window(ordered = true, w, cs)
+      case UwNode(w, cs) => window(ordered = false, w, cs)
       case sub => walk(sub, root = false)
     }
 
     val tree = walk(ast, root = true)
-    val metas = leafMeta.toArray
+    new KernelLeaves(tree, leafIdx.keys.toArray)
+  }
 
-    // ---- stats rounds: dictionary probe + ONE kernel window pass ----
-    val realTerms = metas.flatMap {
-      case TermLeafM(p, _) if p != Sentinel => Seq(p)
-      case WinLeafM(spec) => spec.terms.filterNot(_ == Sentinel).toSeq
-      case _ => Nil
-    }.distinct.toSeq
-    val tstats = tstatsOpt.getOrElse(termStatsFor(realTerms))
-    val windows = metas.collect { case WinLeafM(s) => s }
-    // answered from the batch-shared stats round when every window is
-    // covered (runQueries); otherwise one kernel windowStats pass
-    val wstats: Array[(Double, Long)] = wstatsOpt match {
-      case Some(m) if windows.forall(w => m.contains((w.terms.toSeq, w.ordered, w.width))) =>
-        windows.map(w => m((w.terms.toSeq, w.ordered, w.width)))
-      case _ => Daat.windowStats(index, windows, del)
-    }
-
-    // ---- per-leaf score functions, bounds, eff weights ----
+  /** Score one kernel query from the batch's stats: per-leaf score
+    * functions, WAND bounds and effective weights, background fill-in,
+    * then one [[Daat.topK]] job — bit-identical scores to evaluateWith
+    * (WandPropertySpec structured cases).
+    */
+  private def runKernel(kl: KernelLeaves, tstats: Map[String, TermStats],
+                        wstats: Map[Daat.WindowSpec, (Double, Long)],
+                        k: Int, exhaustive: Boolean): DataFrame = {
+    val (tree, metas) = (kl.tree, kl.metas)
     val effW = new Array[Double](metas.length)
     def accEff(t: Daat.FoldTree, w: Double): Unit = t match {
       case Daat.FLeaf(i) => effW(i) += w
@@ -1546,7 +1498,6 @@ final class Engine(
     }
     accEff(tree, 1.0)
 
-    var wi = 0
     val leaves = metas.zipWithIndex.map {
       case (TermLeafM(p, qtf), i) =>
         val ts = tstats.getOrElse(p, TermStats(0, 0))
@@ -1556,7 +1507,7 @@ final class Engine(
         (Daat.boundedLeaf(p, null, fn, effW(i), !baseline, ts.ctf.toDouble, minDl),
           if (ts.ctf > 0) minDl else 0)
       case (WinLeafM(spec), i) =>
-        val (occ, df) = wstats(wi); wi += 1
+        val (occ, df) = wstats(spec)
         val fn = Scorers.forTerm(rule, occ, stats.totalTerms.toDouble,
           df.toDouble, stats.totalDocs)
         // window matches contain every member: dl ≥ max member minDocLen
@@ -1572,9 +1523,7 @@ final class Engine(
     // every candidate matches ≥1 live leaf — its dl is ≥ the min of the
     // live leaves' minimum context lengths (the baseMax argument)
     val liveMinDls = leaves.collect { case (_, m) if m > 0 => m }
-    if (liveMinDls.isEmpty) {
-      return Some(Daat.docsResult(spark, Nil))
-    }
+    if (liveMinDls.isEmpty) return Daat.docsResult(spark, Nil)
     val minDlQuery = liveMinDls.min
     val leafPlans = leaves.map(_._1)
     // leaves fill in with the same background forms the exact scorer
@@ -1584,10 +1533,20 @@ final class Engine(
       else Daat.foldWith(tree, li => leafPlans(li).scoreAt(0.0, minDlQuery))
 
     val p = Daat.StructuredPlan(leafPlans, tree, lm = lmMethod, baseMax = baseMax)
+    val del = daatDeletedSet.get
     val seed = if (exhaustive || index.topdocs == null) Double.NegativeInfinity
                else topdocsSeed(p, k, del)
-    Some(Daat.topK(index, p, k, exhaustive, seed, del))
+    Daat.topK(index, p, k, exhaustive, seed, del)
   }
+
+  /** One query's kernel result through [[runBatch]], or None when the
+    * shape is not kernel-servable — the hook the specs pin the kernel
+    * with (`exhaustive` disables pruning: pruned == exhaustive).
+    */
+  private[graft] def runStructured(ast: QueryNode, k: Int,
+                                   exhaustive: Boolean = false): Option[DataFrame] =
+    if (structuredServes(ast)) Some(runBatch(Seq(ast), k, useDaat = true, exhaustive).head)
+    else None
 
   /** WAND threshold seeding from the topdocs lists (reference:
     * src/WeightedAndNode.cpp:119-186 seeds max-score candidates from the
@@ -1699,7 +1658,11 @@ final class Engine(
       val prep = prepLeaves(childGroups.flatten.map(NexiParser.PlainTerm), ctxF)
       val nChildren = prep.fns.length
       val childTerm = new Array[String](nChildren)
-      prep.keyIdx.foreach { case (t, cis) => cis.foreach(ci => childTerm(ci) = t) }
+      // a child the lexicon lacks never matches: it stays null (its
+      // scorer is the background fill-in), and with no child left the
+      // kernel runs no job
+      prep.keyIdx.foreach { case (t, cis) =>
+        if (prep.inLexicon(t)) cis.foreach(ci => childTerm(ci) = t) }
       val wChild: Array[Double] = weights match {
         case Some(ws) => ws.toArray
         case None => childGroups.flatMap(g => g.map(_ => 1.0 / g.length)).toArray
@@ -1749,9 +1712,11 @@ final class Engine(
     */
   private final class LeafPrep(
       val fns: Array[TermScoreFunction], val keyIdx: Map[String, Seq[Int]],
-      val lens: Array[Int], val negs: Array[Boolean], perDocPlan: => DataFrame) {
+      val lens: Array[Int], val negs: Array[Boolean], val inLexicon: Set[String],
+      perDocPlan: => DataFrame) {
     /** the per-doc (term → positions) map, planned on first use: the
-      * extent kernel reads only the scorers and the child map
+      * extent kernel reads only the scorers, the child map and the
+      * lexicon's terms
       */
     lazy val perDoc: DataFrame = perDocPlan
   }
@@ -1825,7 +1790,7 @@ final class Engine(
           .agg(map_from_entries(collect_list(struct(col("term"), col("positions")))).as("tp")))
         .orNull
     }
-    new LeafPrep(fns, keyIdx, lens, negs, perDoc)
+    new LeafPrep(fns, keyIdx, lens, negs, tstats.keySet, perDoc)
   }
 
   /** The DataFrame plan of [[runExtentQuery]] (taken when `useDaat` is

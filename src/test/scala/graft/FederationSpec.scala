@@ -54,7 +54,13 @@ class FederationSpec extends AnyFunSuite {
 
     assert(fed.stats == whole.stats)
     assert(fed.numBuckets == half1.numBuckets + half2.numBuckets)
-    assert(fed.segmentsBucketed)
+    // the federated segments are persisted as unioned, not shuffled: the
+    // kernel's resident block maps key their own exchange on `bucket`, so
+    // the plan holds no Exchange beyond the members' own build exchanges
+    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+      "Exchange ".r.findAllIn(df.queryExecution.executedPlan.toString).size
+    assert(exchanges(fed.segments) == exchanges(half1.segments) + exchanges(half2.segments),
+      s"federated segments are shuffled:\n${fed.segments.queryExecution.executedPlan}")
 
     val w = new Engine(spark, whole, Analyzer(), ScoringRule(method = "okapi"))
     val f = new Engine(spark, fed, Analyzer(), ScoringRule(method = "okapi"))

@@ -151,8 +151,13 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(tc.jobs.isEmpty, s"collecting a kernel result ran jobs: $tc")
       assert(got.nonEmpty && got == rows(engMem.runExtentQuery(q, 10)), what)
     }
-    // an empty extent result has the same schema and collects with no job
-    val empty = eng.runExtentQuery("#combine[head](zzznotaword qqqalsonotaword)", 10)
+    // an extent query whose terms the lexicon all lacks runs the lexicon
+    // job alone; its empty result has the same schema and collects with
+    // no job
+    val (empty, te) = JobTally.of(spark)(
+      eng.runExtentQuery("#combine[head](zzznotaword qqqalsonotaword)", 10))
+    assert(te.jobs.size == 1 && te.jobsOn("resident lexicon").size == 1, s"OOV extent query: $te")
+    assert(te.jobsOn("resident block maps").isEmpty, s"OOV extent query: $te")
     assert(empty.schema == extentsSchema)
     val (got, tc) = JobTally.of(spark)(rows(empty))
     assert(got.isEmpty && tc.jobs.isEmpty, s"collecting an empty extent result ran jobs: $tc")
