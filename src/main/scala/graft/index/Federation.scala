@@ -134,10 +134,11 @@ object Federation {
       shiftDoc(ix.doclens, b)
     }.reduce(_ unionByName _)
 
-    // merged lexicon: df/ctf sum, length bounds combine — the summed
-    // ContextSimpleCount stats every scorer reads (reference:
-    // src/QueryEnvironment.cpp:957-965 _sumServerQuery). Persisted:
-    // per-query probes are isin-filters over this one table.
+    // merged dictionary: df/ctf sum, length bounds combine — the summed
+    // ContextSimpleCount stats (reference: src/QueryEnvironment.cpp:957-965
+    // _sumServerQuery), which the term stats of the resident block maps
+    // over the unioned segments sum to as well (Daat.stats). Persisted:
+    // counted here and read again by the dictionary's DataFrame readers.
     val dictionary = members.map(_._1.dictionary).reduce(_ unionByName _)
       .groupBy("term").agg(
         sum(col("df")).as("df"),

@@ -1,6 +1,5 @@
 package graft.index
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -140,13 +139,16 @@ final case class InvertedIndex(
 
   /** Resident block maps: P = min(numBuckets, defaultParallelism)
     * partitions keyed on `bucket`, bucket b in partition b mod P, each a
-    * map from term to that term's blocks sorted by firstDoc — the index
-    * an Indri server holds open. Built on first use by one keyed
-    * exchange over the segments (Daat.residentBlocks) and shared by
-    * every Engine over this index; persisted MEMORY_ONLY and unpersisted
-    * by the ContextCleaner once the index is unreachable.
+    * map from term to that term's blocks sorted by firstDoc and their
+    * stats partial (Daat.TermSlice) — the index an Indri server holds
+    * open, and the only resident copy of it: term stats, window counts
+    * and every kernel query read these maps (Daat.stats, Daat.topK,
+    * Daat.topKExtents). Built on first use by one keyed exchange over
+    * the segments (Daat.residentBlocks) and shared by every Engine over
+    * this index; persisted MEMORY_ONLY and unpersisted by the
+    * ContextCleaner once the index is unreachable.
     */
-  @transient lazy val blockMaps: RDD[Map[String, Array[graft.search.Daat.Block]]] =
+  @transient lazy val blockMaps: RDD[Map[String, graft.search.Daat.TermSlice]] =
     graft.search.Daat.residentBlocks(this)
 
   /** Resident field extents: field → docId → extents sorted by (begin,
@@ -158,21 +160,6 @@ final case class InvertedIndex(
     */
   @transient lazy val extentMaps: RDD[Map[String, graft.search.Daat.Extents]] =
     graft.search.Daat.residentExtents(this)
-
-  /** Resident lexicon: the dictionary's (ctf, df, minDocLen) per term in
-    * term-hash partitions, so a stats probe reads only the partitions
-    * that hold its terms (reference: src/ContextSimpleCountAccumulator.cpp
-    * answers from the lexicon). Built and persisted like [[blockMaps]].
-    */
-  @transient lazy val lexicon: RDD[Map[String, graft.search.TermStats]] = {
-    val sc = dictionary.sparkSession.sparkContext
-    dictionary.select("term", "ctf", "df", "minDocLen").rdd
-      .map(r => r.getString(0) -> graft.search.TermStats(r.getLong(1), r.getLong(2), r.getInt(3)))
-      .partitionBy(new HashPartitioner(math.max(1, sc.defaultParallelism)))
-      .mapPartitions(it => Iterator(it.toMap), preservesPartitioning = true)
-      .setName("resident lexicon")
-      .persist(StorageLevel.MEMORY_ONLY)
-  }
 }
 
 final case class CorpusStats(totalDocs: Long, totalTerms: Long, uniqueTerms: Long) {

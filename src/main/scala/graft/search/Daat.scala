@@ -26,10 +26,12 @@ import graft.index.{BlockCodec, InvertedIndex}
   * build time, and each index keeps them resident
   * ([[InvertedIndex.blockMaps]]): P = min(numBuckets, defaultParallelism)
   * persisted partitions, bucket b in partition b mod P, each a map from
-  * term to that term's blocks. A query is one job over those maps
-  * ([[onBuckets]]), one task per partition — each task runs an
+  * term to that term's blocks and their stats partial ([[TermSlice]]).
+  * A query is two jobs over those maps ([[onBuckets]]), one task per
+  * partition: the stats job ([[stats]]) sums the term partials and
+  * counts the windows, then the kernel job runs, in each task, an
   * independent DAAT over its whole buckets' docId ranges and returns a
-  * local top-k — and the driver merges the (P × k) candidates into the
+  * local top-k, and the driver merges the (P × k) candidates into the
   * global top-k ([[mergeTopK]]) and returns it as a local relation.
   * Extent-restricted queries run the same job, with the restriction
   * field's extents resident beside the blocks
@@ -155,9 +157,9 @@ object Daat {
     // k ≤ 0 must mirror the DataFrame path's limit(k) → empty result
     if (k <= 0) return docsResult(spark, Nil)
     val terms = p.leaves.toSeq.flatMap(l => if (l.window == null) Seq(l.term) else l.window.terms.toSeq)
-    val locals = onBuckets(index, terms, p, deleted) { (plan, byTerm, _, del) =>
-      val cursors: Array[DaatCursor] = plan.leaves.map(leafCursor(_, byTerm, plan.lm))
-      wand(cursors, plan, k, exhaustive, seedTheta, del)
+    val locals = onBuckets(index, terms) { (byTerm, _) =>
+      val cursors: Array[DaatCursor] = p.leaves.map(leafCursor(_, byTerm, p.lm))
+      wand(cursors, p, k, exhaustive, seedTheta, deleted)
     }
     docsResult(spark, mergeTopK(locals, k).toSeq)
   }
@@ -186,66 +188,80 @@ object Daat {
   def extentsResult(spark: SparkSession, rows: Seq[(Long, Int, Int, Double)]): DataFrame =
     spark.createDataFrame(rows.map { case (d, b, e, s) => Row(d, b, e, s) }.asJava, extentsSchema)
 
-  /** Kernel-side ContextCount for window expressions: one job per query
-    * batch (Engine.runBatch passes the distinct windows of every kernel
-    * plan in the batch), ONE pass over the member terms' blocks per
-    * bucket; per window the member cursors leapfrog their conjunction
-    * and [[WindowMatcher]] counts matches per live (not deleted) doc —
-    * (occ, df) per window, the exact integer partials summed on the
-    * driver (docId ranges are disjoint). Bit-count-identical to the
-    * DataFrame windowRaw aggregation (same positions, same matcher).
-    * (reference: src/ContextCountAccumulator.cpp gathered in one
-    * server round, src/QueryEnvironment.cpp:957-966)
+  /** The stats round of a query batch: ONE job over the resident block
+    * maps for every term and every window of the batch (the reference
+    * gathers every ContextCount request in one server round,
+    * src/QueryEnvironment.cpp:957-966). No job runs when there is
+    * neither.
+    *  - Term stats: each partition's build-time [[TermSlice.partial]],
+    *    summed on the driver — exactly the dictionary's (ctf, df,
+    *    minDocLen), since both come from the same postings, and blind to
+    *    deletes like the dictionary; no block is decoded, and a term no
+    *    block holds is absent (reference:
+    *    src/ContextSimpleCountAccumulator.cpp).
+    *  - Window counts, per distinct window: ONE pass over the member
+    *    terms' blocks per bucket, where the member cursors leapfrog
+    *    their conjunction and [[WindowMatcher]] counts matches per live
+    *    (not deleted) doc — (occ, df), exact integer partials summed on
+    *    the driver (docId ranges are disjoint). Bit-count-identical to
+    *    the DataFrame windowRaw aggregation (same positions, same
+    *    matcher; reference: src/ContextCountAccumulator.cpp).
     */
-  def windowStats(index: InvertedIndex, windows: Array[WindowSpec],
-                  deleted: Set[Long] = Set.empty): Array[(Double, Long)] = {
-    if (windows.isEmpty) return Array.empty
-    val partials = onBuckets(index, windows.flatMap(_.terms).toSeq, windows, deleted) { (ws, byTerm, _, del) =>
-      ws.map { w =>
+  def stats(index: InvertedIndex, terms: Seq[String], windows: Seq[WindowSpec],
+            deleted: Set[Long]): (Map[String, TermStats], Map[WindowSpec, (Double, Long)]) = {
+    val ts = terms.distinct.toArray
+    val ws = windows.distinct.toArray
+    if (ts.isEmpty && ws.isEmpty) return (Map.empty, Map.empty)
+    val partials = onBuckets(index, ts ++ ws.flatMap(_.terms)) { (byTerm, _) =>
+      (ts.flatMap(t => byTerm.get(t).map(t -> _.partial)), ws.map { w =>
         val cur = leafCursor(LeafPlan("", w, null, 0.0, 0.0), byTerm, lm = false)
         var occ = 0L; var df = 0L
         while (!cur.exhausted) {
-          if (!del.contains(cur.doc)) {
+          if (!deleted.contains(cur.doc)) {
             val c = cur.tf
             if (c > 0) { occ += c; df += 1 }
           }
           cur.next()
         }
         (occ, df)
-      }
+      })
     }
-    windows.indices.map { wi =>
-      (partials.map(_(wi)._1).sum.toDouble, partials.map(_(wi)._2).sum)
-    }.toArray
+    val termStats = partials.toSeq.flatMap(_._1).groupMapReduce(_._1)(_._2) { (a, b) =>
+      TermStats(a.ctf + b.ctf, a.df + b.df, math.min(a.minDl, b.minDl))
+    }
+    val counts = ws.indices.map { wi =>
+      ws(wi) -> (partials.map(_._2(wi)._1).sum.toDouble, partials.map(_._2(wi)._2).sum)
+    }.toMap
+    (termStats, counts)
   }
 
   /** The one kernel scaffold: a single job over the resident block maps
     * ([[InvertedIndex.blockMaps]]), one task per partition — whole
     * buckets b ≡ p (mod P), P = min(numBuckets, defaultParallelism), so
     * no task is empty and each carries an equal docId span. Each task
-    * wraps the blocks of `terms` only in fresh [[TermBlocks]], so decode
+    * wraps the slices of `terms` only in fresh [[TermBlocks]], so decode
     * caches live for one query in one task, and returns `task`'s result
-    * for its buckets. The plan and the delete set are broadcast. With a
+    * for its buckets. What `task` reads of the plan and the delete set
+    * rides in its closure, which Spark ships once per job as the task
+    * binary: a broadcast of each per job cost `serve` ~4 ms of p50 under
+    * concurrent clients (bench/r14_one_stats_job.txt). With a
     * `field`, the job zips the block maps with the co-partitioned
     * resident extents ([[InvertedIndex.extentMaps]]) and hands each task
     * its buckets' extents of that field; without one it reads the block
     * maps alone and the task gets null.
     */
-  private def onBuckets[P: ClassTag, T: ClassTag](index: InvertedIndex, terms: Seq[String],
-                                                  plan: P, deleted: Set[Long],
-                                                  field: String = null)(
-      task: (P, Map[String, TermBlocks], Extents, Set[Long]) => T): Array[T] = {
+  private def onBuckets[T: ClassTag](index: InvertedIndex, terms: Seq[String],
+                                     field: String = null)(
+      task: (Map[String, TermBlocks], Extents) => T): Array[T] = {
     val sc = index.segments.sparkSession.sparkContext
-    val bcPlan = sc.broadcast(plan)
-    val bcDeleted = sc.broadcast(deleted)
     val wanted = terms.distinct.toArray
-    def run(maps: Iterator[Map[String, Array[Block]]], extents: Extents): T = {
-      val resident = if (maps.hasNext) maps.next() else Map.empty[String, Array[Block]]
+    def run(maps: Iterator[Map[String, TermSlice]], extents: Extents): T = {
+      val resident = if (maps.hasNext) maps.next() else Map.empty[String, TermSlice]
       val byTerm = wanted.iterator.flatMap(t => resident.get(t).map(t -> new TermBlocks(_))).toMap
-      task(bcPlan.value, byTerm, extents, bcDeleted.value)
+      task(byTerm, extents)
     }
     if (field == null)
-      sc.runJob(index.blockMaps, (maps: Iterator[Map[String, Array[Block]]]) => run(maps, null))
+      sc.runJob(index.blockMaps, (maps: Iterator[Map[String, TermSlice]]) => run(maps, null))
     else
       sc.runJob(index.blockMaps.zipPartitions(index.extentMaps) { (maps, fields) =>
         val byField = if (fields.hasNext) fields.next() else Map.empty[String, Extents]
@@ -304,9 +320,10 @@ object Daat {
     * segment scan packed or split the files (a bucketed table's scan,
     * size-packed or row-group-split files, an in-memory index). Behind
     * the exchange, a kernel job's task binary does not carry the segment
-    * scan's lineage.
+    * scan's lineage. The grouping also computes each term's stats
+    * partial ([[TermSlice.of]]), once per index.
     */
-  private[graft] def residentBlocks(index: InvertedIndex): RDD[Map[String, Array[Block]]] = {
+  private[graft] def residentBlocks(index: InvertedIndex): RDD[Map[String, TermSlice]] = {
     val cores = index.segments.sparkSession.sparkContext.defaultParallelism
     val parts = if (index.numBuckets > 0) math.min(index.numBuckets, cores) else cores
     index.segments.select(blockCols.map(col): _*).rdd
@@ -321,7 +338,7 @@ object Daat {
         rows.foreach { case (_, (t, b)) =>
           buf.getOrElseUpdate(t, mutable.ArrayBuffer.empty[Block]) += b
         }
-        Iterator(buf.iterator.map { case (t, bs) => t -> bs.sortBy(_.firstDoc).toArray }.toMap)
+        Iterator(buf.iterator.map { case (t, bs) => t -> TermSlice.of(bs.toArray) }.toMap)
       }.setName("resident block maps")
       .persist(StorageLevel.MEMORY_ONLY)
   }
@@ -357,7 +374,7 @@ object Daat {
         case (acc, r) => r :: acc
       }.reverse
     val runs = merge(maps.mapPartitionsWithIndex { (p, it) =>
-      merge(it.flatMap(_.valuesIterator.flatten).map(b => (b.firstDoc, b.lastDoc, p)).toSeq,
+      merge(it.flatMap(_.valuesIterator.flatMap(_.blocks)).map(b => (b.firstDoc, b.lastDoc, p)).toSeq,
         acrossGaps = false).iterator
     }.collect().toSeq, acrossGaps = true).toArray
     val bcRuns = maps.sparkContext.broadcast((runs.map(_._1), runs))
@@ -445,8 +462,8 @@ object Daat {
     val terms = p.childTerm.filter(_ != null).distinct.toSeq
     val locals =
       if (terms.isEmpty || k <= 0) Array.empty[Seq[(Long, Int, Int, Double)]]
-      else onBuckets(index, terms, p, deleted, field) { (plan, byTerm, extents, del) =>
-        extentLocal(plan, byTerm, extents, passage, k, del)
+      else onBuckets(index, terms, field) { (byTerm, extents) =>
+        extentLocal(p, byTerm, extents, passage, k, deleted)
       }
     extentsResult(index.segments.sparkSession, mergeTopK(locals, k).toSeq)
   }
@@ -598,11 +615,32 @@ object Daat {
                          docsDelta: Array[Byte], tfs: Array[Byte], dls: Array[Byte],
                          pos: Array[Byte] = Array.emptyByteArray)
 
-  /** A term's blocks in one bucket plus a shared memoized decode cache:
-    * several cursors over the same term (unigram leaf + window members)
-    * decode each block's payload once per partition.
+  /** One term's part of a block-map partition: its blocks sorted by
+    * firstDoc, and their stats partial — ctf = Σ decoded tfs, df = Σ
+    * numDocs, minDl = min block minDl. The partials of all partitions
+    * sum to the dictionary's (ctf, df, minDocLen) ([[stats]]).
     */
-  final class TermBlocks(val blocks: Array[Block]) {
+  final case class TermSlice(blocks: Array[Block], partial: TermStats)
+  object TermSlice {
+    /** the slice of `blocks`, its partial computed here, once per
+      * resident build, so no query decodes a block for its stats
+      */
+    def of(blocks: Array[Block]): TermSlice = {
+      val sorted = blocks.sortBy(_.firstDoc)
+      TermSlice(sorted, TermStats(
+        ctf = sorted.iterator.map(b => BlockCodec.decodePlain(b.tfs, b.numDocs).sum).sum,
+        df = sorted.iterator.map(_.numDocs.toLong).sum,
+        minDl = sorted.iterator.map(_.minDl).foldLeft(Int.MaxValue)(math.min)))
+    }
+  }
+
+  /** A term's slice in one partition plus a shared memoized decode
+    * cache: several cursors over the same term (unigram leaf + window
+    * members) decode each block's payload once per partition.
+    */
+  final class TermBlocks(slice: TermSlice) {
+    val blocks: Array[Block] = slice.blocks
+    def partial: TermStats = slice.partial
     private val docsC = new Array[Array[Long]](blocks.length)
     private val tfsC = new Array[Array[Int]](blocks.length)
     private val dlsC = new Array[Array[Int]](blocks.length)
@@ -629,7 +667,7 @@ object Daat {
     }
   }
   object TermBlocks {
-    val empty = new TermBlocks(Array.empty[Block])
+    val empty = new TermBlocks(TermSlice.of(Array.empty[Block]))
   }
 
   /** Common cursor surface the WAND loop drives — implemented by the
@@ -667,7 +705,7 @@ object Daat {
     */
   final class Cursor(tb: TermBlocks, val leaf: LeafPlan, val lm: Boolean) extends DaatCursor {
     def this(blocks: Array[Block], leaf: LeafPlan, lm: Boolean) =
-      this(new TermBlocks(blocks), leaf, lm)
+      this(new TermBlocks(TermSlice.of(blocks)), leaf, lm)
     private def blocks: Array[Block] = tb.blocks
     private var bi = 0
     private var pos = 0

@@ -464,22 +464,14 @@ final class Engine(
 
   /** Gather per-term global stats for the query's term leaves — the
     * ContextSimpleCountAccumulator path (reference:
-    * src/ContextSimpleCountAccumulator.cpp — answered from the lexicon,
-    * no posting scan). One job over the resident lexicon
-    * ([[InvertedIndex.lexicon]]) that runs only the term-hash partitions
-    * holding the terms; terms the dictionary lacks are absent from the
-    * result.
+    * src/ContextSimpleCountAccumulator.cpp, no posting scan): the
+    * [[Daat.stats]] job with no window, which sums the resident block
+    * maps' build-time partials into the dictionary's (ctf, df,
+    * minDocLen). Terms the index lacks are absent from the result; no
+    * term runs no job.
     */
-  def termStatsFor(terms: Seq[String]): Map[String, TermStats] = {
-    if (terms.isEmpty) return Map.empty
-    val lexicon = index.lexicon
-    val byPart = terms.distinct.groupBy(lexicon.partitioner.get.getPartition)
-    spark.sparkContext.runJob(lexicon,
-      (ctx: org.apache.spark.TaskContext, maps: Iterator[Map[String, TermStats]]) => {
-        val m = if (maps.hasNext) maps.next() else Map.empty[String, TermStats]
-        byPart(ctx.partitionId()).flatMap(t => m.get(t).map(t -> _))
-      }, byPart.keys.toSeq.sorted).iterator.flatten.toMap
-  }
+  def termStatsFor(terms: Seq[String]): Map[String, TermStats] =
+    Daat.stats(index, terms, Nil, Set.empty)._1
 
   // ------------------------------------------------------------------
   // raw (extent) evaluation
@@ -800,35 +792,26 @@ final class Engine(
   // belief evaluation
   // ------------------------------------------------------------------
 
-  /** score function for a raw expression from globally-gathered stats;
-    * `ctxField` is the scorer's context field for per-field rule lists
+  /** score function for a raw expression from globally-gathered stats,
+    * under the unfielded ("?") context's rule
     */
-  private def scoreFnFor(node: QueryNode, raw: RawResult,
+  private def scoreFnFor(node: QueryNode,
                          termStats: Map[String, TermStats],
                          qtf: Int, qtw: Option[Double],
-                         cstats: Map[QueryNode, (Double, Long)] = Map.empty,
-                         ctxField: String = "?"): TermScoreFunction = node match {
+                         cstats: Map[QueryNode, (Double, Long)]): TermScoreFunction = node match {
     case TermNode(t) =>
       val pt = analyzer.processTerm(t)
       val ts = if (pt == null) TermStats(0, 0) else termStats.getOrElse(pt, TermStats(0, 0))
-      Scorers.forTerm(ruleFor(ctxField, "term"), ts.ctf.toDouble,
+      Scorers.forTerm(ruleFor("?", "term"), ts.ctf.toDouble,
         stats.totalTerms.toDouble, ts.df.toDouble,
         stats.totalDocs, qtf, qtw)
     case _ =>
-      // complex expression: gather occurrences/df by evaluating the match
-      // list (ContextCountAccumulator analogue,
-      // reference: src/ContextCountAccumulator.cpp). Normally answered
-      // from the batched one-job stats round (complexStatsFor); the
-      // per-leaf agg remains as a fallback for direct callers.
-      val (occ, df) = cstats.getOrElse(node, {
-        val cnt = udf { (bs: Seq[Int], es: Seq[Int]) =>
-          WindowMatcher.dedupCount(bs, es).toLong }
-        val r = raw.df.agg(
-          coalesce(sum(cnt(col("begins"), col("ends"))), lit(0L)),
-          count(lit(1))).head()
-        (r.getLong(0).toDouble, r.getLong(1))
-      })
-      Scorers.forTerm(ruleFor(ctxField, opClassOf(node)), occ,
+      // complex expression: occurrences/df from the batched one-job
+      // stats round over the query's complexRawLeaves
+      // (ContextCountAccumulator analogue,
+      // reference: src/ContextCountAccumulator.cpp)
+      val (occ, df) = cstats(node)
+      Scorers.forTerm(ruleFor("?", opClassOf(node)), occ,
         stats.totalTerms.toDouble,
         df.toDouble, stats.totalDocs, qtf, qtw)
   }
@@ -1032,26 +1015,14 @@ final class Engine(
           Scorers.forTerm(ctxRule, ts.ctf.toDouble, stats.totalTerms.toDouble,
             ts.df.toDouble, stats.totalDocs, qtf, qtw)
         case c =>
-          val (occ, df) = cstats.getOrElse(c, {
-            val cnt = udf { (bs: Seq[Int], es: Seq[Int]) =>
-              WindowMatcher.dedupCount(bs, es).toLong }
-            val r = evaluateRaw(c).df.agg(
-              coalesce(sum(cnt(col("begins"), col("ends"))), lit(0L)),
-              count(lit(1))).head()
-            (r.getLong(0).toDouble, r.getLong(1))
-          })
+          val (occ, df) = cstats(c)
           Scorers.forTerm(ctxRule, occ, stats.totalTerms.toDouble,
             df.toDouble, stats.totalDocs, qtf, qtw)
       }
     } else {
-      // (occurrences, contextSize) — from the batched stats round when
-      // available (the df slot carries contextSize for context leaves)
-      val (occTotal, ctxTotal) = cstats.getOrElse(node, {
-        val r = frame.agg(
-          coalesce(sum(col("occ").cast(LongType)), lit(0L)).cast(DoubleType),
-          coalesce(sum(col("ctxLen").cast(LongType)), lit(0L))).head()
-        (r.getDouble(0), r.getLong(1))
-      })
+      // (occurrences, contextSize) from the batched stats round (the df
+      // slot carries contextSize for context leaves)
+      val (occTotal, ctxTotal) = cstats(node)
       Scorers.forTerm(ctxRule, occTotal, ctxTotal.toDouble, 1.0,
         stats.totalDocs, qtf, qtw)
     }
@@ -1070,19 +1041,16 @@ final class Engine(
     */
   private def scoreRaw(node: QueryNode, termStats: Map[String, TermStats],
                        qtf: Int = 1, qtw: Option[Double] = None,
-                       cstats: Map[QueryNode, (Double, Long)] = Map.empty): Belief = node match {
+                       cstats: Map[QueryNode, (Double, Long)]): Belief = node match {
     case WsynNode(children) =>
       // WeightedExtentOr: each child's extents carry its weight; the
       // belief occurrence count is the weighted sum of extent counts
       // (reference: src/WeightedExtentOrNode.cpp — extents carry weights,
       // consumed by ListBeliefNode occurrence accumulation)
       val occ = wsynOcc(children)
-      // stats round (ContextCount analogue) over the weighted occurrences
-      // — answered from the batched round when available
-      val (wo, dfc) = cstats.getOrElse(node, {
-        val r = occ.agg(coalesce(sum(col("wocc")), lit(0.0)), count(lit(1))).head()
-        (r.getDouble(0), r.getLong(1))
-      })
+      // stats (ContextCount analogue) over the weighted occurrences,
+      // from the batched round
+      val (wo, dfc) = cstats(node)
       val sf = Scorers.forTerm(ruleFor("?", "term"), wo, stats.totalTerms.toDouble,
         dfc.toDouble, stats.totalDocs, qtf, qtw)
       // ListBeliefNode path → the 4-arg score form (documentOccurrences
@@ -1106,7 +1074,7 @@ final class Engine(
       // scorers with TermFrequencyBeliefNode, which never passes
       // document stats — src/TermFrequencyBeliefNode.cpp:60-103)
       val raw = evaluateRaw(t)
-      val sf = scoreFnFor(t, raw, termStats, qtf, qtw, cstats)
+      val sf = scoreFnFor(t, termStats, qtf, qtw, cstats)
       val scoreUdf = udf { (tf: Int, dl: Int) => sf.scoreOccurrence(tf.toDouble, dl) }
       Belief(
         raw.df.select(col("docId"),
@@ -1122,7 +1090,7 @@ final class Engine(
       // count applies the greedy non-overlap scan
       // (WindowMatcher.dedupCount)
       val raw = evaluateRaw(node)
-      val sf = scoreFnFor(node, raw, termStats, qtf, qtw, cstats)
+      val sf = scoreFnFor(node, termStats, qtf, qtw, cstats)
       val scoreUdf = udf { (bs: Seq[Int], es: Seq[Int], dl: Int) =>
         val tf = WindowMatcher.dedupCount(bs, es).toDouble
         sf.scoreOccurrence(tf, dl, tf, dl)
@@ -1321,10 +1289,9 @@ final class Engine(
     * segments (the max-score physical path); everything else evaluates
     * on the DataFrame inference-network path. Both produce bit-identical
     * scores (WandPropertySpec). A kernel result is computed at call time
-    * (a lexicon job, a window-count job when the query has a window, and
-    * a kernel job over the index's resident structures) and returned as
-    * a local DataFrame; a belief-path result is a lazy plan that runs
-    * when collected.
+    * — two jobs over the index's resident block maps, the stats job and
+    * the kernel job — and returned as a local DataFrame; a belief-path
+    * result is a lazy plan that runs when collected.
     */
   def runQuery(query: String, k: Int, useDaat: Boolean = true): DataFrame =
     runParsed(QueryParser.parse(query), k, useDaat)
@@ -1360,21 +1327,23 @@ final class Engine(
     * QueryEnvironment, runquery/IndriRunQuery.cpp:710-726). On Spark the
     * driver-blocking stats rounds are the per-query latency floor, so a
     * B-query batch pays each round once instead of B times. Kernel
-    * queries run here, at call time, one kernel job each, and come back
-    * as local DataFrames; belief-path queries come back as lazy plans.
+    * queries run here, at call time, one kernel job each after the
+    * batch's one stats job, and come back as local DataFrames;
+    * belief-path queries come back as lazy plans.
     */
   def runQueries(queries: Seq[String], k: Int, useDaat: Boolean = true): Seq[(String, DataFrame)] =
     queries.zip(runBatch(queries.map(QueryParser.parse), k, useDaat))
 
   /** The one query body of runQuery, runParsed, runQueries and
     * runStructured. A batch runs
-    *  - one lexicon probe for every term leaf of every query;
+    *  - one [[Daat.stats]] job over the resident block maps for the term
+    *    stats of every term leaf of every query and the delete-aware
+    *    counts of the distinct windows of every kernel plan (the
+    *    reference gathers every ContextCount request in one round,
+    *    src/QueryEnvironment.cpp:957-966), or no job when the batch has
+    *    neither;
     *  - one SQL stats round over the belief-path queries' complex leaves,
     *    when there are any;
-    *  - one delete-aware [[Daat.windowStats]] job over the distinct
-    *    windows of every kernel plan, when there are any (the reference
-    *    gathers every ContextCount request in one round,
-    *    src/QueryEnvironment.cpp:957-966);
     *  - then, per kernel query, its topdocs seed probe when the index has
     *    topdocs and one [[Daat.topK]] job; per belief-path query, its
     *    lazy plan.
@@ -1382,14 +1351,14 @@ final class Engine(
   private def runBatch(asts: Seq[QueryNode], k: Int, useDaat: Boolean,
                        exhaustive: Boolean = false): Seq[DataFrame] = {
     val kernel = asts.map(a => if (useDaat && structuredServes(a)) Some(kernelLeaves(a)) else None)
-    val tstats = termStatsFor(asts.flatMap(QueryParser.termLeaves)
-      .flatMap(t => Option(analyzer.processTerm(t))).distinct)
+    val windows = kernel.flatten.flatMap(_.metas.collect { case WinLeafM(s) => s })
+    // a window is only ever a kernel leaf, and the kernel runs only with
+    // a delete set
+    val (tstats, wstats) = Daat.stats(index,
+      asts.flatMap(QueryParser.termLeaves).flatMap(t => Option(analyzer.processTerm(t))),
+      windows, if (windows.isEmpty) Set.empty else daatDeletedSet.get)
     val cstats = complexStatsBatch(
       asts.zip(kernel).collect { case (a, None) => complexRawLeaves(a) }.flatten)
-    val windows = kernel.flatten.flatMap(_.metas.collect { case WinLeafM(s) => s }).distinct.toArray
-    val wstats: Map[Daat.WindowSpec, (Double, Long)] =
-      if (windows.isEmpty) Map.empty
-      else windows.zip(Daat.windowStats(index, windows, daatDeletedSet.get)).toMap
     asts.zip(kernel).map {
       case (_, Some(kl)) => runKernel(kl, tstats, wstats, k, exhaustive)
       case (a, None) => scoredTail(evaluateWith(a, tstats, cstats, root = true), k)
@@ -1658,11 +1627,11 @@ final class Engine(
       val prep = prepLeaves(childGroups.flatten.map(NexiParser.PlainTerm), ctxF)
       val nChildren = prep.fns.length
       val childTerm = new Array[String](nChildren)
-      // a child the lexicon lacks never matches: it stays null (its
+      // a child the index lacks never matches: it stays null (its
       // scorer is the background fill-in), and with no child left the
       // kernel runs no job
       prep.keyIdx.foreach { case (t, cis) =>
-        if (prep.inLexicon(t)) cis.foreach(ci => childTerm(ci) = t) }
+        if (prep.indexed(t)) cis.foreach(ci => childTerm(ci) = t) }
       val wChild: Array[Double] = weights match {
         case Some(ws) => ws.toArray
         case None => childGroups.flatMap(g => g.map(_ => 1.0 / g.length)).toArray
@@ -1712,11 +1681,11 @@ final class Engine(
     */
   private final class LeafPrep(
       val fns: Array[TermScoreFunction], val keyIdx: Map[String, Seq[Int]],
-      val lens: Array[Int], val negs: Array[Boolean], val inLexicon: Set[String],
+      val lens: Array[Int], val negs: Array[Boolean], val indexed: Set[String],
       perDocPlan: => DataFrame) {
     /** the per-doc (term → positions) map, planned on first use: the
       * extent kernel reads only the scorers, the child map and the
-      * lexicon's terms
+      * indexed terms
       */
     lazy val perDoc: DataFrame = perDocPlan
   }
@@ -2640,21 +2609,15 @@ final class Engine(
   def termCountUnique(): Long = stats.uniqueTerms
   def documentCount(): Long = stats.totalDocs
 
-  /** ctf of one term (stemmed through the chain) */
-  def termCount(term: String): Long = {
-    val pt = analyzer.processTerm(term)
-    if (pt == null) 0L
-    else index.dictionary.where(col("term") === pt)
-      .select("ctf").as[Long].collect().headOption.getOrElse(0L)
-  }
+  /** ctf of one term (stemmed through the chain), from [[termStatsFor]] */
+  def termCount(term: String): Long = statsOf(term).ctf
 
-  /** df of one term */
-  def documentCount(term: String): Long = {
-    val pt = analyzer.processTerm(term)
-    if (pt == null) 0L
-    else index.dictionary.where(col("term") === pt)
-      .select("df").as[Long].collect().headOption.getOrElse(0L)
-  }
+  /** df of one term, from [[termStatsFor]] */
+  def documentCount(term: String): Long = statsOf(term).df
+
+  private def statsOf(term: String): TermStats =
+    Option(analyzer.processTerm(term)).flatMap(pt => termStatsFor(Seq(pt)).get(pt))
+      .getOrElse(TermStats(0, 0))
 
   /** total occurrences of an arbitrary match expression (dumpindex
     * `xcount` analogue, reference: dumpindex/dumpindex.cpp:25-53)

@@ -80,13 +80,10 @@ object WebTrackRerank {
     }.toMap
     val allTerms = qTokens.values.flatten.toSeq.distinct
     val collSize = eng.index.stats.totalTerms.toDouble
-    val ctfMap: Map[String, Long] = eng.index.dictionary
-      .where(col("term").isin(allTerms: _*))
-      .select("term", "ctf").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val ctfMap: Map[String, Long] = eng.termStatsFor(allTerms).map { case (t, s) => t -> s.ctf }
 
-    // ONE batched retrieval round for the whole query set (shared
-    // dictionary probe + shared stats — per-query results pinned
+    // ONE batched retrieval round for the whole query set (one shared
+    // stats job — per-query results pinned
     // identical to runQuery by RunQueriesSpec), and ONE tokenize pass
     // over the UNION of candidate sets: overlapping candidate sets no
     // longer re-join + re-tokenize the same documents per query
@@ -139,10 +136,7 @@ object WebTrackRerank {
     }.toMap
     val allTerms = qTokens.values.flatten.toSeq.distinct
     val collSize = eng.index.stats.totalTerms.toDouble
-    val ctfMap: Map[String, Long] = eng.index.dictionary
-      .where(col("term").isin(allTerms: _*))
-      .select("term", "ctf").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val ctfMap: Map[String, Long] = eng.termStatsFor(allTerms).map { case (t, s) => t -> s.ctf }
 
     // ONE batched retrieval + ONE document-vector pass over the UNION
     // of candidate sets (the per-query loop paid the positions

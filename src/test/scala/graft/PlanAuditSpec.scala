@@ -55,19 +55,19 @@ class PlanAuditSpec extends AnyFunSuite {
     val parts = math.min(stored.numBuckets, spark.sparkContext.defaultParallelism)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // a warm kernel query is a lexicon job plus kernel jobs over the
-    // resident structures: one stage each, one task per block-map
-    // partition, nothing shuffled, no SQL plan executed, and the result
-    // is a local relation computed by the time runQuery returns
-    def audit(method: String, q: String, kernelJobs: Int): Unit = {
+    // a warm kernel query is 2 jobs over the resident block maps, the
+    // stats job and the kernel job: one stage each, one task per
+    // block-map partition, nothing shuffled, no SQL plan executed, and
+    // the result is a local relation computed by the time runQuery
+    // returns
+    def audit(method: String, q: String): Unit = {
       val eng = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = method))
       val engMem = new Engine(spark, idx, cfg.analyzer, ScoringRule(method = method))
       eng.runQuery(q, 10) // builds the resident structures
       val (df, t) = JobTally.of(spark)(eng.runQuery(q, 10))
       val what = s"$method '$q': $t"
-      assert(t.jobs.size == 1 + kernelJobs, what)
-      assert(t.jobsOn("resident lexicon").size == 1, what)
-      assert(t.jobsOn("resident block maps").size == kernelJobs, what)
+      assert(t.jobs.size == 2, what)
+      assert(t.jobsOn("resident block maps").size == 2, what)
       assert(t.jobsOn("resident block maps").forall(_.tasks == parts), what)
       assert(t.jobs.forall(_.stagesRun == 1), what)
       assert(t.jobs.forall(j => j.shuffleReadBytes == 0 && j.shuffleWriteBytes == 0), what)
@@ -78,17 +78,17 @@ class PlanAuditSpec extends AnyFunSuite {
       // bit-identical to the in-memory index's kernel result
       assert(got.nonEmpty && got == rows(engMem.runQuery(q, 10)), what)
     }
-    audit("okapi", "#combine(return license)", kernelJobs = 1)
+    audit("okapi", "#combine(return license)")
     // LM rules run the same kernel with the same properties
-    audit("dirichlet", "#combine(return license)", kernelJobs = 1)
-    // a lone window query also counts its window in the kernel first
-    audit("okapi", "#od1(return license)", kernelJobs = 2)
+    audit("dirichlet", "#combine(return license)")
+    // a lone window query counts its window in the stats job
+    audit("okapi", "#od1(return license)")
 
     // bucket b sits in block-map partition b mod P, and no partition is empty
     val bucketOf = stored.segments.select("term", "firstDoc", "bucket").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
     val placed = qIdx.blockMaps.mapPartitionsWithIndex { (p, maps) =>
-      Iterator(p -> maps.flatMap(_.iterator.flatMap { case (t, bs) => bs.map(b => (t, b.firstDoc)) }).toSeq)
+      Iterator(p -> maps.flatMap(_.iterator.flatMap { case (t, s) => s.blocks.map(b => (t, b.firstDoc)) }).toSeq)
     }.collect()
     assert(placed.length == parts)
     assert(placed.map(_._2.size).sum == bucketOf.size, "blocks lost or duplicated")
@@ -98,7 +98,7 @@ class PlanAuditSpec extends AnyFunSuite {
         s"partition $p holds buckets ${blocks.map(bucketOf).distinct.sorted}")
     }
 
-    // an empty kernel query runs the lexicon job alone, and its result is
+    // an empty kernel query runs the stats job alone, and its result is
     // a local relation of the kernel schema: collecting it runs no job
     // (Dataset.collect opens a SQL execution, a local scan, for every
     // result alike)
@@ -107,7 +107,7 @@ class PlanAuditSpec extends AnyFunSuite {
       eng.runQuery(q, 10)
       val (df, t) = JobTally.of(spark)(eng.runQuery(q, 10))
       val what = s"'$q': $t"
-      assert(t.jobs.size == 1 && t.jobsOn("resident lexicon").size == 1, what)
+      assert(t.jobs.size == 1 && t.jobsOn("resident block maps").size == 1, what)
       assert(t.sqlExecutions == 0, what)
       val (got, tc) = JobTally.of(spark)(rows(df))
       assert(got.isEmpty, what)
@@ -131,16 +131,15 @@ class PlanAuditSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSeq
     val parts = math.min(stored.numBuckets, spark.sparkContext.defaultParallelism)
-    // the field query zips the block maps with the resident extents; a
-    // passage query reads the block maps alone
+    // the stats job reads the block maps; then the field query zips them
+    // with the resident extents, and a passage query reads them alone
     for ((q, extentJobs) <- Seq("#weight[head](0.7 return 0.3 license)" -> 1,
                                 "#combine[passage8:4](return license)" -> 0)) {
       eng.runExtentQuery(q, 10) // builds the resident structures
       val (df, t) = JobTally.of(spark)(eng.runExtentQuery(q, 10))
       val what = s"'$q': $t"
       assert(t.jobs.size == 2, what)
-      assert(t.jobsOn("resident lexicon").size == 1, what)
-      assert(t.jobsOn("resident block maps").size == 1, what)
+      assert(t.jobsOn("resident block maps").size == 2, what)
       assert(t.jobsOn("resident field extents").size == extentJobs, what)
       assert(t.jobs.forall(_.stagesRun == 1), what)
       assert(t.jobs.forall(j => j.shuffleReadBytes == 0 && j.shuffleWriteBytes == 0), what)
@@ -151,13 +150,13 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(tc.jobs.isEmpty, s"collecting a kernel result ran jobs: $tc")
       assert(got.nonEmpty && got == rows(engMem.runExtentQuery(q, 10)), what)
     }
-    // an extent query whose terms the lexicon all lacks runs the lexicon
-    // job alone; its empty result has the same schema and collects with
-    // no job
+    // an extent query whose terms the index all lacks runs the stats job
+    // alone; its empty result has the same schema and collects with no
+    // job
     val (empty, te) = JobTally.of(spark)(
       eng.runExtentQuery("#combine[head](zzznotaword qqqalsonotaword)", 10))
-    assert(te.jobs.size == 1 && te.jobsOn("resident lexicon").size == 1, s"OOV extent query: $te")
-    assert(te.jobsOn("resident block maps").isEmpty, s"OOV extent query: $te")
+    assert(te.jobs.size == 1 && te.jobsOn("resident block maps").size == 1, s"OOV extent query: $te")
+    assert(te.jobsOn("resident field extents").isEmpty, s"OOV extent query: $te")
     assert(empty.schema == extentsSchema)
     val (got, tc) = JobTally.of(spark)(rows(empty))
     assert(got.isEmpty && tc.jobs.isEmpty, s"collecting an empty extent result ran jobs: $tc")

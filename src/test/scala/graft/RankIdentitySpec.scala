@@ -109,6 +109,12 @@ class RankIdentitySpec extends AnyFunSuite {
     val oracle = new ScalarOracle(docsLocal, Analyzer(), ScoringRule(method = "okapi"))
     assert(engine.termCount("return") == oracle.ctf("return"))
     assert(engine.documentCount("return") == oracle.df("return"))
+    // a warm term count is the stats job over the resident block maps:
+    // one job and no SQL execution
+    val (ctf, t) = JobTally.of(spark)(engine.termCount("return"))
+    assert(ctf == oracle.ctf("return"))
+    assert(t.jobs.size == 1 && t.jobsOn("resident block maps").size == 1 && t.sqlExecutions == 0,
+      s"termCount: $t")
     assert(engine.termCount() == oracle.totalTerms)
     assert(engine.documentCount() == oracle.totalDocs)
     assert(engine.expressionCount("#od1(return license)") ==

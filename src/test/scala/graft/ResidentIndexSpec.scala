@@ -10,11 +10,12 @@ import graft.corpus.CorpusSynthesizer
 import graft.index.{FieldAnnotators, IndexBuilder, IndexConfig, InvertedIndex, SegmentStore}
 import graft.search.{Daat, Engine, ScoringRule}
 
-/** The resident query index: the kernel's bucket-keyed block maps, the
-  * field extents beside them and the lexicon are built lazily, once per
-  * index, under concurrent queries, whatever way the segment scan split
-  * the stored files, and the driver merge of partition-local top-k lists
-  * orders exactly like the Spark sort it replaces.
+/** The resident query index: the kernel's bucket-keyed block maps, with
+  * their term stats partials, and the field extents beside them are built
+  * lazily, once per index, under concurrent queries, whatever way the
+  * segment scan split the stored files, and the driver merge of
+  * partition-local top-k lists orders exactly like the Spark sort it
+  * replaces.
   */
 class ResidentIndexSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark

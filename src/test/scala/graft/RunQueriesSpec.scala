@@ -5,8 +5,9 @@ import graft.index.{IndexBuilder, IndexConfig}
 import graft.search.{Engine, QueryParser, ScoringRule}
 
 /** Batch retrieval (runQueries): per-query results identical to
-  * runQuery, and the whole batch pays ONE term-stats probe, ONE
-  * complex-leaf stats job and ONE kernel window-count job (reference:
+  * runQuery, and the whole batch pays ONE stats job over the resident
+  * block maps (term stats and kernel window counts) and ONE complex-leaf
+  * SQL stats round (reference:
   * IndriRunQuery batches queries against a shared QueryEnvironment,
   * runquery/IndriRunQuery.cpp:710-726).
   */
@@ -56,12 +57,11 @@ class RunQueriesSpec extends AnyFunSuite {
   private def kernelCount(eng: Engine, batch: Seq[String]): Int =
     batch.count(q => eng.runStructured(QueryParser.parse(q), 10).isDefined)
 
-  test("a mixed batch pays one lexicon job, one SQL execution and one window-count job") {
-    // the stats rounds are the term probe (one job over the resident
-    // lexicon), the belief leaves' SQL execution and the kernel windows'
-    // count (one job over the resident block maps); a batch pays each
-    // once whatever its size. Kernel queries also run one kernel job
-    // each at construction.
+  test("a mixed batch pays one stats job and one SQL execution") {
+    // the stats rounds are the term stats and kernel window counts (one
+    // job over the resident block maps) and the belief leaves' SQL
+    // execution; a batch pays each once whatever its size. Kernel
+    // queries also run one kernel job each at construction.
     val eng = new Engine(spark, index, cfg.analyzer, ScoringRule(method = "dirichlet"))
     val more = Seq(
       "#combine(gamma delta)",
@@ -72,27 +72,26 @@ class RunQueriesSpec extends AnyFunSuite {
     for (batch <- Seq(mixed, mixed ++ more)) {
       val t = JobTally.of(spark)(eng.runQueries(batch, 10))._2
       val what = s"${batch.size}-query batch: $t"
-      assert(t.jobsOn("resident lexicon").size == 1, what)
       assert(t.sqlExecutions == 1, what)
       assert(t.jobsOn("resident block maps").size == kernelCount(eng, batch) + 1, what)
     }
   }
 
-  test("an all-kernel batch runs no SQL, and a window-count job only when it has windows") {
+  test("an all-kernel batch runs no SQL: one stats job, then one kernel job each") {
     val eng = new Engine(spark, index, cfg.analyzer, ScoringRule(method = "okapi"))
     val windows = Seq(
       "#combine(#od1(alpha beta) gamma)",
       "#combine(#uw4(beta delta) alpha)",
       "#od2(delta beta)")
     val bags = Seq("#combine(alpha beta)", "#weight(2 alpha 1 gamma)", "delta")
-    for ((batch, windowJobs) <- Seq((windows ++ bags, 1), (bags, 0))) {
+    for (batch <- Seq(windows ++ bags, bags)) {
       eng.runQueries(batch, 10).foreach(_._2.collect()) // warm
       val t = JobTally.of(spark)(eng.runQueries(batch, 10))._2
       val what = s"${batch.size}-query batch: $t"
       assert(kernelCount(eng, batch) == batch.size, what)
-      assert(t.jobsOn("resident lexicon").size == 1, what)
       assert(t.sqlExecutions == 0, what)
-      assert(t.jobsOn("resident block maps").size == batch.size + windowJobs, what)
+      assert(t.jobs.size == batch.size + 1, what)
+      assert(t.jobsOn("resident block maps").size == batch.size + 1, what)
     }
   }
 
@@ -116,7 +115,6 @@ class RunQueriesSpec extends AnyFunSuite {
       assert(kernelCount(eng, batch) == windows.size)
       val t = JobTally.of(spark)(eng.runQueries(batch, 10))._2
       val what = s"$method batch after deletes: $t"
-      assert(t.jobsOn("resident lexicon").size == 1, what)
       assert(t.sqlExecutions == 1, what)
       assert(t.jobsOn("resident block maps").size == windows.size + 1, what)
     }

@@ -28,12 +28,12 @@ class StatsBatchSpec extends AnyFunSuite {
 
   test("belief construction runs exactly 2 driver actions: term-stats collect + ONE batched complex-leaf stats collect") {
     eng.evaluate(QueryParser.parse(query)).df.collect() // warm index build / caches
-    // the two actions: the term-stats probe, one job over the resident
-    // lexicon, and the leaf-stats round, one SQL execution (AQE fans an
-    // execution into several scheduler jobs, so its job count is not the
-    // metric)
+    // the two actions: the term-stats job, one job over the resident
+    // block maps, and the leaf-stats round, one SQL execution (AQE fans
+    // an execution into several scheduler jobs, so its job count is not
+    // the metric)
     val t = JobTally.of(spark)(eng.evaluate(QueryParser.parse(query)))._2 // construction only
-    assert(t.jobsOn("resident lexicon").size == 1 && t.sqlExecutions == 1,
+    assert(t.jobsOn("resident block maps").size == 1 && t.sqlExecutions == 1,
       s"expected 2 actions for a 3-complex-leaf query (term stats + batched leaf stats), saw $t")
   }
 
