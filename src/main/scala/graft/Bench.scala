@@ -201,13 +201,11 @@ object Bench {
       val stored = SegmentStore.open(spark, outDir)
       // lexicon is tiny — a handful of cache partitions keeps the
       // per-query stats-round job from scheduling one task per shuffle
-      // partition; segments come back as a bucketed table scan (one task
-      // per bucket), so the cached DAAT path runs with NO exchange
+      // partition; the cached segments feed the resident block maps
       val idxQ = graft.index.InvertedIndex(null,
         stored.dictionary.coalesce(4).cache(),
         stored.doclens, stored.stats, stored.segments.cache(),
-        numBuckets = stored.numBuckets,
-        segmentsBucketed = true)
+        numBuckets = stored.numBuckets)
       idxQ.dictionary.count(); idxQ.segments.count() // warm cache
       val eng = new Engine(spark, idxQ, cfg.analyzer, ScoringRule(method = "okapi"))
       // concurrent query streams, like IndriRunQuery's QueryThreads
@@ -611,7 +609,7 @@ object Bench {
           val idxQ = graft.index.InvertedIndex(null,
             stored.dictionary.coalesce(4).cache(),
             stored.doclens, stored.stats, stored.segments.cache(),
-            numBuckets = stored.numBuckets, segmentsBucketed = true)
+            numBuckets = stored.numBuckets)
           idxQ.dictionary.count(); idxQ.segments.count()
           val eng = new Engine(sp, idxQ, cfg.analyzer,
             ScoringRule(method = "dirichlet"))

@@ -392,10 +392,7 @@ object SparkEntry {
         postings = idx.postings.persist(),
         dictionary = idx.dictionary.persist(),
         doclens = idx.doclens.persist(),
-        // persist segments already co-located by bucket: every DAAT query
-        // then scans the cache with NO exchange (one-time shuffle here)
-        segments = idx.segments.repartition(cfg.numBuckets, col("bucket")).persist(),
-        segmentsBucketed = true,
+        segments = idx.segments.persist(),
         // hot-term topdocs lists seed the WAND threshold (df>50 at this
         // corpus scale; the reference default is 1000)
         topdocs = IndexBuilder.buildTopdocs(idx.postings,
@@ -1005,7 +1002,7 @@ object SparkEntry {
     "q_dumpindex" -> ((s, dir) => {
       // dumpindex `tp merge` over the STORED repository: only that
       // term's segment blocks decode (the term filter lands on the
-      // bucketed segments scan before the decode flatMap), the argument
+      // segments scan before the decode flatMap), the argument
       // stems through the repository's recorded chain, and positions
       // round-trip the delta+varint codec
       import graft.apps.DumpIndex

@@ -241,7 +241,7 @@ object DumpIndex {
     val members = inputs.map { in =>
       val st = SegmentStore.open(spark, in)
       InvertedIndex(null, st.dictionary, st.doclens, st.stats, st.segments,
-        st.fieldExtents, numBuckets = st.numBuckets, segmentsBucketed = true)
+        st.fieldExtents, numBuckets = st.numBuckets)
     }
     val merged = Federation.combine(members)
     val outPath = java.nio.file.Paths.get(out)
@@ -305,8 +305,7 @@ object DumpIndex {
       case None => null
     }
     val idx = InvertedIndex(postings, st.dictionary, st.doclens, st.stats,
-      st.segments, st.fieldExtents, numBuckets = st.numBuckets,
-      segmentsBucketed = true)
+      st.segments, st.fieldExtents, numBuckets = st.numBuckets)
     val eng = new Engine(spark, idx, az, ScoringRule.parse("method:dirichlet"))
     BuildIndex.openMetadata(spark, repoPath).foreach(m => eng.setMetadata(m))
     // pending deletes persist under the repo (dumpindex del): the query

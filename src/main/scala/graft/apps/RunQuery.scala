@@ -216,7 +216,7 @@ object RunQuery {
     val members = p.indexPaths.map { dir =>
       val st = SegmentStore.open(spark, dir)
       InvertedIndex(null, st.dictionary, st.doclens, st.stats, st.segments,
-        st.fieldExtents, numBuckets = st.numBuckets, segmentsBucketed = true)
+        st.fieldExtents, numBuckets = st.numBuckets)
     }
     val idx = if (members.size == 1) members.head else Federation.combine(members)
     // repositories record their analysis chain (BuildIndex.writeChain):

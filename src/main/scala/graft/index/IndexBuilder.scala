@@ -112,10 +112,9 @@ final case class InvertedIndex(
     segments: DataFrame,   // SegmentBlock schema
     fieldExtents: DataFrame = null, // (docId, field, begin, end, number) | null when no fields indexed
     numBuckets: Int = 0,   // docId-range buckets in segments (0 = unknown)
-    segmentsBucketed: Boolean = false, // segments come from a bucketed
-    // table or a persisted repartition on `bucket`. Callers still pass it
-    // and read it; the kernel does not: the resident block maps key their
-    // own exchange on `bucket` whatever the segments' layout
+    segmentsBucketed: Boolean = false, // read by no code; kept only
+    // because perfbench/src/graft/perfbench/HostBench.scala passes it by
+    // name, and the next benchmark change (ROADMAP item 4) deletes it
     topdocs: DataFrame = null // optional (term, docId, tf, length) hot-term
     // lists (buildTopdocs) — when present, WAND seeds its threshold from
     // them (reference: src/WeightedAndNode.cpp:119-186 candidate seeding)

@@ -6,18 +6,20 @@ import org.apache.spark.sql.functions._
 
 /** Parquet-backed segment store in an Iceberg-compatible layout:
   * one directory per table, a JSON manifest recording the build
-  * fingerprint and per-partition lineage, and a _GRAFT_SUCCESS marker
+  * fingerprint and per-bucket lineage, and a _GRAFT_SUCCESS marker
   * per table making the on-disk state openable at any time — the
   * analogue of the reference's repository checkpoint
   * (reference: src/Repository.cpp:1198-1215) and crash recovery
   * (reference: buildindex/IndriBuildIndex.cpp:609-656).
   *
+  * Every table, the segments included, is a plain Parquet directory.
+  *
   * Resume contract: `writeAll` skips any table whose success marker and
   * fingerprint match the current config — a rerun after a partial
   * failure only rebuilds the missing tables (per-table lineage; the
-  * per-partition lineage rows inside `manifest` audit the shuffle
-  * output). No Iceberg runtime jar ships in this sandbox; the layout
-  * keeps table IO behind this object so an Iceberg catalog can drop in.
+  * per-bucket lineage rows inside `manifest` audit the segments). No
+  * Iceberg runtime jar ships with the build; the layout keeps table IO
+  * behind this object so an Iceberg catalog can drop in.
   */
 object SegmentStore {
 
@@ -25,42 +27,6 @@ object SegmentStore {
 
   private def marker(dir: String, table: String): Path =
     Paths.get(dir, table, "_GRAFT_SUCCESS")
-
-  /** stable catalog name for the bucketed segments table of a store dir */
-  private def segmentsTableName(dir: String): String = {
-    val h = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    s"graft_segments_$h"
-  }
-
-  /** catalog DDL for the segments table: CLUSTERED BY (bucket) makes the
-    * scan one task per bucket with files never split — every DAAT task
-    * holds complete (term × bucket) posting groups and the per-query
-    * exchange disappears (the Iceberg/warehouse analogue of the
-    * reference's per-server index layout,
-    * src/QueryEnvironment.cpp:242-316).
-    */
-  private def registerSegmentsTable(spark: SparkSession, dir: String,
-                                    numBuckets: Int): String = {
-    val name = segmentsTableName(dir)
-    spark.sql(
-      s"""CREATE TABLE IF NOT EXISTS $name (
-         |  term STRING, bucket INT, firstDoc BIGINT, lastDoc BIGINT,
-         |  numDocs INT, maxTf INT, minDl INT,
-         |  docsDelta BINARY, tfs BINARY, dls BINARY, positionsDelta BINARY
-         |) USING PARQUET
-         |CLUSTERED BY (bucket) SORTED BY (term) INTO $numBuckets BUCKETS
-         |LOCATION '$dir/segments'""".stripMargin)
-    name
-  }
-
-  /** drop the registered segments table + refresh path caches after an
-    * in-place rewrite of `dir` (compaction swaps the files underneath)
-    */
-  def invalidate(spark: SparkSession, dir: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${segmentsTableName(dir)}")
-    spark.catalog.refreshByPath(dir)
-  }
 
   def isComplete(dir: String, table: String, fingerprint: String): Boolean = {
     val m = marker(dir, table)
@@ -71,7 +37,8 @@ object SegmentStore {
     Files.writeString(marker(dir, table), fingerprint)
 
   /** Write all index tables; skips tables already committed with the same
-    * fingerprint (resume path).
+    * fingerprint (resume path). The segment blocks are written in the
+    * partitions and order `index.segments` has, with no further shuffle.
     * Returns the set of tables actually (re)written.
     */
   def writeAll(index: InvertedIndex, dir: String, cfg: IndexConfig): Set[String] = {
@@ -94,24 +61,18 @@ object SegmentStore {
       }
     }
 
-    // segments: a BUCKETED datasource table (one file set per bucket,
-    // scan = one task per bucket, no per-query exchange in the DAAT
-    // path). Repartition by bucket first so each write task emits its
-    // own bucket's file instead of one file per bucket per task.
+    // segments: the blocks as the build's (term, bucket) merge emits
+    // them, one file per merge partition; `_BUCKETS` records the bucket
+    // count the resident block maps key on. zstd, not the default snappy:
+    // each file mixes every bucket's docIds, which snappy compressed 8%
+    // worse than one-bucket files (bench/r15_plain_segments.txt)
     if (!isComplete(dir, "segments", fp)) {
-      val spark2 = index.segments.sparkSession
-      val name = segmentsTableName(dir)
-      spark2.sql(s"DROP TABLE IF EXISTS $name")
-      val buckets = math.max(1, cfg.numBuckets)
-      index.segments
-        .repartition(buckets, col("bucket"))
-        .write.mode("overwrite")
-        .bucketBy(buckets, "bucket").sortBy("term")
-        .option("path", s"$dir/segments")
-        .saveAsTable(name)
-      Files.writeString(Paths.get(dir, "segments", "_BUCKETS"), buckets.toString)
+      index.segments.write.mode("overwrite").option("compression", "zstd")
+        .parquet(s"$dir/segments")
+      Files.writeString(Paths.get(dir, "segments", "_BUCKETS"),
+        math.max(1, cfg.numBuckets).toString)
       commit(dir, "segments", fp)
-      lock.synchronized { written += "segments" }
+      written += "segments"
     }
     // the small tables are independent jobs — run them concurrently so
     // their driver-side commit latencies overlap instead of summing
@@ -131,8 +92,8 @@ object SegmentStore {
       else Nil)
       fs.foreach(_.get())
     } finally pool.shutdown()
-    // Per-partition lineage rows: one per (bucket) shuffle output, with
-    // row counts and an order-insensitive checksum — the audit trail for
+    // Per-bucket lineage rows: one per docId-range bucket, with row
+    // counts and an order-insensitive checksum — the audit trail for
     // partial-rerun equality (north-rule lineage requirement).
     writeTable("manifest") {
       index.segments.groupBy("bucket").agg(
@@ -170,6 +131,9 @@ object SegmentStore {
     }
   }
 
+  /** Open a store: every table is one plain Parquet read. A store whose
+    * segments were written as a Spark-bucketed table opens the same way.
+    */
   def open(spark: SparkSession, dir: String): StoredIndex = {
     recoverFieldsSwap(dir)
     // a writeAll that died mid-rewrite over an existing store leaves
@@ -187,20 +151,13 @@ object SegmentStore {
           coreFps.map { case (t, f) => s"$t=$f" }.mkString(", ") +
           "); rerun writeAll with the intended config to complete the rewrite")
     val stats = spark.read.parquet(s"$dir/stats").head()
-    // stores written before the bucketed-table change have no _BUCKETS
-    // file — open those as a plain (unbucketed) parquet read instead of
-    // failing with NoSuchFileException
+    // a store written before `_BUCKETS` existed opens with numBuckets
+    // = 0 (unknown)
     val bucketsFile = Paths.get(dir, "segments", "_BUCKETS")
     val numBuckets =
       if (Files.exists(bucketsFile)) Files.readString(bucketsFile).trim.toInt else 0
-    // (re)register the bucketed table — catalog metadata is per-session,
-    // the files + bucket spec on disk are the durable state
-    val segments =
-      if (numBuckets > 0)
-        spark.table(registerSegmentsTable(spark, dir, numBuckets))
-      else spark.read.parquet(s"$dir/segments")
     StoredIndex(
-      segments = segments,
+      segments = spark.read.parquet(s"$dir/segments"),
       dictionary = spark.read.parquet(s"$dir/dictionary"),
       doclens = spark.read.parquet(s"$dir/doclens"),
       stats = CorpusStats(
@@ -341,8 +298,7 @@ object RepositorySurgery {
     val st = SegmentStore.open(spark, dir)
     val idx = InvertedIndex(
       IndexBuilder.decodePostings(st.segments), st.dictionary, st.doclens,
-      st.stats, st.segments, st.fieldExtents, numBuckets = st.numBuckets,
-      segmentsBucketed = true)
+      st.stats, st.segments, st.fieldExtents, numBuckets = st.numBuckets)
     val cfg = IndexConfig(blockSize = storedBlockSize(st),
       numBuckets = math.max(st.numBuckets, 1))
     val compacted = IndexBuilder.compactDeletes(idx, del.get, cfg)
@@ -363,10 +319,6 @@ object RepositorySurgery {
     Files.move(dirPath, old)
     Files.move(tmp, dirPath)
     rmTree(old)
-    // the registered bucketed table (CREATE TABLE IF NOT EXISTS) caches
-    // the OLD file listing — drop it so the next open re-registers over
-    // the swapped-in files, and refresh any path-cached plans
-    SegmentStore.invalidate(spark, dir)
   }
 
   /** copy top-level aux entries (chain file, metadata/prior dirs) that a

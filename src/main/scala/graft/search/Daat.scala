@@ -22,8 +22,8 @@ import graft.index.{BlockCodec, InvertedIndex}
   * tightening include/indri/ScoredExtentAccumulator.hpp:40-100;
   * block-max columns per Ding & Suel BMW).
   *
-  * Distribution model: segment blocks are bucketed by docId range at
-  * build time, and each index keeps them resident
+  * Distribution model: each segment block belongs to one docId-range
+  * bucket, fixed at build time, and each index keeps the blocks resident
   * ([[InvertedIndex.blockMaps]]): P = min(numBuckets, defaultParallelism)
   * persisted partitions, bucket b in partition b mod P, each a map from
   * term to that term's blocks and their stats partial ([[TermSlice]]).
@@ -317,8 +317,8 @@ object Daat {
     * grouping per partition into term → blocks sorted by firstDoc. Each
     * partition holds whole buckets — every block of a doc, for every
     * term, in one partition — and equal docId spans, whatever way the
-    * segment scan packed or split the files (a bucketed table's scan,
-    * size-packed or row-group-split files, an in-memory index). Behind
+    * segment scan packed or split the files (size-packed or
+    * row-group-split Parquet files, an in-memory index). Behind
     * the exchange, a kernel job's task binary does not carry the segment
     * scan's lineage. The grouping also computes each term's stats
     * partial ([[TermSlice.of]]), once per index.
@@ -354,7 +354,7 @@ object Daat {
     * each doc's extents in the partition that holds its blocks. The
     * placement comes from the blocks' [firstDoc, lastDoc] ranges, read
     * once in one job over the block maps — never from how the maps were
-    * partitioned — so it holds for a bucketed table scan, an
+    * partitioned — so it holds for a stored segment scan, an
     * AQE-coalesced repartition and Federation's rebased buckets alike.
     * A doc in no block range has no posting, is never a candidate, and
     * its extents drop.

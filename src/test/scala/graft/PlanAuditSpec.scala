@@ -42,15 +42,14 @@ class PlanAuditSpec extends AnyFunSuite {
       s"term filter not pushed to parquet scan:\n$plan")
   }
 
-  test("stored bucketed segments: DAAT query plan has NO per-query exchange, results identical") {
-    val dir = java.nio.file.Files.createTempDirectory("plan-audit-bucketed").toString
+  test("stored segments: DAAT query plan has NO per-query exchange, results identical") {
+    val dir = java.nio.file.Files.createTempDirectory("plan-audit-stored").toString
     val docs = graft.corpus.CorpusSynthesizer.corpus(spark, 300)
     val idx = IndexBuilder.buildFromCorpus(docs, cfg)
     SegmentStore.writeAll(idx, dir, cfg)
     val stored = SegmentStore.open(spark, dir)
     val qIdx = InvertedIndex(null, stored.dictionary, stored.doclens,
-      stored.stats, stored.segments, numBuckets = stored.numBuckets,
-      segmentsBucketed = true)
+      stored.stats, stored.segments, numBuckets = stored.numBuckets)
     // the block maps' partitions: one per core, at most one per bucket
     val parts = math.min(stored.numBuckets, spark.sparkContext.defaultParallelism)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -116,7 +115,7 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("stored bucketed fielded index: a warm extent query is 2 jobs over the resident structures") {
+  test("stored fielded index: a warm extent query is 2 jobs over the resident structures") {
     val dir = java.nio.file.Files.createTempDirectory("plan-audit-extents").toString
     val docs = IndexBuilder.assignDocIdsScalable(graft.corpus.CorpusSynthesizer.corpus(spark, 300),
       Seq("repo", "path", "commit")).select("docId", "content")
@@ -125,7 +124,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val stored = SegmentStore.open(spark, dir)
     val qIdx = InvertedIndex(null, stored.dictionary, stored.doclens,
       stored.stats, stored.segments, stored.fieldExtents,
-      numBuckets = stored.numBuckets, segmentsBucketed = true)
+      numBuckets = stored.numBuckets)
     val eng = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = "dirichlet"))
     val engMem = new Engine(spark, idx, cfg.analyzer, ScoringRule(method = "dirichlet"))
     def rows(df: org.apache.spark.sql.DataFrame) =

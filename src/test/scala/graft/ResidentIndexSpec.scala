@@ -87,12 +87,12 @@ class ResidentIndexSpec extends AnyFunSuite {
     assert(raw(javaOrder) != sparkTop(100))
   }
 
-  test("a stored index whose bucket files are split across scan partitions serves the belief path's rows") {
+  test("a stored index whose segment files are split across scan partitions serves the belief path's rows") {
     val splitCfg = IndexConfig(blockSize = 16, numBuckets = 8)
     val dir = java.nio.file.Files.createTempDirectory("resident-split").toString
     val built = IndexBuilder.buildFromCorpus(CorpusSynthesizer.corpus(spark, 600, seed = 7L), splitCfg)
     // small row groups on write and small splits on read: Spark splits
-    // every bucket file by row group, so a bucket's blocks reach the
+    // every segment file by row group, so a bucket's blocks reach the
     // block-map build in several scan partitions
     def withConf[T](key: String, value: String)(body: => T): T = {
       val old = spark.conf.getOption(key)
@@ -102,9 +102,9 @@ class ResidentIndexSpec extends AnyFunSuite {
     withConf("parquet.block.size", "16384")(SegmentStore.writeAll(built, dir, splitCfg))
     withConf("spark.sql.files.maxPartitionBytes", "32768") {
       val stored = SegmentStore.open(spark, dir)
-      assert(stored.segments.rdd.getNumPartitions > stored.numBuckets, "no bucket file was split")
+      assert(stored.segments.rdd.getNumPartitions > stored.numBuckets, "no segment file was split")
       val index = InvertedIndex(null, stored.dictionary, stored.doclens, stored.stats,
-        stored.segments, numBuckets = stored.numBuckets, segmentsBucketed = true)
+        stored.segments, numBuckets = stored.numBuckets)
       for (method <- Seq("okapi", "dirichlet")) {
         val eng = new Engine(spark, index, splitCfg.analyzer, ScoringRule(method = method))
         for (q <- CorpusSynthesizer.querySet.map(_._2))

@@ -1,7 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.corpus.CorpusSynthesizer
 import graft.index._
 import graft.search.{Engine, ScoringRule}
 
@@ -15,6 +20,12 @@ class StoreResumeSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val cfg = IndexConfig(analyzerMode = "simple", blockSize = 32, numBuckets = 4)
+
+  /** a result's rows with raw score bits */
+  private def bits(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map { r =>
+      r.toSeq.init :+ java.lang.Double.doubleToRawLongBits(r.getDouble(r.length - 1))
+    }.toSeq
 
   private def buildIdx() = {
     val corpus = graft.corpus.CorpusSynthesizer.corpus(spark, 200)
@@ -63,6 +74,66 @@ class StoreResumeSpec extends AnyFunSuite {
     assert(manifest.where(col("status") === "complete").count() > 0)
     val totalPostings = manifest.agg(sum("postings")).head().getLong(0)
     assert(totalPostings == idx.postings.count())
+  }
+
+  test("a store whose segments were saved as a Spark-bucketed table opens, serves and compacts like a plain one") {
+    val idx = buildIdx()
+    val n = cfg.numBuckets
+    val plain = Files.createTempDirectory("segstore-plain").toString
+    SegmentStore.writeAll(idx, plain, cfg)
+    // the older writer: the same tables, but the segments repartitioned by
+    // bucket and saved as a bucketed, term-sorted catalog table over the
+    // store's directory, then `_BUCKETS` and the markers
+    val old = Files.createTempDirectory("segstore-bucketed").toString
+    SegmentStore.writeAll(idx, old, cfg)
+    val table = s"graft_segments_${Math.abs(old.hashCode)}"
+    idx.segments.repartition(n, col("bucket")).write.mode("overwrite")
+      .bucketBy(n, "bucket").sortBy("term")
+      .option("path", s"$old/segments").saveAsTable(table)
+    Files.writeString(Paths.get(old, "segments", "_BUCKETS"), n.toString)
+    Files.writeString(Paths.get(old, "segments", "_GRAFT_SUCCESS"), cfg.fingerprint)
+    // a later session has no catalog entry; dropping an external table
+    // keeps its files
+    spark.sql(s"DROP TABLE $table")
+    val files = Files.list(Paths.get(old, "segments"))
+    val names = try files.iterator().asScala.map(_.getFileName.toString).toSeq finally files.close()
+    assert(names.exists(_.matches("part-.*_\\d{5}\\.c000.*\\.parquet")),
+      s"no bucket file in $names")
+
+    val fromOld = SegmentStore.open(spark, old)
+    val fromPlain = SegmentStore.open(spark, plain)
+    assert(fromOld.numBuckets == n && fromPlain.numBuckets == n)
+    assert(fromOld.segments.exceptAll(fromPlain.segments).isEmpty &&
+      fromPlain.segments.exceptAll(fromOld.segments).isEmpty)
+    def engine(st: StoredIndex, method: String) = new Engine(spark,
+      InvertedIndex(null, st.dictionary, st.doclens, st.stats, st.segments,
+        st.fieldExtents, numBuckets = st.numBuckets),
+      cfg.analyzer, ScoringRule(method = method))
+    val queries = CorpusSynthesizer.querySet.map(_._2)
+    for (method <- Seq("okapi", "dirichlet")) {
+      val (eOld, ePlain) = (engine(fromOld, method), engine(fromPlain, method))
+      val got = queries.map(q => q -> bits(eOld.runQuery(q, 100)))
+      for ((q, rows) <- got)
+        assert(rows == bits(ePlain.runQuery(q, 100)), s"$method '$q': bucketed store != plain store")
+      assert(got.count(_._2.nonEmpty) > queries.size / 2)
+    }
+
+    // compacting the old store equals compactDeletes of the build
+    val deleted = (1L to 200L).filter(_ % 7 == 0)
+    RepositorySurgery.appendDeletes(spark, old, deleted)
+    RepositorySurgery.compactRepository(spark, old)
+    val compacted = SegmentStore.open(spark, old)
+    val want = IndexBuilder.compactDeletes(idx, deleted.toDF("docId"), cfg)
+    assert(compacted.stats == want.stats)
+    for (method <- Seq("okapi", "dirichlet")) {
+      val eWant = new Engine(spark, want, cfg.analyzer, ScoringRule(method = method))
+      val eGot = engine(compacted, method)
+      for (q <- queries) {
+        val rows = bits(eGot.runQuery(q, 100))
+        assert(rows == bits(eWant.runQuery(q, 100)), s"$method '$q': compacted store != compactDeletes")
+        assert(rows.forall(r => r.head.asInstanceOf[Long] % 7 != 0))
+      }
+    }
   }
 
   test("open() refuses a half-rewritten store (mixed table fingerprints)") {
