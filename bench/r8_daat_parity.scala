@@ -10,6 +10,9 @@
 // rule, k and topdocs setting (diff the rows files of two commits); `walls`
 // prints the warm walls of SparkEntry's window queries on its
 // topdocs-carrying index.
+// It sets InvertedIndex.topdocs, which was deleted after f056baa, so it
+// compiles only against its own commits; bench/r16_topdocs.scala carries
+// its grid to later ones.
 import org.apache.spark.sql.SparkSession
 import graft.corpus.CorpusSynthesizer
 import graft.index.{IndexBuilder, IndexConfig}

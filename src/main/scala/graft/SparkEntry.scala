@@ -392,11 +392,7 @@ object SparkEntry {
         postings = idx.postings.persist(),
         dictionary = idx.dictionary.persist(),
         doclens = idx.doclens.persist(),
-        segments = idx.segments.persist(),
-        // hot-term topdocs lists seed the WAND threshold (df>50 at this
-        // corpus scale; the reference default is 1000)
-        topdocs = IndexBuilder.buildTopdocs(idx.postings,
-          cfg.copy(topdocsMinDf = 50L, topdocsFraction = 0.01)).persist())
+        segments = idx.segments.persist())
     })
 
   private def engine(s: SparkSession, dir: String): Engine =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.analysis.Analyzer
-import graft.index.{IndexBuilder, InvertedIndex, SegmentStore}
+import graft.index.{IndexBuilder, SegmentStore}
 import graft.search.{Engine, ScoringRule}
 
 /** The dumpindex application surface (reference: dumpindex/dumpindex.cpp
@@ -228,7 +228,7 @@ object DumpIndex {
     * carries over. Returns the merged repository's stats.
     */
   def merge(spark: SparkSession, out: String, inputs: Seq[String]): DataFrame = {
-    import graft.index.{Federation, InvertedIndex, RepositorySurgery}
+    import graft.index.{Federation, RepositorySurgery}
     require(inputs.size >= 2, "merge needs at least two input repositories")
     inputs.foreach { in =>
       require(RepositorySurgery.readDeletes(spark, in).isEmpty,
@@ -238,11 +238,7 @@ object DumpIndex {
     require(chains.distinct.size == 1,
       "merge requires members sharing one analysis chain " +
         s"(got ${chains.distinct.size} distinct chains)")
-    val members = inputs.map { in =>
-      val st = SegmentStore.open(spark, in)
-      InvertedIndex(null, st.dictionary, st.doclens, st.stats, st.segments,
-        st.fieldExtents, numBuckets = st.numBuckets)
-    }
+    val members = inputs.map(SegmentStore.open(spark, _))
     val merged = Federation.combine(members)
     val outPath = java.nio.file.Paths.get(out)
     require(!java.nio.file.Files.exists(outPath.resolve("stats")),
@@ -304,9 +300,7 @@ object DumpIndex {
         }
       case None => null
     }
-    val idx = InvertedIndex(postings, st.dictionary, st.doclens, st.stats,
-      st.segments, st.fieldExtents, numBuckets = st.numBuckets)
-    val eng = new Engine(spark, idx, az, ScoringRule.parse("method:dirichlet"))
+    val eng = new Engine(spark, st.copy(postings = postings), az, ScoringRule.parse("method:dirichlet"))
     BuildIndex.openMetadata(spark, repoPath).foreach(m => eng.setMetadata(m))
     // pending deletes persist under the repo (dumpindex del): the query
     // surfaces consult the DeletedDocumentList like the reference

@@ -213,11 +213,7 @@ object RunQuery {
   def openEnvironment(spark: SparkSession, p: Params,
                       analyzer: Analyzer): Engine = {
     require(p.indexPaths.nonEmpty, "no <index> elements in parameters")
-    val members = p.indexPaths.map { dir =>
-      val st = SegmentStore.open(spark, dir)
-      InvertedIndex(null, st.dictionary, st.doclens, st.stats, st.segments,
-        st.fieldExtents, numBuckets = st.numBuckets)
-    }
+    val members = p.indexPaths.map(SegmentStore.open(spark, _))
     val idx = if (members.size == 1) members.head else Federation.combine(members)
     // repositories record their analysis chain (BuildIndex.writeChain):
     // when every member agrees, query through THAT chain — stemming or

@@ -180,15 +180,7 @@ object Federation {
         shiftDoc(ix.fieldExtents, b)
       }.reduce(_ unionByName _)
 
-    // topdocs seeds are real candidate documents, so any member subset
-    // is sound — but keep all-or-nothing for predictable WAND behavior
-    val topdocs =
-      if (members.exists(_._1.topdocs == null)) null
-      else members.zip(bases).map { case ((ix, _), b) =>
-        shiftDoc(ix.topdocs, b)
-      }.reduce(_ unionByName _)
-
     InvertedIndex(postings, dictionary, doclens, stats, segments,
-      fieldExtents, numBuckets = totalBuckets, topdocs = topdocs)
+      fieldExtents, numBuckets = totalBuckets)
   }
 }

@@ -112,12 +112,9 @@ final case class InvertedIndex(
     segments: DataFrame,   // SegmentBlock schema
     fieldExtents: DataFrame = null, // (docId, field, begin, end, number) | null when no fields indexed
     numBuckets: Int = 0,   // docId-range buckets in segments (0 = unknown)
-    segmentsBucketed: Boolean = false, // read by no code; kept only
+    segmentsBucketed: Boolean = false // read by no code; kept only
     // because perfbench/src/graft/perfbench/HostBench.scala passes it by
     // name, and the next benchmark change (ROADMAP item 4) deletes it
-    topdocs: DataFrame = null // optional (term, docId, tf, length) hot-term
-    // lists (buildTopdocs) — when present, WAND seeds its threshold from
-    // them (reference: src/WeightedAndNode.cpp:119-186 candidate seeding)
 ) {
 
   /** Positional postings usable over STORED repositories too: a
@@ -384,9 +381,9 @@ object IndexBuilder {
   /** Rebuild the index WITHOUT the deleted documents — the reference's
     * merge/trim-time deleted-document skipping (reference:
     * src/IndexWriter.cpp:575-580; Repository trim/compaction). Postings,
-    * doclens and field extents filter by anti-join; dictionary, stats,
-    * segments (fresh bucket layout over the surviving doc range) and
-    * topdocs regenerate. DocIds stay stable — the reference keeps ids
+    * doclens and field extents filter by anti-join; dictionary, stats and
+    * segments (fresh bucket layout over the surviving doc range)
+    * regenerate. DocIds stay stable — the reference keeps ids
     * across trim, and dense re-assignment would invalidate stored
     * priors/metadata keyed by id.
     */
@@ -401,10 +398,8 @@ object IndexBuilder {
     val extents =
       if (index.fieldExtents == null) null
       else index.fieldExtents.join(del, Seq("docId"), "left_anti")
-    val topdocs =
-      if (index.topdocs == null) null else buildTopdocs(postings, cfg)
     InvertedIndex(postings, dictionary, doclens, stats, segments, extents,
-      numBuckets = cfg.numBuckets, topdocs = topdocs)
+      numBuckets = cfg.numBuckets)
   }
 
   /** Topdocs per term: df > topdocsMinDf → keep top fraction ranked by

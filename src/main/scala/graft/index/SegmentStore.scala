@@ -131,10 +131,12 @@ object SegmentStore {
     }
   }
 
-  /** Open a store: every table is one plain Parquet read. A store whose
+  /** Open a store as the kernel-only [[InvertedIndex]] it holds
+    * (`postings = null`: postingsView decodes the segment blocks on
+    * demand): every table is one plain Parquet read. A store whose
     * segments were written as a Spark-bucketed table opens the same way.
     */
-  def open(spark: SparkSession, dir: String): StoredIndex = {
+  def open(spark: SparkSession, dir: String): InvertedIndex = {
     recoverFieldsSwap(dir)
     // a writeAll that died mid-rewrite over an existing store leaves
     // tables committed under DIFFERENT fingerprints (e.g. new segments
@@ -156,7 +158,8 @@ object SegmentStore {
     val bucketsFile = Paths.get(dir, "segments", "_BUCKETS")
     val numBuckets =
       if (Files.exists(bucketsFile)) Files.readString(bucketsFile).trim.toInt else 0
-    StoredIndex(
+    InvertedIndex(
+      postings = null,
       segments = spark.read.parquet(s"$dir/segments"),
       dictionary = spark.read.parquet(s"$dir/dictionary"),
       doclens = spark.read.parquet(s"$dir/doclens"),
@@ -230,15 +233,6 @@ object SegmentStore {
   }
 }
 
-final case class StoredIndex(
-    segments: DataFrame,
-    dictionary: DataFrame,
-    doclens: DataFrame,
-    stats: CorpusStats,
-    numBuckets: Int = 0,
-    fieldExtents: DataFrame = null
-)
-
 /** Offline repository surgery — the dumpindex mutation verbs
   * (reference: dumpindex/dumpindex.cpp:516-519 compact/delete/merge
   * usage rows). Lives beside the store because it owns the directory
@@ -277,7 +271,7 @@ object RepositorySurgery {
     * small corpora that never filled one get the default — block
     * boundaries only affect layout, not values)
     */
-  private def storedBlockSize(st: StoredIndex): Int = {
+  private def storedBlockSize(st: InvertedIndex): Int = {
     val m = st.segments.agg(max(col("numDocs"))).head().getInt(0)
     math.max(m, 16)
   }
@@ -296,9 +290,7 @@ object RepositorySurgery {
     val del = readDeletes(spark, dir)
     if (del.isEmpty) return // nothing pending — the repo is already compact
     val st = SegmentStore.open(spark, dir)
-    val idx = InvertedIndex(
-      IndexBuilder.decodePostings(st.segments), st.dictionary, st.doclens,
-      st.stats, st.segments, st.fieldExtents, numBuckets = st.numBuckets)
+    val idx = st.copy(postings = IndexBuilder.decodePostings(st.segments))
     val cfg = IndexConfig(blockSize = storedBlockSize(st),
       numBuckets = math.max(st.numBuckets, 1))
     val compacted = IndexBuilder.compactDeletes(idx, del.get, cfg)

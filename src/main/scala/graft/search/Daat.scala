@@ -146,12 +146,9 @@ object Daat {
     *
     * @param exhaustive disable pruning (used by the safety property test:
     *                   pruned == exhaustive, FIXTURES.md §5)
-    * @param seedTheta  global lower bound of the k-th best score (topdocs
-    *                   seeding, see [[wand]])
     */
   def topK(index: InvertedIndex, p: StructuredPlan, k: Int,
            exhaustive: Boolean = false,
-           seedTheta: Double = Double.NegativeInfinity,
            deleted: Set[Long] = Set.empty): DataFrame = {
     val spark = index.segments.sparkSession
     // k ≤ 0 must mirror the DataFrame path's limit(k) → empty result
@@ -159,7 +156,7 @@ object Daat {
     val terms = p.leaves.toSeq.flatMap(l => if (l.window == null) Seq(l.term) else l.window.terms.toSeq)
     val locals = onBuckets(index, terms) { (byTerm, _) =>
       val cursors: Array[DaatCursor] = p.leaves.map(leafCursor(_, byTerm, p.lm))
-      wand(cursors, p, k, exhaustive, seedTheta, deleted)
+      wand(cursors, p, k, exhaustive, deleted)
     }
     docsResult(spark, mergeTopK(locals, k).toSeq)
   }
@@ -913,8 +910,8 @@ object Daat {
   }
 
   /** Fold the tree in query order with every leaf valued by
-    * `leafValue` — the exact scorer, the background supremum baseMax and
-    * the topdocs seed bounds all evaluate through it.
+    * `leafValue` — the exact scorer and the background supremum baseMax
+    * both evaluate through it.
     */
   def foldWith(tree: FoldTree, leafValue: Int => Double): Double = tree match {
     case FLeaf(li) => leafValue(li)
@@ -931,18 +928,11 @@ object Daat {
   /** The per-partition WAND loop with block-max refinement over a
     * structured plan's cursors; exact scores come from
     * [[scoreStructured]] (NaN = not a real candidate — skipped, not
-    * offered). Returns this partition's (docId, score) top-k.
-    *
-    * @param seedTheta initial pruning threshold from topdocs candidate
-    *   seeding (reference: src/WeightedAndNode.cpp:119-186). MUST be a
-    *   lower bound of the true global k-th best score: the caller derives
-    *   it from k distinct docs' score lower bounds, so any doc pruned by
-    *   it is provably outside the top-k. Valid in every bucket task —
-    *   it is a global bound.
+    * offered). Returns this partition's (docId, score) top-k. The
+    * threshold θ is this partition's own heap's k-th best.
     */
   def wand(cursors: Array[DaatCursor], plan: StructuredPlan, k: Int,
            exhaustive: Boolean,
-           seedTheta: Double = Double.NegativeInfinity,
            deleted: Set[Long] = Set.empty): Seq[(Long, Double)] = {
     if (k <= 0) return Nil // zero-capacity TopKHeap would NPE on peek()
     val baseMax = plan.baseMax
@@ -981,7 +971,7 @@ object Daat {
           while (m < nTerms) { if (cursors(m).doc == d) cursors(m).next(); m += 1 }
         } else offerAndAdvance(d)
       } else {
-        val theta = math.max(heap.threshold, seedTheta)
+        val theta = heap.threshold
         // find pivot: first prefix whose Σ UB exceeds θ (LM: the
         // background-sum bound joins the running total from the start)
         var acc = baseMax

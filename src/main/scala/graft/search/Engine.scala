@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -368,47 +367,45 @@ final class Engine(
 
   /** Deleted-document list (reference: src/DeletedDocumentList.cpp —
     * bitmap consulted during evaluation and merge). Belief-path queries
-    * anti-join it; the DAAT kernel consults a broadcast in-memory set
-    * (the bitmap analogue, bounded by DaatDeleteCap pending deletions)
-    * and falls back to the anti-join path only beyond the cap — mass
-    * deletions should compact instead (reference merge-time skipping:
+    * anti-join it; the DAAT kernel consults an in-memory set (the bitmap
+    * analogue, bounded by DaatDeleteCap pending deletions) and falls back
+    * to the anti-join path only beyond the cap — mass deletions should
+    * compact instead (reference merge-time skipping:
     * src/IndexWriter.cpp:575-580).
+    *
+    * One immutable snapshot holds the list and its set. deleteDocuments
+    * swaps the snapshot, and a query reads it once, so a set collected
+    * from an older list can never be served after the swap.
     */
-  private var deletedDocs: Option[DataFrame] = None
-  private var deletedSetCache: Option[Option[Set[Long]]] = None
-
-  def deleteDocuments(docIds: DataFrame): Unit = {
-    val d = docIds.select(col(docIds.columns.head).cast(LongType).as("docId"))
-    deletedDocs = Some(deletedDocs.map(_.union(d).distinct()).getOrElse(d))
-    deletedSetCache = None
+  private final class Deletes(val docs: Option[DataFrame]) {
+    /** The pending-delete set as a driver-side bitmap for the DAAT paths —
+      * the reference's DeletedDocumentList is exactly this in-memory
+      * structure, bounded by pending deletions until the next compaction
+      * (reference: src/DeletedDocumentList.cpp). None above the cap: the
+      * kernel paths then defer to the anti-join belief path.
+      */
+    lazy val set: Option[Set[Long]] = docs match {
+      case None => Some(Set.empty[Long])
+      case Some(d) =>
+        val rows = d.limit(DaatDeleteCap + 1).collect()
+        if (rows.length > DaatDeleteCap) None
+        else Some(rows.map(_.getLong(0)).toSet)
+    }
   }
 
-  /** The pending-delete set as a driver-side bitmap for the DAAT paths —
-    * the reference's DeletedDocumentList is exactly this in-memory
-    * structure, bounded by pending deletions until the next compaction
-    * (reference: src/DeletedDocumentList.cpp). Above the cap the kernel
-    * paths defer to the anti-join belief path (mass deletions should
-    * compact instead).
-    */
+  @volatile private var deletes = new Deletes(None)
+
+  def deleteDocuments(docIds: DataFrame): Unit = synchronized {
+    val d = docIds.select(col(docIds.columns.head).cast(LongType).as("docId"))
+    deletes = new Deletes(Some(deletes.docs.map(_.union(d).distinct()).getOrElse(d)))
+  }
+
   private val DaatDeleteCap = 100000
 
   /** placeholder for stopped/OOV window members in kernel plans — the
     * NUL prefix cannot collide with a real processed term
     */
   private val StoppedSentinel = "\u0000stopped"
-  private def daatDeletedSet: Option[Set[Long]] = {
-    deletedSetCache.getOrElse {
-      val computed = deletedDocs match {
-        case None => Some(Set.empty[Long])
-        case Some(d) =>
-          val rows = d.limit(DaatDeleteCap + 1).collect()
-          if (rows.length > DaatDeleteCap) None
-          else Some(rows.map(_.getLong(0)).toSet)
-      }
-      deletedSetCache = Some(computed)
-      computed
-    }
-  }
 
   /** Rebuild the engine's index without the pending deletes and clear
     * the list — the Repository trim/compaction verb (reference:
@@ -416,7 +413,7 @@ final class Engine(
     * src/IndexWriter.cpp:575-580). Collection statistics change to the
     * surviving corpus, exactly as a fresh build over it would.
     */
-  def compacted(cfg: graft.index.IndexConfig): Engine = deletedDocs match {
+  def compacted(cfg: graft.index.IndexConfig): Engine = deletes.docs match {
     case None => this
     case Some(d) =>
       new Engine(spark, graft.index.IndexBuilder.compactDeletes(index, d, cfg),
@@ -427,7 +424,7 @@ final class Engine(
     * DeletedDocumentList bitmap consulted during ALL evaluation paths
     * (reference: src/DeletedDocumentList.cpp)
     */
-  private def notDeleted(df: DataFrame): DataFrame = deletedDocs match {
+  private def notDeleted(df: DataFrame, ds: Deletes = deletes): DataFrame = ds.docs match {
     case Some(d) => df.join(d, Seq("docId"), "left_anti")
     case None => df
   }
@@ -1302,7 +1299,7 @@ final class Engine(
     */
   private[graft] def runParsed(ast: QueryNode, k: Int,
                                useDaat: Boolean = true): DataFrame =
-    runBatch(Seq(ast), k, useDaat).head
+    runBatch(Seq(ast), k, useDaat, deletes).head
 
   private def lmMethod: Boolean =
     rule.method == "dirichlet" || rule.method == "jm" || rule.method == "two"
@@ -1310,8 +1307,8 @@ final class Engine(
   /** deleted-doc filter + final (score desc, docId asc) top-k on a
     * belief — the belief-path tail of runBatch
     */
-  private def scoredTail(belief: Belief, k: Int): DataFrame = {
-    val scored = deletedDocs match {
+  private def scoredTail(belief: Belief, k: Int, ds: Deletes): DataFrame = {
+    val scored = ds.docs match {
       case Some(d) => belief.df.join(d, Seq("docId"), "left_anti")
       case None => belief.df
     }
@@ -1332,7 +1329,7 @@ final class Engine(
     * belief-path queries come back as lazy plans.
     */
   def runQueries(queries: Seq[String], k: Int, useDaat: Boolean = true): Seq[(String, DataFrame)] =
-    queries.zip(runBatch(queries.map(QueryParser.parse), k, useDaat))
+    queries.zip(runBatch(queries.map(QueryParser.parse), k, useDaat, deletes))
 
   /** The one query body of runQuery, runParsed, runQueries and
     * runStructured. A batch runs
@@ -1344,24 +1341,24 @@ final class Engine(
     *    neither;
     *  - one SQL stats round over the belief-path queries' complex leaves,
     *    when there are any;
-    *  - then, per kernel query, its topdocs seed probe when the index has
-    *    topdocs and one [[Daat.topK]] job; per belief-path query, its
-    *    lazy plan.
+    *  - then, per kernel query, one [[Daat.topK]] job; per belief-path
+    *    query, its lazy plan.
+    * Every query of the batch sees the one delete snapshot `ds`.
     */
-  private def runBatch(asts: Seq[QueryNode], k: Int, useDaat: Boolean,
+  private def runBatch(asts: Seq[QueryNode], k: Int, useDaat: Boolean, ds: Deletes,
                        exhaustive: Boolean = false): Seq[DataFrame] = {
-    val kernel = asts.map(a => if (useDaat && structuredServes(a)) Some(kernelLeaves(a)) else None)
+    val kernel = asts.map(a => if (useDaat && structuredServes(a, ds)) Some(kernelLeaves(a)) else None)
     val windows = kernel.flatten.flatMap(_.metas.collect { case WinLeafM(s) => s })
     // a window is only ever a kernel leaf, and the kernel runs only with
     // a delete set
     val (tstats, wstats) = Daat.stats(index,
       asts.flatMap(QueryParser.termLeaves).flatMap(t => Option(analyzer.processTerm(t))),
-      windows, if (windows.isEmpty) Set.empty else daatDeletedSet.get)
+      windows, if (windows.isEmpty) Set.empty else ds.set.get)
     val cstats = complexStatsBatch(
       asts.zip(kernel).collect { case (a, None) => complexRawLeaves(a) }.flatten)
     asts.zip(kernel).map {
-      case (_, Some(kl)) => runKernel(kl, tstats, wstats, k, exhaustive)
-      case (a, None) => scoredTail(evaluateWith(a, tstats, cstats, root = true), k)
+      case (_, Some(kl)) => runKernel(kl, tstats, wstats, k, exhaustive, ds.set.get)
+      case (a, None) => scoredTail(evaluateWith(a, tstats, cstats, root = true), k, ds)
     }
   }
 
@@ -1388,8 +1385,8 @@ final class Engine(
   }
 
   /** the kernel dispatch predicate of runBatch */
-  private def structuredServes(ast: QueryNode): Boolean =
-    (baseline || lmMethod) && daatDeletedSet.isDefined &&
+  private def structuredServes(ast: QueryNode, ds: Deletes): Boolean =
+    (baseline || lmMethod) && ds.set.isDefined &&
       // selector rule lists can give different leaves different
       // smoothing, which the single-rule kernel cannot represent — they
       // force the belief path, checked HERE so that the batch's
@@ -1454,11 +1451,12 @@ final class Engine(
   /** Score one kernel query from the batch's stats: per-leaf score
     * functions, WAND bounds and effective weights, background fill-in,
     * then one [[Daat.topK]] job — bit-identical scores to evaluateWith
-    * (WandPropertySpec structured cases).
+    * (WandPropertySpec structured cases). WAND's threshold comes only
+    * from each partition's own heap.
     */
   private def runKernel(kl: KernelLeaves, tstats: Map[String, TermStats],
                         wstats: Map[Daat.WindowSpec, (Double, Long)],
-                        k: Int, exhaustive: Boolean): DataFrame = {
+                        k: Int, exhaustive: Boolean, del: Set[Long]): DataFrame = {
     val (tree, metas) = (kl.tree, kl.metas)
     val effW = new Array[Double](metas.length)
     def accEff(t: Daat.FoldTree, w: Double): Unit = t match {
@@ -1502,10 +1500,7 @@ final class Engine(
       else Daat.foldWith(tree, li => leafPlans(li).scoreAt(0.0, minDlQuery))
 
     val p = Daat.StructuredPlan(leafPlans, tree, lm = lmMethod, baseMax = baseMax)
-    val del = daatDeletedSet.get
-    val seed = if (exhaustive || index.topdocs == null) Double.NegativeInfinity
-               else topdocsSeed(p, k, del)
-    Daat.topK(index, p, k, exhaustive, seed, del)
+    Daat.topK(index, p, k, exhaustive, del)
   }
 
   /** One query's kernel result through [[runBatch]], or None when the
@@ -1513,52 +1508,10 @@ final class Engine(
     * with (`exhaustive` disables pruning: pruned == exhaustive).
     */
   private[graft] def runStructured(ast: QueryNode, k: Int,
-                                   exhaustive: Boolean = false): Option[DataFrame] =
-    if (structuredServes(ast)) Some(runBatch(Seq(ast), k, useDaat = true, exhaustive).head)
+                                   exhaustive: Boolean = false): Option[DataFrame] = {
+    val ds = deletes
+    if (structuredServes(ast, ds)) Some(runBatch(Seq(ast), k, useDaat = true, ds, exhaustive).head)
     else None
-
-  /** WAND threshold seeding from the topdocs lists (reference:
-    * src/WeightedAndNode.cpp:119-186 seeds max-score candidates from the
-    * topdocs unions). A topdocs doc's bound folds the plan's tree with
-    * every term leaf scored at its recorded tf (or 0) and every window
-    * leaf at tf 0, all at the doc's recorded length. Weights are
-    * non-negative and an unknown leaf sits at its background — what the
-    * exact fold gives an absent leaf — so while every leaf's score is
-    * non-decreasing in tf the bound is ≤ the doc's exact score, the
-    * k-th largest bound θ0 is ≤ the true k-th best, and pruning against
-    * it stays exact (WandPropertySpec). A leaf that scores LOWER at
-    * tf=1 than at tf=0 (okapi idf < 0 when df > N/2 — exactly the
-    * frequent terms that HAVE topdocs lists; never an LM leaf) would
-    * make partial knowledge overstate the bound, so seeding is skipped
-    * then, as it is for a plan without term leaves (windows only: no
-    * topdocs list to read). The collect is bounded to k rows per query
-    * term.
-    */
-  private[graft] def topdocsSeed(p: Daat.StructuredPlan, k: Int, deleted: Set[Long]): Double = {
-    val terms = p.leaves.collect { case l if l.window == null => l.term }.toSeq
-    if (k <= 0 || terms.isEmpty || p.leaves.exists(l => l.scoreAt(1.0, 1) < l.scoreAt(0.0, 1)))
-      return Double.NegativeInfinity
-    val w = Window.partitionBy("term")
-      .orderBy((col("tf").cast(DoubleType) / col("length")).desc, col("docId").asc)
-    // deleted docs are excluded: their bounds could exceed the surviving
-    // corpus's true k-th best, which would make the seed unsound
-    val known = index.topdocs
-      .where(col("term").isin(terms: _*))
-      .withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-      .select("term", "docId", "tf", "length").collect()
-      .filterNot(r => deleted.contains(r.getLong(1)))
-      .groupBy(_.getLong(1))
-    if (known.size < k) return Double.NegativeInfinity
-    val bounds = known.values.map { rows =>
-      val dl = rows.head.getInt(3)
-      val tfs = rows.map(r => r.getString(0) -> r.getInt(2)).toMap
-      Daat.foldWith(p.tree, { li =>
-        val l = p.leaves(li)
-        l.scoreAt(if (l.window == null) tfs.getOrElse(l.term, 0).toDouble else 0.0, dl)
-      })
-    }.toArray
-    java.util.Arrays.sort(bounds)
-    bounds(bounds.length - k)
   }
 
   /** Extent-restricted retrieval `#combine[f](…)` / `#combine[passageW:I](…)`:
@@ -1623,7 +1576,8 @@ final class Engine(
     // extents), positions decode in-task and only partition-local top-k
     // extents reach the driver merge. Falls back to the DataFrame path
     // when the delete list outgrows the kernel bitmap.
-    if (useDaat && daatDeletedSet.isDefined) {
+    val ds = deletes
+    if (useDaat && ds.set.isDefined) {
       val prep = prepLeaves(childGroups.flatten.map(NexiParser.PlainTerm), ctxF)
       val nChildren = prep.fns.length
       val childTerm = new Array[String](nChildren)
@@ -1646,7 +1600,7 @@ final class Engine(
       // fieldExtents fails fast on an index without fields, like the
       // DataFrame path, even when no query term is in the vocabulary
       val field = if (er.passage.isDefined) null else { fieldExtents; er.field }
-      return Daat.topKExtents(index, plan, er.passage, field, k, daatDeletedSet.get)
+      return Daat.topKExtents(index, plan, er.passage, field, k, ds.set.get)
     }
     val fx = er.passage match {
       case Some(_) => null
@@ -1656,7 +1610,7 @@ final class Engine(
             sort_array(collect_list(struct(col("begin"), col("end")))).as("ex"))
     }
     scoreExtentContexts(childGroups, groupOp, fx, er.passage, k, weights, gweights,
-      ctxF)
+      ctxF, ds)
   }
 
   /** Shared clause-belief scaffold, generalized to structured NEXI term
@@ -1784,7 +1738,7 @@ final class Engine(
                                   k: Int,
                                   weights: Option[Seq[Double]],
                                   groupWeights: Option[Seq[Double]],
-                                  ctxField: String): DataFrame = {
+                                  ctxField: String, ds: Deletes): DataFrame = {
     val prep = prepLeaves(childGroups.flatten.map(NexiParser.PlainTerm), ctxField)
     val fns = prep.fns
     val termIdx = prep.keyIdx
@@ -1877,7 +1831,7 @@ final class Engine(
         (b, e, acc)
       }
     }
-    notDeleted(extentsDf)
+    notDeleted(extentsDf, ds)
       .withColumn("scored", explode(scoreUdf(col("tp"), col("ex.begin"), col("ex.end"))))
       .select(col("docId"), col("scored._1").as("begin"),
         col("scored._2").as("end"), col("scored._3").as("score"))

@@ -105,10 +105,8 @@ class StoreResumeSpec extends AnyFunSuite {
     assert(fromOld.numBuckets == n && fromPlain.numBuckets == n)
     assert(fromOld.segments.exceptAll(fromPlain.segments).isEmpty &&
       fromPlain.segments.exceptAll(fromOld.segments).isEmpty)
-    def engine(st: StoredIndex, method: String) = new Engine(spark,
-      InvertedIndex(null, st.dictionary, st.doclens, st.stats, st.segments,
-        st.fieldExtents, numBuckets = st.numBuckets),
-      cfg.analyzer, ScoringRule(method = method))
+    def engine(st: InvertedIndex, method: String) =
+      new Engine(spark, st, cfg.analyzer, ScoringRule(method = method))
     val queries = CorpusSynthesizer.querySet.map(_._2)
     for (method <- Seq("okapi", "dirichlet")) {
       val (eOld, ePlain) = (engine(fromOld, method), engine(fromPlain, method))

@@ -82,9 +82,19 @@ class WandPropertySpec extends AnyFunSuite {
   }
 
   private def wandOn(cs: Array[Daat.Cursor], p: Daat.StructuredPlan, k: Int,
-                     exhaustive: Boolean = false,
-                     seedTheta: Double = Double.NegativeInfinity): Seq[(Long, Double)] =
-    Daat.wand(cs.map(c => c: Daat.DaatCursor), p, k, exhaustive, seedTheta)
+                     exhaustive: Boolean = false): Seq[(Long, Double)] =
+    Daat.wand(cs.map(c => c: Daat.DaatCursor), p, k, exhaustive)
+
+  /** pruned vs exhaustive kernel runs over fresh cursors: equal rows,
+    * and the blocks each decoded
+    */
+  private def decodes(mkCursors: () => Array[Daat.Cursor], p: Daat.StructuredPlan,
+                      k: Int): (Int, Int) = {
+    val (cPruned, cFull) = (mkCursors(), mkCursors())
+    val (rPruned, rFull) = (wandOn(cPruned, p, k), wandOn(cFull, p, k, exhaustive = true))
+    assert(rPruned == rFull, s"pruned != exhaustive at k=$k")
+    (cPruned.map(_.decodedBlocks).sum, cFull.map(_.decodedBlocks).sum)
+  }
 
   /** a mid-frequency term: enough blocks that a warm θ can skip the
     * low-maxTf ones before the heap would have filled on its own
@@ -223,12 +233,10 @@ class WandPropertySpec extends AnyFunSuite {
     assert(Daat.wand(Array.empty[Daat.DaatCursor], emptyPlan, 0, exhaustive = false).isEmpty)
   }
 
-  // window plans whose term leaf has a topdocs list long enough to seed
-  // k=1 and k=10 (the window leaves bound at their background): `return`
-  // under dirichlet; under okapi `return`'s idf is negative and disables
-  // seeding, so the okapi plan's term leaf is the positive-idf midTerm.
-  // k=1 puts θ0 at the largest bound, where an overstated window bound
-  // prunes the true best doc.
+  // window plans over a hot term and a mid-frequency one: `return` under
+  // dirichlet; under okapi `return`'s idf is negative, so the okapi plan's
+  // term leaf is the positive-idf midTerm. k=1 puts θ at the single best
+  // score, where an overstated window bound prunes the true best doc.
   private val lmWindowQuery = "#combine(#od1(return license) return #uw4(class def))"
   private def okapiWindowQuery = s"#combine(#od1(return $midTerm) $midTerm #uw4(class def))"
 
@@ -245,91 +253,54 @@ class WandPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("LM topdocs seeding stays exact") {
-    val td = IndexBuilder.buildTopdocs(index.postings,
-      IndexConfig(topdocsMinDf = 20L, topdocsFraction = 0.05))
-    val seededIdx = index.copy(topdocs = td.cache())
-    val engSeeded = new Engine(spark, seededIdx, Analyzer(), ScoringRule(method = "dirichlet"))
-    val engPlain = new Engine(spark, index, Analyzer(), ScoringRule(method = "dirichlet"))
-    for (q <- queries :+ lmWindowQuery; k <- Seq(1, 10, 100)) {
-      val s = run(engSeeded, q, k, "wand")
-      val u = run(engPlain, q, k, "wand")
-      assert(s == u, s"LM seeded != unseeded for '$q' k=$k")
-    }
+  test("LM WAND stays exact at k = 1, 10, 100") {
+    val engine = new Engine(spark, index, Analyzer(), ScoringRule(method = "dirichlet"))
+    for (q <- queries :+ lmWindowQuery; k <- Seq(1, 10, 100))
+      assert(run(engine, q, k, "wand") == run(engine, q, k, "dataframe"),
+        s"LM WAND != DataFrame for '$q' k=$k")
   }
 
-  test("topdocs threshold seeding: results stay exact, block decodes drop") {
-    // engine level: index with topdocs attached must return identical
-    // results to the unseeded and exhaustive paths across the query set
-    val td = IndexBuilder.buildTopdocs(index.postings,
-      IndexConfig(topdocsMinDf = 20L, topdocsFraction = 0.05))
-    val seededIdx = index.copy(topdocs = td.cache())
-    val engSeeded = new Engine(spark, seededIdx, Analyzer(), ScoringRule(method = "okapi"))
-    val engPlain = new Engine(spark, index, Analyzer(), ScoringRule(method = "okapi"))
-    for (q <- queries :+ okapiWindowQuery; k <- Seq(1, 10, 100)) {
-      val s = run(engSeeded, q, k, "wand")
-      val u = run(engPlain, q, k, "wand")
-      assert(s == u, s"seeded != unseeded for '$q' k=$k")
-    }
+  test("okapi WAND stays exact and decodes fewer blocks than exhaustive") {
+    val engine = new Engine(spark, index, Analyzer(), ScoringRule(method = "okapi"))
+    for (q <- queries :+ okapiWindowQuery; k <- Seq(1, 10, 100))
+      assert(run(engine, q, k, "wand") == run(engine, q, k, "dataframe"),
+        s"WAND != DataFrame for '$q' k=$k")
 
-    // kernel level: seeding with the exact k-th best score (the tightest
-    // valid θ0 — any topdocs-derived seed is ≤ it) must keep results
-    // identical while decoding fewer blocks
-    val (p, mkCursors) = kernelFixture(engPlain, ScoringRule(method = "okapi"), Seq(midTerm))
-    val k = 5
-    val cCold = mkCursors()
-    val rCold = wandOn(cCold, p, k)
-    val theta0 = rCold.last._2 // exact k-th best = the tightest sound seed
-    val cSeeded = mkCursors()
-    val rSeeded = wandOn(cSeeded, p, k, seedTheta = theta0)
-    assert(rSeeded == rCold)
-    val dSeeded = cSeeded.map(_.decodedBlocks).sum
-    val dCold = cCold.map(_.decodedBlocks).sum
-    assert(dSeeded <= dCold)
-    assert(dSeeded < dCold,
-      s"seeding decoded $dSeeded blocks vs cold $dCold — no decode saving")
+    // kernel level: once the heap holds k docs its θ must skip the
+    // mid-frequency term's low-maxTf blocks
+    val (p, mkCursors) = kernelFixture(engine, ScoringRule(method = "okapi"), Seq(midTerm))
+    val (dPruned, dFull) = decodes(mkCursors, p, 5)
+    assert(dPruned < dFull, s"pruning decoded $dPruned blocks vs exhaustive $dFull — no decode saving")
   }
 
-  test("okapi topdocs seeding fires on positive-idf leaves and stays exact") {
-    // the planted hot terms have df > N/2, where okapi idf < 0 turns
-    // seeding off; leaves with df ≤ N/2 and topdocs lists (here half of
-    // each list) must get a real seed that prunes without changing results
+  test("okapi WAND on positive-idf leaves prunes and stays exact") {
+    // the planted hot terms have df > N/2, where okapi idf < 0 and a
+    // term's bound is 0; leaves with df ≤ N/2 have positive bounds that
+    // must prune without changing results
     import org.apache.spark.sql.functions.col
     val n = index.stats.totalDocs
     val Seq(rare, next) = index.dictionary.where(col("df") > n / 10 && col("df") <= n / 2)
       .orderBy(col("df").asc, col("term").asc).select("term").head(2).map(_.getString(0)).toSeq
-    val td = IndexBuilder.buildTopdocs(index.postings,
-      IndexConfig(topdocsMinDf = 20L, topdocsFraction = 0.5)).cache()
-    val engSeeded = new Engine(spark, index.copy(topdocs = td), Analyzer(), ScoringRule(method = "okapi"))
-    val engPlain = new Engine(spark, index, Analyzer(), ScoringRule(method = "okapi"))
+    val engine = new Engine(spark, index, Analyzer(), ScoringRule(method = "okapi"))
     for (terms <- Seq(Seq(rare), Seq(rare, next)); k <- Seq(1, 5, 20)) {
-      val (p, mkCursors) = kernelFixture(engPlain, ScoringRule(method = "okapi"), terms)
-      val seed = engSeeded.topdocsSeed(p, k, Set.empty)
-      val cCold = mkCursors()
-      val rCold = wandOn(cCold, p, k)
-      assert(seed > Double.NegativeInfinity && seed <= rCold.last._2,
-        s"$terms k=$k: seed $seed, true k-th best ${rCold.last._2}")
-      val cSeeded = mkCursors()
-      assert(wandOn(cSeeded, p, k, seedTheta = seed) == rCold)
-      val dSeeded = cSeeded.map(_.decodedBlocks).sum
-      val dCold = cCold.map(_.decodedBlocks).sum
-      assert(dSeeded <= dCold)
-      if (terms.size == 1)
-        assert(dSeeded < dCold, s"'$rare' k=$k: seed $seed decoded $dSeeded blocks vs cold $dCold")
+      val (p, mkCursors) = kernelFixture(engine, ScoringRule(method = "okapi"), terms)
+      val (dPruned, dFull) = decodes(mkCursors, p, k)
+      assert(dPruned <= dFull)
+      // the rare term has 8 blocks: at k = 20 no block's bound falls
+      // below the heap's θ, so all 8 decode, as exhaustive; at k = 1 and
+      // 5 the heap's θ must skip some
+      if (terms.size == 1 && k < 20)
+        assert(dPruned < dFull, s"'$rare' k=$k: pruning decoded $dPruned blocks vs exhaustive $dFull")
       val q = terms.mkString("#combine(", " ", ")")
-      val s = run(engSeeded, q, k, "wand")
-      assert(s == run(engPlain, q, k, "wand"), s"seeded != unseeded for '$q' k=$k")
-      assert(s == run(engSeeded, q, k, "dataframe"), s"seeded != DataFrame for '$q' k=$k")
+      assert(run(engine, q, k, "wand") == run(engine, q, k, "dataframe"), s"WAND != DataFrame for '$q' k=$k")
     }
   }
 
-  test("okapi topdocs seeding with NEGATIVE idf (df > N/2) stays exact") {
+  test("okapi WAND with NEGATIVE idf (df > N/2) stays exact") {
     import spark.implicits._
     // 'common' matches 2/3 of the corpus: okapi idf < 0, so every score
-    // is negative — a seed built by clamping per-term contributions to 0
-    // produced θ0 = 0 > the true k-th best and WAND returned EMPTY.
-    // Seeding must disable itself (partial knowledge cannot lower-bound
-    // a sum with negative terms) and results must stay exact.
+    // is negative — a threshold built by clamping per-term contributions
+    // to 0 would sit above the true k-th best and return EMPTY
     val docs = (1L to 60L).map { i =>
       val common = if (i <= 40) "common " else ""
       val rare = if (i % 12 == 0) "rare " else ""
@@ -337,38 +308,42 @@ class WandPropertySpec extends AnyFunSuite {
     }.toDF("docId", "content")
     val cfg = IndexConfig(blockSize = 8, numBuckets = 2,
       topdocsMinDf = 5L, topdocsFraction = 0.5)
-    val idx0 = IndexBuilder.build(docs, cfg)
-    val td = IndexBuilder.buildTopdocs(idx0.postings, cfg)
-    assert(td.where(org.apache.spark.sql.functions.col("term") === "common")
-      .count() > 0, "fixture must give 'common' a topdocs list")
-    val engSeeded = new Engine(spark, idx0.copy(topdocs = td.cache()),
+    val engine = new Engine(spark, IndexBuilder.build(docs, cfg),
       Analyzer(), ScoringRule(method = "okapi"))
-    val engPlain = new Engine(spark, idx0, Analyzer(), ScoringRule(method = "okapi"))
     for (q <- Seq("#combine(common)", "#combine(common rare)"); k <- Seq(5, 20)) {
-      val s = run(engSeeded, q, k, "wand")
-      assert(s == run(engPlain, q, k, "wand"), s"seeded != unseeded for '$q' k=$k")
-      assert(s == run(engSeeded, q, k, "dataframe"), s"wand != dataframe for '$q' k=$k")
-      assert(s.nonEmpty, s"'$q' k=$k returned empty — unsound seed")
+      val s = run(engine, q, k, "wand")
+      assert(s == run(engine, q, k, "dataframe"), s"wand != dataframe for '$q' k=$k")
+      assert(s.nonEmpty, s"'$q' k=$k returned empty — unsound threshold")
     }
   }
 
-  test("LM bounds actually prune: seeded dirichlet run decodes fewer blocks") {
-    // the baseMax + δ algebra must yield non-vacuous bounds — with the
-    // exact k-th best as seed, the kernel must skip block decodes on a
-    // mid-frequency term, just like the okapi path
-    val engPlain = new Engine(spark, index, Analyzer(), ScoringRule(method = "dirichlet"))
-    val (p, mkCursors) = kernelFixture(engPlain, ScoringRule(method = "dirichlet"), Seq(midTerm))
-    val k = 5
-    val cCold = mkCursors()
-    val rCold = wandOn(cCold, p, k)
-    val theta0 = rCold.last._2
-    val cSeeded = mkCursors()
-    val rSeeded = wandOn(cSeeded, p, k, seedTheta = theta0)
-    assert(rSeeded == rCold)
-    val dSeeded = cSeeded.map(_.decodedBlocks).sum
-    val dCold = cCold.map(_.decodedBlocks).sum
-    assert(dSeeded < dCold,
-      s"LM seeding decoded $dSeeded blocks vs cold $dCold — bounds are vacuous")
+  test("LM bounds prune: dirichlet WAND decodes fewer blocks than exhaustive") {
+    // the baseMax + δ algebra must yield non-vacuous bounds — the kernel
+    // must skip block decodes on a mid-frequency term, just like the
+    // okapi path
+    val engine = new Engine(spark, index, Analyzer(), ScoringRule(method = "dirichlet"))
+    val (p, mkCursors) = kernelFixture(engine, ScoringRule(method = "dirichlet"), Seq(midTerm))
+    val (dPruned, dFull) = decodes(mkCursors, p, 5)
+    assert(dPruned < dFull,
+      s"LM pruning decoded $dPruned blocks vs exhaustive $dFull — bounds are vacuous")
+
+    // block-max hops rejected blocks undecoded whatever the list bound,
+    // so decode counts cannot tell a vacuous list bound (used by pivot
+    // selection and early termination) from a real one: check the bound
+    // itself — sound over every posting, and no looser than the
+    // (ctf, minDl) corner
+    val l = p.leaves.head
+    val ts = engine.termStatsFor(Seq(midTerm))(midTerm)
+    val minDl = math.max(ts.minDl, 1)
+    val corner = l.effWeight * (l.scoreAt(ts.ctf.toDouble, minDl) - l.scoreAt(0.0, minDl))
+    val c = mkCursors().head
+    var maxDelta = Double.NegativeInfinity
+    while (!c.exhausted) {
+      maxDelta = math.max(maxDelta, l.effWeight * (l.scoreAt(c.tf.toDouble, c.dl) - l.scoreAt(0.0, c.dl)))
+      c.next()
+    }
+    assert(maxDelta <= l.upperBound && l.upperBound <= corner,
+      s"LM list bound ${l.upperBound}: max posting δ $maxDelta, (ctf, minDl) corner $corner")
   }
 
   test("WAND pruning actually skips block decodes on selective queries") {
