@@ -155,7 +155,7 @@ object DumpIndex {
     */
   def expression(spark: SparkSession, repoPath: String, cmd: String,
                  expr: String): DataFrame = {
-    val eng = openEngine(spark, repoPath, Some(expr))
+    val eng = openEngine(spark, repoPath)
     cmd match {
       case "e" => eng.expressionList(expr)
         .select(col("docId"), col("begin").cast(LongType).as("begin"),
@@ -174,13 +174,13 @@ object DumpIndex {
     */
   def documentId(spark: SparkSession, repoPath: String, field: String,
                  values: Seq[String]): DataFrame = {
-    val eng = openEngine(spark, repoPath, None, withDeletes = false)
+    val eng = openEngine(spark, repoPath, withDeletes = false)
     eng.documentIDsFromMetadata(field, values).orderBy("docId")
   }
 
   def documentName(spark: SparkSession, repoPath: String,
                    docIds: Seq[Long]): DataFrame = {
-    val eng = openEngine(spark, repoPath, None, withDeletes = false)
+    val eng = openEngine(spark, repoPath, withDeletes = false)
     import spark.implicits._
     eng.documentMetadata(docIds.toDF("docId"), Seq("docno"))
       .select(col("docId"), col("docno")).orderBy("docId")
@@ -247,9 +247,10 @@ object DumpIndex {
       graft.index.IndexConfig(numBuckets = math.max(merged.numBuckets, 1)))
     // merged metadata (docno lookups): each member's table rebased onto
     // its documentBase — the same shape RunQuery federates at query time
+    val bases = Federation.derivedBases(members)
     val metas = inputs.map(BuildIndex.openMetadata(spark, _))
     if (metas.forall(_.isDefined)) {
-      Federation.derivedBases(members).zip(metas).map { case (b, m) =>
+      bases.zip(metas).map { case (b, m) =>
         m.get.withColumn("docId", col("docId") + lit(b))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
         .write.mode("overwrite").parquet(BuildIndex.metadataDir(out))
@@ -257,7 +258,7 @@ object DumpIndex {
     // merged collection: each member's text rebased like the metadata
     val colls = inputs.map(BuildIndex.openCollection(spark, _))
     if (colls.forall(_.isDefined)) {
-      Federation.derivedBases(members).zip(colls).map { case (b, c) =>
+      bases.zip(colls).map { case (b, c) =>
         c.get.withColumn("docId", col("docId") + lit(b))
       }.reduce(_.unionByName(_))
         .write.mode("overwrite").parquet(BuildIndex.collectionDir(out))
@@ -271,11 +272,12 @@ object DumpIndex {
   private def analyzerOf(repoPath: String): Analyzer =
     BuildIndex.storedAnalyzer(repoPath).getOrElse(Analyzer())
 
-  /** Engine over the stored repo. When `forExpr` is given, postings =
-    * the decoded blocks of that expression's term leaves only (the
-    * pruned scan); else kernel-only (metadata verbs don't read postings).
-    */
-  /** `withDeletes`: pending deletes apply only to the QUERY/expression
+  /** Engine over the stored repo (postings = null): the expression verbs
+    * decode only each term leaf's blocks, since postingsView puts the
+    * term filter on the segments scan; the metadata verbs read no
+    * postings.
+    *
+    * `withDeletes`: pending deletes apply only to the QUERY/expression
     * verbs (e/x/dx) — the metadata/collection verbs (dn/di/dd) read the
     * raw tables until compaction like the reference, whose
     * print_document_name/_text go straight to the CompressedCollection
@@ -283,24 +285,10 @@ object DumpIndex {
     * consults the DeletedDocumentList.
     */
   private def openEngine(spark: SparkSession, repoPath: String,
-                         forExpr: Option[String],
                          withDeletes: Boolean = true): Engine = {
     val st = SegmentStore.open(spark, repoPath)
     val az = analyzerOf(repoPath)
-    val postings = forExpr match {
-      case Some(expr) =>
-        graft.search.QueryParser.termLeaves(expr)
-          .map(_.map(az.processTerm).filter(_ != null).distinct) match {
-          case Some(ts) if ts.nonEmpty =>
-            IndexBuilder.decodePostings(st.segments, ts)
-          case Some(_) => // extent-only expression: no postings touched
-            IndexBuilder.decodePostings(st.segments, Seq(" "))
-          case None => // wildcard: every block is a candidate
-            IndexBuilder.decodePostings(st.segments)
-        }
-      case None => null
-    }
-    val eng = new Engine(spark, st.copy(postings = postings), az, ScoringRule.parse("method:dirichlet"))
+    val eng = new Engine(spark, st, az, ScoringRule.parse("method:dirichlet"))
     BuildIndex.openMetadata(spark, repoPath).foreach(m => eng.setMetadata(m))
     // pending deletes persist under the repo (dumpindex del): the query
     // surfaces consult the DeletedDocumentList like the reference
@@ -356,7 +344,7 @@ object DumpIndex {
       .select(col("docId"), col("content").as("text"))
     if (!withMeta) picked.orderBy("docId")
     else {
-      val eng = openEngine(spark, repoPath, None, withDeletes = false)
+      val eng = openEngine(spark, repoPath, withDeletes = false)
       picked.join(
           eng.documentMetadata(picked.select("docId"), Seq("docno")),
           Seq("docId"), "left")

@@ -231,21 +231,19 @@ object RunQuery {
         "always wrong; rebuild the odd member or align the chains")
     val az = if (chains.nonEmpty) chains.head else analyzer
     val eng = environmentFor(spark, idx, p, az)
+    // every side table of a federated member rebases onto its
+    // documentBase
+    val bases =
+      if (members.size == 1) Seq(0L) else Federation.derivedBases(members)
     val metas = p.indexPaths.map(BuildIndex.openMetadata(spark, _))
     if (metas.forall(_.isDefined)) {
       val rebased =
         if (members.size == 1) metas.head.get
-        else Federation.derivedBases(members).zip(metas).map { case (b, m) =>
+        else bases.zip(metas).map { case (b, m) =>
           m.get.withColumn("docId", col("docId") + lit(b))
         }.reduce(_.unionByName(_, allowMissingColumns = true))
       eng.setMetadata(rebased)
     }
-    // priors installed by MakePrior attach by name; docs outside a
-    // member's table carry the reference lowProbability default, and
-    // federated members rebase like metadata (a prior name present in
-    // SOME members still covers the others through the default)
-    val bases =
-      if (members.size == 1) Seq(0L) else Federation.derivedBases(members)
     // pending deletes persisted by `dumpindex del` (the reference's
     // on-disk DeletedDocumentList): every member's list attaches,
     // rebased like metadata, until a compact releases it
@@ -262,6 +260,10 @@ object RunQuery {
     }
     if (colls.size == p.indexPaths.size)
       eng.setCollection(colls.reduce(_ unionByName _))
+    // priors installed by MakePrior attach by name; docs outside a
+    // member's table carry the reference lowProbability default, and
+    // federated members rebase like metadata (a prior name present in
+    // SOME members still covers the others through the default)
     val priorNames = p.indexPaths.flatMap(MakePrior.storedPriors).distinct
     for (name <- priorNames) {
       val tables = p.indexPaths.zip(bases).flatMap { case (dir, b) =>

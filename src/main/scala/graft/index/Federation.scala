@@ -51,64 +51,60 @@ object Federation {
 
   /** The documentBase `combine(indexes)` derives for each member — for
     * rebasing per-member side tables (metadata) onto the federation's
-    * global id space. Mirrors combineWithBases' scanLeft: each base is
-    * past the previous non-empty member's max docId; zero-doc members
-    * contribute nothing and inherit the running base.
+    * global id space: [[packedBases]] over the members' docId ranges.
     */
-  def derivedBases(indexes: Seq[InvertedIndex]): Seq[Long] = {
+  def derivedBases(indexes: Seq[InvertedIndex]): Seq[Long] = packedBases(indexes.map(docRange))
+
+  /** one tiny probe: a member's local (min, max) docId; None for a
+    * zero-doc member, which is not probed
+    */
+  private def docRange(ix: InvertedIndex): Option[(Long, Long)] =
+    if (ix.stats.totalDocs == 0) None
+    else {
+      val r = ix.doclens.agg(min(col("docId")), max(col("docId"))).head()
+      Some((r.getLong(0), r.getLong(1)))
+    }
+
+  /** Tight packing of member docId ranges (None = a zero-doc member): each
+    * base puts the member's local min just past the previous non-empty
+    * member's global max, and a zero-doc member inherits the running base
+    * (it has no rows to rebase). The 0-based +1 adjustment keys on the
+    * member BEING PLACED — keyed on the previous member, a 0-based member
+    * following a 1-based one would land ON the previous max.
+    */
+  private def packedBases(ranges: Seq[Option[(Long, Long)]]): Seq[Long] = {
     var top = 0L // global max docId placed so far
     var first = true
-    indexes.map { ix =>
-      if (ix.stats.totalDocs == 0) { if (first) 0L else top } // no rows to rebase
-      else {
-        val r = ix.doclens.agg(min(col("docId")), max(col("docId"))).head()
-        // the 0-based +1 adjustment keys on the member BEING PLACED (its
-        // own min), not the previous one — keying on the previous member
-        // would collide a 0-based member following a 1-based one
-        val base = if (first) 0L else top + (if (r.getLong(0) >= 1L) 0L else 1L)
-        first = false
-        top = base + r.getLong(1)
-        base
-      }
-    }
-  }
-
-  private def combineWithBases(indexes0: Seq[InvertedIndex],
-                               bases0: Option[Seq[Long]]): InvertedIndex = {
-    require(indexes0.nonEmpty, "federation needs at least one member index")
-    bases0.foreach(b => require(b.length == indexes0.length,
-      s"documentBases size ${b.length} != ${indexes0.length} members"))
-    val members0 = indexes0.zip(bases0.getOrElse(indexes0.map(_ => 0L)))
-    val members = members0.filter(_._1.stats.totalDocs > 0)
-    if (members.isEmpty) return indexes0.head
-    if (members.size == 1 && bases0.isEmpty) return members.head._1
-
-    // one tiny probe per member: local docId range (for base derivation +
-    // disjointness) and the bucket count when the handle doesn't carry it
-    val ranges = members.map { case (ix, _) =>
-      val r = ix.doclens.agg(min(col("docId")), max(col("docId"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val numBucketsPer = members.map { case (ix, _) =>
-      if (ix.numBuckets > 0) ix.numBuckets
-      else ix.segments.agg(coalesce(max(col("bucket")), lit(0))).head().getInt(0) + 1
-    }
-
-    val bases: Seq[Long] = bases0.getOrElse {
-      // tight packing: each member's base puts its local min just past
-      // the previous member's global max. The 0-based +1 adjustment
-      // keys on the member BEING PLACED — keyed on the previous member
-      // (the old scanLeft) a 0-based member following a 1-based one
-      // landed ON the previous max and the disjointness check threw.
-      var top = 0L
-      var first = true
-      ranges.map { case (mn, mx) =>
+    ranges.map {
+      case None => if (first) 0L else top
+      case Some((mn, mx)) =>
         val base = if (first) 0L else top + (if (mn >= 1L) 0L else 1L)
         first = false
         top = base + mx
         base
-      }
     }
+  }
+
+  private def combineWithBases(indexes: Seq[InvertedIndex],
+                               bases0: Option[Seq[Long]]): InvertedIndex = {
+    require(indexes.nonEmpty, "federation needs at least one member index")
+    bases0.foreach(b => require(b.length == indexes.length,
+      s"documentBases size ${b.length} != ${indexes.length} members"))
+    val live = indexes.filter(_.stats.totalDocs > 0)
+    if (live.isEmpty) return indexes.head
+    if (live.size == 1 && bases0.isEmpty) return live.head
+
+    // local docId ranges, for base derivation + disjointness
+    val allRanges = indexes.map(docRange)
+    // every member keeps its OWN base; zero-doc members drop out here
+    val (members, bases, ranges) = indexes.zip(bases0.getOrElse(packedBases(allRanges)))
+      .zip(allRanges).collect { case ((ix, b), Some(r)) => (ix, b, r) }.unzip3
+    // the bucket count when the handle doesn't carry it
+    val numBucketsPer = members.map { ix =>
+      if (ix.numBuckets > 0) ix.numBuckets
+      else ix.segments.agg(coalesce(max(col("bucket")), lit(0))).head().getInt(0) + 1
+    }
+
     val globalRanges = ranges.zip(bases).map { case ((mn, mx), b) => (mn + b, mx + b) }
     globalRanges.sortBy(_._1).sliding(2).foreach {
       case Seq((_, hi), (lo2, _)) =>
@@ -126,20 +122,18 @@ object Federation {
     // stored handles open with postings = null (DAAT-kernel-only view);
     // a federation of such members stays kernel-only the same way
     val postings =
-      if (members.exists(_._1.postings == null)) null
-      else members.zip(bases).map { case ((ix, _), b) =>
-        shiftDoc(ix.postings, b)
-      }.reduce(_ unionByName _)
-    val doclens = members.zip(bases).map { case ((ix, _), b) =>
-      shiftDoc(ix.doclens, b)
-    }.reduce(_ unionByName _)
+      if (members.exists(_.postings == null)) null
+      else members.zip(bases).map { case (ix, b) => shiftDoc(ix.postings, b) }
+        .reduce(_ unionByName _)
+    val doclens = members.zip(bases).map { case (ix, b) => shiftDoc(ix.doclens, b) }
+      .reduce(_ unionByName _)
 
     // merged dictionary: df/ctf sum, length bounds combine — the summed
     // ContextSimpleCount stats (reference: src/QueryEnvironment.cpp:957-965
     // _sumServerQuery), which the term stats of the resident block maps
     // over the unioned segments sum to as well (Daat.stats). Persisted:
     // counted here and read again by the dictionary's DataFrame readers.
-    val dictionary = members.map(_._1.dictionary).reduce(_ unionByName _)
+    val dictionary = members.map(_.dictionary).reduce(_ unionByName _)
       .groupBy("term").agg(
         sum(col("df")).as("df"),
         sum(col("ctf")).as("ctf"),
@@ -148,8 +142,8 @@ object Federation {
       .persist()
     val uniqueTerms = dictionary.count()
     val stats = CorpusStats(
-      totalDocs = members.map(_._1.stats.totalDocs).sum,
-      totalTerms = members.map(_._1.stats.totalTerms).sum,
+      totalDocs = members.map(_.stats.totalDocs).sum,
+      totalTerms = members.map(_.stats.totalTerms).sum,
       uniqueTerms = uniqueTerms)
 
     // segment blocks: docId range + first-varint rebase, bucket ids onto
@@ -157,7 +151,7 @@ object Federation {
     // the resident block maps place every block by its bucket
     // (Daat.residentBlocks).
     val segments = members.zip(bases).zip(bucketBases).map {
-      case (((ix, _), b), bb) =>
+      case ((ix, b), bb) =>
         val rebase = udf((bytes: Array[Byte]) => BlockCodec.rebaseDeltas(bytes, b))
         ix.segments.select(
           col("term"),
@@ -170,15 +164,14 @@ object Federation {
     }.reduce(_ unionByName _).persist()
     val totalBuckets = numBucketsPer.sum
 
-    val fieldFlags = members.map(_._1.fieldExtents == null).distinct
+    val fieldFlags = members.map(_.fieldExtents == null).distinct
     require(fieldFlags.size == 1,
       "all federation members must share the field configuration " +
         "(some carry field extents, some do not)")
     val fieldExtents =
-      if (members.head._1.fieldExtents == null) null
-      else members.zip(bases).map { case ((ix, _), b) =>
-        shiftDoc(ix.fieldExtents, b)
-      }.reduce(_ unionByName _)
+      if (members.head.fieldExtents == null) null
+      else members.zip(bases).map { case (ix, b) => shiftDoc(ix.fieldExtents, b) }
+        .reduce(_ unionByName _)
 
     InvertedIndex(postings, dictionary, doclens, stats, segments,
       fieldExtents, numBuckets = totalBuckets)

@@ -1283,36 +1283,38 @@ final class Engine(
     * non-negative weights (at least one positive) over terms and
     * #odN/#uwN windows of plain terms — flat bags and SDM/FDM alike —
     * dispatch to the block-max WAND DAAT kernel over the compressed
-    * segments (the max-score physical path); everything else evaluates
-    * on the DataFrame inference-network path. Both produce bit-identical
-    * scores (WandPropertySpec). A kernel result is computed at call time
-    * — two jobs over the index's resident block maps, the stats job and
-    * the kernel job — and returned as a local DataFrame; a belief-path
-    * result is a lazy plan that runs when collected.
+    * segments (the max-score physical path); an extent restriction
+    * (`#combine[f](…)`, `#combine[passageW:I](…)`) runs [[extentPlan]]
+    * and returns ranked extents; everything else
+    * evaluates on the DataFrame inference-network path. Kernel and
+    * belief path produce bit-identical scores (WandPropertySpec). A
+    * kernel result is computed at call time — two jobs over the index's
+    * resident block maps, the stats job and the kernel job — and
+    * returned as a local DataFrame; a belief-path result is a lazy plan
+    * that runs when collected.
     */
   def runQuery(query: String, k: Int, useDaat: Boolean = true): DataFrame =
-    runParsed(QueryParser.parse(query), k, useDaat)
+    runBatch(Seq(QueryParser.parse(query)), k, useDaat, deletes).head
 
-  /** AST-level entry — callers that BUILD nodes (the NEXI CO path) must
-    * not round-trip through query-string rendering: a term like
-    * 'node.js' would re-lex with indri DOT-qualifier semantics.
+  /** runQuery restricted to a working set of docIds — the FilterNode
+    * wrap (reference: QueryEnvironment::_scoredQuery adds FilterNode,
+    * src/QueryEnvironment.cpp:694-707): a batch of one on the belief
+    * path, semi-joined to the set before the top-k.
     */
-  private[graft] def runParsed(ast: QueryNode, k: Int,
-                               useDaat: Boolean = true): DataFrame =
-    runBatch(Seq(ast), k, useDaat, deletes).head
+  def runQuery(query: String, k: Int, workingSet: DataFrame): DataFrame =
+    runBatch(Seq(QueryParser.parse(query)), k, useDaat = true, deletes, Some(workingSet)).head
 
   private def lmMethod: Boolean =
     rule.method == "dirichlet" || rule.method == "jm" || rule.method == "two"
 
-  /** deleted-doc filter + final (score desc, docId asc) top-k on a
-    * belief — the belief-path tail of runBatch
+  /** deleted-doc filter, working-set semi-join and final (score desc,
+    * docId asc) top-k on a belief — the belief-path tail of runBatch
     */
-  private def scoredTail(belief: Belief, k: Int, ds: Deletes): DataFrame = {
-    val scored = ds.docs match {
-      case Some(d) => belief.df.join(d, Seq("docId"), "left_anti")
-      case None => belief.df
-    }
-    scored
+  private def scoredTail(belief: Belief, k: Int, ds: Deletes,
+                         workingSet: Option[DataFrame]): DataFrame = {
+    val live = notDeleted(belief.df, ds)
+    workingSet.fold(live)(ws => live.join(
+      ws.select(col(ws.columns.head).cast(LongType).as("docId")), Seq("docId"), "left_semi"))
       .select(col("docId"), col("score"))
       .orderBy(col("score").desc, col("docId").asc)
       .limit(k)
@@ -1323,16 +1325,19 @@ final class Engine(
     * IndriRunQuery drives query batches against a shared
     * QueryEnvironment, runquery/IndriRunQuery.cpp:710-726). On Spark the
     * driver-blocking stats rounds are the per-query latency floor, so a
-    * B-query batch pays each round once instead of B times. Kernel
-    * queries run here, at call time, one kernel job each after the
-    * batch's one stats job, and come back as local DataFrames;
+    * B-query batch pays each round once instead of B times. Kernel and
+    * extent-kernel queries run here, at call time, one job each after
+    * the batch's one stats job, and come back as local DataFrames;
     * belief-path queries come back as lazy plans.
     */
   def runQueries(queries: Seq[String], k: Int, useDaat: Boolean = true): Seq[(String, DataFrame)] =
     queries.zip(runBatch(queries.map(QueryParser.parse), k, useDaat, deletes))
 
-  /** The one query body of runQuery, runParsed, runQueries and
-    * runStructured. A batch runs
+  /** The one query body of every ranked verb: runQuery (with or without
+    * a working set), runQueries, runExtentQuery, runStructured and
+    * runNexi's CO queries (reference: QueryEnvironment::runQuery, one
+    * statistics round then one scored round,
+    * src/QueryEnvironment.cpp:672-735,957-988). A batch runs
     *  - one [[Daat.stats]] job over the resident block maps for the term
     *    stats of every term leaf of every query and the delete-aware
     *    counts of the distinct windows of every kernel plan (the
@@ -1341,13 +1346,17 @@ final class Engine(
     *    neither;
     *  - one SQL stats round over the belief-path queries' complex leaves,
     *    when there are any;
-    *  - then, per kernel query, one [[Daat.topK]] job; per belief-path
-    *    query, its lazy plan.
+    *  - then per query one of three plans, all fed by the same term
+    *    stats: a kernel query runs one [[Daat.topK]] job; an extent
+    *    restriction runs [[extentPlan]]; any other query, and every
+    *    query under a `workingSet`, returns its lazy belief plan.
     * Every query of the batch sees the one delete snapshot `ds`.
     */
   private def runBatch(asts: Seq[QueryNode], k: Int, useDaat: Boolean, ds: Deletes,
+                       workingSet: Option[DataFrame] = None,
                        exhaustive: Boolean = false): Seq[DataFrame] = {
-    val kernel = asts.map(a => if (useDaat && structuredServes(a, ds)) Some(kernelLeaves(a)) else None)
+    val kernel = asts.map(a =>
+      if (useDaat && workingSet.isEmpty && structuredServes(a, ds)) Some(kernelLeaves(a)) else None)
     val windows = kernel.flatten.flatMap(_.metas.collect { case WinLeafM(s) => s })
     // a window is only ever a kernel leaf, and the kernel runs only with
     // a delete set
@@ -1358,7 +1367,9 @@ final class Engine(
       asts.zip(kernel).collect { case (a, None) => complexRawLeaves(a) }.flatten)
     asts.zip(kernel).map {
       case (_, Some(kl)) => runKernel(kl, tstats, wstats, k, exhaustive, ds.set.get)
-      case (a, None) => scoredTail(evaluateWith(a, tstats, cstats, root = true), k, ds)
+      case (er: ExtentRestrictNode, _) if workingSet.isEmpty =>
+        extentPlan(er, tstats, k, useDaat, ds)
+      case (a, _) => scoredTail(evaluateWith(a, tstats, cstats, root = true), k, ds, workingSet)
     }
   }
 
@@ -1510,29 +1521,37 @@ final class Engine(
   private[graft] def runStructured(ast: QueryNode, k: Int,
                                    exhaustive: Boolean = false): Option[DataFrame] = {
     val ds = deletes
-    if (structuredServes(ast, ds)) Some(runBatch(Seq(ast), k, useDaat = true, ds, exhaustive).head)
+    if (structuredServes(ast, ds))
+      Some(runBatch(Seq(ast), k, useDaat = true, ds, exhaustive = exhaustive).head)
     else None
   }
 
   /** Extent-restricted retrieval `#combine[f](…)` / `#combine[passageW:I](…)`:
-    * every extent of the field (or every fixed sliding passage) in a
-    * candidate document is scored as its own context — tf counted inside
-    * the extent, contextSize = extent length — and ranked extents are
-    * returned (reference: ExtentRestrictionNode/FixedPassageNode,
-    * src/InferenceNetworkBuilder.cpp:152-185; ListBeliefNode scores with
-    * the extent as context, src/ListBeliefNode.cpp:119-127). Candidate
-    * docs = docs with ≥1 query-term occurrence (the WeightedAnd union).
-    *
-    * Child shape: flat #combine of terms (the passage-retrieval shape);
-    * the okapi/tfidf baseline rejects extent restrictions exactly like
-    * the reference (src/QueryEnvironment.cpp:912-918).
+    * a batch of one through [[runBatch]], which runs [[extentPlan]]
+    * (runQuery and runQueries take the same path).
     */
   def runExtentQuery(query: String, k: Int, useDaat: Boolean = true): DataFrame = {
     val ast = QueryParser.parse(query)
-    val er = ast match {
-      case e: ExtentRestrictNode => e
-      case _ => throw new IllegalArgumentException(s"not an extent-restricted query: $query")
-    }
+    require(ast.isInstanceOf[ExtentRestrictNode], s"not an extent-restricted query: $query")
+    runBatch(Seq(ast), k, useDaat, deletes).head
+  }
+
+  /** The extent plan of [[runBatch]]: every extent of the field (or
+    * every fixed sliding passage) in a candidate document is scored as
+    * its own context — tf counted inside the extent, contextSize =
+    * extent length — and ranked extents are returned (reference:
+    * ExtentRestrictionNode/FixedPassageNode,
+    * src/InferenceNetworkBuilder.cpp:152-185; ListBeliefNode scores with
+    * the extent as context, src/ListBeliefNode.cpp:119-127). Candidate
+    * docs = docs with ≥1 query-term occurrence (the WeightedAnd union).
+    * The term stats are the batch's.
+    *
+    * Child shape: flat term bags (the passage-retrieval shape); the
+    * okapi/tfidf baseline rejects extent restrictions exactly like the
+    * reference (src/QueryEnvironment.cpp:912-918).
+    */
+  private def extentPlan(er: ExtentRestrictNode, tstats: Map[String, TermStats], k: Int,
+                         useDaat: Boolean, ds: Deletes): DataFrame = {
     require(!baseline, "extent restriction is rejected in okapi/tfidf baseline mode " +
       "(reference: src/QueryEnvironment.cpp:912-918) — use an LM rule")
     // flat term bags under any restricted belief op (reference:
@@ -1546,57 +1565,46 @@ final class Engine(
       case other => throw new IllegalArgumentException(
         s"extent restriction supports flat term bags, got $other")
     }
-    val (childGroups, groupOp, weights, gweights):
-        (Seq[Seq[String]], Option[String], Option[Seq[Double]], Option[Seq[Double]]) =
-      er.child match {
-        case TermNode(t) => (Seq(Seq(t)), None, None, None)
-        case CombineNode(cs) => (Seq(terms(cs)), None, None, None)
-        case WeightNode(cs) =>
-          val total = cs.map(c => math.abs(c._1)).sum
-          (Seq(terms(cs.map(_._2))), None, Some(cs.map(_._1 / total)), None)
-        case OrQNode(cs) => (terms(cs).map(Seq(_)), Some("or"), None, None)
-        case MaxQNode(cs) => (terms(cs).map(Seq(_)), Some("max"), None, None)
-        case SumNode(cs) =>
-          // #sum = unweighted #wsum (1/k group weights)
-          (terms(cs).map(Seq(_)), Some("wsum"), None,
-            Some(cs.map(_ => 1.0 / cs.size)))
-        case WsumNode(cs) =>
-          val total = cs.map(c => math.abs(c._1)).sum
-          (terms(cs.map(_._2)).map(Seq(_)), Some("wsum"), None,
-            Some(cs.map(_._1 / total)))
-        case NotQNode(c) => (Seq(terms(Seq(c))), Some("not"), None, None)
-        case other => throw new IllegalArgumentException(
-          s"extent restriction supports flat term bags, got $other")
-      }
+    def normalized(ws: Seq[Double]): Option[Seq[Double]] = {
+      val total = ws.map(math.abs).sum
+      Some(ws.map(_ / total))
+    }
+    // (child groups, group op, child weights — default 1/|group|, group
+    // weights — default 1/#groups)
+    val (childGroups, op, weights, gweights) = er.child match {
+      case TermNode(t) => (Seq(Seq(t)), "combine", None, None)
+      case CombineNode(cs) => (Seq(terms(cs)), "combine", None, None)
+      case WeightNode(cs) => (Seq(terms(cs.map(_._2))), "combine", normalized(cs.map(_._1)), None)
+      case OrQNode(cs) => (terms(cs).map(Seq(_)), "or", None, None)
+      case MaxQNode(cs) => (terms(cs).map(Seq(_)), "max", None, None)
+      // #sum = unweighted #wsum: the default 1/k group weights
+      case SumNode(cs) => (terms(cs).map(Seq(_)), "wsum", None, None)
+      case WsumNode(cs) => (terms(cs.map(_._2)).map(Seq(_)), "wsum", None, normalized(cs.map(_._1)))
+      case NotQNode(c) => (Seq(terms(Seq(c))), "not", None, None)
+      case other => throw new IllegalArgumentException(
+        s"extent restriction supports flat term bags, got $other")
+    }
     // per-field rule lists see the restriction field as the scorer
     // context; FixedPassageNode contexts are not fields → "?"
-    val ctxF = if (er.passage.isEmpty) er.field else "?"
+    val prep = prepLeaves(childGroups.flatten.map(NexiParser.PlainTerm), _ => tstats,
+      if (er.passage.isEmpty) er.field else "?")
+    val nGroups = childGroups.length
+    // a child the index lacks never matches: it stays null (its scorer is
+    // the background fill-in), and with no child left the kernel runs no
+    // job
+    val childTerm = childGroups.flatten
+      .map(t => Option(analyzer.processTerm(t)).filter(tstats.contains).orNull)
+    val plan = Daat.ExtentPlan(childTerm.toArray, prep.fns,
+      weights.getOrElse(childGroups.flatMap(g => g.map(_ => 1.0 / g.length))).toArray,
+      childGroups.zipWithIndex.flatMap { case (g, gi) => g.map(_ => gi) }.toArray,
+      nGroups, op,
+      gweights.getOrElse(Seq.fill(nGroups)(1.0 / nGroups)).toArray)
     // the extent-enumerating DAAT kernel is the default plan: one job
     // over the resident block maps (and, for a field, the resident
     // extents), positions decode in-task and only partition-local top-k
     // extents reach the driver merge. Falls back to the DataFrame path
     // when the delete list outgrows the kernel bitmap.
-    val ds = deletes
     if (useDaat && ds.set.isDefined) {
-      val prep = prepLeaves(childGroups.flatten.map(NexiParser.PlainTerm), ctxF)
-      val nChildren = prep.fns.length
-      val childTerm = new Array[String](nChildren)
-      // a child the index lacks never matches: it stays null (its
-      // scorer is the background fill-in), and with no child left the
-      // kernel runs no job
-      prep.keyIdx.foreach { case (t, cis) =>
-        if (prep.indexed(t)) cis.foreach(ci => childTerm(ci) = t) }
-      val wChild: Array[Double] = weights match {
-        case Some(ws) => ws.toArray
-        case None => childGroups.flatMap(g => g.map(_ => 1.0 / g.length)).toArray
-      }
-      val groupOf: Array[Int] = childGroups.zipWithIndex
-        .flatMap { case (g, gi) => g.map(_ => gi) }.toArray
-      val nGroups = childGroups.length
-      val gw: Array[Double] = gweights
-        .map(_.toArray).getOrElse(Array.fill(nGroups)(1.0 / nGroups))
-      val plan = Daat.ExtentPlan(childTerm, prep.fns, wChild, groupOf, nGroups,
-        groupOp.getOrElse("combine"), gw)
       // fieldExtents fails fast on an index without fields, like the
       // DataFrame path, even when no query term is in the vocabulary
       val field = if (er.passage.isDefined) null else { fieldExtents; er.field }
@@ -1609,16 +1617,16 @@ final class Engine(
           .groupBy("docId").agg(
             sort_array(collect_list(struct(col("begin"), col("end")))).as("ex"))
     }
-    scoreExtentContexts(childGroups, groupOp, fx, er.passage, k, weights, gweights,
-      ctxF, ds)
+    scoreExtentContexts(plan, prep.perDoc, fx, er.passage, k, ds)
   }
 
   /** Shared clause-belief scaffold, generalized to structured NEXI term
     * leaves: per-child scorers (OOV/stopped children get the cf-guarded
     * TermStats(0,0) scorer), the processed-term → child-index map, and
     * the per-doc (term → positions) postings map for the live terms —
-    * used by the extent-restriction DataFrame path and the NEXI CAS
-    * scorer so the OOV guard and stats probe live in ONE place; the
+    * used by the extent plan and the NEXI CAS scorer so the OOV guard
+    * lives in ONE place. Term stats come from `statsOf`: the batch's map
+    * for an extent plan, [[termStatsFor]] (one job) for NEXI CAS. The
     * FP-sensitive fold arithmetic stays at each call site
     * (reference: nexilang.g:439-480): phrase leaves evaluate as
     * exact-adjacency ODNodes whose per-doc match begins join the
@@ -1635,16 +1643,16 @@ final class Engine(
     */
   private final class LeafPrep(
       val fns: Array[TermScoreFunction], val keyIdx: Map[String, Seq[Int]],
-      val lens: Array[Int], val negs: Array[Boolean], val indexed: Set[String],
+      val lens: Array[Int], val negs: Array[Boolean],
       perDocPlan: => DataFrame) {
     /** the per-doc (term → positions) map, planned on first use: the
-      * extent kernel reads only the scorers, the child map and the
-      * indexed terms
+      * extent kernel reads only the scorers
       */
     lazy val perDoc: DataFrame = perDocPlan
   }
 
   private def prepLeaves(leaves: Seq[NexiParser.NexiTerm],
+                         statsOf: Seq[String] => Map[String, TermStats],
                          ctxField: String = "?",
                          ctxFields: Seq[String] = null): LeafPrep = {
     // per-leaf scoring context for field: selector rules — a relative
@@ -1666,7 +1674,7 @@ final class Engine(
       case (NotTerm(_), _) => Left(null) // unreachable (required above)
     }
     val livePlain = processed.collect { case Left(t) if t != null => t }.distinct
-    val tstats = termStatsFor(livePlain)
+    val tstats = statsOf(livePlain)
     val odByChild: Map[Int, OdNode] = processed.zipWithIndex.collect {
       case (Right(ts), i) if ts.nonEmpty && ts.forall(_ != null) =>
         // ts are ALREADY processed — mark them stemmed so evaluateRaw/
@@ -1713,48 +1721,30 @@ final class Engine(
           .agg(map_from_entries(collect_list(struct(col("term"), col("positions")))).as("tp")))
         .orNull
     }
-    new LeafPrep(fns, keyIdx, lens, negs, tstats.keySet, perDoc)
+    new LeafPrep(fns, keyIdx, lens, negs, perDoc)
   }
 
-  /** The DataFrame plan of [[runExtentQuery]] (taken when `useDaat` is
-    * off or the delete list outgrows the DAAT kernel's bitmap; the path
+  /** The DataFrame plan of [[extentPlan]] (taken when `useDaat` is off
+    * or the delete list outgrows the DAAT kernel's bitmap; the path
     * `Daat.topKExtents` is pinned against): every extent (or sliding
-    * passage) of a candidate document is scored as its own context.
+    * passage) of a candidate document is scored as its own context with
+    * the kernel's [[Daat.ExtentPlan]] — each group one term-bag belief
+    * over its children weighted by `wChild` inside the extent, groups
+    * folded with the restricted belief op: "or" → OrNode
+    * log(1−Π(1−exp(s))), "max" → MaxNode, "wsum" → log(Σ w·exp(s)) over
+    * `gw`, "not" → NotNode over the single group, "combine" →
+    * CombineNode 1/k mean of logs.
     *
-    * Each group in `childGroups` is one term-bag belief, its children
-    * weighted by `weights` (default 1/|group|) inside the extent;
-    * `groupOp` folds multiple groups with the restricted belief op —
-    * "or" → OrNode log(1−Π(1−exp(s))), "max" → MaxNode, "wsum" →
-    * log(Σ w·exp(s)) over `groupWeights`, "not" → NotNode over the single
-    * group, anything else → CombineNode 1/k mean of logs.
-    *
+    * @param perDoc       (docId, tp: term → positions) of the candidate
+    *                     docs; null when no child is live
     * @param extentsByDoc (docId, ex: array<struct<begin,end>>); null when
     *                     `passage` drives the contexts instead
     */
-  private def scoreExtentContexts(childGroups: Seq[Seq[String]],
-                                  groupOp: Option[String],
+  private def scoreExtentContexts(p: Daat.ExtentPlan, perDoc: DataFrame,
                                   extentsByDoc: DataFrame,
                                   passage: Option[(Int, Int)],
-                                  k: Int,
-                                  weights: Option[Seq[Double]],
-                                  groupWeights: Option[Seq[Double]],
-                                  ctxField: String, ds: Deletes): DataFrame = {
-    val prep = prepLeaves(childGroups.flatten.map(NexiParser.PlainTerm), ctxField)
-    val fns = prep.fns
-    val termIdx = prep.keyIdx
-    val groupOf: Array[Int] = childGroups.zipWithIndex
-      .flatMap { case (g, gi) => g.map(_ => gi) }.toArray
-    val wChild: Array[Double] = weights match {
-      case Some(ws) => ws.toArray
-      case None => childGroups.flatMap(g => g.map(_ => 1.0 / g.length)).toArray
-    }
-    val nGroups = childGroups.length
-    val op: String = groupOp.getOrElse("combine")
-    val gw: Array[Double] = groupWeights
-      .map(_.toArray).getOrElse(Array.fill(nGroups)(1.0 / nGroups))
-    if (prep.perDoc == null) return emptyExtents
-    val perDoc = prep.perDoc
-
+                                  k: Int, ds: Deletes): DataFrame = {
+    if (perDoc == null) return emptyExtents
     val extentsDf = passage match {
       case Some((width, inc)) =>
         // fixed sliding passages over [0, doclen) (FixedPassageNode)
@@ -1768,41 +1758,27 @@ final class Engine(
         perDoc.join(extentsByDoc, Seq("docId"), "inner")
           .select(col("docId"), col("tp"), col("ex"))
     }
-    val bcGw = spark.sparkContext.broadcast(gw)
-    val bcOp = spark.sparkContext.broadcast(op)
-
-    val bcFns = spark.sparkContext.broadcast(fns)
-    val bcIdx = spark.sparkContext.broadcast(termIdx)
-    val bcGroupOf = spark.sparkContext.broadcast(groupOf)
-    val bcWChild = spark.sparkContext.broadcast(wChild)
+    // the UDF captures the plan alone, never the Engine (see CombineOps)
     val scoreUdf = udf { (tp: Map[String, Seq[Int]], bs: Seq[Int], es: Seq[Int]) =>
-      val fs = bcFns.value
-      val tIdx = bcIdx.value
-      val gOf = bcGroupOf.value
-      val wc = bcWChild.value
+      val nGroups = p.nGroups
+      val childPs = p.childTerm.map(t => if (t == null) null else tp.getOrElse(t, null))
       bs.indices.map { i =>
         val b = bs(i); val e = es(i)
         val ctx = e - b
-        var child = 0
-        val tfByChild = new Array[Int](fs.length)
-        tp.foreach { case (t, ps) =>
-          tIdx.getOrElse(t, Nil).foreach { ci =>
-            var c = 0
-            var lastEnd = 0
-            // containment of a term match at p in [b, e), counted under
-            // the greedy non-overlap scan (reference ListBeliefNode rule)
-            ps.foreach { p =>
-              if (p >= b && p < e && p >= lastEnd) { c += 1; lastEnd = p + 1 } }
-            tfByChild(ci) = c
-          }
-        }
         val groupScore = new Array[Double](nGroups)
-        while (child < fs.length) {
-          groupScore(gOf(child)) +=
-            wc(child) * fs(child).scoreOccurrence(tfByChild(child).toDouble, ctx)
+        var child = 0
+        while (child < p.fns.length) {
+          var tf = 0
+          var lastEnd = 0
+          // containment of a term match at q in [b, e), counted under
+          // the greedy non-overlap scan (reference ListBeliefNode rule)
+          if (childPs(child) != null) childPs(child).foreach { q =>
+            if (q >= b && q < e && q >= lastEnd) { tf += 1; lastEnd = q + 1 } }
+          groupScore(p.groupOf(child)) +=
+            p.wChild(child) * p.fns(child).scoreOccurrence(tf.toDouble, ctx)
           child += 1
         }
-        val acc = bcOp.value match {
+        val acc = p.op match {
           case "or" | "combine" if nGroups == 1 => groupScore(0)
           case "or" => // OrNode fold
             var notAny = 1.0; var g = 0
@@ -1815,18 +1791,14 @@ final class Engine(
           case "wsum" => // WSumNode fold: log(Σ w·exp(s)) with the
             // |w|-normalized group weights (reference: src/WSumNode.cpp)
             var s = 0.0; var g = 0
-            val w = bcGw.value
-            while (g < nGroups) { s += w(g) * math.exp(groupScore(g)); g += 1 }
+            while (g < nGroups) { s += p.gw(g) * math.exp(groupScore(g)); g += 1 }
             math.log(s)
           case "not" => // NotNode over the single group
             math.log1p(-math.exp(groupScore(0)))
-          case _ =>
-            if (nGroups == 1) groupScore(0)
-            else { // CombineNode 1/k fold
-              var s = 0.0; var g = 0
-              while (g < nGroups) { s += groupScore(g) / nGroups; g += 1 }
-              s
-            }
+          case _ => // CombineNode 1/k fold
+            var s = 0.0; var g = 0
+            while (g < nGroups) { s += groupScore(g) / nGroups; g += 1 }
+            s
         }
         (b, e, acc)
       }
@@ -1960,8 +1932,8 @@ final class Engine(
   /** NEXI retrieval with an optional working set — the reference's
     * runQuery(query, docids, k, "nexi") FilterNode restriction
     * (src/QueryEnvironment.cpp:694-707): CAS target extents filter to
-    * the named documents BEFORE scoring/top-k, CO queries ride the
-    * working-set runQuery overload.
+    * the named documents BEFORE scoring/top-k, CO queries run through
+    * [[runBatch]] with the working set, like the working-set runQuery.
     */
   def runNexi(query: String, k: Int, workingSet: Option[DataFrame]): DataFrame = {
     def restricted(path: Seq[String]): DataFrame = workingSet match {
@@ -1990,10 +1962,7 @@ final class Engine(
         "NEXI negated terms use the #not log-probability transform — " +
         "rejected in okapi/tfidf baseline mode; use an LM rule")
       val ast = CombineNode(flat.map(toNode))
-      return workingSet match {
-        case Some(ws) => runParsedWs(ast, k, ws)
-        case None => runParsed(ast, k)
-      }
+      return runBatch(Seq(ast), k, useDaat = true, deletes, workingSet).head
     }
     require(!baseline, "NEXI CAS scoring uses extent contexts — rejected in " +
       "okapi/tfidf baseline mode like extent restriction; use an LM rule")
@@ -2035,7 +2004,7 @@ final class Engine(
     // term-leaf children of the about clauses, scored in the relative
     // field's context when there is one, else in the level's target
     val prep = prepLeaves(
-      cls.flatMap { case AboutClause(_, ls) => ls; case _ => Nil },
+      cls.flatMap { case AboutClause(_, ls) => ls; case _ => Nil }, termStatsFor,
       ctxFields = cls.zipWithIndex.flatMap {
         case (AboutClause(rel, ls), gi) => ls.map(_ => rel.getOrElse(ctxOfGroup(gi)))
         case _ => Nil
@@ -2404,23 +2373,6 @@ final class Engine(
         col("scored._2").as("end"), col("scored._3").as("score"))
       .orderBy(col("score").desc, col("docId").asc, col("begin").asc,
         col("end").asc)
-      .limit(k)
-  }
-
-  /** runQuery restricted to a working set of docIds — the FilterNode
-    * wrap (reference: QueryEnvironment::_scoredQuery adds FilterNode,
-    * src/QueryEnvironment.cpp:694-707).
-    */
-  def runQuery(query: String, k: Int, workingSet: DataFrame): DataFrame =
-    runParsedWs(QueryParser.parse(query), k, workingSet)
-
-  private[graft] def runParsedWs(ast: QueryNode, k: Int,
-                                 workingSet: DataFrame): DataFrame = {
-    val ws = workingSet.select(col(workingSet.columns.head).cast(LongType).as("docId"))
-    val belief = evaluate(ast)
-    notDeleted(belief.df).join(ws, Seq("docId"), "left_semi")
-      .select(col("docId"), col("score"))
-      .orderBy(col("score").desc, col("docId").asc)
       .limit(k)
   }
 

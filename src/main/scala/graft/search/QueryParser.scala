@@ -112,44 +112,6 @@ object QueryParser {
     }
   }
 
-  /** The raw term leaves of a query, when every posting-reading leaf is
-    * enumerable without the dictionary — None when a wildcard needs a
-    * dictionary probe first. Lets stored-index inspectors decode only
-    * the blocks an expression can touch.
-    */
-  def termLeaves(query: String): Option[Seq[String]] = {
-    def walk(n: QueryNode): Option[Seq[String]] = n match {
-      case TermNode(t) => Some(Seq(t))
-      case WildcardNode(_) => None
-      case AnyFieldNode(_) | FieldPathNode(_, _, _) | FieldNumNode(_, _, _, _) |
-           PriorQNode(_) => Some(Nil) // extent/prior tables, not postings
-      case OdNode(_, cs) => all(cs)
-      case UwNode(_, cs) => all(cs)
-      case BandNode(cs) => all(cs)
-      case SynNode(cs) => all(cs)
-      case WsynNode(cs) => all(cs.map(_._2))
-      case CombineNode(cs) => all(cs)
-      case WeightNode(cs) => all(cs.map(_._2))
-      case WsumNode(cs) => all(cs.map(_._2))
-      case SumNode(cs) => all(cs)
-      case OrQNode(cs) => all(cs)
-      case MaxQNode(cs) => all(cs)
-      case NotQNode(c) => walk(c)
-      case FieldRestrictNode(c, _) => walk(c)
-      case FieldListRestrictNode(c, _) => walk(c)
-      case ContextRestrictNode(c, _) => walk(c)
-      case FilReqNode(f, s) => all(Seq(f, s))
-      case FilRejNode(f, s) => all(Seq(f, s))
-      case LengthPriorQNode(_, c) => walk(c)
-      case ExtentRestrictNode(_, _, c) => walk(c)
-    }
-    def all(cs: Seq[QueryNode]): Option[Seq[String]] =
-      cs.foldLeft(Option(Seq.empty[String])) { (acc, c) =>
-        for (a <- acc; b <- walk(c)) yield a ++ b
-      }
-    walk(parse(query)).map(_.distinct)
-  }
-
   // ---- lexer ----
   private sealed trait Tok
   private case class Op(name: String, num: Option[Int]) extends Tok // #combine, #od3, #5

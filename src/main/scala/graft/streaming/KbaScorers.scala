@@ -398,10 +398,7 @@ object KbaScorers {
     val tf = eng.termFrequencies(ids, allTerms)
 
     val collSize = eng.index.stats.totalTerms.toDouble
-    val ctfMap: Map[String, Long] = eng.index.dictionary
-      .where(col("term").isin(allTerms: _*))
-      .select("term", "ctf").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val ctfMap: Map[String, Long] = eng.termStatsFor(allTerms).map { case (t, s) => t -> s.ctf }
 
     // per-term constants: base = the unmatched contribution's log part
     // (cf==0 → the quirk's cf=1); matched delta = ln(tf + μ·cf/C) − base

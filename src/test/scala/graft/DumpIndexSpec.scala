@@ -1,11 +1,13 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 import graft.apps.{BuildIndex, DumpIndex}
 import graft.index.{IndexBuilder, IndexConfig}
-import graft.search.{Engine, QueryParser, ScoringRule}
+import graft.search.{Engine, ScoringRule}
 
 /** The dumpindex application surface over a STORED repository: every
   * command must agree with the in-memory index the repository was built
@@ -16,6 +18,8 @@ import graft.search.{Engine, QueryParser, ScoringRule}
 class DumpIndexSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
+
+  private object Plans extends AdaptiveSparkPlanHelper
 
   // tiny tagged corpus: head fields, krovetz-stemmable words, a stopword
   private lazy val corpusRows = (1 to 40).map { i =>
@@ -75,8 +79,8 @@ class DumpIndexSpec extends AnyFunSuite {
 
   test("e/x/dx evaluate expressions; only the expression's terms decode") {
     val eng = new Engine(spark, memIdx, cfg.analyzer, ScoringRule(method = "okapi"))
-    val e = DumpIndex.command(spark, repoDir, "e", Seq("#od1(data merge)"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val eDf = DumpIndex.command(spark, repoDir, "e", Seq("#od1(data merge)"))
+    val e = eDf.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val mem = eng.expressionList("#od1(data merge)")
       .collect().map(r => (r.getLong(0), r.getInt(1).toLong, r.getInt(2).toLong)).toSeq
     assert(e == mem && e.nonEmpty)
@@ -84,10 +88,14 @@ class DumpIndexSpec extends AnyFunSuite {
       .head().getLong(0) == eng.expressionCount("#od1(data merge)"))
     assert(DumpIndex.command(spark, repoDir, "dx", Seq("#od1(data merge)"))
       .head().getLong(0) == eng.documentExpressionCount("#od1(data merge)"))
-    // the pruning precondition: term leaves are enumerable (no wildcard)
-    assert(QueryParser.termLeaves("#od1(data merge)").contains(Seq("data", "merge")))
-    assert(QueryParser.termLeaves("dat*").isEmpty)
-    assert(QueryParser.termLeaves("#any:head").contains(Nil))
+    // only the expression's terms decode: every segments scan of the
+    // `e` plan carries the pushed term filter
+    val segmentScans = Plans.collect(eDf.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == "segments") =>
+        s.metadata("PushedFilters")
+    }
+    assert(segmentScans.nonEmpty && segmentScans.forall(_.contains("term")),
+      s"a segments scan without the term filter: $segmentScans")
   }
 
   test("dv rebuilds a document vector from block-pruned decode") {

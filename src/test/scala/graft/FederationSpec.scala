@@ -171,6 +171,25 @@ class FederationSpec extends AnyFunSuite {
     assert(ids.exists(_ <= 50) && ids.exists(_ > 1000))
   }
 
+  test("explicit documentBases after a zero-doc member: every member shifts by its own base") {
+    val empty = IndexBuilder.build(docsDf.where(lit(false)), cfg)
+    assert(empty.stats.totalDocs == 0)
+    val a = IndexBuilder.build(docsDf.where(col("docId") <= 2), cfg)
+    val b = IndexBuilder.build(
+      docsDf.where(col("docId") > 2 && col("docId") <= 4).withColumn("docId", col("docId") - 2), cfg)
+    def ids(bases: Seq[Long]): Seq[Long] = Federation.combine(Seq(empty, a, b), bases)
+      .doclens.select("docId").as[Long].collect().sorted.toSeq
+    // paired with the unfiltered base list, `a` took the empty member's
+    // base 0 and `b` took 10
+    assert(ids(Seq(0L, 10L, 100L)) == Seq(11L, 12L, 101L, 102L))
+    // disjoint bases — paired the same way, `a` and `b` both took 0 and
+    // the overlap check threw
+    assert(ids(Seq(0L, 0L, 100L)) == Seq(1L, 2L, 101L, 102L))
+    // the derived bases pack the same ranges with the empty member first
+    assert(Federation.derivedBases(Seq(empty, a, b)) == Seq(0L, 0L, 2L))
+    assert(ids(Federation.derivedBases(Seq(empty, a, b))) == Seq(1L, 2L, 3L, 4L))
+  }
+
   test("a 0-based member following a 1-based one rebases tightly, bit-exact vs the whole") {
     val whole = IndexBuilder.build(docsDf, cfg)
     val half1 = IndexBuilder.build(docsDf.where(col("docId") <= 200), cfg)

@@ -119,4 +119,33 @@ class RunQueriesSpec extends AnyFunSuite {
       assert(t.jobsOn("resident block maps").size == windows.size + 1, what)
     }
   }
+
+  test("a warm batch of a bag, a passage and a field query: one stats job, one kernel job each, no SQL") {
+    // a `head` field over each doc's first 3 positions
+    val fidx = IndexBuilder.build(corpus.toDF("docId", "content"), cfg,
+      annotate = df => graft.index.FieldAnnotators.headField(3)(df))
+    val eng = new Engine(spark, fidx, cfg.analyzer, ScoringRule(method = "dirichlet"))
+    val bag = "#combine(alpha beta)"
+    val passage = "#combine[passage2:1](alpha delta)"
+    val field = "#weight[head](0.7 beta 0.3 delta)"
+    val batch = Seq(bag, passage, field)
+    eng.runQueries(batch, 10).foreach(_._2.collect()) // warm: the resident block maps and extents
+    val (got, t) = JobTally.of(spark)(eng.runQueries(batch, 10))
+    val what = s"bag + passage + field batch: $t"
+    assert(t.sqlExecutions == 0, what)
+    assert(t.jobs.size == batch.size + 1, what)
+    assert(t.jobsOn("resident block maps").size == batch.size + 1, what)
+    assert(t.jobsOn("resident field extents").size == 1, what)
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case x => x
+    }).toSeq
+    val rows = got.map { case (q, df) => q -> bits(df) }.toMap
+    assert(rows(bag).nonEmpty && rows(passage).nonEmpty && rows(field).nonEmpty)
+    assert(rows(bag) == bits(eng.runQuery(bag, 10)))
+    for (q <- Seq(passage, field)) {
+      assert(rows(q) == bits(eng.runExtentQuery(q, 10)), s"mismatch for $q")
+      assert(rows(q) == bits(eng.runQuery(q, 10)), s"mismatch for $q")
+    }
+  }
 }

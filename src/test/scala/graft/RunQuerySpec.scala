@@ -284,7 +284,7 @@ class RunQuerySpec extends AnyFunSuite {
 
     // a working set restricts NEXI like the reference FilterNode:
     // results == the unrestricted run filtered to the named docs
-    // (CO path → the working-set runQuery overload)
+    // (CO path → runBatch with the working set)
     val full = rows(eng.runNexi("return license", 1000000))
     val wsIds = full.map(_._1).distinct.take(3)
     val ws = wsIds.toDF("docId")
@@ -296,6 +296,27 @@ class RunQuerySpec extends AnyFunSuite {
       queries = Seq(RunQuery.QuerySpec(None, "return license",
         workingSet = wsIds.map(_.toString), queryType = "nexi")))
     assert(rows(RunQuery.execute(eng, pws).head._2) == got)
+  }
+
+  test("a passage query in a parameter file runs through execute and prints its extents") {
+    val q = "#combine[passage50:25](return license)"
+    val xml =
+      s"""<parameters>
+        |  <query><number>P1</number><text>$q</text></query>
+        |  <count>10</count><rule>method:dirichlet</rule>
+        |</parameters>""".stripMargin
+    val p = RunQuery.parseParams(xml).copy(trecFormat = false)
+    val eng = RunQuery.environmentFor(spark, idx, p, Analyzer())
+    val (num, df) = RunQuery.execute(eng, p).head
+    val want = eng.runExtentQuery(q, 10).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSeq
+    assert(num == "P1" && want.nonEmpty)
+    val lines = RunQuery.trecLines(eng, num, df, p)
+      .select("docId", "begin", "end", "line").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSeq
+    assert(lines == want.map { case (d, b, e, s) =>
+      (d, b, e, s"${RunQuery.cppDouble(s)}\t$d\t$b\t$e")
+    })
   }
 
   test("fbDocs routes through RM3 blind feedback") {

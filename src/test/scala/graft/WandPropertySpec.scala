@@ -388,6 +388,9 @@ class WandPropertySpec extends AnyFunSuite {
     engine.runExtentQuery(q, k, useDaat = useDaat).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSeq
 
+  private def bits(rows: Seq[(Long, Int, Int, Double)]): Seq[(Long, Int, Int, Long)] =
+    rows.map { case (d, b, e, s) => (d, b, e, java.lang.Double.doubleToRawLongBits(s)) }
+
   test("extent kernel: field + passage contexts == DataFrame path, all restricted ops and LM rules") {
     for (method <- Seq("method:dirichlet", "method:jm,collectionLambda:0.4",
                        "method:two,mu:2500,lambda:0.4")) {
@@ -397,6 +400,13 @@ class WandPropertySpec extends AnyFunSuite {
         val dfp = runExtents(engine, q, k, useDaat = false)
         assert(kernel == dfp,
           s"extent kernel != DataFrame for '$q' k=$k ($method)\n k=${kernel.take(5)}\n d=${dfp.take(5)}")
+        // runQuery takes the same extent plan, bit for bit
+        for ((useDaat, want) <- Seq(true -> kernel, false -> dfp)) {
+          val got = engine.runQuery(q, k, useDaat = useDaat).collect()
+            .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSeq
+          assert(bits(got) == bits(want),
+            s"runQuery != runExtentQuery for '$q' k=$k daat=$useDaat ($method)")
+        }
       }
     }
   }
