@@ -130,9 +130,9 @@ object Federation {
 
     // merged dictionary: df/ctf sum, length bounds combine — the summed
     // ContextSimpleCount stats (reference: src/QueryEnvironment.cpp:957-965
-    // _sumServerQuery), which the term stats of the resident block maps
-    // over the unioned segments sum to as well (Daat.stats). Persisted:
-    // counted here and read again by the dictionary's DataFrame readers.
+    // _sumServerQuery), which the federation's vocabulary serves term
+    // stats from. Persisted: counted here and read again by the
+    // dictionary's DataFrame readers.
     val dictionary = members.map(_.dictionary).reduce(_ unionByName _)
       .groupBy("term").agg(
         sum(col("df")).as("df"),

@@ -135,17 +135,25 @@ final case class InvertedIndex(
 
   /** Resident block maps: P = min(numBuckets, defaultParallelism)
     * partitions keyed on `bucket`, bucket b in partition b mod P, each a
-    * map from term to that term's blocks sorted by firstDoc and their
-    * stats partial (Daat.TermSlice) — the index an Indri server holds
-    * open, and the only resident copy of it: term stats, window counts
-    * and every kernel query read these maps (Daat.stats, Daat.topK,
-    * Daat.topKExtents). Built on first use by one keyed exchange over
-    * the segments (Daat.residentBlocks) and shared by every Engine over
-    * this index; persisted MEMORY_ONLY and unpersisted by the
-    * ContextCleaner once the index is unreachable.
+    * map from term to that term's blocks sorted by firstDoc — the index
+    * an Indri server holds open, and the only resident copy of its
+    * postings: window counts and every kernel query read these maps
+    * (Daat.windowCounts, Daat.topK, Daat.topKExtents); term stats come
+    * from [[vocabulary]] instead. Built on first use by one keyed
+    * exchange over the segments (Daat.residentBlocks) and shared by
+    * every Engine over this index; persisted MEMORY_ONLY and unpersisted
+    * by the ContextCleaner once the index is unreachable.
     */
-  @transient lazy val blockMaps: RDD[Map[String, graft.search.Daat.TermSlice]] =
+  @transient lazy val blockMaps: RDD[Map[String, Array[graft.search.Daat.Block]]] =
     graft.search.Daat.residentBlocks(this)
+
+  /** The vocabulary resident on the driver: every dictionary term's
+    * (ctf, df, minDocLen), loaded on first use by one collect of
+    * [[dictionary]] and shared by every Engine over this index, so a
+    * term-stats lookup runs no job (reference: the stored lexicon,
+    * src/DiskIndex.cpp:132-171).
+    */
+  @transient lazy val vocabulary: Vocabulary = Vocabulary.load(dictionary)
 
   /** Resident field extents: field → docId → extents sorted by (begin,
     * end), in the partitions of [[blockMaps]] (a doc's extents sit with

@@ -26,13 +26,15 @@ import graft.index.{BlockCodec, InvertedIndex}
   * bucket, fixed at build time, and each index keeps the blocks resident
   * ([[InvertedIndex.blockMaps]]): P = min(numBuckets, defaultParallelism)
   * persisted partitions, bucket b in partition b mod P, each a map from
-  * term to that term's blocks and their stats partial ([[TermSlice]]).
-  * A query is two jobs over those maps ([[onBuckets]]), one task per
-  * partition: the stats job ([[stats]]) sums the term partials and
-  * counts the windows, then the kernel job runs, in each task, an
-  * independent DAAT over its whole buckets' docId ranges and returns a
+  * term to that term's blocks sorted by firstDoc. Term statistics never
+  * touch them: they are lookups in the driver-resident vocabulary
+  * ([[InvertedIndex.vocabulary]]). A term-only query is one job over
+  * the maps ([[onBuckets]]), one task per partition: in each task an
+  * independent DAAT over its whole buckets' docId ranges returns a
   * local top-k, and the driver merges the (P × k) candidates into the
-  * global top-k ([[mergeTopK]]) and returns it as a local relation.
+  * global top-k ([[mergeTopK]]) and returns it as a local relation. A
+  * query with #odN/#uwN windows first runs one more job, which counts
+  * the windows ([[windowCounts]]).
   * Extent-restricted queries run the same job, with the restriction
   * field's extents resident beside the blocks
   * ([[InvertedIndex.extentMaps]]). This is Indri's multi-server
@@ -185,32 +187,24 @@ object Daat {
   def extentsResult(spark: SparkSession, rows: Seq[(Long, Int, Int, Double)]): DataFrame =
     spark.createDataFrame(rows.map { case (d, b, e, s) => Row(d, b, e, s) }.asJava, extentsSchema)
 
-  /** The stats round of a query batch: ONE job over the resident block
-    * maps for every term and every window of the batch (the reference
+  /** The window counts of a query batch: ONE job over the resident
+    * block maps for every distinct window of the batch (the reference
     * gathers every ContextCount request in one server round,
-    * src/QueryEnvironment.cpp:957-966). No job runs when there is
-    * neither.
-    *  - Term stats: each partition's build-time [[TermSlice.partial]],
-    *    summed on the driver — exactly the dictionary's (ctf, df,
-    *    minDocLen), since both come from the same postings, and blind to
-    *    deletes like the dictionary; no block is decoded, and a term no
-    *    block holds is absent (reference:
-    *    src/ContextSimpleCountAccumulator.cpp).
-    *  - Window counts, per distinct window: ONE pass over the member
-    *    terms' blocks per bucket, where the member cursors leapfrog
-    *    their conjunction and [[WindowMatcher]] counts matches per live
-    *    (not deleted) doc — (occ, df), exact integer partials summed on
-    *    the driver (docId ranges are disjoint). Bit-count-identical to
-    *    the DataFrame windowRaw aggregation (same positions, same
-    *    matcher; reference: src/ContextCountAccumulator.cpp).
+    * src/QueryEnvironment.cpp:957-966), and no job when there is none.
+    * Per window, ONE pass over the member terms' blocks per bucket,
+    * where the member cursors leapfrog their conjunction and
+    * [[WindowMatcher]] counts matches per live (not deleted) doc —
+    * (occ, df), exact integer partials summed on the driver (docId
+    * ranges are disjoint). Bit-count-identical to the DataFrame
+    * windowRaw aggregation (same positions, same matcher; reference:
+    * src/ContextCountAccumulator.cpp).
     */
-  def stats(index: InvertedIndex, terms: Seq[String], windows: Seq[WindowSpec],
-            deleted: Set[Long]): (Map[String, TermStats], Map[WindowSpec, (Double, Long)]) = {
-    val ts = terms.distinct.toArray
+  def windowCounts(index: InvertedIndex, windows: Seq[WindowSpec],
+                   deleted: Set[Long]): Map[WindowSpec, (Double, Long)] = {
     val ws = windows.distinct.toArray
-    if (ts.isEmpty && ws.isEmpty) return (Map.empty, Map.empty)
-    val partials = onBuckets(index, ts ++ ws.flatMap(_.terms)) { (byTerm, _) =>
-      (ts.flatMap(t => byTerm.get(t).map(t -> _.partial)), ws.map { w =>
+    if (ws.isEmpty) return Map.empty
+    val partials = onBuckets(index, ws.flatMap(_.terms).toSeq) { (byTerm, _) =>
+      ws.map { w =>
         val cur = leafCursor(LeafPlan("", w, null, 0.0, 0.0), byTerm, lm = false)
         var occ = 0L; var df = 0L
         while (!cur.exhausted) {
@@ -221,22 +215,18 @@ object Daat {
           cur.next()
         }
         (occ, df)
-      })
+      }
     }
-    val termStats = partials.toSeq.flatMap(_._1).groupMapReduce(_._1)(_._2) { (a, b) =>
-      TermStats(a.ctf + b.ctf, a.df + b.df, math.min(a.minDl, b.minDl))
-    }
-    val counts = ws.indices.map { wi =>
-      ws(wi) -> (partials.map(_._2(wi)._1).sum.toDouble, partials.map(_._2(wi)._2).sum)
+    ws.indices.map { wi =>
+      ws(wi) -> (partials.map(_(wi)._1).sum.toDouble, partials.map(_(wi)._2).sum)
     }.toMap
-    (termStats, counts)
   }
 
   /** The one kernel scaffold: a single job over the resident block maps
     * ([[InvertedIndex.blockMaps]]), one task per partition — whole
     * buckets b ≡ p (mod P), P = min(numBuckets, defaultParallelism), so
     * no task is empty and each carries an equal docId span. Each task
-    * wraps the slices of `terms` only in fresh [[TermBlocks]], so decode
+    * wraps the blocks of `terms` only in fresh [[TermBlocks]], so decode
     * caches live for one query in one task, and returns `task`'s result
     * for its buckets. What `task` reads of the plan and the delete set
     * rides in its closure, which Spark ships once per job as the task
@@ -252,13 +242,13 @@ object Daat {
       task: (Map[String, TermBlocks], Extents) => T): Array[T] = {
     val sc = index.segments.sparkSession.sparkContext
     val wanted = terms.distinct.toArray
-    def run(maps: Iterator[Map[String, TermSlice]], extents: Extents): T = {
-      val resident = if (maps.hasNext) maps.next() else Map.empty[String, TermSlice]
+    def run(maps: Iterator[Map[String, Array[Block]]], extents: Extents): T = {
+      val resident = if (maps.hasNext) maps.next() else Map.empty[String, Array[Block]]
       val byTerm = wanted.iterator.flatMap(t => resident.get(t).map(t -> new TermBlocks(_))).toMap
       task(byTerm, extents)
     }
     if (field == null)
-      sc.runJob(index.blockMaps, (maps: Iterator[Map[String, TermSlice]]) => run(maps, null))
+      sc.runJob(index.blockMaps, (maps: Iterator[Map[String, Array[Block]]]) => run(maps, null))
     else
       sc.runJob(index.blockMaps.zipPartitions(index.extentMaps) { (maps, fields) =>
         val byField = if (fields.hasNext) fields.next() else Map.empty[String, Extents]
@@ -317,10 +307,9 @@ object Daat {
     * segment scan packed or split the files (size-packed or
     * row-group-split Parquet files, an in-memory index). Behind
     * the exchange, a kernel job's task binary does not carry the segment
-    * scan's lineage. The grouping also computes each term's stats
-    * partial ([[TermSlice.of]]), once per index.
+    * scan's lineage. No block is decoded.
     */
-  private[graft] def residentBlocks(index: InvertedIndex): RDD[Map[String, TermSlice]] = {
+  private[graft] def residentBlocks(index: InvertedIndex): RDD[Map[String, Array[Block]]] = {
     val cores = index.segments.sparkSession.sparkContext.defaultParallelism
     val parts = if (index.numBuckets > 0) math.min(index.numBuckets, cores) else cores
     index.segments.select(blockCols.map(col): _*).rdd
@@ -335,7 +324,7 @@ object Daat {
         rows.foreach { case (_, (t, b)) =>
           buf.getOrElseUpdate(t, mutable.ArrayBuffer.empty[Block]) += b
         }
-        Iterator(buf.iterator.map { case (t, bs) => t -> TermSlice.of(bs.toArray) }.toMap)
+        Iterator(buf.iterator.map { case (t, bs) => t -> bs.toArray.sortBy(_.firstDoc) }.toMap)
       }.setName("resident block maps")
       .persist(StorageLevel.MEMORY_ONLY)
   }
@@ -371,7 +360,7 @@ object Daat {
         case (acc, r) => r :: acc
       }.reverse
     val runs = merge(maps.mapPartitionsWithIndex { (p, it) =>
-      merge(it.flatMap(_.valuesIterator.flatMap(_.blocks)).map(b => (b.firstDoc, b.lastDoc, p)).toSeq,
+      merge(it.flatMap(_.valuesIterator.flatten).map(b => (b.firstDoc, b.lastDoc, p)).toSeq,
         acrossGaps = false).iterator
     }.collect().toSeq, acrossGaps = true).toArray
     val bcRuns = maps.sparkContext.broadcast((runs.map(_._1), runs))
@@ -612,32 +601,12 @@ object Daat {
                          docsDelta: Array[Byte], tfs: Array[Byte], dls: Array[Byte],
                          pos: Array[Byte] = Array.emptyByteArray)
 
-  /** One term's part of a block-map partition: its blocks sorted by
-    * firstDoc, and their stats partial — ctf = Σ decoded tfs, df = Σ
-    * numDocs, minDl = min block minDl. The partials of all partitions
-    * sum to the dictionary's (ctf, df, minDocLen) ([[stats]]).
+  /** A term's blocks in one partition, sorted by firstDoc, plus a shared
+    * memoized decode cache: several cursors over the same term (unigram
+    * leaf + window members) decode each block's payload once per
+    * partition.
     */
-  final case class TermSlice(blocks: Array[Block], partial: TermStats)
-  object TermSlice {
-    /** the slice of `blocks`, its partial computed here, once per
-      * resident build, so no query decodes a block for its stats
-      */
-    def of(blocks: Array[Block]): TermSlice = {
-      val sorted = blocks.sortBy(_.firstDoc)
-      TermSlice(sorted, TermStats(
-        ctf = sorted.iterator.map(b => BlockCodec.decodePlain(b.tfs, b.numDocs).sum).sum,
-        df = sorted.iterator.map(_.numDocs.toLong).sum,
-        minDl = sorted.iterator.map(_.minDl).foldLeft(Int.MaxValue)(math.min)))
-    }
-  }
-
-  /** A term's slice in one partition plus a shared memoized decode
-    * cache: several cursors over the same term (unigram leaf + window
-    * members) decode each block's payload once per partition.
-    */
-  final class TermBlocks(slice: TermSlice) {
-    val blocks: Array[Block] = slice.blocks
-    def partial: TermStats = slice.partial
+  final class TermBlocks(val blocks: Array[Block]) {
     private val docsC = new Array[Array[Long]](blocks.length)
     private val tfsC = new Array[Array[Int]](blocks.length)
     private val dlsC = new Array[Array[Int]](blocks.length)
@@ -664,7 +633,7 @@ object Daat {
     }
   }
   object TermBlocks {
-    val empty = new TermBlocks(TermSlice.of(Array.empty[Block]))
+    val empty = new TermBlocks(Array.empty[Block])
   }
 
   /** Common cursor surface the WAND loop drives — implemented by the
@@ -702,7 +671,7 @@ object Daat {
     */
   final class Cursor(tb: TermBlocks, val leaf: LeafPlan, val lm: Boolean) extends DaatCursor {
     def this(blocks: Array[Block], leaf: LeafPlan, lm: Boolean) =
-      this(new TermBlocks(TermSlice.of(blocks)), leaf, lm)
+      this(new TermBlocks(blocks.sortBy(_.firstDoc)), leaf, lm)
     private def blocks: Array[Block] = tb.blocks
     private var bi = 0
     private var pos = 0

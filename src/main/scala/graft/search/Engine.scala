@@ -461,14 +461,13 @@ final class Engine(
 
   /** Gather per-term global stats for the query's term leaves — the
     * ContextSimpleCountAccumulator path (reference:
-    * src/ContextSimpleCountAccumulator.cpp, no posting scan): the
-    * [[Daat.stats]] job with no window, which sums the resident block
-    * maps' build-time partials into the dictionary's (ctf, df,
-    * minDocLen). Terms the index lacks are absent from the result; no
-    * term runs no job.
+    * src/ContextSimpleCountAccumulator.cpp, no posting scan): lookups in
+    * the index's driver-resident vocabulary, the dictionary's (ctf, df,
+    * minDocLen), with no job once it is loaded. Terms the index lacks
+    * are absent from the result.
     */
   def termStatsFor(terms: Seq[String]): Map[String, TermStats] =
-    Daat.stats(index, terms, Nil, Set.empty)._1
+    index.vocabulary.statsFor(terms)
 
   // ------------------------------------------------------------------
   // raw (extent) evaluation
@@ -1288,18 +1287,19 @@ final class Engine(
     * and returns ranked extents; everything else
     * evaluates on the DataFrame inference-network path. Kernel and
     * belief path produce bit-identical scores (WandPropertySpec). A
-    * kernel result is computed at call time — two jobs over the index's
-    * resident block maps, the stats job and the kernel job — and
-    * returned as a local DataFrame; a belief-path result is a lazy plan
-    * that runs when collected.
+    * kernel result is computed at call time — one job over the index's
+    * resident block maps, plus one that counts the windows when the
+    * query has #odN/#uwN leaves — and returned as a local DataFrame; a
+    * belief-path result is a lazy plan that runs when collected.
     */
   def runQuery(query: String, k: Int, useDaat: Boolean = true): DataFrame =
     runBatch(Seq(QueryParser.parse(query)), k, useDaat, deletes).head
 
   /** runQuery restricted to a working set of docIds — the FilterNode
     * wrap (reference: QueryEnvironment::_scoredQuery adds FilterNode,
-    * src/QueryEnvironment.cpp:694-707): a batch of one on the belief
-    * path, semi-joined to the set before the top-k.
+    * src/QueryEnvironment.cpp:694-707): a batch of one on a DataFrame
+    * plan (the belief path, or an extent restriction's), semi-joined to
+    * the set before the top-k.
     */
   def runQuery(query: String, k: Int, workingSet: DataFrame): DataFrame =
     runBatch(Seq(QueryParser.parse(query)), k, useDaat = true, deletes, Some(workingSet)).head
@@ -1313,12 +1313,17 @@ final class Engine(
   private def scoredTail(belief: Belief, k: Int, ds: Deletes,
                          workingSet: Option[DataFrame]): DataFrame = {
     val live = notDeleted(belief.df, ds)
-    workingSet.fold(live)(ws => live.join(
-      ws.select(col(ws.columns.head).cast(LongType).as("docId")), Seq("docId"), "left_semi"))
+    workingSet.fold(live)(inSet(live, _))
       .select(col("docId"), col("score"))
       .orderBy(col("score").desc, col("docId").asc)
       .limit(k)
   }
+
+  /** the rows of `df` whose docId is in the working set `ws`, its first
+    * column
+    */
+  private def inSet(df: DataFrame, ws: DataFrame): DataFrame =
+    df.join(ws.select(col(ws.columns.head).cast(LongType).as("docId")), Seq("docId"), "left_semi")
 
   /** Batch retrieval through [[runBatch]]: the batch shares its stats
     * rounds, and per-query results are identical to runQuery (reference:
@@ -1327,8 +1332,8 @@ final class Engine(
     * driver-blocking stats rounds are the per-query latency floor, so a
     * B-query batch pays each round once instead of B times. Kernel and
     * extent-kernel queries run here, at call time, one job each after
-    * the batch's one stats job, and come back as local DataFrames;
-    * belief-path queries come back as lazy plans.
+    * the batch's window-count job (when it has windows), and come back
+    * as local DataFrames; belief-path queries come back as lazy plans.
     */
   def runQueries(queries: Seq[String], k: Int, useDaat: Boolean = true): Seq[(String, DataFrame)] =
     queries.zip(runBatch(queries.map(QueryParser.parse), k, useDaat, deletes))
@@ -1337,20 +1342,23 @@ final class Engine(
     * a working set), runQueries, runExtentQuery, runStructured and
     * runNexi's CO queries (reference: QueryEnvironment::runQuery, one
     * statistics round then one scored round,
-    * src/QueryEnvironment.cpp:672-735,957-988). A batch runs
-    *  - one [[Daat.stats]] job over the resident block maps for the term
-    *    stats of every term leaf of every query and the delete-aware
-    *    counts of the distinct windows of every kernel plan (the
-    *    reference gathers every ContextCount request in one round,
-    *    src/QueryEnvironment.cpp:957-966), or no job when the batch has
-    *    neither;
-    *  - one SQL stats round over the belief-path queries' complex leaves,
-    *    when there are any;
+    * src/QueryEnvironment.cpp:672-735,957-988). A batch
+    *  - looks up the term stats of every term leaf of every query in the
+    *    index's driver-resident vocabulary ([[termStatsFor]], no job);
+    *  - runs one [[Daat.windowCounts]] job over the resident block maps
+    *    for the delete-aware counts of the distinct windows of every
+    *    kernel plan (the reference gathers every ContextCount request in
+    *    one round, src/QueryEnvironment.cpp:957-966), when it has any;
+    *  - runs one SQL stats round over the belief-path queries' complex
+    *    leaves, when there are any;
     *  - then per query one of three plans, all fed by the same term
     *    stats: a kernel query runs one [[Daat.topK]] job; an extent
     *    restriction runs [[extentPlan]]; any other query, and every
-    *    query under a `workingSet`, returns its lazy belief plan.
-    * Every query of the batch sees the one delete snapshot `ds`.
+    *    non-extent query under a `workingSet`, returns its lazy belief
+    *    plan.
+    * So a term-only kernel query runs one job, and one whose terms the
+    * index all lacks runs none. Every query of the batch sees the one
+    * delete snapshot `ds`.
     */
   private def runBatch(asts: Seq[QueryNode], k: Int, useDaat: Boolean, ds: Deletes,
                        workingSet: Option[DataFrame] = None,
@@ -1358,17 +1366,16 @@ final class Engine(
     val kernel = asts.map(a =>
       if (useDaat && workingSet.isEmpty && structuredServes(a, ds)) Some(kernelLeaves(a)) else None)
     val windows = kernel.flatten.flatMap(_.metas.collect { case WinLeafM(s) => s })
+    val tstats = termStatsFor(
+      asts.flatMap(QueryParser.termLeaves).flatMap(t => Option(analyzer.processTerm(t))))
     // a window is only ever a kernel leaf, and the kernel runs only with
     // a delete set
-    val (tstats, wstats) = Daat.stats(index,
-      asts.flatMap(QueryParser.termLeaves).flatMap(t => Option(analyzer.processTerm(t))),
-      windows, if (windows.isEmpty) Set.empty else ds.set.get)
+    val wstats = Daat.windowCounts(index, windows, if (windows.isEmpty) Set.empty else ds.set.get)
     val cstats = complexStatsBatch(
       asts.zip(kernel).collect { case (a, None) => complexRawLeaves(a) }.flatten)
     asts.zip(kernel).map {
       case (_, Some(kl)) => runKernel(kl, tstats, wstats, k, exhaustive, ds.set.get)
-      case (er: ExtentRestrictNode, _) if workingSet.isEmpty =>
-        extentPlan(er, tstats, k, useDaat, ds)
+      case (er: ExtentRestrictNode, _) => extentPlan(er, tstats, k, useDaat, ds, workingSet)
       case (a, _) => scoredTail(evaluateWith(a, tstats, cstats, root = true), k, ds, workingSet)
     }
   }
@@ -1544,14 +1551,18 @@ final class Engine(
     * src/InferenceNetworkBuilder.cpp:152-185; ListBeliefNode scores with
     * the extent as context, src/ListBeliefNode.cpp:119-127). Candidate
     * docs = docs with ≥1 query-term occurrence (the WeightedAnd union).
-    * The term stats are the batch's.
+    * The term stats are the batch's. Under a `workingSet` it takes the
+    * DataFrame plan and keeps only the set's candidate docs, so the
+    * top-k ranks only their extents (the FilterNode wrap, as in
+    * [[scoredTail]]).
     *
     * Child shape: flat term bags (the passage-retrieval shape); the
     * okapi/tfidf baseline rejects extent restrictions exactly like the
     * reference (src/QueryEnvironment.cpp:912-918).
     */
   private def extentPlan(er: ExtentRestrictNode, tstats: Map[String, TermStats], k: Int,
-                         useDaat: Boolean, ds: Deletes): DataFrame = {
+                         useDaat: Boolean, ds: Deletes,
+                         workingSet: Option[DataFrame]): DataFrame = {
     require(!baseline, "extent restriction is rejected in okapi/tfidf baseline mode " +
       "(reference: src/QueryEnvironment.cpp:912-918) — use an LM rule")
     // flat term bags under any restricted belief op (reference:
@@ -1603,8 +1614,9 @@ final class Engine(
     // over the resident block maps (and, for a field, the resident
     // extents), positions decode in-task and only partition-local top-k
     // extents reach the driver merge. Falls back to the DataFrame path
-    // when the delete list outgrows the kernel bitmap.
-    if (useDaat && ds.set.isDefined) {
+    // when the delete list outgrows the kernel bitmap, and under a
+    // working set.
+    if (useDaat && ds.set.isDefined && workingSet.isEmpty) {
       // fieldExtents fails fast on an index without fields, like the
       // DataFrame path, even when no query term is in the vocabulary
       val field = if (er.passage.isDefined) null else { fieldExtents; er.field }
@@ -1617,7 +1629,10 @@ final class Engine(
           .groupBy("docId").agg(
             sort_array(collect_list(struct(col("begin"), col("end")))).as("ex"))
     }
-    scoreExtentContexts(plan, prep.perDoc, fx, er.passage, k, ds)
+    val perDoc = prep.perDoc
+    scoreExtentContexts(plan,
+      if (perDoc == null) null else workingSet.fold(perDoc)(inSet(perDoc, _)),
+      fx, er.passage, k, ds)
   }
 
   /** Shared clause-belief scaffold, generalized to structured NEXI term
@@ -1626,7 +1641,7 @@ final class Engine(
     * the per-doc (term → positions) postings map for the live terms —
     * used by the extent plan and the NEXI CAS scorer so the OOV guard
     * lives in ONE place. Term stats come from `statsOf`: the batch's map
-    * for an extent plan, [[termStatsFor]] (one job) for NEXI CAS. The
+    * for an extent plan, [[termStatsFor]] (a vocabulary lookup) for NEXI CAS. The
     * FP-sensitive fold arithmetic stays at each call site
     * (reference: nexilang.g:439-480): phrase leaves evaluate as
     * exact-adjacency ODNodes whose per-doc match begins join the

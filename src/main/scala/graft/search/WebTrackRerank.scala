@@ -82,8 +82,8 @@ object WebTrackRerank {
     val collSize = eng.index.stats.totalTerms.toDouble
     val ctfMap: Map[String, Long] = eng.termStatsFor(allTerms).map { case (t, s) => t -> s.ctf }
 
-    // ONE batched retrieval round for the whole query set (one shared
-    // stats job — per-query results pinned
+    // ONE batched retrieval round for the whole query set (shared
+    // stats rounds — per-query results pinned
     // identical to runQuery by RunQueriesSpec), and ONE tokenize pass
     // over the UNION of candidate sets: overlapping candidate sets no
     // longer re-join + re-tokenize the same documents per query

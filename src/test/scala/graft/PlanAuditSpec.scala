@@ -54,19 +54,20 @@ class PlanAuditSpec extends AnyFunSuite {
     val parts = math.min(stored.numBuckets, spark.sparkContext.defaultParallelism)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // a warm kernel query is 2 jobs over the resident block maps, the
-    // stats job and the kernel job: one stage each, one task per
-    // block-map partition, nothing shuffled, no SQL plan executed, and
-    // the result is a local relation computed by the time runQuery
-    // returns
-    def audit(method: String, q: String): Unit = {
+    // a warm term-only kernel query is 1 job over the resident block
+    // maps, the kernel job (its term stats are driver lookups); a window
+    // query adds the job that counts its windows. Each job is one stage,
+    // one task per block-map partition, nothing shuffled, no SQL plan
+    // executed, and the result is a local relation computed by the time
+    // runQuery returns
+    def audit(method: String, q: String, jobs: Int): Unit = {
       val eng = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = method))
       val engMem = new Engine(spark, idx, cfg.analyzer, ScoringRule(method = method))
       eng.runQuery(q, 10) // builds the resident structures
       val (df, t) = JobTally.of(spark)(eng.runQuery(q, 10))
       val what = s"$method '$q': $t"
-      assert(t.jobs.size == 2, what)
-      assert(t.jobsOn("resident block maps").size == 2, what)
+      assert(t.jobs.size == jobs, what)
+      assert(t.jobsOn("resident block maps").size == jobs, what)
       assert(t.jobsOn("resident block maps").forall(_.tasks == parts), what)
       assert(t.jobs.forall(_.stagesRun == 1), what)
       assert(t.jobs.forall(j => j.shuffleReadBytes == 0 && j.shuffleWriteBytes == 0), what)
@@ -77,17 +78,17 @@ class PlanAuditSpec extends AnyFunSuite {
       // bit-identical to the in-memory index's kernel result
       assert(got.nonEmpty && got == rows(engMem.runQuery(q, 10)), what)
     }
-    audit("okapi", "#combine(return license)")
+    audit("okapi", "#combine(return license)", jobs = 1)
     // LM rules run the same kernel with the same properties
-    audit("dirichlet", "#combine(return license)")
-    // a lone window query counts its window in the stats job
-    audit("okapi", "#od1(return license)")
+    audit("dirichlet", "#combine(return license)", jobs = 1)
+    // a lone window query counts its window in a job of its own first
+    audit("okapi", "#od1(return license)", jobs = 2)
 
     // bucket b sits in block-map partition b mod P, and no partition is empty
     val bucketOf = stored.segments.select("term", "firstDoc", "bucket").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
     val placed = qIdx.blockMaps.mapPartitionsWithIndex { (p, maps) =>
-      Iterator(p -> maps.flatMap(_.iterator.flatMap { case (t, s) => s.blocks.map(b => (t, b.firstDoc)) }).toSeq)
+      Iterator(p -> maps.flatMap(_.iterator.flatMap { case (t, bs) => bs.map(b => (t, b.firstDoc)) }).toSeq)
     }.collect()
     assert(placed.length == parts)
     assert(placed.map(_._2.size).sum == bucketOf.size, "blocks lost or duplicated")
@@ -97,16 +98,16 @@ class PlanAuditSpec extends AnyFunSuite {
         s"partition $p holds buckets ${blocks.map(bucketOf).distinct.sorted}")
     }
 
-    // an empty kernel query runs the stats job alone, and its result is
-    // a local relation of the kernel schema: collecting it runs no job
-    // (Dataset.collect opens a SQL execution, a local scan, for every
-    // result alike)
+    // an empty kernel query runs no job: its terms are absent from the
+    // vocabulary, and its result is a local relation of the kernel
+    // schema, so collecting it runs no job either (Dataset.collect opens
+    // a SQL execution, a local scan, for every result alike)
     val eng = new Engine(spark, qIdx, cfg.analyzer, ScoringRule(method = "okapi"))
     for (q <- Seq("zzznotaword", "#combine(hashkey1 mergesort3)")) {
       eng.runQuery(q, 10)
       val (df, t) = JobTally.of(spark)(eng.runQuery(q, 10))
       val what = s"'$q': $t"
-      assert(t.jobs.size == 1 && t.jobsOn("resident block maps").size == 1, what)
+      assert(t.jobs.isEmpty, what)
       assert(t.sqlExecutions == 0, what)
       val (got, tc) = JobTally.of(spark)(rows(df))
       assert(got.isEmpty, what)
@@ -115,7 +116,7 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("stored fielded index: a warm extent query is 2 jobs over the resident structures") {
+  test("stored fielded index: a warm extent query is 1 job over the resident structures") {
     val dir = java.nio.file.Files.createTempDirectory("plan-audit-extents").toString
     val docs = IndexBuilder.assignDocIdsScalable(graft.corpus.CorpusSynthesizer.corpus(spark, 300),
       Seq("repo", "path", "commit")).select("docId", "content")
@@ -130,15 +131,16 @@ class PlanAuditSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSeq
     val parts = math.min(stored.numBuckets, spark.sparkContext.defaultParallelism)
-    // the stats job reads the block maps; then the field query zips them
-    // with the resident extents, and a passage query reads them alone
+    // the field query's one job zips the block maps with the resident
+    // extents, and a passage query's reads the block maps alone; the term
+    // stats are driver lookups
     for ((q, extentJobs) <- Seq("#weight[head](0.7 return 0.3 license)" -> 1,
                                 "#combine[passage8:4](return license)" -> 0)) {
       eng.runExtentQuery(q, 10) // builds the resident structures
       val (df, t) = JobTally.of(spark)(eng.runExtentQuery(q, 10))
       val what = s"'$q': $t"
-      assert(t.jobs.size == 2, what)
-      assert(t.jobsOn("resident block maps").size == 2, what)
+      assert(t.jobs.size == 1, what)
+      assert(t.jobsOn("resident block maps").size == 1, what)
       assert(t.jobsOn("resident field extents").size == extentJobs, what)
       assert(t.jobs.forall(_.stagesRun == 1), what)
       assert(t.jobs.forall(j => j.shuffleReadBytes == 0 && j.shuffleWriteBytes == 0), what)
@@ -149,16 +151,40 @@ class PlanAuditSpec extends AnyFunSuite {
       assert(tc.jobs.isEmpty, s"collecting a kernel result ran jobs: $tc")
       assert(got.nonEmpty && got == rows(engMem.runExtentQuery(q, 10)), what)
     }
-    // an extent query whose terms the index all lacks runs the stats job
-    // alone; its empty result has the same schema and collects with no
-    // job
+    // an extent query whose terms the index all lacks runs no job; its
+    // empty result has the same schema and collects with no job
     val (empty, te) = JobTally.of(spark)(
       eng.runExtentQuery("#combine[head](zzznotaword qqqalsonotaword)", 10))
-    assert(te.jobs.size == 1 && te.jobsOn("resident block maps").size == 1, s"OOV extent query: $te")
-    assert(te.jobsOn("resident field extents").isEmpty, s"OOV extent query: $te")
+    assert(te.jobs.isEmpty && te.sqlExecutions == 0, s"OOV extent query: $te")
     assert(empty.schema == extentsSchema)
     val (got, tc) = JobTally.of(spark)(rows(empty))
     assert(got.isEmpty && tc.jobs.isEmpty, s"collecting an empty extent result ran jobs: $tc")
+  }
+
+  test("a cold query loads the vocabulary with one SQL execution; a second Engine runs none") {
+    val dir = java.nio.file.Files.createTempDirectory("plan-audit-cold").toString
+    SegmentStore.writeAll(IndexBuilder.buildFromCorpus(graft.corpus.CorpusSynthesizer.corpus(spark, 200), cfg),
+      dir, cfg)
+    val idx = SegmentStore.open(spark, dir)
+    val q = "#combine(return license)"
+    def tally(eng: Engine, query: String) = JobTally.of(spark)(eng.runQuery(query, 10))._2
+    val first = new Engine(spark, idx, cfg.analyzer, ScoringRule(method = "okapi"))
+    // a cold all-OOV query loads the vocabulary and touches no block:
+    // the dictionary's one collect, one SQL execution of one job
+    val oov = tally(first, "zzznotaword")
+    assert(oov.sqlExecutions == 1 && oov.jobs.size == 1 && oov.jobsOn("resident block maps").isEmpty,
+      s"cold OOV query: $oov")
+    // the first term query builds the block maps, whose segment scan
+    // Dataset.rdd opens as one SQL execution of no job, and runs the
+    // kernel job over them; the vocabulary is not loaded again
+    val cold = tally(first, q)
+    assert(cold.sqlExecutions == 1 && cold.jobs.size == 1 && cold.jobsOn("resident block maps").size == 1,
+      s"cold term query: $cold")
+    // the vocabulary and the block maps belong to the index: a second
+    // Engine over it runs the kernel job alone
+    val second = tally(new Engine(spark, idx, cfg.analyzer, ScoringRule(method = "okapi")), q)
+    assert(second.sqlExecutions == 0 && second.jobs.size == 1 && second.jobsOn("resident block maps").size == 1,
+      s"second Engine: $second")
   }
 
   test("posting build: per-doc aggregation moves no data; segment encode is the only exchange") {

@@ -26,15 +26,15 @@ class StatsBatchSpec extends AnyFunSuite {
 
   private val query = "#combine(#od1(alpha beta) #uw4(beta delta) #syn(alpha gamma))"
 
-  test("belief construction runs exactly 2 driver actions: term-stats collect + ONE batched complex-leaf stats collect") {
+  test("belief construction runs exactly 1 driver action: ONE batched complex-leaf stats collect") {
     eng.evaluate(QueryParser.parse(query)).df.collect() // warm index build / caches
-    // the two actions: the term-stats job, one job over the resident
-    // block maps, and the leaf-stats round, one SQL execution (AQE fans
+    // the one action is the leaf-stats round, one SQL execution (AQE fans
     // an execution into several scheduler jobs, so its job count is not
-    // the metric)
+    // the metric); the term stats are lookups in the driver-resident
+    // vocabulary and touch no block
     val t = JobTally.of(spark)(eng.evaluate(QueryParser.parse(query)))._2 // construction only
-    assert(t.jobsOn("resident block maps").size == 1 && t.sqlExecutions == 1,
-      s"expected 2 actions for a 3-complex-leaf query (term stats + batched leaf stats), saw $t")
+    assert(t.jobsOn("resident block maps").isEmpty && t.sqlExecutions == 1,
+      s"expected 1 action for a 3-complex-leaf query (batched leaf stats), saw $t")
   }
 
   test("batched stats scores == query-order fold of independently-evaluated children") {
